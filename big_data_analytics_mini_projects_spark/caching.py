@@ -19,7 +19,9 @@ hazard: a released frame that is still referenced just recomputes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 _TRACKED: list[DataFrame] = []
 
@@ -27,7 +29,7 @@ _TRACKED: list[DataFrame] = []
 #: leaves, guide §3.3). Keyed by a caller-chosen name + sf_dir; cleared with
 #: the persists at every family boundary, so its lifetime is identical to the
 #: tracked persist cache it is built from.
-_CHECKPOINTED: dict[tuple[str, str], DataFrame] = {}
+_CHECKPOINTED: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
@@ -37,8 +39,11 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     return df
 
 
-def checkpoint_shared(name: str, sf_dir: str, df) -> DataFrame:
-    """One lazy ``localCheckpoint`` per (name, sf_dir) per family visit.
+def checkpoint_shared(
+    name: str, sf_dir: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """One lazy ``localCheckpoint`` of ``build()`` per (name, sf_dir) per
+    family visit.
 
     A localCheckpoint turns a deep analyzed tree into a leaf scan — the fix
     for curve/loop queries whose every Dataset op re-analyzes hundreds of
@@ -52,39 +57,21 @@ def checkpoint_shared(name: str, sf_dir: str, df) -> DataFrame:
     was computed from) already hold, and is dropped at the same family
     boundary.
 
-    ``df`` may be a DataFrame or a zero-arg callable returning one: the
-    callable form defers CONSTRUCTION (python expression building + eager
-    JVM analysis) on memo hits — for frames built from hundreds of parsed
-    expressions that is most of the per-build cost.
+    ``build`` is a zero-arg callable, so a memo hit skips CONSTRUCTION
+    (python expression building + eager JVM analysis) — for frames built
+    from hundreds of parsed expressions that is most of the per-build cost.
+    Keys are unique by naming convention (module prefix + frame name).
 
-    Memo-hit safety (round-11 ADVICE): a hit whose cached leaf was built by
-    a DIFFERENT SparkSession is treated as a miss (a restarted session's
-    checkpoint blocks are gone), and when the caller passes an already-built
-    DataFrame its schema must match the cached leaf's — the guard against a
-    future caller silently reusing a key for a different frame. The thunk
-    form can't be schema-checked without defeating its purpose; key
-    uniqueness there is by the same naming convention."""
+    A hit counts only while the session that built the leaf is the active
+    one: after a restart the old checkpoint blocks are gone, and with no
+    active session there is nothing to check the leaf against, so both
+    rebuild."""
     key = (name, sf_dir)
     entry = _CHECKPOINTED.get(key)
-    if entry is not None:
-        session, got = entry
-        if not callable(df) and df.schema != got.schema:
-            raise ValueError(
-                f"checkpoint_shared({name!r}, {sf_dir!r}): memo hit with a "
-                f"different frame schema — two callers are reusing the key "
-                f"for different derivations. Cached: {got.schema.simpleString()}, "
-                f"incoming: {df.schema.simpleString()}"
-            )
-        from pyspark.sql import SparkSession
-
-        current = (
-            df.sparkSession if not callable(df) else SparkSession.getActiveSession()
-        )
-        if current is None or session is current:
-            return got
-        # session restarted since the leaf was cached -> rebuild below
-    if callable(df):
-        df = df()
+    active = SparkSession.getActiveSession()
+    if entry is not None and active is not None and entry[0] is active:
+        return entry[1]
+    df = build()
     got = df.localCheckpoint(eager=False)
     _CHECKPOINTED[key] = (df.sparkSession, got)
     return got

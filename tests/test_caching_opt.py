@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from big_data_analytics_mini_projects_spark.caching import (
@@ -94,19 +95,26 @@ def test_checkpoint_shared_memoizes_and_releases(spark):
     release_persisted()
 
 
-def test_checkpoint_shared_accepts_dataframe_directly(spark):
+@pytest.mark.parametrize("active", ["other_session", "no_session"])
+def test_checkpoint_shared_rebuilds_on_session_mismatch(spark, monkeypatch, active):
+    """A memo entry built by another session (a restart dropped its
+    checkpoint blocks), or met while no session is active, is a miss: the
+    thunk runs again and its leaf replaces the entry."""
     release_persisted()
-    df = spark.range(0, 5)
-    a = checkpoint_shared("t.direct", SF_DIR, df)
-    assert a.count() == 5
-    release_persisted()
+    key = ("t.session", SF_DIR)
+    sentinel = object()
+    _CHECKPOINTED[key] = (sentinel, spark.range(0, 1))
+    if active == "no_session":
+        monkeypatch.setattr(SparkSession, "getActiveSession", staticmethod(lambda: None))
+    calls = []
 
+    def build():
+        calls.append(1)
+        return spark.range(0, 5)
 
-def test_checkpoint_shared_rejects_key_reuse_with_different_schema(spark):
-    release_persisted()
-    checkpoint_shared("t.guard", SF_DIR, spark.range(0, 5))
-    with pytest.raises(ValueError, match="different frame schema"):
-        checkpoint_shared(
-            "t.guard", SF_DIR, spark.range(0, 5).withColumn("y", F.lit(1))
-        )
+    out = checkpoint_shared("t.session", SF_DIR, build)
+    assert len(calls) == 1, "a session mismatch must re-run the thunk"
+    assert out.count() == 5
+    assert _CHECKPOINTED[key][0] is not sentinel
+    assert _CHECKPOINTED[key][1] is out
     release_persisted()

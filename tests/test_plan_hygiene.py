@@ -21,6 +21,12 @@ Invariants:
 
 from __future__ import annotations
 
+import ast
+import hashlib
+import json
+import pathlib
+
+import big_data_analytics_mini_projects_spark
 from big_data_analytics_mini_projects_spark.plans.catalog import QUERIES
 
 ARROW_EVAL_OK = {"ols_words_pvalues"}
@@ -111,57 +117,37 @@ BNLJ_OK = {
 }
 
 
-#: Round-11 verification rotation (catalog.py tiers 1-6; round-10 verdict
-#: item 1 — driver-verify the 7 round-10-authored tail queries): round14q
-#: x2 + pipelineq x4 are FORCED riders (round16q imports both at module
-#: level), then round16q/17q/18q (never driver-verified), then the round-11
-#: fresh batch (round19q x6), then the three r8 qaq spills from round 10
-#: (+2 r10 riders of the module), then the r6 cohort oldest-first.
-#: recommendq's 4th entry (cf_item_similarity_salted, r6) is the planned
-#: position-51 spill — same-session local differential recorded in
-#: ROUND_QUEUE.md (the round-8 position-51 spill precedent); relationalx
-#: (r6 x12) queues at 52-63 for round 12. Every name below MUST register
-#: inside the driver's 50-entry window or it gets no fresh verdict this
-#: round.
-ROUND11_WINDOW_SET = {
-    # tier 1: forced riders (round16q deps), r10-green re-verified
-    "dedup_state_compaction", "dedup_compaction_curve",
-    "dedup_incremental", "kmeans_lloyd_step", "funnel_conversion",
-    "bm25_top_terms",
-    # tier 2: round16q/17q/18q x7 — never driver-verified (THE priority)
-    "dedup_image_phash", "semdedup_cells", "dedup_state_tombstones",
-    "dedup_image_ahash", "semdedup_k_sweep", "dedup_state_gc_metrics",
-    "pack_with_salvage",
-    # tier 3: the round-11 fresh batch
-    "semdedup_cells_auto", "semdedup_keeper_quality",
-    "dedup_image_ahash_near", "dedup_audio_fp", "crossmodal_pair_curation",
-    "streaming_tombstone_fold",
-    # tier 4: the r8 qaq spills (+2 r10 module riders)
-    "range_overlap_sessions", "pmi_word_pairs", "label_drift_chi2",
-    "multimodal_png_decode", "streaming_session_windows",
-    # tier 5: the r6 cohort
-    "scan_csv_transactions", "scan_text_reviews", "bucketed_join_orders",
-    "sort_out_nation_stats", "sink_partitioned_pruned",
-    "agg_distinct_users", "welford_global_stats", "sample_hashbucket_stats",
-    "sample_twopass_stats", "events_hourly", "session_windows_users",
-    "sample_stratified",
-    "dedup_embedding_bucketed", "url_normalize_dedup", "domain_doc_cap",
-    "domain_blocklist_filter", "split_train_eval_stats",
-    "length_percentile_filter", "token_budget_sample", "bpe_merge_step",
-    "doc_perplexity_bigram", "dedup_winnow_overlap", "dedup_cross_snapshot",
-    # tier 6: recommendq head (its 4th entry is the planned 51-spill)
-    "cf_item_similarity", "cf_predict_ratings", "cf_predict_ratings_k50",
-}
+#: sha256 of the ordered (name, oracle, scale_oracle) triples of the catalog.
+#: Registration order bounds cache families (plans/catalog.py) and every
+#: oracle is a result contract, so a regroup of the plan modules must leave
+#: this unchanged; a deliberate catalog change records the new digest.
+CATALOG_DIGEST = "08bb4ff50412abba8bb6a17752fd58f4531c1f1dc280441f9f01beafed6c483e"
 
 
-def test_round11_window_positions():
-    """The driver checks exactly the first 50 registration positions
-    (CORRECTNESS_r03..r10 all hold exactly that set); the whole round-11
-    verification rotation must sit inside them."""
-    order = list(QUERIES)
-    late = {n for n in ROUND11_WINDOW_SET if order.index(n) >= 50}
-    assert not late, f"outside the 50-entry driver window: {sorted(late)}"
-    assert len(ROUND11_WINDOW_SET) == 50
+def test_catalog_pinned():
+    triples = [(n, s.oracle, s.scale_oracle) for n, s in QUERIES.items()]
+    digest = hashlib.sha256(json.dumps(triples).encode()).hexdigest()
+    assert digest == CATALOG_DIGEST
+
+
+def test_persist_only_through_caching():
+    """Every persist goes through caching.persist_tracked, which the registry
+    releases at family boundaries; an untracked persist leaks its blocks
+    into every later family. Checked on the AST, so prose in docstrings and
+    comments does not count."""
+    pkg = pathlib.Path(big_data_analytics_mini_projects_spark.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "caching.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "cache")
+            ):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not offenders, f"raw persist/cache outside caching.py: {offenders}"
 
 
 def test_catalog_plan_hygiene(spark, sf_dir):

@@ -27,7 +27,7 @@ from big_data_analytics_mini_projects_spark.session import get_spark
 
 
 def main() -> None:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "plans/r11"
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else ".scratch/plans"
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = set(sys.argv[3:])
     os.makedirs(out_dir, exist_ok=True)

@@ -2,7 +2,8 @@
 
 Verdict r3 item 7: ground the 100 TB story with one honest 10x data point.
 The driver only ships sf{0.001,0.01,0.1}; this tool scales sf0.1 -> sf1 under
-.scratch/sf1 (gitignored) for the scale rehearsal in tools/scale_rehearsal.py.
+.scratch/sf1 (gitignored) for 10x runs; `perfbench/run.py --trace 1` records
+the per-query shuffle and spill of such runs.
 
 Scaling must preserve the WORKLOAD SHAPE, not just the row count:
 

@@ -3,8 +3,9 @@ on the .scratch/sf1 (or sf1f) rehearsal dataset and assert the driver-style
 row-count + schema + value equality (tests/compare.assert_df_equal — stricter
 than the driver: floats exact).
 
-The per-round correctness gate stops at sf0.1; the scale rehearsal
-(tools/scale_rehearsal.py) times 10x runs but never checks values. This tool
+The per-round correctness gate stops at sf0.1; the traced benchmark run
+(`perfbench/run.py --trace 1`) times 10x runs but value-checks only its three
+scale queries. This tool
 closes that gap for flagship queries whose DuckDB oracle is itself linear in
 the data.
 
