@@ -231,7 +231,10 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         # spread AFTER the filter (pushdown intact): the local single-split
         # scan otherwise runs all eight decimal partial aggregates on one
         # core (guide §2.5 input skew; measured 1.38 -> 0.81 s at sf0.1).
-        # spread() is a no-op when the scan already has enough splits.
+        # spread() passes the scan through when Spark already reads it as
+        # enough non-empty splits: a multi-row-group lineitem is cut into
+        # byte ranges (sf1's 49 row groups read as 4 splits on 4 cores), so
+        # there the partial aggregates run on the scan with no exchange.
         spread(li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp_ntz")))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(

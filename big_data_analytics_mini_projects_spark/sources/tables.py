@@ -13,6 +13,8 @@ epoch-based arithmetic and event-time windowing are available downstream).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..session import ensure_runtime_confs
@@ -78,6 +80,63 @@ def _parse_size_bytes(s: str) -> int:
     return int(s) * mult
 
 
+def _row_group_midpoints(path: str):
+    """Byte midpoint of each row group in a local parquet file, as
+    parquet-mr computes it to assign the group to a split: the first
+    column chunk's start (dictionary page if it comes first) plus half the
+    group's compressed size. Reads the footer only."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(path)
+    for i in range(meta.num_row_groups):
+        rg = meta.row_group(i)
+        first = rg.column(0)
+        start = first.data_page_offset
+        if first.has_dictionary_page:
+            start = min(start, first.dictionary_page_offset)
+        size = sum(rg.column(j).total_compressed_size for j in range(rg.num_columns))
+        yield start + size // 2
+
+
+def _split_estimate(spark: SparkSession, files: list[str]) -> int:
+    """Lower bound on the non-empty input partitions Spark's file scan makes
+    of ``files``, computed on the driver with no job.
+
+    Mirrors FilePartition: maxSplitBytes = min(maxPartitionBytes,
+    max(openCostInBytes, totalBytes / defaultParallelism)), with every file
+    charged openCostInBytes; a file is cut into ceil(size / maxSplitBytes)
+    byte ranges; the ranges are packed next-fit decreasing, each charged
+    openCostInBytes. A parquet range reads exactly the row groups whose
+    midpoint it holds, so only those ranges are packed. Next-fit over a
+    subsequence opens no more bins than the full sequence has bins holding
+    a subsequence item, so the count never exceeds Spark's non-empty
+    partitions. Only a file spanning several ranges has its footer read: a
+    file within one range, or a non-parquet file, counts one non-empty
+    range, and a non-local listing counts one split per file."""
+    local = [f[len("file:"):] for f in files if f.startswith("file:")]
+    if len(local) < len(files):
+        return len(files)
+    conf = spark.conf
+    max_pb = _parse_size_bytes(conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
+    open_cost = _parse_size_bytes(conf.get("spark.sql.files.openCostInBytes", "4194304b"))
+    sizes = [os.path.getsize(f) for f in local]
+    total = sum(sizes) + len(sizes) * open_cost
+    max_split = min(max_pb, max(open_cost, total // max(1, spark.sparkContext.defaultParallelism)))
+    held = []  # lengths of the byte ranges that read at least one row group
+    for path, size in zip(local, sizes):
+        if size > max_split and path.endswith(".parquet"):
+            starts = {m // max_split * max_split for m in _row_group_midpoints(path)}
+        else:
+            starts = {0} if size else set()
+        held += [min(max_split, size - s) for s in starts]
+    parts = current = 0
+    for length in sorted(held, reverse=True):
+        if current and current + length > max_split:
+            parts, current = parts + 1, 0
+        current += length + open_cost
+    return parts + bool(current)
+
+
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """Repartition a scan before per-row-EXPENSIVE expansion (tokenize,
     shingle, per-seed hashing, trigram explode) — ONLY when the scan is
@@ -94,51 +153,30 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     ``repartition(n)`` would be a FULL round-robin shuffle of the corpus
     (plus the sort-before-repartition each map task pays, SPARK-23207) for
     nothing — exactly the accidental exchange the optimization guide warns
-    about (§2.4). So the repartition is conditional on the scan's estimated
-    parallelism: when the file listing says the source already yields >= the
-    session's default parallelism in NON-EMPTY splits (file count, capped by
-    Spark's open-cost packing arithmetic — driver-side only, no job), the
-    frame passes through untouched. Results are unaffected either way: every
-    consumer is an exchange-insensitive expansion/aggregation."""
-    sc = df.sparkSession.sparkContext
-    n = partitions or sc.defaultParallelism
-    try:
-        # Split-count estimate from the scan's file listing, mirroring
-        # Spark's FilePartition packing: each file is charged
-        # openCostInBytes, splits are at most maxSplitBytes =
-        # min(maxPartitionBytes, max(openCost, totalBytes/defaultParallelism)).
-        # `df.rdd.getNumPartitions()` would be exact but compiles the whole
-        # physical plan (~0.1-0.2 s of driver time PER CALL — measured; at
-        # ~60 spread sites x 3 bench repeats that is suite-level damage);
-        # inputFiles() is a pure listing (~0.02 s). The estimate is capped
-        # at len(files) (round-11 ADVICE): Spark can split one large file
-        # into many byte ranges, but a single-row-group parquet file yields
-        # one NON-EMPTY partition however it is ranged, so counting those
-        # extra ranges would over-state effective parallelism and silently
-        # skip the rebalance this function exists to add. The cap errs
-        # toward keeping a repartition that exact probing might skip; the
-        # probe is a hint only — results are identical either way.
-        files = df.inputFiles()
-        est = len(files)
-        if est and est >= n:
-            import os
+    about (§2.4). So the frame passes through untouched when the scan
+    already yields >= ``partitions`` (default: the session's default
+    parallelism) NON-EMPTY input splits. The count (``_split_estimate``)
+    is the one Spark's file scan makes: each file is cut into byte ranges,
+    a parquet range reads the row groups whose midpoint it holds, and the
+    ranges that read something are packed as Spark packs them. So one large
+    multi-row-group file counts its row-group splits, while a
+    single-row-group file counts one split however many ranges it spans.
+    The probe is a file listing plus footer reads of multi-range files on
+    the driver; ``df.rdd.getNumPartitions()`` would compile the physical
+    plan (0.1-0.2 s per call, measured) and still count empty splits.
 
-            conf = df.sparkSession.conf
-            max_pb = _parse_size_bytes(
-                conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-            )
-            open_cost = _parse_size_bytes(
-                conf.get("spark.sql.files.openCostInBytes", "4194304b")
-            )
-            local = [f[len("file:"):] for f in files if f.startswith("file:")]
-            if len(local) == len(files):
-                total = sum(os.path.getsize(f) for f in local) + len(files) * open_cost
-                max_split = min(max_pb, max(open_cost, total // max(1, sc.defaultParallelism)))
-                est = min(est, -(-total // max_split))
-        if est >= n:
-            return df
+    A pass-through returns ``df`` itself, so ``spread(df) is df`` tells
+    whether an exchange was added. If the listing fails the frame is
+    repartitioned; if only the size or footer probe fails, the listing's
+    file count stands in for the estimate. Results are identical either
+    way: every consumer is an exchange-insensitive expansion/aggregation."""
+    n = partitions or df.sparkSession.sparkContext.defaultParallelism
+    try:
+        files = df.inputFiles()
     except Exception:
-        # Fall through to the repartition if the listing probe fails
-        # (exotic plans); correctness never depends on the probe.
-        pass
-    return df.repartition(n)
+        return df.repartition(n)
+    try:
+        est = _split_estimate(df.sparkSession, files)
+    except Exception:
+        est = len(files)
+    return df if est >= n else df.repartition(n)
