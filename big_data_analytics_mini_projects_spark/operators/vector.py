@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.hashing import h64_py
+from .aggregates import dsum
 
 EMB_DIM = 64
 N_PLANES = 16
@@ -138,10 +139,7 @@ def ivf_cell_centroids(
     orders (the same exactness discipline as diversity_by_group)."""
     comp = vectors.select(cell_col, F.posexplode(vec_col).alias("pos", "x"))
     cm = comp.groupBy(cell_col, "pos").agg(
-        (
-            F.sum(F.col("x").cast("decimal(18,8)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("m")
+        (dsum("x", 8) / F.count(F.lit(1))).alias("m")
     )
     return cm.groupBy(cell_col).agg(
         F.transform(
@@ -505,8 +503,6 @@ def diversity_by_group(vectors: DataFrame, key: str = "label") -> DataFrame:
     cross-row sum exact, so the result is bit-stable across engines.
     Returns (key, n, avg_sq_norm, mean_pair_sqdist) for groups with n >= 2.
     """
-    from .aggregates import dsum
-
     sq = vectors.select(key, F.expr(_dot("v", "v")).alias("sq"))
     s1 = sq.groupBy(key).agg(
         F.count(F.lit(1)).alias("n"), dsum("sq", 8).alias("s1")

@@ -229,8 +229,9 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     charge = disc_price * (1 + F.col("l_tax"))
     return (
         # spread AFTER the filter (pushdown intact): the local single-split
-        # scan otherwise runs all eight decimal partial aggregates on one
-        # core (guide §2.5 input skew; measured 1.38 -> 0.81 s at sf0.1).
+        # scan otherwise runs all the partial aggregates (each dsum is three
+        # long sums, no per-row decimal) on one core (guide §2.5 input
+        # skew; measured 1.38 -> 0.81 s at sf0.1, with decimal sums).
         # spread() passes the scan through when Spark already reads it as
         # enough non-empty splits: a multi-row-group lineitem is cut into
         # byte ranges (sf1's 49 row groups read as 4 splits on 4 cores), so

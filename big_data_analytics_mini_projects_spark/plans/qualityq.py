@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import round_stable
+from ..operators.aggregates import dsum
 from ..operators.textops import STOPWORDS, text_quality, token_counts
 from ..sources.tables import load_table
 from .registry import register
@@ -133,8 +134,5 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("ws_tokens").alias("ws_tokens"),
         F.sum("bpe_tokens").alias("bpe_tokens"),
-        round_stable(
-            F.sum(F.col("quality_score").cast("decimal(18,4)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("avg_quality"),
+        round_stable(dsum("quality_score", 4) / F.count(F.lit(1))).alias("avg_quality"),
     )

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.hashing import hex_bucket
 from ..functions.text import round_stable
+from ..operators.aggregates import dsum
 from ..session import ensure_runtime_confs
 
 
@@ -60,8 +61,8 @@ def stream_global_stats(events: DataFrame) -> DataFrame:
     """Global (n, n_users approx excluded, mean, σ_pop) over the stream —
     exact decimal sufficient statistics, same expression as the batch twin."""
     n = F.count(F.lit(1))
-    s1 = F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-    s2 = F.sum((F.col("value") * F.col("value")).cast("decimal(18,4)")).cast("double")
+    s1 = dsum("value", 2)
+    s2 = dsum(F.col("value") * F.col("value"), 4)
     mean = s1 / n
     return events.agg(
         n.alias("n"),
@@ -83,7 +84,7 @@ def stream_hourly_counts(events: DataFrame, watermark: str = "2 hours") -> DataF
         .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+            dsum("value", 2).alias("sum_value"),
         )
         .select(
             F.unix_micros(F.col("window.start")).alias("window_start_us"),

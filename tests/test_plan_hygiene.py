@@ -150,6 +150,74 @@ def test_persist_only_through_caching():
     assert not offenders, f"raw persist/cache outside caching.py: {offenders}"
 
 
+#: (module, function) -> why its decimal(18,s) sum stays inline, not dsum
+INLINE_DECIMAL_SUM_OK = {
+    ("plans/relationalx.py", "rolling_avg_user_value"): "window sum: dsum is "
+    "an expression over three aggregates, which .over() cannot take",
+    ("operators/linalg.py", "_sum_cells_checked"): "keeps the decimal(18,4) "
+    "result for the exact matmul product, never a double",
+}
+
+
+def _is_decimal18_cast(node) -> bool:
+    if not (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "cast"
+        and node.args
+    ):
+        return False
+    arg = node.args[0]
+    if isinstance(arg, ast.JoinedStr) and arg.values:
+        arg = arg.values[0]
+    return (
+        isinstance(arg, ast.Constant)
+        and isinstance(arg.value, str)
+        and arg.value.replace(" ", "").startswith("decimal(18,")
+    )
+
+
+def test_decimal_sums_go_through_dsum():
+    """An exact double sum is operators.aggregates.dsum, not an inline
+    F.sum(x.cast("decimal(18,s)")): one home for the idiom, so its fast
+    path and its oracle twin sql_dsum cannot drift apart. A name bound to
+    such a cast in the same function and then summed counts too."""
+    pkg = pathlib.Path(big_data_analytics_mini_projects_spark.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "operators/aggregates.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            nodes = list(ast.walk(fn))
+            cast_names = {
+                t.id
+                for n in nodes
+                if isinstance(n, ast.Assign) and _is_decimal18_cast(n.value)
+                for t in n.targets
+                if isinstance(t, ast.Name)
+            }
+            for n in nodes:
+                if (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "sum"
+                    and isinstance(n.func.value, ast.Name)
+                    and n.func.value.id == "F"
+                    and n.args
+                    and (
+                        _is_decimal18_cast(n.args[0])
+                        or (isinstance(n.args[0], ast.Name) and n.args[0].id in cast_names)
+                    )
+                    and (rel, fn.name) not in INLINE_DECIMAL_SUM_OK
+                ):
+                    offenders.append(f"{rel}:{n.lineno} ({fn.name})")
+    assert not offenders, f"inline decimal(18,s) sums, use dsum: {sorted(set(offenders))}"
+
+
 def test_catalog_plan_hygiene(spark, sf_dir):
     problems = []
     for name, spec in QUERIES.items():
