@@ -18,7 +18,8 @@ and the two-sided p-value is 1 − A. The reference computes the same number
 via scipy.stats.t.sf (a3_p1.py:94,129).
 
 Engineering: the sum is a sequential fold — Spark `aggregate(sequence(1,
-m-1), struct(term, acc), ...)` inside whole-stage codegen — and the DuckDB
+m-1), struct(term, acc), ...)`, a lambda, so it runs interpreted
+(``CodegenFallback``) outside whole-stage codegen — and the DuckDB
 oracle (``sql_t_pvalue_ctes``) runs the IDENTICAL recurrence as a recursive
 CTE, same operation order, so the engines agree to ~1e-15 absolute (libm
 ulp differences in atan/sin/sqrt only) — far inside the 6-decimal rounding

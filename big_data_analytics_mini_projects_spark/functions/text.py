@@ -98,7 +98,9 @@ def bool01(col: Column | str) -> Column:
 def ngram_expr(n: int, tokens_col: str = "toks") -> str:
     """Spark SQL expression producing the positional word n-gram array of a
     token-array column (one entry per position, duplicates preserved) — a
-    per-row array transform: zero shuffle, whole-stage codegen. The single
+    per-row array transform: zero shuffle. Its ``transform`` lambda makes the
+    operator holding it ``CodegenFallback``, so it runs interpreted, once
+    per array element, outside whole-stage codegen. The single
     source of truth for both the positional stream (operators/curation.
     ngram_stream) and the distinct shingle set (operators/similarity.
     ngram_shingles); the DuckDB mirrors live in the plan modules."""

@@ -22,7 +22,8 @@ def ngram_stream(
 ) -> DataFrame:
     """Word n-grams per key WITH multiplicity (one row per position) —
     the positional twin of similarity.ngram_shingles (which dedupes).
-    Per-row array transform: zero shuffle, whole-stage codegen."""
+    Per-row array transform: zero shuffle, though its lambda runs
+    interpreted (``CodegenFallback``, see ``ngram_expr``)."""
     return docs.select(
         key, F.explode(F.expr(ngram_expr(n, tokens_col))).alias("gram")
     )

@@ -24,10 +24,12 @@ Scale design:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.text import ngram_expr
 from ..caching import persist_tracked
+from ..sources.readers import local_relation
 
 #: (pos, 2^pos) literals for 60-bit arithmetic — double pow() is inexact past
 #: 2^53, so both engines get the exact powers as data, not math.
@@ -263,19 +265,32 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 8, key: str = "doc_id"
     )
 
 
+#: Most pair rows :func:`connected_components` resolves on the driver. A
+#: bound on driver memory, not a tuning point: 2^20 collected pairs plus the
+#: union-find map are a few hundred MB of Python objects at worst, while the
+#: distributed loop pays one Spark job per round at any graph size.
+_DRIVER_MAX_EDGES = 1 << 20
+
+
 def connected_components(
     pairs: DataFrame, key_a: str = "ka", key_b: str = "kb", max_iters: int = 15
 ) -> DataFrame:
-    """Connected components over an undirected pair list by iterative
-    min-label propagation: every node repeatedly takes the minimum label
-    among itself and its neighbors until a fixpoint. Converges in at most
+    """Connected components over an undirected pair list: (node, label),
+    label = min node id of the component (the canonical "keeper" a dedup
+    pipeline retains), both of the input key's type.
+
+    One job, ``limit(T + 1).collect()`` with T = ``_DRIVER_MAX_EDGES``,
+    picks the path. At most T pairs: union-find on the driver, exact at any
+    diameter (``max_iters`` does not apply), handed back as a LocalRelation;
+    near-dup pair graphs (pairs above a similarity threshold) are this
+    size. Above T: the distributed min-label loop, the only path for a
+    graph the driver cannot hold; the pairs plan runs again under it.
+
+    The loop: every node repeatedly takes the minimum label among itself
+    and its neighbors until a fixpoint. Converges in at most
     graph-diameter iterations — near-dup clusters are shallow (stars/cliques),
     so 2-4 rounds in practice; ``max_iters`` is a safety bound.
 
-    Returns (node, label) where label = min node id of the component — the
-    canonical "keeper" a dedup pipeline retains.
-
-    Scale design:
     - each round is ONE shuffle (join on dst + min-aggregate on src);
     - a LAZY ``localCheckpoint`` truncates lineage every round — without it
       the plan doubles per iteration and the job dies on planning long
@@ -299,16 +314,19 @@ def connected_components(
       both behaviors.
     """
     fwd = pairs.select(F.col(key_a).alias("src"), F.col(key_b).alias("dst"))
+    both = fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    rows = fwd.limit(_DRIVER_MAX_EDGES + 1).collect()
+    if len(rows) <= _DRIVER_MAX_EDGES:
+        key = both.schema["src"].dataType.simpleString()
+        return local_relation(
+            pairs.sparkSession, _union_find_labels(rows), f"node {key}, label {key}"
+        )
     # Pre-partitioned on the per-round join key BEFORE the persist: the
     # cached hash-partitioning satisfies every round's label-join
     # distribution, so iterations exchange only the |V|-row labels frame
     # (the same measured fix as PageRank's transition matrix,
     # plans/graphq.py — 5.6x wall at the 100x rehearsal there).
-    edges = persist_tracked(
-        fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .repartition(F.col("dst"))
-    )
+    edges = persist_tracked(both.distinct().repartition(F.col("dst")))
     # Label init WITH the first propagation round baked in: label0(u) =
     # min(u, N(u)) is exactly what round 1 of plain identity-init propagation
     # produces, and it falls out of the SAME exchange the old
@@ -359,6 +377,27 @@ def connected_components(
             "max_iters."
         )
     return labels
+
+
+def _union_find_labels(rows: list) -> pd.DataFrame:
+    """(node, label) of every node in the ``rows`` pairs: union-find that always
+    hangs the larger root under the smaller, so each root is its
+    component's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    return pd.DataFrame({"node": nodes, "label": [find(n) for n in nodes]})
 
 
 def connected_components_twophase(
@@ -468,7 +507,8 @@ def ngram_shingles(
     default (set semantics for Jaccard/df counting).
 
     Shingling is a per-row array transform (slice + join over a generated
-    index sequence) — zero shuffle, whole-stage codegen; the windowed
+    index sequence) — zero shuffle, though its lambda runs interpreted
+    (``CodegenFallback``, see ``ngram_expr``); the windowed
     lead() formulation would shuffle the corpus by key for no reason.
 
     ``distinct=False`` skips the (key, shingle) distinct EXCHANGE and keeps

@@ -3,8 +3,9 @@ brute-force cosine top-k, blocked (IVF-style) search, near-duplicate pairs,
 and a random-hyperplane LSH sketch for cosine blocking.
 
 Scale design:
-- Dot products run as sequential array folds (``aggregate(zip_with(...))``)
-  inside whole-stage codegen: no Python, no shuffle per element, and
+- Dot products run as sequential array folds (``aggregate(zip_with(...))``):
+  no Python and no shuffle per element; the lambdas are ``CodegenFallback``,
+  so the fold runs interpreted outside whole-stage codegen. They are
   bit-identical to DuckDB's list_dot_product (verified by the differential
   suite) so full-precision cosines are oracle-checkable.
 - Brute force is O(|Q|·N) — correct baseline; the scale paths are (a)

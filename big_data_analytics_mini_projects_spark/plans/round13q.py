@@ -12,13 +12,13 @@ Three queries extending the tokenizer-training / mixing / quality families:
 - ``bpe_merge_curve``       — MULTI-merge BPE tokenizer-training
   convergence curve (the lloyd_convergence_curve shape on bpe_merge_step,
   round6q): four full merge iterations — pair counting, greedy-leftmost
-  merge application, vocabulary compression tracking — run RELATIONALLY on
-  the word-type frame. ROUND_QUEUE flagged Spark-vs-DuckDB
-  regexp_replace greedy-parity as the risk here; this design eliminates
-  the regex entirely: the greedy leftmost-non-overlapping merge is a
-  gaps-and-islands window computation (dedup_exact_substring's trick),
-  identical integer logic in both engines — RE2's missing lookarounds
-  never enter the picture.
+  merge application, vocabulary compression tracking. One Spark job
+  aggregates the corpus into (word, freq) word types; the merges run on
+  the driver over that dimension-scale vocabulary, and the curve comes
+  back as a LocalRelation. No regex anywhere: the driver applies a merge
+  by a left-to-right scan, and the DuckDB oracle by a gaps-and-islands
+  window computation (dedup_exact_substring's trick), so RE2's missing
+  lookarounds never enter the picture.
 - ``repetition_quality_rules`` — per-document repetition quality gates
   (the MassiveText/Gopher rule family): top-word character share,
   duplicate-word fraction, duplicate-2gram character share, composite
@@ -28,11 +28,15 @@ Three queries extending the tokenizer-training / mixing / quality families:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window, functions as F
+from collections import Counter
 
-from ..caching import checkpoint_shared, persist_tracked
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+
+from ..caching import persist_tracked
 from ..functions.hashing import h64, h64_sql
 from ..functions.text import round_stable, sql_round_stable
+from ..sources.readers import local_relation
 from ..sources.tables import load_table, spread
 from .registry import register
 from .shared import (
@@ -181,155 +185,84 @@ def _sql_bpe_oracle(iters: int = N_MERGES) -> str:
     "freq-weighted number of merges actually applied, and the remaining "
     "freq-weighted symbol total (the compression curve a tokenizer "
     "trainer watches for diminishing returns). Scale design: ONE corpus-"
-    "linear shuffle builds the word-type/frequency vocabulary; every "
-    "iteration after that runs on the vocab x symbol frame (dimension "
-    "scale — bounded by total vocabulary characters, not corpus tokens): "
-    "one vocab-keyed pair aggregate, three word-partitioned windows, and "
-    "a 1-row driver collect for the argmax (the momentum_gd bounded-"
-    "scalar class, 2 rows x 4 iterations total). Greedy application is "
-    "regex-free — leftmost-non-overlapping occurrences are selected with "
-    "the gaps-and-islands window trick (runs of a self-pair like 'a a a a' "
-    "merge at even island offsets), so cross-engine parity needs no "
-    "regexp_replace semantics at all (RE2 has no lookarounds; the "
-    "ROUND_QUEUE risk note). All outputs are exact integers.",
+    "linear shuffle builds the word-type/frequency vocabulary, collected "
+    "once; the merges then run on the driver over the word types "
+    "(dimension scale: 31 types at sf0.1, 310 at sf1), the rule Hugging "
+    "Face-style BPE trainers and MLlib's Word2Vec vocabulary follow. The "
+    "curve comes back as a LocalRelation. The DuckDB oracle stays fully "
+    "relational: greedy application is the regex-free gaps-and-islands "
+    "window trick (runs of a self-pair like 'a a a a' merge at even "
+    "island offsets), so cross-engine parity needs no regexp_replace "
+    "semantics at all (RE2 has no lookarounds). All outputs are exact "
+    "integers.",
     tags=("curation", "tokenize_char", "iterative", "pipeline"),
 )
 def bpe_merge_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, rows = bpe_merge_chain(spark, sf_dir)
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+    _, stats = bpe_merge_chain(spark, sf_dir)
+    return local_relation(
+        spark,
+        pd.DataFrame(stats, dtype=object),
+        "iteration long, pair string, pair_count long, merged_occ long, total_syms long",
+    )
 
 
 def bpe_merge_chain(
     spark: SparkSession, sf_dir: str, n_merges: int = N_MERGES
-) -> tuple[DataFrame, list[DataFrame]]:
-    """The shared BPE merge-training loop: returns (the word-type symbol
-    frame AFTER the final merge, the per-iteration 1-row stat frames).
-    Single source for bpe_merge_curve (stats) and round15q's fertility view
-    (final spellings) — both engines' chains stay byte-reconciled because
-    the SQL twin (_sql_bpe_chain) is shared the same way.
+) -> tuple[dict[str, list[str]], list[tuple]]:
+    """The shared BPE merge-training loop: returns (each word type's
+    spelling after the final merge, one ``(iteration, pair, pair_count,
+    merged_occ, total_syms)`` tuple per iteration). Single source for
+    bpe_merge_curve (stats) and round15q's fertility view (spellings);
+    _sql_bpe_chain is the SQL twin both oracles share.
 
-    Driver-job census (guide §1.5/§2.6, tightened round 12): the loop
-    collects ONLY the per-iteration argmax (the value that steers the next
-    merge — irreducibly sequential). The merged-occurrence and symbol-total
-    stats ride as LAZY 1-row aggregates over the persisted step frames, so
-    they are computed by the consumer's single action instead of 2n_merges+1
-    extra driver jobs per build (4 jobs/build instead of 9 at N_MERGES=4)."""
+    Job census: one, the corpus-linear vocabulary aggregate, collected as
+    (word, freq). The merges run in Python over the word types: each
+    iteration counts freq-weighted adjacent pairs, takes the argmax under
+    the oracle's tie order (cnt desc, sym, nxt) and applies it greedily
+    leftmost-non-overlapping (a run 'a a a' of the self-pair 'a a' becomes
+    'aa a'), which is what the oracle's gaps-and-islands windows compute."""
     docs = spread(load_table(spark, sf_dir, "documents").select("text"))
     words = docs.select(
         F.explode(F.expr("filter(split(lower(text), ' '), x -> x <> '')")).alias(
             "word"
         )
     ).filter(F.col("word").rlike(_WORD_RE))
-    vocab = words.groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("freq"))
-    syms = vocab.select(
-        "word",
-        "freq",
-        F.posexplode(
-            F.expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))")
-        ).alias("pos", "sym"),
-    ).select("word", "freq", F.col("pos").cast("long").alias("pos"), "sym")
-    # Measured note (optimization round 11): replacing these per-iteration
-    # persists with checkpoint_shared leaves was TRIED and ran ~15% slower —
-    # the checkpoint leaf drops the word-hash partitioning the persisted
-    # window output carries, so every iteration re-exchanges by word. The
-    # persists stay.
-    syms = persist_tracked(syms)
+    vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("freq")).collect()
+    freq = {r["word"]: r["freq"] for r in vocab}
+    spell = {w: list(w) for w in freq}
 
-    w_word = Window.partitionBy("word").orderBy("pos")
+    def total_syms() -> int | None:
+        # NULL over an empty vocabulary, as the oracle's SUM is
+        return sum(freq[w] * len(syms) for w, syms in spell.items()) if spell else None
 
-    rows: list[DataFrame] = []
+    stats: list[tuple] = []
     for t in range(1, n_merges + 1):
-        n = syms.withColumn("nxt", F.lead("sym").over(w_word))
-        best_rows = (
-            n.filter(F.col("nxt").isNotNull())
-            .groupBy("sym", "nxt")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("sym"), F.asc("nxt"))
-            .limit(1)
-            .collect()
-        )
-        if not best_rows:
-            # Degenerate corpus: every word already collapsed to one symbol,
-            # so there are no adjacent pairs left. The unrolled oracle's
-            # scalar subqueries over the empty b{t} CTE yield NULL pair/
-            # pair_count, zero merged occurrences, and an unchanged symbol
-            # total — emit the matching row instead of raising (round-8
-            # ADVICE; unreachable at the shipped SFs, pinned by a fixture
-            # test). The symbol total is a lazy aggregate over the CURRENT
-            # syms frame (= the running total; no pairs means no change).
-            rows.append(
-                syms.agg(F.sum("freq").cast("long").alias("total_syms")).select(
-                    F.lit(t).cast("long").alias("iteration"),
-                    F.lit(None).cast("string").alias("pair"),
-                    F.lit(None).cast("long").alias("pair_count"),
-                    F.lit(0).cast("long").alias("merged_occ"),
-                    "total_syms",
-                )
-            )
+        counts: Counter = Counter()
+        for w, syms in spell.items():
+            for pair in zip(syms, syms[1:]):
+                counts[pair] += freq[w]
+        if not counts:
+            # Degenerate corpus: every word is already one symbol, so no
+            # pair is left. The oracle's scalar subqueries over its empty
+            # argmax CTE give a NULL pair and count, zero merges and the
+            # unchanged symbol total (pinned by a fixture test).
+            stats.append((t, None, None, 0, total_syms()))
             continue
-        best = best_rows[0]
-        a, b, cnt = best["sym"], best["nxt"], int(best["cnt"])
-        m = n.withColumn(
-            "mk",
-            F.col("nxt").isNotNull() & (F.col("sym") == a) & (F.col("nxt") == b),
-        )
-        i = m.withColumn(
-            "isl",
-            F.col("pos")
-            - F.row_number().over(Window.partitionBy("word", "mk").orderBy("pos")),
-        )
-        c = i.withColumn(
-            "ch",
-            F.col("mk")
-            & (
-                (
-                    F.col("pos")
-                    - F.min("pos").over(Window.partitionBy("word", "mk", "isl"))
-                )
-                % 2
-                == 0
-            ),
-        )
-        d = checkpoint_shared(
-            f"r13.bpe_d{t}",
-            sf_dir,
-            lambda c=c: persist_tracked(c.withColumn("pch", F.lag("ch").over(w_word))),
-        )
-        syms = checkpoint_shared(
-            f"r13.bpe_syms{t}",
-            sf_dir,
-            lambda d=d, a=a, b=b: persist_tracked(
-                d.filter(~F.coalesce(F.col("pch"), F.lit(False)))
-                .select(
-                    "word",
-                    "freq",
-                    (F.row_number().over(w_word) - 1).cast("long").alias("pos"),
-                    F.when(F.col("ch"), F.lit(a + b)).otherwise(
-                        F.col("sym")
-                    ).alias("sym"),
-                )
-            ),
-        )
-        # lazy stats over the persisted step frames: merged_occ from d's
-        # applied-merge rows, the post-merge symbol total from syms —
-        # the consumer's one action computes both (no per-iteration collect)
-        mrow = d.filter("ch").agg(
-            F.coalesce(F.sum("freq"), F.lit(0)).cast("long").alias("merged_occ")
-        )
-        trow = syms.agg(F.sum("freq").cast("long").alias("total_syms"))
-        rows.append(
-            mrow.crossJoin(F.broadcast(trow)).select(
-                F.lit(t).cast("long").alias("iteration"),
-                F.lit(f"{a} {b}").alias("pair"),
-                F.lit(cnt).cast("long").alias("pair_count"),
-                "merged_occ",
-                "total_syms",
-            )
-        )
-    return syms, rows
+        (a, b), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merged = 0
+        for w, syms in spell.items():
+            out, i = [], 0
+            while i < len(syms):
+                if syms[i : i + 2] == [a, b]:
+                    out.append(a + b)
+                    merged += freq[w]
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            spell[w] = out
+        stats.append((t, f"{a} {b}", cnt, merged, total_syms()))
+    return spell, stats
 
 
 # --------------------------------------------------------------------------

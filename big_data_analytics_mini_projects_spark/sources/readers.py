@@ -4,6 +4,7 @@
 - ``scan_csv``        <- positional CSV with seek-based two-pass (sampler_v02.py:41-48)
 - ``scan_mem``        <- sc.parallelize / constructor data list (MRSystemSimulator2020.py:46)
 - ``scan_coo``        <- scipy-COO sparse matrix records (MRSystemSimulator2020.py:296-301)
+- ``local_relation``  <- a driver-side pandas result, handed back as a LocalRelation
 
 All return DataFrames with explicit schemas (the reference is schema-on-read with
 KeyError fallbacks; we validate instead — SURVEY.md §1.3).
@@ -89,6 +90,19 @@ def scan_csv(
 def scan_mem(spark: SparkSession, rows: Iterable, schema) -> DataFrame:
     """In-memory collection source (sc.parallelize / simulator ``data`` list)."""
     return spark.createDataFrame(list(rows), schema)
+
+
+def local_relation(spark: SparkSession, pdf, schema: str) -> DataFrame:
+    """A driver-side result (a pandas frame) handed back as a JVM
+    ``LocalRelation``: ``createDataFrame(pandas_df, schema)`` ships it
+    through Arrow. ``createDataFrame(list)``, and pyspark's route for an
+    EMPTY pandas frame, plan a Python-RDD scan instead, whose first use
+    starts the Python workers (seconds). So an empty result goes over as
+    one null row under ``LIMIT 0``, which the optimizer folds into an empty
+    LocalRelation."""
+    if len(pdf):
+        return spark.createDataFrame(pdf, schema)
+    return spark.createDataFrame(pdf.reindex([0]), schema).limit(0)
 
 
 def scan_coo(spark: SparkSession, cells: Iterable[tuple[str, int, int, float]]) -> DataFrame:

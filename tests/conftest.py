@@ -44,3 +44,18 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def cc_paths(monkeypatch):
+    """Iterate to run a connected-components check on each path in turn:
+    a large driver bound keeps every graph on the driver's union-find, a
+    bound of 0 sends it through the distributed min-label loop."""
+    from big_data_analytics_mini_projects_spark.operators import similarity
+
+    def paths():
+        for name, bound in (("driver", 1 << 30), ("distributed", 0)):
+            monkeypatch.setattr(similarity, "_DRIVER_MAX_EDGES", bound)
+            yield name
+
+    return paths()

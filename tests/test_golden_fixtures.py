@@ -98,8 +98,9 @@ def test_join_asof_random_vs_bruteforce(spark):
     assert got == exp
 
 
-def test_connected_components_random_vs_union_find(spark):
-    """Seeded random graph: min-label propagation equals union-find."""
+def test_connected_components_random_vs_union_find(spark, cc_paths):
+    """Seeded random graph: both CC paths (driver union-find, distributed
+    min-label propagation) equal an independent union-find."""
     import random
 
     from big_data_analytics_mini_projects_spark.operators.similarity import (
@@ -129,5 +130,6 @@ def test_connected_components_random_vs_union_find(spark):
     exp = {n: min(members) for members in comp.values() for n in members}
 
     pairs = spark.createDataFrame(edges, "ka long, kb long")
-    got = {r["node"]: r["label"] for r in connected_components(pairs).collect()}
-    assert got == exp
+    for path in cc_paths:
+        got = {r["node"]: r["label"] for r in connected_components(pairs).collect()}
+        assert got == exp, path

@@ -69,9 +69,6 @@ BNLJ_OK = {
     "triangle_count_knn",
     # Q4's scalar floor date: a 1-row aggregate broadcast onto lineitem
     "tpch_q4_order_priority",
-    # per-iteration 1-row (merged_occ x total_syms) stat assembly (round 12:
-    # the BPE loop stats became lazy aggregates instead of driver collects)
-    "bpe_merge_curve",
     # TPC-H completion batch: 1-row scalar-subquery broadcasts
     "tpch_q11_important_parts",   # global value total
     "tpch_q15_top_supplier",      # MAX(total_revenue) scalar
@@ -240,6 +237,19 @@ def test_catalog_plan_hygiene(spark, sf_dir):
         if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_OK:
             problems.append(f"{name}: unexpected BroadcastNestedLoopJoin")
     assert not problems, "\n".join(problems)
+
+
+def test_driver_loop_results_are_local_relations(spark, sf_dir):
+    """The connected-components labels (dedup_clusters, on the driver path
+    at this scale) and the BPE curve come back through Arrow as a
+    LocalRelation leaf, never an RDD scan: ``createDataFrame(list)``, or
+    Arrow's silent fallback to it, plans a LogicalRDD whose first use
+    starts the Python workers."""
+    for name in ("dedup_clusters", "bpe_merge_curve"):
+        df = QUERIES[name].build(spark, sf_dir)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+        assert "LocalRelation" in plan, (name, plan)
+        assert "LogicalRDD" not in plan, (name, plan)
 
 
 def test_minhash_simhash_no_scatter_exchange(spark, sf_dir):
@@ -469,10 +479,11 @@ def test_round15q_shapes_pinned(spark, sf_dir):
     frame (no second corpus scan, no 1-row cross join), and the only
     exchanges key doc_id (the per-doc aggregate) or b (the 512-bucket rate
     aggregate); at most two parquet scans of documents. (b)
-    bpe_fertility_by_source: corpus-scale exchanges key ONLY source (the
-    final fertility aggregate); every other exchange keys word — the
-    VOCAB-sized merge-chain frames (word types, not corpus rows) — and the
-    final spelling join rides a broadcast, never SortMerge."""
+    bpe_fertility_by_source: the trained spellings are a driver-side
+    LocalRelation of word types, so the corpus-side word stream joins them
+    by broadcast (never SortMerge) and the only corpus-scale exchange keys
+    source (the final fertility aggregate); a word-keyed exchange would be
+    a vocabulary-sized one."""
     import re
 
     spark.catalog.clearCache()

@@ -90,9 +90,11 @@ def _union_find_components(edges):
     return {n: find(n) for n in parent}
 
 
-def test_connected_components_matches_union_find(spark):
-    """Min-label propagation == classic union-find, including multi-hop
-    chains longer than one propagation round."""
+def test_connected_components_matches_union_find(spark, cc_paths):
+    """Both CC paths (driver union-find, distributed min-label propagation)
+    == classic union-find, including multi-hop chains longer than one
+    propagation round."""
+    graphs = []
     for seed in (11, 12):
         rng = random.Random(seed)
         nodes = list(range(30))
@@ -105,11 +107,13 @@ def test_connected_components_matches_union_find(spark):
         # add one long path to force >2 propagation rounds
         path = [100, 101, 102, 103, 104, 105]
         edges += list(zip(path, path[1:]))
-        pdf = spark.createDataFrame(edges, "ka long, kb long")
-        got = {
-            r["node"]: r["label"] for r in connected_components(pdf).collect()
-        }
-        assert got == _union_find_components(edges), f"seed {seed}"
+        graphs.append((seed, edges, spark.createDataFrame(edges, "ka long, kb long")))
+    for cc_path in cc_paths:
+        for seed, edges, pdf in graphs:
+            got = {
+                r["node"]: r["label"] for r in connected_components(pdf).collect()
+            }
+            assert got == _union_find_components(edges), f"{cc_path} seed {seed}"
 
 
 def test_connected_components_twophase_matches_union_find(spark):

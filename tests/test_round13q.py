@@ -56,48 +56,60 @@ def test_bpe_curve_invariants(spark, sf_dir):
         assert b["total_syms"] < a["total_syms"]
 
 
+def _bpe_on_fixture(spark, tmp_path, name, docs):
+    """bpe_merge_curve's rows on a one-off documents table, and the
+    unrolled DuckDB oracle's rows on the same data, both as sorted
+    (iteration, pair, pair_count, merged_occ, total_syms) tuples."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", docs)
+    sf_dir = os.path.join(tmp_path, name)
+    os.makedirs(sf_dir)
+    fixture = os.path.join(sf_dir, "documents.parquet")
+    con.execute(f"COPY d TO '{fixture}' (FORMAT PARQUET)")
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{fixture}')"
+    )
+    got = sorted(
+        (r["iteration"], r["pair"], r["pair_count"], r["merged_occ"], r["total_syms"])
+        for r in QUERIES["bpe_merge_curve"].build(spark, sf_dir).collect()
+    )
+    return got, sorted(con.execute(_sql_bpe_oracle()).fetchall())
+
+
 def test_bpe_greedy_run_semantics(spark, tmp_path):
     """Pin the greedy leftmost-non-overlapping semantics on a run-heavy
     fixture where the top pair is a SELF-pair: 'aaaa' must merge to
     'aa aa' (two merges, even island offsets), 'aaa' to 'aa a' (one),
     and the engine must agree with the unrolled SQL oracle on the same
     data — the exact case regexp_replace-based merging gets wrong
-    (consumed separators block adjacent matches; ROUND_QUEUE risk note)."""
-    con = duckdb.connect()
-    docs = [
-        (1, "aaaa aaa aa xy"),
-        (2, "aaaa aaaa xy xy"),
-        (3, "baaab aa"),
-    ]
-    con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO d VALUES (?, ?)", docs)
-    fixture = os.path.join(tmp_path, "documents.parquet")
-    con.execute(f"COPY d TO '{fixture}' (FORMAT PARQUET)")
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{fixture}')"
-    )
-
+    (consumed separators block adjacent matches; ROUND_QUEUE risk note).
+    A second fixture pins the argmax tie order (cnt desc, sym, nxt)."""
     # iteration 1 by hand. Word freqs: aaaa x3 (doc1 + doc2 twice), aaa x1,
     # aa x2, xy x3, baaab x1. Raw 'a a' adjacency = 3 pairs x3 (aaaa)
     # + 2x1 (aaa) + 1x2 (aa) + 2x1 (baaab) = 15 — the argmax ('x y' has 3).
     # Greedy application (even island offsets): aaaa -> aa,aa (2 merges x3),
     # aaa -> aa,a (1 x1), aa -> aa (1 x2), baaab -> b,aa,a,b (1 x1):
     # merged_occ = 6+1+2+1 = 10.
-    spark_rows = sorted(
-        QUERIES["bpe_merge_curve"].build(spark, str(tmp_path)).collect(),
-        key=lambda r: r["iteration"],
+    got, want = _bpe_on_fixture(
+        spark,
+        tmp_path,
+        "runs",
+        [(1, "aaaa aaa aa xy"), (2, "aaaa aaaa xy xy"), (3, "baaab aa")],
     )
-    it1 = spark_rows[0]
-    assert it1["pair"] == "a a"
-    assert it1["pair_count"] == 15
-    assert it1["merged_occ"] == 10
-    # cross-engine: the unrolled oracle on the same fixture
-    oracle_rows = con.execute(_sql_bpe_oracle()).fetchall()
-    got = [
-        (r["iteration"], r["pair"], r["pair_count"], r["merged_occ"], r["total_syms"])
-        for r in spark_rows
-    ]
-    assert got == sorted(oracle_rows)
+    it1 = got[0]
+    assert it1[1:4] == ("a a", 15, 10)
+    assert got == want
+
+    # Every pair below has count 2, so each merge is a tie: 'a b' beats
+    # 'c a' on sym and 'a c' on nxt, then 'a c' beats 'c a' on sym. After
+    # three merges each word is one symbol and the fourth row degenerates.
+    got, want = _bpe_on_fixture(
+        spark, tmp_path, "ties", [(1, "ca ac ab"), (2, "ab ac ca")]
+    )
+    assert [r[1] for r in got] == ["a b", "a c", "c a", None]
+    assert [r[2] for r in got] == [2, 2, 2, None]
+    assert got == want
 
 
 def test_repetition_rules_invariants(spark, duck, sf_dir):

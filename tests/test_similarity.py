@@ -100,9 +100,10 @@ def test_ngram_jaccard_planted(spark):
     assert (1, 3) not in out
 
 
-def test_connected_components_known_graph(spark):
+def test_connected_components_known_graph(spark, cc_paths):
     """Two chains + an isolate-free triangle resolve to min-id labels in
-    <= diameter rounds: {1-2-3-4} -> 1, {10-11} -> 10, {20-21-22} -> 20."""
+    <= diameter rounds: {1-2-3-4} -> 1, {10-11} -> 10, {20-21-22} -> 20,
+    on the driver path and on the distributed loop."""
     from big_data_analytics_mini_projects_spark.operators.similarity import (
         connected_components,
     )
@@ -111,18 +112,23 @@ def test_connected_components_known_graph(spark):
         [(2, 1), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
         "ka long, kb long",
     )
-    got = {
-        r["node"]: r["label"] for r in connected_components(pairs).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+    for path in cc_paths:
+        got = {
+            r["node"]: r["label"] for r in connected_components(pairs).collect()
+        }
+        assert got == {
+            1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20
+        }, path
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, cc_paths):
     """The diameter story behind the dedup-apply CC choice (round-4 verdict
     item 5), pinned on a 40-node path graph (diameter 39):
 
     - min-label propagation needs ~diameter rounds; with a smaller bound it
       must RAISE, never return silently-wrong labels;
+    - the driver path's union-find returns the exact labels whatever
+      ``max_iters`` says;
     - large-star/small-star resolves the same chain within its default
       O(log^2 n) round budget — the variant the apply pipeline swaps in
       when component diameter is not structurally bounded.
@@ -145,25 +151,59 @@ def test_connected_components_long_chain(spark):
     }
     assert got == want
 
-    # min-label: correct when the bound covers the diameter...
-    got = {
-        r["node"]: r["label"]
-        for r in connected_components(pairs, max_iters=n + 1).collect()
-    }
-    assert got == want
+    for path in cc_paths:
+        if path == "driver":
+            # union-find is exact at any diameter: max_iters does not apply
+            got = {
+                r["node"]: r["label"]
+                for r in connected_components(pairs, max_iters=5).collect()
+            }
+            assert got == want
+            continue
+        # min-label: correct when the bound covers the diameter...
+        got = {
+            r["node"]: r["label"]
+            for r in connected_components(pairs, max_iters=n + 1).collect()
+        }
+        assert got == want
 
-    # ...and refuses to emit non-fixpoint labels when it does not
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(pairs, max_iters=5)
+        # ...and refuses to emit non-fixpoint labels when it does not
+        with pytest.raises(RuntimeError, match="fixpoint"):
+            connected_components(pairs, max_iters=5)
 
 
-def test_connected_components_empty(spark):
+def test_connected_components_empty(spark, cc_paths):
     from big_data_analytics_mini_projects_spark.operators.similarity import (
         connected_components,
     )
 
     pairs = spark.createDataFrame([], "ka long, kb long")
-    assert connected_components(pairs).count() == 0
+    for path in cc_paths:
+        out = connected_components(pairs)
+        assert out.columns == ["node", "label"], path
+        assert out.count() == 0, path
+        if path == "driver":
+            # an empty pandas frame must not fall back to a Python-RDD scan
+            plan = out._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+            assert "LocalRelation" in plan, plan
+
+
+def test_connected_components_path_boundary(spark, monkeypatch):
+    """Exactly T pair rows stay on the driver (the result is a
+    LocalRelation); T + 1 rows take the distributed loop (its labels are a
+    checkpointed RDD). The extra row repeats an edge reversed, so both see
+    the same graph and must give identical labels."""
+    from big_data_analytics_mini_projects_spark.operators import similarity
+
+    edges = [(5, 4), (4, 3), (3, 2), (2, 1), (9, 8), (8, 7)]
+    monkeypatch.setattr(similarity, "_DRIVER_MAX_EDGES", len(edges))
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 7: 7, 8: 7, 9: 7}
+    for rows, leaf in ((edges, "LocalRelation"), (edges + [(1, 2)], "LogicalRDD")):
+        pairs = spark.createDataFrame(rows, "ka long, kb long")
+        out = similarity.connected_components(pairs)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+        assert leaf in plan, plan
+        assert {r["node"]: r["label"] for r in out.collect()} == want
 
 
 def test_bucketed_near_pairs_recall_and_subset(spark, sf_dir):
