@@ -268,115 +268,36 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 8, key: str = "doc_id"
 #: Most pair rows :func:`connected_components` resolves on the driver. A
 #: bound on driver memory, not a tuning point: 2^20 collected pairs plus the
 #: union-find map are a few hundred MB of Python objects at worst, while the
-#: distributed loop pays one Spark job per round at any graph size.
+#: distributed path pays Spark jobs every round at any graph size.
 _DRIVER_MAX_EDGES = 1 << 20
 
+#: Round budget of :func:`connected_components_twophase`; running out of it
+#: raises. Large-star/small-star takes O(log^2 n) rounds at any diameter.
+_TWOPHASE_MAX_ROUNDS = 12
 
-def connected_components(
-    pairs: DataFrame, key_a: str = "ka", key_b: str = "kb", max_iters: int = 15
-) -> DataFrame:
-    """Connected components over an undirected pair list: (node, label),
-    label = min node id of the component (the canonical "keeper" a dedup
-    pipeline retains), both of the input key's type.
+
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Connected components over an undirected ``(ka, kb)`` pair list:
+    (node, label), label = min node id of the component (the canonical
+    "keeper" a dedup pipeline retains), both of the input key's type.
 
     One job, ``limit(T + 1).collect()`` with T = ``_DRIVER_MAX_EDGES``,
     picks the path. At most T pairs: union-find on the driver, exact at any
-    diameter (``max_iters`` does not apply), handed back as a LocalRelation;
-    near-dup pair graphs (pairs above a similarity threshold) are this
-    size. Above T: the distributed min-label loop, the only path for a
-    graph the driver cannot hold; the pairs plan runs again under it.
-
-    The loop: every node repeatedly takes the minimum label among itself
-    and its neighbors until a fixpoint. Converges in at most
-    graph-diameter iterations — near-dup clusters are shallow (stars/cliques),
-    so 2-4 rounds in practice; ``max_iters`` is a safety bound.
-
-    - each round is ONE shuffle (join on dst + min-aggregate on src);
-    - a LAZY ``localCheckpoint`` truncates lineage every round — without it
-      the plan doubles per iteration and the job dies on planning long
-      before data size matters; the convergence detector's collect
-      materializes it, so each round is exactly one job;
-    - convergence is detected via Σlabels (labels only decrease, so the sum
-      strictly decreases until fixpoint) — one cheap agg instead of a
-      change-count join. The detector needs one extra NO-CHANGE round to
-      confirm the fixpoint, and the label INIT already performs propagation
-      round 1 (label0 = min(self, neighbors), see below), so the effective
-      diameter bound is ``max_iters``: init covers round 1, the loop covers
-      rounds 2..max_iters, and the confirm round reuses the loop's last
-      iteration (round-5 / round-11 ADVICE);
-    - exhausting ``max_iters`` without reaching the fixpoint RAISES rather
-      than returning silently-wrong labels (a component whose diameter
-      exceeds the bound would keep several labels). For graphs where the
-      diameter is not structurally bounded — transitive near-dup chains in
-      a web-scale corpus — use :func:`connected_components_twophase`
-      (O(log² n) rounds regardless of diameter, same (node, label)
-      contract); the long-chain fixture in tests/test_similarity.py pins
-      both behaviors.
+    diameter, handed back as a LocalRelation; near-dup pair graphs (pairs
+    above a similarity threshold) are this size. Above T:
+    :func:`connected_components_twophase`, the only path for a graph the
+    driver cannot hold; the pairs plan runs again under it.
     """
-    fwd = pairs.select(F.col(key_a).alias("src"), F.col(key_b).alias("dst"))
-    both = fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    fwd = pairs.select(F.col("ka").alias("src"), F.col("kb").alias("dst"))
     rows = fwd.limit(_DRIVER_MAX_EDGES + 1).collect()
-    if len(rows) <= _DRIVER_MAX_EDGES:
-        key = both.schema["src"].dataType.simpleString()
-        return local_relation(
-            pairs.sparkSession, _union_find_labels(rows), f"node {key}, label {key}"
-        )
-    # Pre-partitioned on the per-round join key BEFORE the persist: the
-    # cached hash-partitioning satisfies every round's label-join
-    # distribution, so iterations exchange only the |V|-row labels frame
-    # (the same measured fix as PageRank's transition matrix,
-    # plans/graphq.py — 5.6x wall at the 100x rehearsal there).
-    edges = persist_tracked(both.distinct().repartition(F.col("dst")))
-    # Label init WITH the first propagation round baked in: label0(u) =
-    # min(u, N(u)) is exactly what round 1 of plain identity-init propagation
-    # produces, and it falls out of the SAME exchange the old
-    # select(src).distinct() init paid (groupBy(src) vs distinct-on-src) —
-    # one full join round removed for free (guide §2.4: two operations keyed
-    # the same way share one exchange). Final labels are unchanged: labels
-    # only decrease toward the component minimum from any init >= it.
-    #
-    # Each round's localCheckpoint is LAZY and is materialized by the
-    # convergence detector's own collect — one job per round where the eager
-    # checkpoint + separate Σlabels collect paid two (measured: the CC-family
-    # queries spent ~45% of their build time on the extra per-round job).
-    labels = (
-        edges.groupBy("src")
-        .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
-        .select(F.col("src").alias("node"), "label")
-        .localCheckpoint(eager=False)
+    if len(rows) > _DRIVER_MAX_EDGES:
+        return connected_components_twophase(pairs)
+    # the key type of both columns together, as twophase's node set has it
+    both = fwd.unionAll(fwd.select("dst", "src"))
+    key = both.schema["src"].dataType.simpleString()
+    return local_relation(
+        pairs.sparkSession, _union_find_labels(rows), f"node {key}, label {key}"
     )
-    prev = labels.agg(F.sum("label")).collect()[0][0]
-    converged = False
-    for _ in range(max_iters):
-        nbr_min = (
-            edges.join(labels.select(F.col("node").alias("dst"), "label"), "dst")
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        labels = (
-            labels.join(nbr_min.select(F.col("src").alias("node"), "nbr_label"), "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        total = labels.agg(F.sum("label")).collect()[0][0]
-        if total == prev:
-            converged = True
-            break
-        prev = total
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not CONFIRM its fixpoint in {max_iters} "
-            f"rounds (the label init performs propagation round 1 and the "
-            f"Σlabels detector spends one round confirming, so the effective "
-            f"diameter bound is {max_iters}). Use "
-            "connected_components_twophase (diameter-independent) or raise "
-            "max_iters."
-        )
-    return labels
 
 
 def _union_find_labels(rows: list) -> pd.DataFrame:
@@ -400,12 +321,11 @@ def _union_find_labels(rows: list) -> pd.DataFrame:
     return pd.DataFrame({"node": nodes, "label": [find(n) for n in nodes]})
 
 
-def connected_components_twophase(
-    pairs: DataFrame, key_a: str = "ka", key_b: str = "kb", max_rounds: int = 12
-) -> DataFrame:
+def connected_components_twophase(pairs: DataFrame) -> DataFrame:
     """Connected components by alternating large-star / small-star rounds
     (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond") —
-    the giant-component-safe variant :func:`connected_components` documents.
+    the distributed path :func:`connected_components` takes above its
+    driver bound.
 
     Min-label propagation needs O(diameter) rounds: a path component of
     length D takes D rounds, so a 100 TB web-crawl dedup graph with one long
@@ -424,10 +344,13 @@ def connected_components_twophase(
     via the (edge_count, sum-of-endpoints) pair — each round only rewires
     endpoints downward, so the pair is stable iff the edge set is.
 
+    More than ``_TWOPHASE_MAX_ROUNDS`` rounds without a fixpoint RAISES
+    rather than returning labels of an unfinished contraction.
+
     Returns (node, label), same contract as :func:`connected_components`
     (label = min node id of the component).
     """
-    raw = pairs.select(F.col(key_a).alias("u"), F.col(key_b).alias("v"))
+    raw = pairs.select(F.col("ka").alias("u"), F.col("kb").alias("v"))
     nodes = persist_tracked(
         raw.select(F.col("u").alias("node"))
         .unionAll(raw.select(F.col("v").alias("node")))
@@ -438,7 +361,7 @@ def connected_components_twophase(
     # persists blocks, so the round's two reads of `edges` share one compute).
     edges = raw.filter(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=False)
     prev = None
-    for _ in range(max_rounds):
+    for _ in range(_TWOPHASE_MAX_ROUNDS):
         # -- large-star: both directions, group by u, attach larger nbrs to min
         both = edges.unionAll(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -480,20 +403,17 @@ def connected_components_twophase(
         prev = cur
     else:
         raise RuntimeError(
-            f"connected_components_twophase did not stabilize in {max_rounds} "
-            "rounds (O(log^2 n) expected) — raise max_rounds."
+            "connected_components_twophase did not stabilize in "
+            f"{_TWOPHASE_MAX_ROUNDS} rounds (O(log^2 n) expected)."
         )
     # Fixpoint edges are (member, component_min) stars; isolated-in-pairs
     # nodes (self-pair inputs) label themselves.
     lab = edges.select(
         F.greatest("u", "v").alias("node"), F.least("u", "v").alias("label")
     ).groupBy("node").agg(F.min("label").alias("label"))
-    out = (
-        nodes.join(lab, "node", "left")
-        .select("node", F.coalesce("label", F.col("node")).alias("label"))
+    return nodes.join(lab, "node", "left").select(
+        "node", F.coalesce("label", F.col("node")).alias("label")
     )
-    nodes.unpersist()
-    return out
 
 
 def ngram_shingles(

@@ -1,6 +1,6 @@
 """Graph analytics over the relational testdata (beyond-reference; extends
 the iterative-algorithm family started by connected components,
-operators/similarity.py:212).
+operators/similarity.connected_components).
 
 PageRank here runs over the bipartite supplier<->customer trade graph
 (edges = lineitem counts via orders), made strongly usable by adding both
@@ -25,12 +25,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..sources.tables import load_table
 from ..functions.text import round_stable, sql_round_stable
 from .registry import register
 from ..caching import checkpoint_shared, persist_tracked
 
-from .shared import DAMPING, N_PR_ITERS  # noqa: E402  (values in shared.py since round 8)
+from .shared import DAMPING, N_PR_ITERS, pagerank_edges, sql_pagerank_head
 
 
 def _pagerank_oracle(iters: int = N_PR_ITERS, materialized: bool = False) -> str:
@@ -42,19 +41,7 @@ def _pagerank_oracle(iters: int = N_PR_ITERS, materialized: bool = False) -> str
     the transition matrix materializes once (the exact analogue of the
     engine's persisted `edges` frame). Result-identical; pinned equal at
     base SFs by tests/test_scale_tools.py."""
-    m = " MATERIALIZED" if materialized else ""
-    head = (
-        f"WITH e0 AS{m} (SELECT 's' || CAST(l_suppkey AS VARCHAR) AS src, "
-        "'c' || CAST(o_custkey AS VARCHAR) AS dst, COUNT(*) AS w "
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1, 2), "
-        f"e AS{m} (SELECT src, dst, w FROM e0 "
-        "UNION ALL SELECT dst AS src, src AS dst, w FROM e0), "
-        "outw AS (SELECT src, SUM(w) AS ow FROM e GROUP BY src), "
-        f"ed AS{m} (SELECT e.src, e.dst, e.w / outw.ow AS p "
-        "FROM e JOIN outw USING (src)), "
-        "nn AS (SELECT COUNT(*) AS n FROM outw), "
-        "r0 AS (SELECT src AS node, 1.0 / (SELECT n FROM nn) AS r FROM outw)"
-    )
+    head = sql_pagerank_head(materialized)
     steps = "".join(
         f", r{t} AS (SELECT ed.dst AS node, "
         f"0.15 / (SELECT n FROM nn) + {DAMPING} * SUM(r.r * ed.p) AS r "
@@ -90,40 +77,9 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # directed edges) this is the difference between re-shuffling ~1.5 GB
     # of edges per iteration and the per-iteration floor (ranks +
     # groupBy(dst) only).
-    def _edges() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_suppkey"
-        )
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-        # Cached: the union's two branches, the out-weight aggregate, and
-        # the transition join all read e0 — without this the lineitem join
-        # runs 4x.
-        e0 = persist_tracked(
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .select(
-                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                    "src"
-                ),
-                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                    "dst"
-                ),
-            )
-            .groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).alias("w"))
-        )
-        e = e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
-        outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
-        return persist_tracked(
-            e.join(outw, "src")
-            .select("src", "dst", (F.col("w") / F.col("ow")).alias("p"))
-            .repartition(F.col("src"))
-        )
-
-    edges = checkpoint_shared("graphq.pr_edges", sf_dir, _edges)
+    edges = checkpoint_shared(
+        "graphq.pr_edges", sf_dir, lambda: pagerank_edges(spark, sf_dir)
+    )
     nodes = checkpoint_shared(
         "graphq.pr_nodes",
         sf_dir,

@@ -242,7 +242,7 @@ _SQL_HIST_TAIL = (
 )
 def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _scored_pairs(spark, sf_dir)
-    lab = persist_tracked(connected_components(pairs))
+    lab = connected_components(pairs)
     cs = lab.groupBy("label").agg(F.count(F.lit(1)).alias("size"))
     h = cs.groupBy("size").agg(F.count(F.lit(1)).alias("n_clusters"))
     tot = load_table(spark, sf_dir, "documents").agg(
@@ -653,28 +653,22 @@ def banded_width_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pagerank_convergence_curve
 # --------------------------------------------------------------------------
 
-#: Same recurrence constants as plans/graphq.pagerank_trade_graph —
-#: imported so the two queries cannot drift apart.
-from .shared import DAMPING, N_PR_ITERS  # noqa: E402
+#: Same recurrence constants, transition matrix and oracle head as
+#: plans/graphq.pagerank_trade_graph — shared so the two cannot drift apart.
+from .shared import (  # noqa: E402
+    DAMPING,
+    N_PR_ITERS,
+    pagerank_edges,
+    sql_pagerank_head,
+)
 
 
 def _sql_pr_curve_oracle(materialized: bool = False) -> str:
     """Unrolled PageRank with per-iteration L1-delta/mass accounting
-    (mirrors graphq._pagerank_oracle's CTE chain; MATERIALIZED scale form
-    for the same inline-explosion reason)."""
+    (graphq._pagerank_oracle's CTE chain; MATERIALIZED scale form for the
+    same inline-explosion reason)."""
     m = " MATERIALIZED" if materialized else ""
-    head = (
-        f"WITH e0 AS{m} (SELECT 's' || CAST(l_suppkey AS VARCHAR) AS src, "
-        "'c' || CAST(o_custkey AS VARCHAR) AS dst, COUNT(*) AS w "
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1, 2), "
-        f"e AS{m} (SELECT src, dst, w FROM e0 "
-        "UNION ALL SELECT dst AS src, src AS dst, w FROM e0), "
-        "outw AS (SELECT src, SUM(w) AS ow FROM e GROUP BY src), "
-        f"ed AS{m} (SELECT e.src, e.dst, e.w / outw.ow AS p "
-        "FROM e JOIN outw USING (src)), "
-        "nn AS (SELECT COUNT(*) AS n FROM outw), "
-        "r0 AS (SELECT src AS node, 1.0 / (SELECT n FROM nn) AS r FROM outw)"
-    )
+    head = sql_pagerank_head(materialized)
     steps = "".join(
         f", r{t} AS{m} (SELECT ed.dst AS node, "
         f"0.15 / (SELECT n FROM nn) + {DAMPING} * SUM(r.r * ed.p) AS r "
@@ -730,37 +724,9 @@ def pagerank_convergence_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # leaf preserves the groupBy(dst) hash partitioning (LogicalRDD keeps
     # the physical plan's outputPartitioning), so the next iteration's
     # src==node join stays exchange-free exactly like the persisted form.
-    def _edges() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_suppkey"
-        )
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-        e0 = persist_tracked(
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .select(
-                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                    "src"
-                ),
-                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                    "dst"
-                ),
-            )
-            .groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).alias("w"))
-        )
-        e = e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
-        outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
-        return persist_tracked(
-            e.join(outw, "src")
-            .select("src", "dst", (F.col("w") / F.col("ow")).alias("p"))
-            .repartition(F.col("src"))
-        )
-
-    edges = checkpoint_shared("r12.pr_edges", sf_dir, _edges)
+    edges = checkpoint_shared(
+        "r12.pr_edges", sf_dir, lambda: pagerank_edges(spark, sf_dir)
+    )
     nodes = checkpoint_shared(
         "r12.pr_nodes",
         sf_dir,

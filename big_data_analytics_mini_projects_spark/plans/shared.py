@@ -260,6 +260,55 @@ DAMPING = 0.85
 N_PR_ITERS = 3
 
 
+def sql_pagerank_head(materialized: bool = False) -> str:
+    """The oracles' transition-matrix CTEs up to the uniform ranks ``r0``:
+    e0 (weighted supplier->customer edges), e (both directions), outw, ed
+    (transition probability p = w / outw), nn (|V|). ``materialized=True``
+    adds DuckDB's AS MATERIALIZED hint to the multiply-referenced CTEs."""
+    m = " MATERIALIZED" if materialized else ""
+    return (
+        f"WITH e0 AS{m} (SELECT 's' || CAST(l_suppkey AS VARCHAR) AS src, "
+        "'c' || CAST(o_custkey AS VARCHAR) AS dst, COUNT(*) AS w "
+        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1, 2), "
+        f"e AS{m} (SELECT src, dst, w FROM e0 "
+        "UNION ALL SELECT dst AS src, src AS dst, w FROM e0), "
+        "outw AS (SELECT src, SUM(w) AS ow FROM e GROUP BY src), "
+        f"ed AS{m} (SELECT e.src, e.dst, e.w / outw.ow AS p "
+        "FROM e JOIN outw USING (src)), "
+        "nn AS (SELECT COUNT(*) AS n FROM outw), "
+        "r0 AS (SELECT src AS node, 1.0 / (SELECT n FROM nn) AS r FROM outw)"
+    )
+
+
+def pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst, p): the bidirectional supplier<->customer trade graph's
+    transition matrix (edge weight = lineitem count, p = w / outw(src)),
+    persisted and hash-partitioned on src so each rank iteration's
+    src == node join exchanges only the |V|-row ranks."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    # Cached: the union's two branches, the out-weight aggregate, and the
+    # transition join all read e0 — without this the lineitem join runs 4x.
+    e0 = persist_tracked(
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .select(
+            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
+            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
+        )
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+    e = e0.unionByName(
+        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+    )
+    outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
+    return persist_tracked(
+        e.join(outw, "src")
+        .select("src", "dst", (F.col("w") / F.col("ow")).alias("p"))
+        .repartition(F.col("src"))
+    )
+
+
 # -- temperature-mix family (originally plans/round12q.py; moved so the
 # streaming twin in round13q shares weights + oracle text without a
 # module-level import of round12q) --------------------------------------

@@ -328,10 +328,9 @@ assert _SQL_CLUSTER_TAIL_MAT != _SQL_CLUSTER_TAIL
     oracle=f"WITH RECURSIVE {_SQL_SH_SIGS}, {_SQL_CLUSTER_TAIL}",
     scale_oracle=f"WITH RECURSIVE {_SQL_SH_SIGS_WIDE}, {_SQL_CLUSTER_TAIL_MAT}",
     doc="Duplicate-cluster resolution: connected components over the scored "
-    "near-dup pairs (union-find on the driver up to 2^20 pairs, iterative "
-    "min-label propagation above, one shuffle per round with lineage "
-    "truncated per round); cluster = min doc_id = the keeper a dedup "
-    "pipeline retains. Oracle: transitive closure via recursive CTE.",
+    "near-dup pairs (union-find on the driver up to 2^20 pairs, "
+    "large-star/small-star above); cluster = min doc_id = the keeper a "
+    "dedup pipeline retains. Oracle: transitive closure via recursive CTE.",
     tags=("dedup", "graph"),
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,11 +345,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale_oracle=f"WITH RECURSIVE {_SQL_SH_SIGS_WIDE}, {_SQL_CLUSTER_TAIL_MAT}",
     doc="dedup_clusters through the alternating large-star/small-star CC "
     "(Kiveris et al. 2014; operators/similarity.py "
-    "connected_components_twophase): O(log^2 n) rounds independent of "
-    "component diameter — the variant a 100 TB crawl graph with chain-shaped "
-    "components needs, where min-label propagation's O(diameter) rounds "
-    "stall. Same per-round physical shape (groupBy-min + equi-join), same "
-    "output contract, same recursive-CTE oracle as dedup_clusters.",
+    "connected_components_twophase) called directly, so the catalog pins "
+    "the distributed path connected_components takes above 2^20 pairs: "
+    "O(log^2 n) rounds independent of component diameter. Same output "
+    "contract, same recursive-CTE oracle as dedup_clusters.",
     tags=("dedup", "graph"),
 )
 def dedup_clusters_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -542,17 +540,9 @@ _SQL_APPLY_TAIL = (
     "per-source kept/dropped accounting. Composes the whole pipeline "
     "(shingle -> sign -> band -> score -> cluster -> apply) into one "
     "driver-free DAG; the anti join is the only touch on the full corpus "
-    "beyond the signature scan. CC VARIANT (round-4 verdict item 5): this "
-    "composes connected_components, exact on the driver up to 2^20 pairs; "
-    "above that its min-label loop is O(diameter) rounds "
-    "and RAISES if the bound is exceeded — the LSH pair graph here is "
-    "Jaccard-thresholded at 0.5, so components are near-clique clusters of "
-    "mutually-similar docs, not unbounded chains. At 100 TB, where "
-    "transitive chains (A~B~C~... with A!~C) can push the diameter past "
-    "any fixed bound, swap in connected_components_twophase — same "
-    "(node, label) contract, O(log^2 n) rounds regardless of diameter; "
-    "the long-chain fixture in tests/test_similarity.py pins both "
-    "behaviors.",
+    "beyond the signature scan. Its connected_components is union-find on "
+    "the driver up to 2^20 pairs and large-star/small-star above, exact at "
+    "any component diameter.",
     tags=("dedup", "graph", "pipeline"),
 )
 def dedup_apply_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -50,7 +50,8 @@ def sf_dir():
 def cc_paths(monkeypatch):
     """Iterate to run a connected-components check on each path in turn:
     a large driver bound keeps every graph on the driver's union-find, a
-    bound of 0 sends it through the distributed min-label loop."""
+    bound of 0 sends it through the distributed large-star/small-star
+    rounds."""
     from big_data_analytics_mini_projects_spark.operators import similarity
 
     def paths():

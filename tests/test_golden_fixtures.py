@@ -100,7 +100,7 @@ def test_join_asof_random_vs_bruteforce(spark):
 
 def test_connected_components_random_vs_union_find(spark, cc_paths):
     """Seeded random graph: both CC paths (driver union-find, distributed
-    min-label propagation) equal an independent union-find."""
+    large-star/small-star) equal an independent union-find."""
     import random
 
     from big_data_analytics_mini_projects_spark.operators.similarity import (

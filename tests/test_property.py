@@ -11,6 +11,7 @@ brute-force nested loop cannot.
 from __future__ import annotations
 
 import random
+import re
 
 from pyspark.sql import functions as F
 
@@ -91,7 +92,7 @@ def _union_find_components(edges):
 
 
 def test_connected_components_matches_union_find(spark, cc_paths):
-    """Both CC paths (driver union-find, distributed min-label propagation)
+    """Both CC paths (driver union-find, distributed large-star/small-star)
     == classic union-find, including multi-hop chains longer than one
     propagation round."""
     graphs = []
@@ -133,10 +134,11 @@ def test_connected_components_twophase_matches_union_find(spark):
         chain = list(range(200, 250))  # diameter-49 path component
         edges += list(zip(chain, chain[1:]))
         pdf = spark.createDataFrame(edges, "ka long, kb long")
-        got = {
-            r["node"]: r["label"]
-            for r in connected_components_twophase(pdf, max_rounds=12).collect()
-        }
+        out = connected_components_twophase(pdf)
+        # the result reads the persisted node set, not the pairs plan again
+        plan = out._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        assert re.search(r"InMemoryTableScan \[node#\d+L?\]", plan), plan
+        got = {r["node"]: r["label"] for r in out.collect()}
         assert got == _union_find_components(edges), f"seed {seed}"
 
 

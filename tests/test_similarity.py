@@ -101,9 +101,9 @@ def test_ngram_jaccard_planted(spark):
 
 
 def test_connected_components_known_graph(spark, cc_paths):
-    """Two chains + an isolate-free triangle resolve to min-id labels in
-    <= diameter rounds: {1-2-3-4} -> 1, {10-11} -> 10, {20-21-22} -> 20,
-    on the driver path and on the distributed loop."""
+    """Two chains + an isolate-free triangle resolve to min-id labels:
+    {1-2-3-4} -> 1, {10-11} -> 10, {20-21-22} -> 20, on the driver path
+    and on large-star/small-star."""
     from big_data_analytics_mini_projects_spark.operators.similarity import (
         connected_components,
     )
@@ -121,55 +121,34 @@ def test_connected_components_known_graph(spark, cc_paths):
         }, path
 
 
-def test_connected_components_long_chain(spark, cc_paths):
-    """The diameter story behind the dedup-apply CC choice (round-4 verdict
-    item 5), pinned on a 40-node path graph (diameter 39):
+def test_connected_components_long_chain(spark, cc_paths, monkeypatch):
+    """The diameter story behind the CC paths (round-4 verdict item 5),
+    pinned on a 40-node path graph (diameter 39):
 
-    - min-label propagation needs ~diameter rounds; with a smaller bound it
-      must RAISE, never return silently-wrong labels;
-    - the driver path's union-find returns the exact labels whatever
-      ``max_iters`` says;
-    - large-star/small-star resolves the same chain within its default
-      O(log^2 n) round budget — the variant the apply pipeline swaps in
-      when component diameter is not structurally bounded.
+    - the driver path's union-find returns the exact labels at any
+      diameter;
+    - large-star/small-star returns them within its O(log^2 n) round
+      budget, and RAISES when the budget runs out, never returning the
+      labels of an unfinished contraction.
     """
-    from big_data_analytics_mini_projects_spark.operators.similarity import (
-        connected_components,
-        connected_components_twophase,
-    )
+    from big_data_analytics_mini_projects_spark.operators import similarity
 
     n = 40
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "ka long, kb long"
     )
     want = {i: 0 for i in range(n)}
-
-    # twophase: correct well inside its default 12-round budget
-    got = {
-        r["node"]: r["label"]
-        for r in connected_components_twophase(pairs).collect()
-    }
-    assert got == want
-
     for path in cc_paths:
-        if path == "driver":
-            # union-find is exact at any diameter: max_iters does not apply
-            got = {
-                r["node"]: r["label"]
-                for r in connected_components(pairs, max_iters=5).collect()
-            }
-            assert got == want
-            continue
-        # min-label: correct when the bound covers the diameter...
         got = {
             r["node"]: r["label"]
-            for r in connected_components(pairs, max_iters=n + 1).collect()
+            for r in similarity.connected_components(pairs).collect()
         }
-        assert got == want
+        assert got == want, path
 
-        # ...and refuses to emit non-fixpoint labels when it does not
-        with pytest.raises(RuntimeError, match="fixpoint"):
-            connected_components(pairs, max_iters=5)
+    monkeypatch.setattr(similarity, "_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(similarity, "_TWOPHASE_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="stabilize"):
+        similarity.connected_components(pairs)
 
 
 def test_connected_components_empty(spark, cc_paths):
@@ -190,8 +169,8 @@ def test_connected_components_empty(spark, cc_paths):
 
 def test_connected_components_path_boundary(spark, monkeypatch):
     """Exactly T pair rows stay on the driver (the result is a
-    LocalRelation); T + 1 rows take the distributed loop (its labels are a
-    checkpointed RDD). The extra row repeats an edge reversed, so both see
+    LocalRelation); T + 1 rows take large-star/small-star (its labels read
+    a checkpointed RDD). The extra row repeats an edge reversed, so both see
     the same graph and must give identical labels."""
     from big_data_analytics_mini_projects_spark.operators import similarity
 
