@@ -44,15 +44,22 @@ def sql_tokens_regex(table: str = "documents", text_col: str = "text", key: str 
     )
 
 
-def tokenize_ws(df: DataFrame, text_col: str = "text", out: str = "word") -> DataFrame:
-    """Whitespace split + lowercase, dropping empty tokens.
+def tokens(col: Column | str) -> Column:
+    """Whitespace tokens of lowercased text as an array, empty tokens dropped.
 
-    Mirrors Python ``str.split()`` (MRSystemSimulator2020.py:186-191): split on
-    single spaces then drop empties, which equals split-on-runs for
-    single-line text — and is expressible identically in DuckDB.
-    """
-    w = F.explode(F.split(F.lower(F.col(text_col)), " ")).alias(out)
-    return df.withColumn(out, w).filter(F.col(out) != "")
+    Mirrors Python ``str.split()`` (MRSystemSimulator2020.py:186-191): split
+    on single spaces then drop empties, which equals split-on-runs for
+    single-line text — and is expressible identically in DuckDB
+    (:func:`sql_tokens_ws`). ``array_remove`` takes no lambda, so the
+    operator holding it stays in whole-stage codegen. NULL text gives a
+    NULL array."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.array_remove(F.split(F.lower(c), " "), "")
+
+
+def tokenize_ws(df: DataFrame, text_col: str = "text", out: str = "word") -> DataFrame:
+    """One row per :func:`tokens` element."""
+    return df.withColumn(out, F.explode(tokens(text_col)))
 
 
 def sql_tokens_ws(table: str = "documents", text_col: str = "text", key: str = "doc_id") -> str:
@@ -95,21 +102,24 @@ def bool01(col: Column | str) -> Column:
 #: see BASELINE.md round-3/4 precision notes).
 
 
-def ngram_expr(n: int, tokens_col: str = "toks") -> str:
-    """Spark SQL expression producing the positional word n-gram array of a
-    token-array column (one entry per position, duplicates preserved) — a
-    per-row array transform: zero shuffle. Its ``transform`` lambda makes the
-    operator holding it ``CodegenFallback``, so it runs interpreted, once
-    per array element, outside whole-stage codegen. The single
-    source of truth for both the positional stream (operators/curation.
-    ngram_stream) and the distinct shingle set (operators/similarity.
-    ngram_shingles); the DuckDB mirrors live in the plan modules."""
-    return (
-        f"CASE WHEN size({tokens_col}) >= {n} THEN "
-        f"transform(sequence(1, size({tokens_col}) - {n - 1}), "
-        f"i -> array_join(slice({tokens_col}, i, {n}), ' ')) "
-        f"ELSE cast(array() as array<string>) END"
-    )
+def ngrams(toks: Column | str, n: int) -> Column:
+    """Positional word n-grams of a token-array column, as ``arrays_zip`` of
+    ``n`` shifted slices: element i is the struct of tokens i..i+n-1, with
+    fields ``'0'`` .. ``'n-1'``. One entry per start position, duplicates
+    kept, empty below ``n`` tokens, NULL for a NULL array. Explode or
+    posexplode it directly (0-based positions); :func:`ngram_text` joins an
+    element into the space-separated n-gram string. No lambda, so the
+    operator holding it stays in whole-stage codegen. The single Spark-side
+    definition of word n-grams; the DuckDB mirrors live in the plan modules."""
+    t = F.col(toks) if isinstance(toks, str) else toks
+    m = F.greatest(F.size(t) - (n - 1), F.lit(0))
+    return F.arrays_zip(*(F.slice(t, k, m) for k in range(1, n + 1)))
+
+
+def ngram_text(gram: Column | str, n: int) -> Column:
+    """The space-joined string of one :func:`ngrams` element."""
+    g = F.col(gram) if isinstance(gram, str) else gram
+    return F.concat_ws(" ", *(g[str(i)] for i in range(n)))
 
 
 def round_stable(col: Column | str, digits: int = 4) -> Column:

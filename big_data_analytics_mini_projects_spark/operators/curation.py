@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.text import ngram_expr
+from ..functions.text import ngram_text, ngrams
 
 
 def ngram_stream(
@@ -22,10 +22,10 @@ def ngram_stream(
 ) -> DataFrame:
     """Word n-grams per key WITH multiplicity (one row per position) —
     the positional twin of similarity.ngram_shingles (which dedupes).
-    Per-row array transform: zero shuffle, though its lambda runs
-    interpreted (``CodegenFallback``, see ``ngram_expr``)."""
-    return docs.select(
-        key, F.explode(F.expr(ngram_expr(n, tokens_col))).alias("gram")
+    Per-row slice zip (``functions/text.ngrams``): zero shuffle, no lambda,
+    one codegen stage."""
+    return docs.select(key, F.explode(ngrams(tokens_col, n)).alias("g")).select(
+        key, ngram_text("g", n).alias("gram")
     )
 
 

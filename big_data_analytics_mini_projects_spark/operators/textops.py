@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.hashing import h64_sql  # noqa: F401  (oracle builders live in plans)
-from ..functions.text import round4_stable
+from ..functions.text import round4_stable, tokens
 
 #: Stopword list for quality scoring — literal, mirrored in the SQL oracle.
 STOPWORDS = ("the", "a", "and", "of", "to", "is", "in", "it")
@@ -91,18 +91,14 @@ def text_quality(docs: DataFrame, key: str = "doc_id", text_col: str = "text") -
     """Per-doc quality metrics from integer counts (engine-stable divisions):
     token count, distinct-token (type) count, mean token length, stopword
     ratio, type-token ratio, and a weighted quality score in [0, 1]."""
-    toks = F.expr(f"filter(split(lower({text_col}), ' '), x -> x <> '')")
-    stop_arr = ", ".join(f"'{s}'" for s in STOPWORDS)
+    toks = tokens(text_col)
+    stop_arr = F.array(*(F.lit(s) for s in STOPWORDS))
     d = docs.select(
         key,
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_types"),
-        F.expr(
-            f"aggregate(filter(split(lower({text_col}), ' '), x -> x <> ''), "
-            f"0L, (acc, x) -> acc + length(x))"
-        ).alias("char_sum"),
-        F.size(F.expr(f"filter(filter(split(lower({text_col}), ' '), x -> x <> ''), "
-                      f"x -> array_contains(array({stop_arr}), x))")).alias("n_stop"),
+        F.length(F.array_join(toks, "")).alias("char_sum"),
+        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))).alias("n_stop"),
     ).filter(F.col("n_tokens") > 0)
     avg_len = F.col("char_sum").cast("double") / F.col("n_tokens")
     stop_ratio = F.col("n_stop").cast("double") / F.col("n_tokens")
@@ -129,7 +125,7 @@ def text_quality(docs: DataFrame, key: str = "doc_id", text_col: str = "text") -
 def token_counts(docs: DataFrame, key: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Whitespace + BPE-ish token counts per doc — array sizes, no explode,
     no shuffle: the cheapest possible token accounting at 100 TB."""
-    ws = F.size(F.expr(f"filter(split(lower({text_col}), ' '), x -> x <> '')"))
+    ws = F.size(tokens(text_col))
     bpe = F.size(F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(BPE_PATTERN), 1))
     return docs.select(key, ws.alias("ws_tokens"), bpe.alias("bpe_tokens"))
 

@@ -7,8 +7,9 @@ late-round QA twins, PMI collocations and chi-square drift, live in
 plans/qaq.py for driver-window ordering reasons.)
 
 Scale notes per query:
-- `bigram_lm_successors`: pair generation is a per-row array transform
-  (zero shuffle, the ngram_shingles pattern); counts are two partial-agg
+- `bigram_lm_successors`: adjacent pairs are the lambda-free zip of two
+  shifted token slices (functions/text.ngrams: zero shuffle, one codegen
+  stage); counts are two partial-agg
   shuffles; both top-k levels order by INTEGER counts with string
   tiebreakers, so ranking is bit-exact across engines.
 - `scd2_user_event_intervals`: the gaps-and-islands SCD2 build is ONE
@@ -29,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64, h64_sql
 from ..sources.tables import load_table, spread
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import ngrams, round_stable, sql_round_stable, tokens
 from .registry import register
 
 BIGRAM_TOP_HEADS = 20
@@ -63,7 +64,7 @@ Q_LEVELS = 255  # int8 code book: 0..255
         f"FROM ranked WHERE rn <= {BIGRAM_TOP_SUCC}"
     ),
     doc="Bigram language-model table: adjacent-token pairs generated as a "
-    "per-row array transform (zero shuffle, the ngram_shingles pattern), "
+    "per-row zip of two shifted token slices (zero shuffle, no lambda), "
     "counted by (w1, w2); for the 20 most frequent head words, the top-3 "
     "successors with conditional probability cnt/total. Both top-k levels "
     "rank by integer counts with string tiebreakers — bit-exact ordering "
@@ -72,18 +73,10 @@ Q_LEVELS = 255  # int8 code book: 0..255
 )
 def bigram_lm_successors(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = spread(docs).select(
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("t")
+    toks = spread(docs).select(tokens("text").alias("t"))
+    pairs = toks.select(F.explode(ngrams("t", 2)).alias("pr")).select(
+        F.col("pr")["0"].alias("w1"), F.col("pr")["1"].alias("w2")
     )
-    pairs = toks.select(
-        F.explode(
-            F.expr(
-                "CASE WHEN size(t) >= 2 THEN transform(sequence(1, size(t) - 1), "
-                "i -> struct(t[i-1] AS w1, t[i] AS w2)) "
-                "ELSE cast(array() as array<struct<w1:string,w2:string>>) END"
-            )
-        ).alias("pr")
-    ).select("pr.w1", "pr.w2")
     bi = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cnt"))
     tot = bi.groupBy("w1").agg(F.sum("cnt").alias("total"))
     heads = (

@@ -20,7 +20,7 @@ from ..operators.curation import (
 )
 from ..operators.graphs import triangle_count
 from ..functions.hashing import h64
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import round_stable, sql_round_stable, tokens
 from ..operators.similarity import jaccard_prefix_pairs, ngram_shingles
 from ..sources.tables import load_table, spread
 from .registry import register
@@ -49,7 +49,7 @@ def _docs_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spread(
         load_table(spark, sf_dir, "documents").select(
             "doc_id",
-            F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
+            tokens("text").alias("toks"),
         )
     )
 
@@ -273,9 +273,7 @@ def corpus_mix_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(F.expr("filter(split(lower(text), ' '), x -> x <> '')"))
-        .cast("long")
-        .alias("n_tok"),
+        F.size(tokens("text")).cast("long").alias("n_tok"),
     )
     d = spread(docs).withColumn("h", h64("doc_id", "mix") % 10000)
     tot = d.groupBy("source").agg(F.sum("n_tok").alias("src_tok"))

@@ -25,7 +25,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.relational import join_auto
 from ..operators.similarity import ngram_shingles
 from ..operators.vector import _dot, prepare_vectors
-from ..functions.text import round_stable, sql_round_stable, sql_tokens_ws, tokenize_ws
+from ..functions.text import (
+    round_stable,
+    sql_round_stable,
+    sql_tokens_ws,
+    tokenize_ws,
+    tokens,
+)
 from ..sources.tables import load_table, spread
 from .registry import register
 from ..caching import persist_tracked
@@ -85,7 +91,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(
         load_table(spark, sf_dir, "documents").select(
             "doc_id",
-            F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
+            tokens("text").alias("toks"),
         )
     )
     sh = persist_tracked(ngram_shingles(docs, n=3))

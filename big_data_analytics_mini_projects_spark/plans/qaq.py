@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import ngrams, round_stable, sql_round_stable, tokens
 from ..operators.multimodal import decode_png_stats, synth_png_payloads
 from ..sources.tables import load_table, spread
 from ..streaming.stream_stats import events_stream, run_available_now
@@ -134,18 +134,10 @@ PMI_TOPK = 30
 )
 def pmi_word_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = spread(docs).select(
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("t")
+    toks = spread(docs).select(tokens("text").alias("t"))
+    pairs = toks.select(F.explode(ngrams("t", 2)).alias("pr")).select(
+        F.col("pr")["0"].alias("w1"), F.col("pr")["1"].alias("w2")
     )
-    pairs = toks.select(
-        F.explode(
-            F.expr(
-                "CASE WHEN size(t) >= 2 THEN transform(sequence(1, size(t) - 1), "
-                "i -> struct(t[i-1] AS w1, t[i] AS w2)) "
-                "ELSE cast(array() as array<struct<w1:string,w2:string>>) END"
-            )
-        ).alias("pr")
-    ).select("pr.w1", "pr.w2")
     pairs = persist_tracked(pairs)
     bi = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")).filter(
         F.col("c12") >= PMI_MIN_PAIR

@@ -41,6 +41,7 @@ from ..functions.text import (
     sql_round_stable,
     sql_tokens_ws,
     tokenize_ws,
+    tokens,
 )
 from ..operators.aggregates import dsum, sql_dsum
 from ..operators.vector import _dot, cosine_topk, cosine_topk_ivf, ivf_cell_centroids
@@ -251,9 +252,7 @@ def domain_cap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "source",
         "doc_id",
-        F.size(F.expr("filter(split(lower(text), ' '), x -> x <> '')")).alias(
-            "n_tok"
-        ),
+        F.size(tokens("text")).alias("n_tok"),
         h64("doc_id", "cap").alias("h"),
     )
     rk = F.row_number().over(

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..caching import checkpoint_shared, persist_tracked
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import round_stable, sql_round_stable, tokens
 from ..operators.aggregates import dsum, sql_dsum
 from ..operators.similarity import lsh_bands, lsh_candidates, minhash_signatures
 from ..operators.vector import _dot, cosine_topk, hyperplane_buckets
@@ -227,7 +227,7 @@ def bucket_quality_bands(stats: DataFrame, n_bands: int = RQ_BANDS) -> DataFrame
 def retention_quality_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         (h64("doc_id", "rqb") % RQ_BUCKETS).alias("bucket"),
-        F.size(F.expr("filter(split(text, ' '), x -> x <> '')")).alias("n_tok"),
+        F.size(tokens("text")).alias("n_tok"),
     )
     bs = docs.groupBy("bucket").agg(F.sum("n_tok").alias("sum_tok"))
     bd = bucket_quality_bands(bs, RQ_BANDS)

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..caching import checkpoint_shared, persist_tracked
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import round_stable, sql_round_stable, tokens
 from ..operators.aggregates import dsum, sql_dsum
 from ..operators.similarity import connected_components, minhash_signatures
 from ..sources.tables import load_table, spread
@@ -105,9 +105,7 @@ def _sql_pack_oracle() -> str:
 def pack_efficiency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
-        F.size(F.expr("filter(split(lower(text), ' '), x -> x <> '')"))
-        .cast("long")
-        .alias("n_tok"),
+        F.size(tokens("text")).cast("long").alias("n_tok"),
     )
     s = docs.groupBy(F.expr(f"doc_id div {PACK_SHARD}").alias("shard")).agg(
         F.sum("n_tok").alias("t")
@@ -181,9 +179,7 @@ from .shared import (  # noqa: E402
 def temperature_mix_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents")).select(
         "source",
-        F.size(F.expr("filter(split(lower(text), ' '), x -> x <> '')"))
-        .cast("long")
-        .alias("n_tok"),
+        F.size(tokens("text")).cast("long").alias("n_tok"),
     )
     tot = docs.groupBy("source").agg(F.sum("n_tok").alias("m"))
     return mix_shares_frame(tot)

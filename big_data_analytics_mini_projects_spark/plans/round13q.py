@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..caching import persist_tracked
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
 from ..sources.readers import local_relation
 from ..sources.tables import load_table, spread
 from .registry import register
@@ -46,7 +46,6 @@ from .shared import (
     _W_STOP,
     ES_K,
     mix_shares_frame,
-    span_col,
     sql_temperature_oracle,
 )
 
@@ -222,11 +221,9 @@ def bpe_merge_chain(
     leftmost-non-overlapping (a run 'a a a' of the self-pair 'a a' becomes
     'aa a'), which is what the oracle's gaps-and-islands windows compute."""
     docs = spread(load_table(spark, sf_dir, "documents").select("text"))
-    words = docs.select(
-        F.explode(F.expr("filter(split(lower(text), ' '), x -> x <> '')")).alias(
-            "word"
-        )
-    ).filter(F.col("word").rlike(_WORD_RE))
+    words = docs.select(F.explode(tokens("text")).alias("word")).filter(
+        F.col("word").rlike(_WORD_RE)
+    )
     vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("freq")).collect()
     freq = {r["word"]: r["freq"] for r in vocab}
     spell = {w: list(w) for w in freq}
@@ -335,10 +332,7 @@ DUP_2GRAM_MAX = 0.20
 )
 def repetition_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    toks = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
-    )
+    toks = docs.select("doc_id", tokens("text").alias("toks"))
     words = toks.select("doc_id", F.explode("toks").alias("word"))
     wc = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("c"))
     agg = wc.groupBy("doc_id").agg(
@@ -356,14 +350,8 @@ def repetition_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") == 1)
         .select("doc_id", (F.col("c") * F.length("word")).alias("top_chars"))
     )
-    g2 = toks.filter(F.size("toks") >= 2).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1), "
-                "i -> concat(toks[i - 1], ' ', toks[i]))"
-            )
-        ).alias("gram"),
+    g2 = toks.select("doc_id", F.explode(ngrams("toks", 2)).alias("g")).select(
+        "doc_id", ngram_text("g", 2).alias("gram")
     )
     gc = g2.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("c"))
     g = gc.groupBy("doc_id").agg(
@@ -437,7 +425,8 @@ def repetition_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reports its span count, memorized-span count, and novelty ratio. "
     "Documents shorter than 12 tokens have no spans and drop out "
     "structurally (same semantics in both engines). Scale: one span "
-    "explode (per-row transform, zero scatter — span_col), one distinct "
+    "explode (lambda-free zip of shifted token slices, zero scatter — "
+    "functions/text.ngrams), one distinct "
     "+ count per span hash, one hash-keyed equi-join back; everything is "
     "corpus-linear on the span stream, and the multi-doc flag frame is "
     "bounded by distinct spans. The novelty ratio is one exact-integer "
@@ -446,13 +435,10 @@ def repetition_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def span_novelty_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    toks = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
-    )
+    toks = docs.select("doc_id", tokens("text").alias("toks"))
     spans = toks.select(
-        "doc_id", F.explode(span_col("toks", ES_K)).alias("span")
-    ).select("doc_id", h64("span", "es").alias("h"))
+        "doc_id", F.explode(ngrams("toks", ES_K)).alias("span")
+    ).select("doc_id", h64(ngram_text("span", ES_K), "es").alias("h"))
     spans = persist_tracked(spans)
     mult = (
         spans.select("doc_id", "h")
@@ -517,9 +503,7 @@ def doc_length_percentiles_by_source(spark: SparkSession, sf_dir: str) -> DataFr
     t = docs.select(
         "source",
         "doc_id",
-        F.size(F.expr("filter(split(lower(text), ' '), x -> x <> '')")).alias(
-            "n_tok"
-        ),
+        F.size(tokens("text")).alias("n_tok"),
     )
     w = Window.partitionBy("source")
     r = t.select(
@@ -599,11 +583,9 @@ def doc_length_percentiles_by_source(spark: SparkSession, sf_dir: str) -> DataFr
 )
 def dedup_canonical_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    t = docs.select(
-        "doc_id",
-        "text",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
-    ).filter(F.size("toks") >= ES_K)
+    t = docs.select("doc_id", "text", tokens("text").alias("toks")).filter(
+        F.size("toks") >= ES_K
+    )
     feats = t.select(
         "doc_id",
         F.md5(F.expr(f"array_join(slice(toks, 1, {ES_K}), ' ')")).alias("grp"),

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import checkpoint_shared, persist_tracked
+from ..functions.text import tokens
 from ..operators.similarity import lsh_bands, minhash_signatures, ngram_shingles
 from ..sources.tables import load_table, spread
 from .registry import register
@@ -60,7 +61,7 @@ def _doc_sigs_bands(
     docs = spread(
         load_table(spark, sf_dir, "documents").select(
             "doc_id",
-            F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
+            tokens("text").alias("toks"),
         )
     )
     sigs = checkpoint_shared(

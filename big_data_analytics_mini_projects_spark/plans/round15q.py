@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 
 from ..caching import checkpoint_shared, persist_tracked
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import ngram_expr, round_stable, sql_round_stable
+from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
 from ..operators.aggregates import dsum, sql_dsum
 from ..sources.readers import local_relation
 from ..sources.tables import load_table, spread
@@ -123,16 +123,18 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").select(
             "doc_id",
             "source",
-            F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
+            tokens("text").alias("toks"),
         )
     )
     g = persist_tracked(
         docs.select(
             "doc_id",
             "source",
-            F.explode(F.expr(ngram_expr(2))).alias("gram"),
+            F.explode(ngrams("toks", 2)).alias("gram"),
         ).select(
-            "doc_id", "source", (h64("gram", "dsir") % DSIR_BUCKETS).alias("b")
+            "doc_id",
+            "source",
+            (h64(ngram_text("gram", 2), "dsir") % DSIR_BUCKETS).alias("b"),
         )
     )
     r = g.groupBy("b").agg(
@@ -217,9 +219,7 @@ def bpe_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents").select("source", "text"))
     ws = docs.select(
         "source",
-        F.explode(F.expr("filter(split(lower(text), ' '), x -> x <> '')")).alias(
-            "word"
-        ),
+        F.explode(tokens("text")).alias("word"),
     ).filter(F.col("word").rlike(_WORD_RE))
     return (
         ws.join(wl, "word")
@@ -273,14 +273,12 @@ def streaming_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stream_stats import documents_stream, run_available_now
 
     docs = documents_stream(spark, sf_dir)
-    toks = F.expr("filter(split(lower(text), ' '), x -> x <> '')")
+    toks = tokens("text")
     # Filter BEFORE the projection drops `text` (round-9 ADVICE): the
     # predicate must sit where its input column still exists, not lean on
     # the analyzer reaching back into the child plan.
     t = docs.filter(F.size(toks) >= ES_K).select(
-        F.md5(F.expr(
-            f"array_join(slice(filter(split(lower(text), ' '), x -> x <> ''), 1, {ES_K}), ' ')"
-        )).alias("h"),
+        F.md5(F.array_join(F.slice(toks, 1, ES_K), " ")).alias("h"),
         "doc_id",
     )
 
@@ -417,9 +415,7 @@ def epoch_schedule_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents").select("source", "text"))
     tot = docs.select(
         "source",
-        F.size(F.expr("filter(split(lower(text), ' '), x -> x <> '')"))
-        .cast("long")
-        .alias("n_tok"),
+        F.size(tokens("text")).cast("long").alias("n_tok"),
     ).groupBy("source").agg(F.sum("n_tok").cast("long").alias("m"))
     w = tot.select(
         "source", "m", round_stable(F.sqrt(F.col("m").cast("double")), 6).alias("w")
@@ -461,15 +457,18 @@ def epoch_schedule_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _row_sig_col():
     """16-element minhash signature array as ONE per-row Column over the
-    shingle array column ``sh`` (duplicates fine under MIN) — h64 is the
-    package's cross-engine seeded md5-60bit hash."""
+    word-3-gram array column ``sh`` (:func:`ngrams` structs, joined into
+    the shingle string inside the per-element hash; duplicates fine under
+    MIN) — h64 is the package's cross-engine seeded md5-60bit hash."""
     from .round14q import SC_HASHES
 
     def _seeded_min(s: int):
         # NOTE: a `lambda x, s=s:` two-parameter form would make pyspark
         # bind the second param to the ELEMENT INDEX (its (el, idx) lambda
         # protocol) — the seed must be closed over via a factory instead.
-        return F.array_min(F.transform(F.col("sh"), lambda x: h64(x, s)))
+        return F.array_min(
+            F.transform(F.col("sh"), lambda x: h64(ngram_text(x, 3), s))
+        )
 
     return F.array(*[_seeded_min(s) for s in range(SC_HASHES)])
 
@@ -493,11 +492,8 @@ def _row_bands_expr(sig_col: str = "sig") -> str:
 def _sig_band_frame(df: DataFrame) -> DataFrame:
     """(doc_id, sig, band, band_sig) per-row from (doc_id, text) — shared by
     the static state side and the streaming delta side (twin contract)."""
-    toks = df.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
-    )
-    sh = toks.select("doc_id", F.expr(ngram_expr(3)).alias("sh")).filter(
+    toks = df.select("doc_id", tokens("text").alias("toks"))
+    sh = toks.select("doc_id", ngrams("toks", 3).alias("sh")).filter(
         F.size("sh") > 0
     )
     sig = sh.select("doc_id", _row_sig_col().alias("sig"))

@@ -27,7 +27,7 @@ the oracle REBUILDS round7q's ``_SQL_ES`` CTE from the same primitives
 (h64_sql / ES_K) with byte-equality pinned by test — deliberately not
 imported, because a module-level round7q/round12q import would force 31
 green queries to register first (the forced-rider rule, ROUND_QUEUE.md) —
-and the engine rebuilds the same chain from the shared helpers (span_col /
+and the engine rebuilds the same chain from the shared helpers (ngrams /
 h64 / ES_K). The raw-vs-salvage token gap is reconciled against
 dedup_exact_substring's per-doc dup_tokens (bracketed by the sub-minimum
 fragment bound) in tests/test_round18q.py.
@@ -40,10 +40,10 @@ from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
 from ..sources.tables import load_table, spread
 from .registry import register
-from .shared import ES_K, span_col
+from .shared import ES_K
 
 SALVAGE_MIN = ES_K   # fragments shorter than the span unit are discarded
 SALVAGE_CTX = 2048   # the pack_sequences_2048 context length
@@ -149,10 +149,9 @@ _SQL_SALVAGE = (
 )
 def pack_with_salvage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    d = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
-    ).select("doc_id", F.size("toks").cast("long").alias("n_tok"), "toks")
+    d = docs.select("doc_id", tokens("text").alias("toks")).select(
+        "doc_id", F.size("toks").cast("long").alias("n_tok"), "toks"
+    )
     # persist ONLY the scalar projection: caching the token arrays at 5M
     # docs (sf100 ledger) starved the span-frequency aggregate of execution
     # memory — re-tokenizing on the second pass is cheaper than caching
@@ -162,8 +161,8 @@ def pack_with_salvage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared helpers (round7q.py:387; not imported as code so that module
     # stays untouched, but span/hash/merge construction is identical)
     sp = d.select(
-        "doc_id", F.posexplode(span_col("toks")).alias("pos", "span")
-    ).select("doc_id", "pos", h64(F.col("span"), "es").alias("h"))
+        "doc_id", F.posexplode(ngrams("toks", ES_K)).alias("pos", "span")
+    ).select("doc_id", "pos", h64(ngram_text("span", ES_K), "es").alias("h"))
     dup = (
         sp.groupBy("h")
         .agg(F.countDistinct("doc_id").alias("nd"))

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
 from ..operators.aggregates import dsum, sql_dsum
 from ..operators.curation import normalize_url, sql_normalize_url
 from ..operators.vector import (
@@ -272,7 +272,7 @@ def split_train_eval_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(h64("doc_id", "ev") % EVAL_MOD == 0, F.lit("eval"))
         .otherwise(F.lit("train"))
         .alias("split"),
-        F.size(F.expr("filter(split(text, ' '), x -> x <> '')")).alias("n_tok"),
+        F.size(tokens("text")).alias("n_tok"),
         "n_chars",
     )
     return s.groupBy("lang", "split").agg(
@@ -338,7 +338,7 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "source",
         "doc_id",
-        F.size(F.expr("filter(split(text, ' '), x -> x <> '')")).alias("n_tok"),
+        F.size(tokens("text")).alias("n_tok"),
         h64("doc_id", "tb").alias("h"),
     )
     w = (
@@ -377,9 +377,7 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents").select("text"))
-    words = docs.select(
-        F.explode(F.expr("filter(split(lower(text), ' '), x -> x <> '')")).alias("word")
-    )
+    words = docs.select(F.explode(tokens("text")).alias("word"))
     pairs = words.filter(F.length("word") >= 2).select(
         F.explode(
             F.expr("transform(sequence(1, length(word) - 1), i -> substring(word, i, 2))")
@@ -430,16 +428,16 @@ def bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("curation", "quality", "ngram", "agg_count_by_key"),
 )
 def doc_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import ngram_expr
-
     docs = spread(
         load_table(spark, sf_dir, "documents").select(
             "doc_id",
-            F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
+            tokens("text").alias("toks"),
         )
     )
     toks = docs.select("doc_id", F.explode("toks").alias("word"))
-    grams = docs.select("doc_id", F.explode(F.expr(ngram_expr(2))).alias("gram"))
+    grams = docs.select("doc_id", F.explode(ngrams("toks", 2)).alias("g")).select(
+        "doc_id", ngram_text("g", 2).alias("gram")
+    )
     c1 = toks.groupBy("word").agg(F.count(F.lit(1)).alias("n1"))
     c2 = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("n2"))
     j = (
@@ -608,7 +606,7 @@ def dedup_cross_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(
         load_table(spark, sf_dir, "documents").select(
             "doc_id",
-            F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
+            tokens("text").alias("toks"),
         )
     )
     shingles = ngram_shingles(docs, n=3, distinct=False)

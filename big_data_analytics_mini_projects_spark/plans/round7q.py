@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
 from ..operators.aggregates import dsum, sql_dsum
 from ..operators.similarity import containment_pairs, ngram_shingles
 from ..operators.vector import cosine_topk_ivf
@@ -63,12 +63,7 @@ from .shared import (
     SQL_VECS,
     TOKEN_BUDGET,
     embedding_vectors,
-    span_col,
 )
-
-# IVF_QUERIES/IVF_K/IVF_NPROBE/_SQL_IVF and ES_K/span_col moved to
-# plans/shared.py (round-8 window decoupling) — re-imported above so this
-# module's public surface is unchanged.
 
 
 @register(
@@ -148,7 +143,7 @@ common AS (SELECT a.doc_id AS ka, b.doc_id AS kb, COUNT(*) AS n_common
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
+        tokens("text").alias("toks"),
     )
     sh = ngram_shingles(docs, n=3)
     out = containment_pairs(sh, min_containment=CONT_TAU, df_cap=CONT_DF_CAP)
@@ -282,10 +277,7 @@ def chunk_col(toks_col: str = "toks", n: int = CHUNK_TOKS) -> F.Column:
 )
 def chunk_dedup_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    d = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
-    )
+    d = docs.select("doc_id", tokens("text").alias("toks"))
     ch = d.select("doc_id", F.explode(chunk_col("toks")).alias("chunk"))
     dist = ch.distinct()
     boiler = (
@@ -333,7 +325,6 @@ def streaming_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -- round-7 budget, built early (module docstring: second section) --------
-# (ES_K / span_col now live in plans/shared.py; imported at the top.)
 
 _SQL_ES = f"""
 tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
@@ -393,15 +384,14 @@ def exact_substring_stats(docs: DataFrame) -> DataFrame:
     """Core of dedup_exact_substring over any (doc_id, text) frame — split
     out so fixtures can drive the island-merging and distinct-doc rules
     directly (tests/test_round7q.py)."""
-    d = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
-    ).select(
+    d = docs.select("doc_id", tokens("text").alias("toks")).select(
         "doc_id", F.size("toks").cast("long").alias("n_tokens"), "toks"
     )
     sp = d.select(
-        "doc_id", "n_tokens", F.posexplode(span_col("toks")).alias("pos", "span")
-    ).select("doc_id", "n_tokens", "pos", h64(F.col("span"), "es").alias("h"))
+        "doc_id", "n_tokens", F.posexplode(ngrams("toks", ES_K)).alias("pos", "span")
+    ).select(
+        "doc_id", "n_tokens", "pos", h64(ngram_text("span", ES_K), "es").alias("h")
+    )
     dup = (
         sp.groupBy("h")
         .agg(F.countDistinct("doc_id").alias("nd"))
@@ -480,9 +470,7 @@ def crawl_freshness_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         (h64("doc_id", "age") % CRAWL_AGES).alias("age"),
         h64("doc_id", "fr").alias("hk"),
-        F.size(F.expr("filter(split(lower(text), ' '), x -> x <> '')"))
-        .cast("long")
-        .alias("n_tok"),
+        F.size(tokens("text")).cast("long").alias("n_tok"),
     )
     k = t.select(
         "source",
@@ -580,10 +568,7 @@ def bm25f_scores(docs: DataFrame, top_n: int = 5) -> DataFrame:
     """Core of bm25f_title_body over any (doc_id, text) frame — split out so
     fixtures can drive the field-weighting semantics directly (top_n lets
     tests see the full ranking; the declared query keeps the default 5)."""
-    fl = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
-    ).select(
+    fl = docs.select("doc_id", tokens("text").alias("toks")).select(
         "doc_id",
         F.least(F.size("toks"), F.lit(BM25F_TITLE_LEN)).cast("long").alias("len_t"),
         (F.size("toks") - F.least(F.size("toks"), F.lit(BM25F_TITLE_LEN)))

@@ -35,11 +35,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
 from ..operators.aggregates import dsum, sql_dsum
 from ..sources.tables import load_table, spread
 from .registry import register
-from .shared import DAY_US, WEEK_US, span_col  # noqa: F401  (re-export: WEEK_US cited here)
+from .shared import DAY_US, WEEK_US  # noqa: F401  (re-export: WEEK_US cited here)
 
 # DAY_US/WEEK_US moved to plans/shared.py (round-8 window decoupling).
 
@@ -98,9 +98,7 @@ def doc_freshness_by_event_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(F.expr("filter(split(lower(text), ' '), x -> x <> '')")).alias(
-            "n_tok"
-        ),
+        F.size(tokens("text")).alias("n_tok"),
         (h64("doc_id", "fb") % FRESH_BUCKETS).alias("bucket"),
     )
     d = (
@@ -280,9 +278,7 @@ def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents").select("source", "text"))
     tok = docs.select(
         "source",
-        F.explode(F.expr("filter(split(lower(text), ' '), x -> x <> '')")).alias(
-            "tok"
-        ),
+        F.explode(tokens("text")).alias("tok"),
     )
     vocab = (
         tok.groupBy("tok")
@@ -331,9 +327,7 @@ def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 def domain_gini_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     x = docs.groupBy("source").agg(
-        F.sum(
-            F.size(F.expr("filter(split(lower(text), ' '), x -> x <> '')"))
-        ).alias("toks")
+        F.sum(F.size(tokens("text"))).alias("toks")
     )
     r = x.select(
         "toks",
@@ -399,13 +393,10 @@ def _es_cov(docs: DataFrame, k: int, tokenized: bool = False) -> DataFrame:
     if tokenized:
         d = docs
     else:
-        d = docs.select(
-            "doc_id",
-            F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
-        )
+        d = docs.select("doc_id", tokens("text").alias("toks"))
     sp = d.select(
-        "doc_id", F.posexplode(span_col("toks", k)).alias("pos", "span")
-    ).select("doc_id", "pos", h64(F.col("span"), "es").alias("h"))
+        "doc_id", F.posexplode(ngrams("toks", k)).alias("pos", "span")
+    ).select("doc_id", "pos", h64(ngram_text("span", k), "es").alias("h"))
     dup = (
         sp.groupBy("h")
         .agg(F.countDistinct("doc_id").alias("nd"))
@@ -468,10 +459,7 @@ def dedup_substring_multigrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lesson (a)). Re-tokenizing per pass costs one linear projection; the
     # shared frame is still built once below so the three passes at least
     # share the plan subtree for Catalyst/codegen reuse.
-    toks = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
-    )
+    toks = docs.select("doc_id", tokens("text").alias("toks"))
     out = None
     for k in MULTIGRAIN_KS:
         part = _es_cov(toks, k, tokenized=True)

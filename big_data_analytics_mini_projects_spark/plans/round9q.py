@@ -27,11 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
 from ..operators.vector import _dot, ivf_cell_centroids
 from ..sources.tables import load_table, spread
 from .registry import register
-from .shared import ES_K, SQL_VECS, embedding_vectors, span_col
+from .shared import ES_K, SQL_VECS, embedding_vectors
 
 WD_K = ES_K  # same 12-token span width as the cross-doc query
 
@@ -85,13 +85,12 @@ def dedup_substring_withindoc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def withindoc_repeat_stats(docs: DataFrame, k: int = WD_K) -> DataFrame:
     """Core of dedup_substring_withindoc over any (doc_id, text) frame."""
-    d = docs.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
-    ).select("doc_id", F.size("toks").cast("long").alias("n_tokens"), "toks")
+    d = docs.select("doc_id", tokens("text").alias("toks")).select(
+        "doc_id", F.size("toks").cast("long").alias("n_tokens"), "toks"
+    )
     sp = d.select(
-        "doc_id", "n_tokens", F.posexplode(span_col("toks", k)).alias("pos", "span")
-    ).select("doc_id", "n_tokens", "pos", h64(F.col("span"), "es").alias("h"))
+        "doc_id", "n_tokens", F.posexplode(ngrams("toks", k)).alias("pos", "span")
+    ).select("doc_id", "n_tokens", "pos", h64(ngram_text("span", k), "es").alias("h"))
     dup = (
         sp.groupBy("doc_id", "h")
         .agg(F.count(F.lit(1)).alias("no"))

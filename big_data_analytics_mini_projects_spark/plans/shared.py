@@ -174,21 +174,6 @@ WEEK_US = 7 * DAY_US
 ES_K = 12
 
 
-def span_col(toks_col: str = "toks", k: int = ES_K) -> F.Column:
-    """Overlapping k-token span array of a token-array column (one span per
-    start position) — a per-row transform, zero shuffle. Same empty/short-doc
-    guard as chunk_col: Spark's sequence(0, negative) DESCENDS, so docs with
-    fewer than k tokens must short-circuit to an empty array."""
-    return F.when(
-        F.size(toks_col) < k, F.array().cast("array<string>")
-    ).otherwise(
-        F.expr(
-            f"transform(sequence(0, size({toks_col}) - {k}), "
-            f"i -> array_join(slice({toks_col}, i + 1, {k}), ' '))"
-        )
-    )
-
-
 #: IVF ANN family parameters + oracle CTEs (originally plans/round7q.py).
 IVF_QUERIES = 5   # vec_id < 5 are the query vectors (same as the ANN family)
 IVF_K = 10

@@ -23,7 +23,13 @@ from ..operators.similarity import (
     simhash_near_pairs,
     simhash_values,
 )
-from ..functions.text import round_stable, sql_round_stable, sql_tokens_ws, tokenize_ws
+from ..functions.text import (
+    round_stable,
+    sql_round_stable,
+    sql_tokens_ws,
+    tokenize_ws,
+    tokens,
+)
 from ..sources.tables import load_table, spread
 from .registry import register
 from ..caching import persist_tracked
@@ -120,7 +126,7 @@ def _shingles(spark: SparkSession, sf_dir: str, distinct: bool = True) -> DataFr
     their per-doc aggregation — see ngram_shingles' shuffle note."""
     docs = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
+        tokens("text").alias("toks"),
     )
     return ngram_shingles(docs, n=3, distinct=distinct)
 
@@ -502,7 +508,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-robin shuffle of the text column is pure extra cost.
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.expr("filter(split(lower(text), ' '), x -> x <> '')").alias("toks"),
+        tokens("text").alias("toks"),
     )
     sh = ngram_shingles(docs, n=3)
     out = ngram_jaccard_pairs(sh, min_jaccard=0.2, df_cap=500)

@@ -25,7 +25,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.hashing import hex_bucket
-from ..functions.text import round_stable
+from ..functions.text import round_stable, tokens
 from ..operators.aggregates import dsum
 from ..session import ensure_runtime_confs
 
@@ -327,9 +327,7 @@ def stream_token_budget(docs: DataFrame, budget: int) -> DataFrame:
     t = docs.select(
         "source",
         "doc_id",
-        F.size(F.expr("filter(split(text, ' '), x -> x <> '')"))
-        .cast("long")
-        .alias("n_tok"),
+        F.size(tokens("text")).cast("long").alias("n_tok"),
         h64("doc_id", "tb").alias("h"),
     )
 
@@ -383,9 +381,7 @@ def stream_source_token_totals(docs: DataFrame) -> DataFrame:
 
     t = docs.select(
         "source",
-        F.size(F.expr("filter(split(lower(text), ' '), x -> x <> '')"))
-        .cast("long")
-        .alias("n_tok"),
+        F.size(tokens("text")).cast("long").alias("n_tok"),
     )
 
     def update(key, pdfs, state):

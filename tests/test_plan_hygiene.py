@@ -17,6 +17,8 @@ Invariants:
 - BroadcastNestedLoopJoin only for (a) 1-row/bounded-K broadcast cross
   joins of corpus-stats frames and (b) the documented brute-force ANN
   baselines whose blocked twins are the scale path.
+- Higher-order-function lambdas (CodegenFallback) no more than each
+  query's LAMBDA_CEILING, and none in a query not listed there.
 """
 
 from __future__ import annotations
@@ -233,6 +235,108 @@ def test_decimal_sums_go_through_dsum():
     assert not offenders, f"inline decimal(18,s) sums, use dsum: {sorted(set(offenders))}"
 
 
+#: (module, function) -> why its transform(sequence(...)) is not a word n-gram
+SEQUENCE_TRANSFORM_OK = {
+    ("operators/textops.py", "char_trigrams"): "character trigrams of the text",
+    ("operators/textops.py", "doc_fingerprints"): "k-character grams and the "
+    "winnowing window minima over their hashes",
+    ("plans/round6q.py", "bpe_merge_step"): "character bigrams of one word",
+    ("plans/round7q.py", "chunk_col"): "disjoint fixed-size token chunks",
+}
+
+
+def _call_name(node) -> str | None:
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def test_tokenizer_and_ngrams_only_in_functions_text():
+    """The whitespace tokenizer and word n-grams have one Spark-side
+    definition each, functions/text.tokens and functions/text.ngrams, both
+    lambda-free. An inline ``filter(split(...), x -> ...)`` tokenizer or a
+    ``transform(sequence(...), i -> ...)`` n-gram anywhere else fails, as
+    SQL text or as ``F.filter(F.split(...))`` / ``F.transform(F.sequence(...))``.
+    DuckDB oracle text (``list_filter(string_split(...))``,
+    ``list_transform(range(...))``) does not match, and docstrings do not
+    count. The allowlisted transform(sequence(...)) sites follow other rules."""
+    import re
+
+    tokenizer = re.compile(r"(?<![\w.])filter\(\s*split\(")
+    seq_transform = re.compile(r"(?<![\w.])transform\(\s*sequence\(")
+    pkg = pathlib.Path(big_data_analytics_mini_projects_spark.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "functions/text.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        docstrings = {
+            id(n.value) for n in ast.walk(tree) if isinstance(n, ast.Expr)
+        }
+        allowed = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and (rel, fn.name) in SEQUENCE_TRANSFORM_OK
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if id(node) in docstrings:
+                    continue
+                tok = tokenizer.search(node.value)
+                seq = seq_transform.search(node.value)
+            elif isinstance(node, ast.Call) and node.args and isinstance(node.args[0], ast.Call):
+                pair = (_call_name(node), _call_name(node.args[0]))
+                tok = pair == ("filter", "split")
+                seq = pair == ("transform", "sequence")
+            else:
+                continue
+            if tok:
+                offenders.append(f"{rel}:{node.lineno} tokenizer")
+            if seq and id(node) not in allowed:
+                offenders.append(f"{rel}:{node.lineno} n-gram")
+    assert not offenders, (
+        "inline whitespace tokenizer or word n-gram, use functions/text.tokens "
+        f"and ngrams: {offenders}"
+    )
+
+
+#: benched query -> lambdafunction nodes in its physical plan at sf0.001
+#: (tests/conftest.py's session); every other benched query has none. A
+#: higher-order function's lambda is CodegenFallback and takes its operator
+#: out of whole-stage codegen, so these counts may only go down: lower an
+#: entry when a change removes lambdas, never raise one to pass.
+LAMBDA_CEILING = {
+    "ann_cosine_topk": 11,
+    "ann_cosine_topk_blocked": 11,
+    "ann_hyperplane_buckets": 49,
+    "ann_ivf_lloyd": 66,
+    "ann_ivf_nprobe": 24,
+    "ann_multiprobe_topk": 173,
+    "ann_recall_ivf": 35,
+    "bpe_merge_step": 1,
+    "chunk_dedup_boilerplate": 2,
+    "corpus_prep_pipeline": 3,
+    "dedup_embedding_bucketed": 360,
+    "dedup_embedding_cosine": 24,
+    "dedup_winnow_overlap": 20,
+    "doc_fingerprints": 5,
+    "embedding_diversity_by_label": 8,
+    "embedding_label_stats": 4,
+    "kmeans_lloyd_step": 11,
+    "lang_id_ngram": 4,
+    "lloyd_convergence_curve": 126,
+    "ols_words_pvalues": 2,
+    "semdedup_cells": 66,
+    "semdedup_cells_auto": 82,
+    "semdedup_k_sweep": 12,
+    "semdedup_keeper_quality": 170,
+    "semdedup_two_level": 55,
+    "srp_recall_probe_curve": 168,
+    "text_quality": 1,
+}
+
+
 def test_catalog_plan_hygiene(spark, sf_dir):
     problems = []
     for name, spec in QUERIES.items():
@@ -254,6 +358,12 @@ def test_catalog_plan_hygiene(spark, sf_dir):
             problems.append(f"{name}: unexpected MapInPandas")
         if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_OK:
             problems.append(f"{name}: unexpected BroadcastNestedLoopJoin")
+        lambdas = plan.count("lambdafunction(")
+        if lambdas > LAMBDA_CEILING.get(name, 0):
+            problems.append(
+                f"{name}: {lambdas} lambdafunction nodes, ceiling "
+                f"{LAMBDA_CEILING.get(name, 0)}"
+            )
     assert not problems, "\n".join(problems)
 
 

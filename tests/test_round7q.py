@@ -190,25 +190,74 @@ def _docs_df(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_span_col_short_doc_guard(spark):
-    from big_data_analytics_mini_projects_spark.plans.round7q import ES_K, span_col
-
-    df = spark.createDataFrame(
-        [
-            (0, []),                                # empty
-            (1, [f"t{i}" for i in range(ES_K - 1)]),  # one short of a span
-            (2, [f"t{i}" for i in range(ES_K)]),      # exactly one span
-            (3, [f"t{i}" for i in range(ES_K + 2)]),  # three spans
-        ],
-        "doc_id long, toks array<string>",
+def test_span_col_short_doc_guard(spark, duck):
+    """functions/text.ngrams + ngram_text against the transform(sequence…)
+    span builder they replaced, written out here as the reference: same
+    n-grams and same 0-based posexplode positions for n = 2, 3 and ES_K
+    over a NULL array and empty, n-1, n and n+2 token docs. n runs in a
+    loop, not a parametrize, so the test keeps its one id. Then tokens()
+    against DuckDB's sql_tokens_ws on NULL, empty and space-run text."""
+    from big_data_analytics_mini_projects_spark.functions.text import (
+        ngram_text,
+        ngrams,
+        sql_tokens_ws,
+        tokens,
     )
-    got = {
-        r["doc_id"]: r["spans"]
-        for r in df.select("doc_id", span_col("toks").alias("spans")).collect()
-    }
-    assert got[0] == [] and got[1] == []
-    assert len(got[2]) == 1 and got[2][0].count(" ") == ES_K - 1
-    assert len(got[3]) == 3 and got[3][2].startswith("t2 ")
+    from big_data_analytics_mini_projects_spark.plans.shared import ES_K
+
+    def toks(m):
+        return [f"t{i}" for i in range(m)]
+
+    for n in (2, 3, ES_K):
+        df = spark.createDataFrame(
+            [
+                (0, None),        # NULL array
+                (1, []),          # empty
+                (2, toks(n - 1)), # one short of an n-gram
+                (3, toks(n)),     # exactly one
+                (4, toks(n + 2)), # three
+            ],
+            "doc_id long, toks array<string>",
+        )
+        old = (
+            f"CASE WHEN size(toks) >= {n} THEN "
+            f"transform(sequence(0, size(toks) - {n}), "
+            f"i -> array_join(slice(toks, i + 1, {n}), ' ')) "
+            "ELSE cast(array() as array<string>) END"
+        )
+        want = sorted(
+            tuple(r)
+            for r in df.select("doc_id", F.posexplode(F.expr(old))).collect()
+        )
+        got = sorted(
+            tuple(r)
+            for r in df.select(
+                "doc_id", F.posexplode(ngrams("toks", n)).alias("pos", "g")
+            )
+            .select("doc_id", "pos", ngram_text("g", n))
+            .collect()
+        )
+        assert got == want, n
+        assert [(d, p) for d, p, _ in got] == [(3, 0), (4, 0), (4, 1), (4, 2)], n
+        assert got[-1][2] == " ".join(toks(n + 2)[2:]), n
+        arrays = dict(df.select("doc_id", ngrams("toks", n).alias("z")).collect())
+        assert arrays[0] is None and arrays[1] == [] and arrays[2] == [], n
+
+    texts = [(0, None), (1, ""), (2, "  x"), (3, "A b  c ")]
+    tdf = spark.createDataFrame(texts, "doc_id long, text string")
+    got = dict(tdf.select("doc_id", tokens("text")).collect())
+    assert got[0] is None  # NULL text: a NULL array, so explode emits no row
+    got[0] = []
+    duck.execute(
+        "CREATE OR REPLACE TEMP TABLE tok_cases AS SELECT * FROM (VALUES "
+        "(0, NULL), (1, ''), (2, '  x'), (3, 'A b  c ')) v(doc_id, text)"
+    )
+    want = {d: [] for d, _ in texts}
+    for d, w in duck.execute(
+        f"SELECT * FROM ({sql_tokens_ws('tok_cases')}) ORDER BY ALL"
+    ).fetchall():
+        want[d].append(w)
+    assert got == want == {0: [], 1: [], 2: ["x"], 3: ["a", "b", "c"]}
 
 
 def test_exact_substring_islands_and_distinct_doc_rule(spark):
