@@ -11,8 +11,11 @@ from __future__ import annotations
 
 import math
 
+_CF_MAX_ITER = 200
+_CF_EPS = 3e-16
 
-def _betacf(a: float, b: float, x: float, max_iter: int = 200, eps: float = 3e-16) -> float:
+
+def _betacf(a: float, b: float, x: float) -> float:
     """Continued fraction for the incomplete beta function (modified Lentz)."""
     tiny = 1e-300
     qab, qap, qam = a + b, a + 1.0, a - 1.0
@@ -22,7 +25,7 @@ def _betacf(a: float, b: float, x: float, max_iter: int = 200, eps: float = 3e-1
         d = tiny
     d = 1.0 / d
     h = d
-    for m in range(1, max_iter + 1):
+    for m in range(1, _CF_MAX_ITER + 1):
         m2 = 2 * m
         aa = m * (b - m) * x / ((qam + m2) * (a + m2))
         d = 1.0 + aa * d
@@ -43,7 +46,7 @@ def _betacf(a: float, b: float, x: float, max_iter: int = 200, eps: float = 3e-1
         d = 1.0 / d
         delta = d * c
         h *= delta
-        if abs(delta - 1.0) < eps:
+        if abs(delta - 1.0) < _CF_EPS:
             break
     return h
 

@@ -1,117 +1,30 @@
-"""Closed-form two-sided Student-t p-value for INTEGER degrees of freedom,
-as native SQL expressions in both engines — no Python in the plan.
+"""Two-sided Student-t p-value as native SQL expressions in both engines,
+with no Python in the plan.
 
-Math (Abramowitz & Stegun 26.7.3/26.7.4, elementary-function expansion of
-the t CDF at integer df): with x = |t|, ν = df, θ = atan(x/√ν),
-cos²θ = ν/(ν + x²), sinθ = x/√(ν + x²),
+The reference computes each regression's p-value with scipy.stats.t.sf
+(a3_p1.py:94,129). Here 2·P(T > |t|) at df ν is the regularized incomplete
+beta I_x(ν/2, 1/2), x = ν/(ν + t²), evaluated with the modified-Lentz
+continued fraction (Numerical Recipes betacf) at a FIXED 200 half-steps.
+betacf converges in fewer than 100 half-steps everywhere on this domain; a
+fixed count keeps the two engines' operation sequences literally identical,
+with no early-exit predicate that a 1-ulp difference could flip. ln Γ comes
+from the Lanczos g=7 series with the same 9 literal constants in both
+engines. Cost per row is O(1) in ν, so the oracle stays cheap at any SF.
 
-  A(x|ν) = P(|T| ≤ x)
-         = (2/π)·(θ + sinθ·S)          ν odd   (S empty for ν = 1)
-         = sinθ·S                      ν even
+Agreement with functions/stats_math.t_sf is better than 1e-11 absolute
+(tests/test_stats.py), and the two engines agree to ~1e-15 (libm ln/exp ulp
+only), far inside the declared query's 6-decimal stable rounding.
 
-where S is the finite sum of m = ν div 2 terms built by the recurrence
-
-  ν odd : T₁ = cosθ,  T_{j+1} = T_j · cos²θ · (2j)/(2j+1)
-  ν even: T₁ = 1,     T_{j+1} = T_j · cos²θ · (2j-1)/(2j)
-
-and the two-sided p-value is 1 − A. The reference computes the same number
-via scipy.stats.t.sf (a3_p1.py:94,129).
-
-Engineering: the sum is a sequential fold — Spark `aggregate(sequence(1,
-m-1), struct(term, acc), ...)`, a lambda, so it runs interpreted
-(``CodegenFallback``) outside whole-stage codegen — and the DuckDB
-oracle (``sql_t_pvalue_ctes``) runs the IDENTICAL recurrence as a recursive
-CTE, same operation order, so the engines agree to ~1e-15 absolute (libm
-ulp differences in atan/sin/sqrt only) — far inside the 6-decimal rounding
-of the declared query. All shared subexpressions (cos²θ, sinθ, θ) are
-materialized as real columns BEFORE the fold: expressions inlined into a
-higher-order-function lambda are re-evaluated once per fold step (the
-O(len²) trap documented for the trigram pipeline).
-
-Scale note: the fold is O(ν) per row, applied AFTER aggregation, so rows =
-K groups (bounded — e.g. the top-1000 words) while ν = the per-group
-observation count. Exact and fast for ν up to ~1e5; for corpus-scale ν
-prefer the vectorized pandas-UDF continued fraction
-(operators/stats._two_sided_p, O(1) in ν) — the default
-``p_method="udf"`` of ols_simple_closed. The declared differential query
-uses THIS path because it is oracle-checkable; the UDF is not.
+The Spark side is one ``aggregate(sequence(...), ...)`` fold, a lambda that
+runs interpreted (``CodegenFallback``), applied after aggregation to the K
+fitted groups only. Every shared subexpression is materialized as a real
+column BEFORE the fold: an expression inlined into a higher-order-function
+lambda is re-evaluated once per fold step.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-
-# Per-step multiplier at fold index j (see recurrence above). Kept as one
-# string constant so the Spark lambda's two uses cannot drift apart.
-_RATIO_SPARK = (
-    "(CASE WHEN _tp_odd THEN (2.0D * j) / (2.0D * j + 1.0D) "
-    "ELSE (2.0D * j - 1.0D) / (2.0D * j) END)"
-)
-
-_SUM_SPARK = f"""CASE
-  WHEN _tp_m >= 2 THEN aggregate(
-    sequence(1, cast(_tp_m - 1 as int)),
-    named_struct('term', _tp_t0, 'acc', _tp_t0),
-    (st, j) -> named_struct(
-      'term', st.term * _tp_c2 * {_RATIO_SPARK},
-      'acc',  st.acc + st.term * _tp_c2 * {_RATIO_SPARK}),
-    st -> st.acc)
-  WHEN _tp_m = 1 THEN _tp_t0
-  ELSE 0.0D END"""
-
-_TEMP_COLS = ("_tp_df", "_tp_dfd", "_tp_at", "_tp_odd", "_tp_m", "_tp_c2",
-              "_tp_sin", "_tp_th", "_tp_t0", "_tp_s")
-
-
-def with_two_sided_t_pvalue(
-    frame: DataFrame, t_col: str, df_col: Column, out: str = "p_value"
-) -> DataFrame:
-    """Append ``out`` = 2·P(T > |t_col|) at integer df ``df_col``.
-
-    NaN t propagates to NaN p (matching the UDF path); callers filter
-    degenerate fits (|r| = 1, zero variance) before or after — the declared
-    queries filter on beta in both engines identically.
-    """
-    at = F.abs(F.col(t_col))
-    f = (
-        frame.withColumn("_tp_df", df_col.cast("long"))
-        .withColumn("_tp_dfd", F.col("_tp_df").cast("double"))
-        .withColumn("_tp_at", at)
-        .withColumn("_tp_odd", F.pmod(F.col("_tp_df"), F.lit(2)) == 1)
-        .withColumn("_tp_m", F.expr("_tp_df div 2"))
-        .withColumn(
-            "_tp_c2",
-            F.col("_tp_dfd") / (F.col("_tp_dfd") + F.col("_tp_at") * F.col("_tp_at")),
-        )
-        .withColumn(
-            "_tp_sin",
-            F.col("_tp_at") / F.sqrt(F.col("_tp_dfd") + F.col("_tp_at") * F.col("_tp_at")),
-        )
-        .withColumn("_tp_th", F.atan(F.col("_tp_at") / F.sqrt(F.col("_tp_dfd"))))
-        .withColumn("_tp_t0", F.when(F.col("_tp_odd"), F.sqrt(F.col("_tp_c2"))).otherwise(F.lit(1.0)))
-        .withColumn("_tp_s", F.expr(_SUM_SPARK))
-    )
-    p = F.when(
-        F.col("_tp_odd"),
-        F.lit(1.0)
-        - (F.lit(2.0) / F.expr("pi()")) * (F.col("_tp_th") + F.col("_tp_sin") * F.col("_tp_s")),
-    ).otherwise(F.lit(1.0) - F.col("_tp_sin") * F.col("_tp_s"))
-    return f.withColumn(out, p).drop(*_TEMP_COLS)
-
-
-# ---------------------------------------------------------------------------
-# O(1)-in-df variant (round-4 verdict item 5): two-sided p via the regularized
-# incomplete beta I_x(ν/2, 1/2), x = ν/(ν+t²), evaluated with the modified-
-# Lentz continued fraction at a FIXED 200 half-steps (Numerical Recipes betacf
-# convergence is < 100 half-steps everywhere on this domain; fixed-count keeps
-# the two engines' operation sequences literally identical — no early-exit
-# predicate that a 1-ulp difference could flip). ln Γ comes from the Lanczos
-# g=7 series with the same 9 literal constants in both engines. Agreement vs
-# the A&S series path: < 1e-9 absolute on df ∈ [1, 1e6]; cross-engine
-# agreement ~1e-15 (libm ln/exp ulp only) — both far inside the declared
-# query's 6-decimal stable rounding. Unlike the series/recursive-CTE pair,
-# cost is independent of df: the oracle stays cheap at any SF.
-# ---------------------------------------------------------------------------
 
 #: Lanczos g=7 coefficients — spelled with full precision, identically, in the
 #: Spark expressions and the DuckDB SQL below. Each is wrapped as
@@ -175,12 +88,10 @@ _TC_COLS = ("_tc_t", "_tc_dfd", "_tc_x", "_tc_u", "_tc_a", "_tc_sw",
             "_tc_ca", "_tc_cb", "_tc_cx", "_tc_lnbt", "_tc_h")
 
 
-def with_two_sided_t_pvalue_cf(
-    frame: DataFrame, t_col: str, df_col: Column, out: str = "p_value"
-) -> DataFrame:
-    """Append ``out`` = 2·P(T > |t_col|) via the fixed-iteration incomplete-
-    beta continued fraction — O(1) in df per row. Mirrored operation for
-    operation by :func:`sql_t_pvalue_cf_ctes`."""
+def with_two_sided_t_pvalue_cf(frame: DataFrame, t_col: str, df_col: Column) -> DataFrame:
+    """Append ``p_value`` = 2·P(T > |t_col|) at df ``df_col`` via the
+    fixed-iteration incomplete-beta continued fraction — O(1) in df per row.
+    Mirrored operation for operation by :func:`sql_t_pvalue_cf_ctes`."""
     aa = _cf_aa("_tc_ca", "_tc_cb", "_tc_cx", "j", "cast((j + 1) div 2 as double)")
     d_new = f"(1.0D / {_cf_guard(f'1.0D + {aa} * st.d')})"
     c_new = _cf_guard(f"1.0D + {aa} / st.c")
@@ -233,13 +144,13 @@ def with_two_sided_t_pvalue_cf(
         .when(F.col("_tc_sw"), bt_over_ca)
         .otherwise(F.lit(1.0) - bt_over_ca)
     )
-    return f.withColumn(out, p).drop(*_TC_COLS)
+    return f.withColumn("p_value", p).drop(*_TC_COLS)
 
 
 def sql_t_pvalue_cf_ctes(src: str, t_col: str, df_sql: str, key: str) -> str:
     """DuckDB twin of :func:`with_two_sided_t_pvalue_cf`: the same Lanczos
     constants, the same Lentz half-step sequence (a bounded {0..N} recursive
-    CTE — O(1) in df, unlike the series CTE), the same guards. Defines
+    CTE — O(1) in df), the same guards. Defines
     ``<src>_p`` = all columns of ``<src>`` plus ``p_value``. Splice into a
     ``WITH RECURSIVE`` clause."""
     aa = _cf_aa("b.tc_ca", "b.tc_cb", "b.tc_cx", "s.j + 1", "CAST((s.j + 2) // 2 AS DOUBLE)")
@@ -283,50 +194,4 @@ cfh AS (SELECT tc_k, h FROM cfser WHERE j = {_CF_STEPS}),
               WHEN b.tc_sw THEN exp(b.tc_lnbt) * f.h / b.tc_ca
               ELSE 1.0 - exp(b.tc_lnbt) * f.h / b.tc_ca END AS p_value
   FROM cfb4 b JOIN cfh f ON b.{key} = f.tc_k)
-"""
-
-
-def sql_t_pvalue_ctes(src: str, t_col: str, df_sql: str, key: str) -> str:
-    """DuckDB CTE chain mirroring :func:`with_two_sided_t_pvalue` operation
-    for operation. Splice into a ``WITH RECURSIVE`` clause; defines
-    ``<src>_p`` = all columns of ``<src>`` plus ``p_value``.
-
-    ``df_sql`` is an integer-valued SQL expression over ``src`` columns
-    (e.g. ``n - 2``); ``key`` is a unique row key of ``src``.
-    """
-    ratio = (
-        "(CASE WHEN b.tp_odd THEN (2.0*s.j)/(2.0*s.j+1.0) "
-        "ELSE (2.0*s.j-1.0)/(2.0*s.j) END)"
-    )
-    return f"""
-tpbase AS (
-  SELECT *, CAST({df_sql} AS BIGINT) AS tp_df,
-         CAST(CAST({df_sql} AS BIGINT) AS DOUBLE) AS tp_dfd,
-         abs({t_col}) AS tp_at
-  FROM {src}),
-tpb2 AS (
-  SELECT *, tp_df % 2 = 1 AS tp_odd, tp_df // 2 AS tp_m,
-         tp_dfd / (tp_dfd + tp_at * tp_at) AS tp_c2,
-         tp_at / sqrt(tp_dfd + tp_at * tp_at) AS tp_sin,
-         atan(tp_at / sqrt(tp_dfd)) AS tp_th
-  FROM tpbase),
-tpb3 AS (
-  SELECT *, CASE WHEN tp_odd THEN sqrt(tp_c2) ELSE 1.0 END AS tp_t0 FROM tpb2),
-tpser(tp_k, j, term, acc) AS (
-  SELECT {key}, 1, tp_t0, tp_t0 FROM tpb3 WHERE tp_m >= 1
-  UNION ALL
-  SELECT s.tp_k, s.j + 1,
-         s.term * b.tp_c2 * {ratio},
-         s.acc + s.term * b.tp_c2 * {ratio}
-  FROM tpser s JOIN tpb3 b ON s.tp_k = b.{key} WHERE s.j < b.tp_m),
-tpsum AS (
-  SELECT b.{key} AS tp_k, COALESCE(f.acc, 0.0) AS tp_s
-  FROM tpb3 b LEFT JOIN (
-    SELECT s.tp_k, s.acc FROM tpser s JOIN tpb3 b2 ON s.tp_k = b2.{key} AND s.j = b2.tp_m
-  ) f ON b.{key} = f.tp_k),
-{src}_p AS (
-  SELECT b.* EXCLUDE (tp_df, tp_dfd, tp_at, tp_odd, tp_m, tp_c2, tp_sin, tp_th, tp_t0),
-         CASE WHEN b.tp_odd THEN 1.0 - (2.0/pi()) * (b.tp_th + b.tp_sin * t.tp_s)
-              ELSE 1.0 - b.tp_sin * t.tp_s END AS p_value
-  FROM tpb3 b JOIN tpsum t ON b.{key} = t.tp_k)
 """

@@ -1,8 +1,9 @@
 """Tokenizers and text scalar functions (SURVEY.md §2.2).
 
 Each tokenizer exists twice: a Spark DataFrame transform and a DuckDB SQL
-fragment builder used by the differential-test oracles. Both sides implement
-the *same* string semantics so results hash-match.
+twin used by the differential-test oracles (a fragment builder here, or for
+the A3 regex, the oracle's own CTE over ``A3_TOKEN_PATTERN_SQL``). Both
+sides implement the *same* string semantics so results hash-match.
 
 Reference points:
 - whitespace tokenize + lowercase: MRSystemSimulator2020.py:186-191
@@ -26,22 +27,15 @@ A3_TOKEN_PATTERN_SQL = (
 )
 
 
-def tokenize_regex(df: DataFrame, text_col: str = "text", out: str = "word") -> DataFrame:
-    """Explode A3-regex tokens of lowercased text (a3_p1.py:19-22).
+def tokenize_regex(df: DataFrame) -> DataFrame:
+    """Explode A3-regex tokens of lowercased ``text`` into ``word``
+    (a3_p1.py:19-22).
 
     The reference recompiles the regex per record inside a Python closure;
     here the pattern is a codegen'd JVM expression — no Python in the loop.
     """
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(A3_TOKEN_PATTERN), 1)
-    return df.withColumn(out, F.explode(toks))
-
-
-def sql_tokens_regex(table: str = "documents", text_col: str = "text", key: str = "doc_id") -> str:
-    """DuckDB fragment: one row per (key, word) via the A3 regex."""
-    return (
-        f"SELECT {key}, unnest(regexp_extract_all(lower({text_col}), "
-        f"'{A3_TOKEN_PATTERN_SQL}', 1)) AS word FROM {table}"
-    )
+    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(A3_TOKEN_PATTERN), 1)
+    return df.withColumn("word", F.explode(toks))
 
 
 def tokens(col: Column | str) -> Column:
@@ -57,41 +51,36 @@ def tokens(col: Column | str) -> Column:
     return F.array_remove(F.split(F.lower(c), " "), "")
 
 
-def tokenize_ws(df: DataFrame, text_col: str = "text", out: str = "word") -> DataFrame:
-    """One row per :func:`tokens` element."""
-    return df.withColumn(out, F.explode(tokens(text_col)))
+def tokenize_ws(df: DataFrame) -> DataFrame:
+    """One ``word`` row per :func:`tokens` element of ``text``."""
+    return df.withColumn("word", F.explode(tokens("text")))
 
 
-def sql_tokens_ws(table: str = "documents", text_col: str = "text", key: str = "doc_id") -> str:
+def sql_tokens_ws(table: str = "documents") -> str:
     return (
-        f"SELECT {key}, word FROM (SELECT {key}, "
-        f"unnest(string_split(lower({text_col}), ' ')) AS word FROM {table}) "
-        f"WHERE word <> ''"
+        "SELECT doc_id, word FROM (SELECT doc_id, "
+        f"unnest(string_split(lower(text), ' ')) AS word FROM {table}) "
+        "WHERE word <> ''"
     )
 
 
-def tokenize_char(df: DataFrame, text_col: str = "text", out: str = "ch") -> DataFrame:
-    """Explode lowercase alphabetic characters (MRSystemSimulator2020.py:218-232).
+def tokenize_char(df: DataFrame) -> DataFrame:
+    """Explode lowercase alphabetic characters of ``text`` into ``ch``
+    (MRSystemSimulator2020.py:218-232).
 
     The reference drops non-alpha chars (``isalpha`` check at :228) and
     densifies missing a-z chars with explicit zeros; densification is done by
     the consuming aggregate via sufficient statistics instead (operators/aggregates.py).
     """
-    chars = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"([a-z])"), 1)
-    return df.withColumn(out, F.explode(chars))
+    chars = F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"([a-z])"), 1)
+    return df.withColumn("ch", F.explode(chars))
 
 
-def sql_tokens_char(table: str = "documents", text_col: str = "text", key: str = "doc_id") -> str:
+def sql_tokens_char() -> str:
     return (
-        f"SELECT {key}, unnest(regexp_extract_all(lower({text_col}), '([a-z])', 1)) AS ch "
-        f"FROM {table}"
+        "SELECT doc_id, unnest(regexp_extract_all(lower(text), '([a-z])', 1)) AS ch "
+        "FROM documents"
     )
-
-
-def bool01(col: Column | str) -> Column:
-    """Bool -> 0.0/1.0 covariate encoding (a3_p1.py:51-59)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("double")
 
 
 #: The reference's final-stat rounding (``round(x, 4)``,

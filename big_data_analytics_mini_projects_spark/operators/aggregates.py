@@ -95,14 +95,13 @@ def sql_dsum(expr: str, scale: int = 2) -> str:
     return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS VARCHAR) AS DOUBLE)"
 
 
-def count_by_key(df: DataFrame, keys: Sequence[str], out: str = "cnt") -> DataFrame:
-    """Word-count shape: sum of 1s per key (MRSystemSimulator2020.py:183-194)."""
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(out))
+def count_by_key(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Word-count shape: ``cnt`` = sum of 1s per key
+    (MRSystemSimulator2020.py:183-194)."""
+    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def mean_std_chars(
-    df_chars: DataFrame, doc_count: int, ch: str = "ch", key: str = "doc_id"
-) -> DataFrame:
+def mean_std_chars(df_chars: DataFrame, doc_count: int) -> DataFrame:
     """Per-character mean + population σ across documents, densified over the
     alphabet (MRSystemSimulator2020.py:216-245; worked example in Assignment 1
     Description.htm:38).
@@ -114,13 +113,13 @@ def mean_std_chars(
     docs in arithmetically: mean = Σx/N, σ = sqrt(Σx²/N - mean²) with N = total
     docs. Integer Σx/Σx² make both engines bit-exact before the final float ops.
     """
-    per_doc = df_chars.groupBy(key, ch).agg(F.count(F.lit(1)).alias("c"))
+    per_doc = df_chars.groupBy("doc_id", "ch").agg(F.count(F.lit(1)).alias("c"))
     n = F.lit(doc_count).cast("double")
     return (
-        per_doc.groupBy(ch)
+        per_doc.groupBy("ch")
         .agg(F.sum("c").alias("s1"), F.sum(F.col("c") * F.col("c")).alias("s2"))
         .select(
-            F.col(ch),
+            F.col("ch"),
             # round_stable, not F.round: s1/s2 are exact integers so the
             # quotients are bit-identical across engines — the stable form
             # keeps the .xxxx5 half-case rounding identical too.
@@ -129,20 +128,4 @@ def mean_std_chars(
                 F.sqrt(F.col("s2") / n - (F.col("s1") / n) * (F.col("s1") / n))
             ).alias("std"),
         )
-    )
-
-
-def welford_stats(df: DataFrame, value_col: str, round_to: int = 4) -> DataFrame:
-    """Global streaming-equivalent (count, mean, population σ) triple.
-
-    The reference accumulates Welford's (n, mean, M2) one row at a time
-    (sampler_v02.py:50-56,81-87). Spark's avg/stddev_pop aggregate the same
-    sufficient statistics tree-wise (partial per partition, merged), which is
-    Welford generalized to parallel merges — the streaming flavor lives in
-    streaming/stream_stats.py and produces identical numbers.
-    """
-    return df.agg(
-        F.count(F.lit(1)).alias("n"),
-        round_stable(F.avg(value_col), round_to).alias("mean"),
-        round_stable(F.stddev_pop(value_col), round_to).alias("std"),
     )

@@ -48,7 +48,7 @@ AF_A_WINDOWS = 60
 AF_A_BITS = AF_A_WINDOWS
 
 
-def afp_wav(df: DataFrame, n_windows: int = AF_WINDOWS) -> DataFrame:
+def afp_wav(df: DataFrame) -> DataFrame:
     """(doc_id, payload) -> (doc_id, afp): 60-bit energy-envelope difference
     hash of a 16-bit mono PCM WAV, parsed with the stdlib codec."""
 
@@ -66,11 +66,11 @@ def afp_wav(df: DataFrame, n_windows: int = AF_WINDOWS) -> DataFrame:
                     raw = r.readframes(n)
                 samples = struct.unpack(f"<{n}h", raw)
                 e = [
-                    sum(abs(s) for s in samples[j * n // n_windows : (j + 1) * n // n_windows])
-                    for j in range(n_windows)
+                    sum(abs(s) for s in samples[j * n // AF_WINDOWS : (j + 1) * n // AF_WINDOWS])
+                    for j in range(AF_WINDOWS)
                 ]
                 fp = 0
-                for j in range(n_windows - 1):
+                for j in range(AF_WINDOWS - 1):
                     if e[j + 1] > e[j]:
                         fp |= 1 << j
                 fps.append(fp)

@@ -17,29 +17,27 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..functions.text import ngram_text, ngrams
 
 
-def ngram_stream(
-    docs: DataFrame, n: int, key: str = "doc_id", tokens_col: str = "toks"
-) -> DataFrame:
-    """Word n-grams per key WITH multiplicity (one row per position) —
+def ngram_stream(docs: DataFrame, n: int) -> DataFrame:
+    """Word n-grams of ``toks`` per doc_id WITH multiplicity (one row per position) —
     the positional twin of similarity.ngram_shingles (which dedupes).
     Per-row slice zip (``functions/text.ngrams``): zero shuffle, no lambda,
     one codegen stage."""
-    return docs.select(key, F.explode(ngrams(tokens_col, n)).alias("g")).select(
-        key, ngram_text("g", n).alias("gram")
+    return docs.select("doc_id", F.explode(ngrams("toks", n)).alias("g")).select(
+        "doc_id", ngram_text("g", n).alias("gram")
     )
 
 
-def dup_ngram_coverage(grams: DataFrame, key: str = "doc_id") -> DataFrame:
+def dup_ngram_coverage(grams: DataFrame) -> DataFrame:
     """Fraction of each document's n-gram positions whose n-gram also occurs
     in ANOTHER document (the RefinedWeb "duplicated n-gram" signal for
     boilerplate / template text).
 
     Two linear shuffles: gram -> distinct-doc df, then doc -> coverage.
-    Returns (key, n_grams, n_dup, dup_frac)."""
-    df = grams.groupBy("gram").agg(F.count_distinct(F.col(key)).alias("ndocs"))
+    Returns (doc_id, n_grams, n_dup, dup_frac)."""
+    df = grams.groupBy("gram").agg(F.count_distinct(F.col("doc_id")).alias("ndocs"))
     return (
         grams.join(df, "gram")
-        .groupBy(key)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum(F.when(F.col("ndocs") >= 2, 1).otherwise(0)).alias("n_dup"),
@@ -48,39 +46,37 @@ def dup_ngram_coverage(grams: DataFrame, key: str = "doc_id") -> DataFrame:
     )
 
 
-def repetition_ratios(
-    docs: DataFrame, key: str = "doc_id", tokens_col: str = "toks"
-) -> DataFrame:
+def repetition_ratios(docs: DataFrame) -> DataFrame:
     """Within-document repetition: fraction of tokens taken by the most
     frequent token, and by the most frequent word bigram (x2 tokens) — the
     Gopher repetition-filter family, token-denominated.
 
     groupBy((doc, gram)) partial-aggregates map-side; the per-doc max is a
     second linear aggregation. Partition keys scale with corpus size, never
-    a per-doc quadratic. Returns (key, n_tokens, top_token_frac,
+    a per-doc quadratic. Returns (doc_id, n_tokens, top_token_frac,
     top_bigram_frac) for docs with >= 2 tokens."""
-    toks = docs.select(key, F.explode(tokens_col).alias("tok"))
+    toks = docs.select("doc_id", F.explode("toks").alias("tok"))
     top_tok = (
-        toks.groupBy(key, "tok")
+        toks.groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(key)
+        .groupBy("doc_id")
         .agg(F.max("c").alias("max_tok"))
     )
-    bigrams = ngram_stream(docs, 2, key=key, tokens_col=tokens_col)
+    bigrams = ngram_stream(docs, 2)
     top_bg = (
-        bigrams.groupBy(key, "gram")
+        bigrams.groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(key)
+        .groupBy("doc_id")
         .agg(F.max("c").alias("max_bg"))
     )
-    sizes = docs.select(key, F.size(tokens_col).alias("n_tokens")).filter(
+    sizes = docs.select("doc_id", F.size("toks").alias("n_tokens")).filter(
         F.col("n_tokens") >= 2
     )
     return (
-        sizes.join(top_tok, key)
-        .join(top_bg, key)
+        sizes.join(top_tok, "doc_id")
+        .join(top_bg, "doc_id")
         .select(
-            key,
+            "doc_id",
             "n_tokens",
             (F.col("max_tok") / F.col("n_tokens")).alias("top_token_frac"),
             (F.lit(2) * F.col("max_bg") / F.col("n_tokens")).alias(
@@ -90,27 +86,25 @@ def repetition_ratios(
     )
 
 
-def ngram_contamination(
-    shingles: DataFrame, test_mod: int = 20, key: str = "doc_id"
-) -> DataFrame:
+def ngram_contamination(shingles: DataFrame, test_mod: int = 20) -> DataFrame:
     """Train/test n-gram collision screen: for every training document, how
     many distinct held-out documents share an n-gram with it and how many
-    distinct n-grams leak. ``shingles`` is distinct (key, shingle); the
-    held-out split is the deterministic key % test_mod == 0 slice.
+    distinct n-grams leak. ``shingles`` is distinct (doc_id, shingle); the
+    held-out split is the deterministic doc_id % test_mod == 0 slice.
 
     The join is an inverted-index equi-join on shingle whose fan-out is
     bounded by the HELD-OUT side's df (the test set is the small fixed
     relation at 100 TB — an eval suite, not the corpus), so the probe
     scales linearly with training-corpus shingles. Returns
-    (key, n_test_docs, n_shared_shingles) for contaminated train docs."""
-    is_test = (F.col(key) % test_mod) == 0
+    (doc_id, n_test_docs, n_shared_shingles) for contaminated train docs."""
+    is_test = (F.col("doc_id") % test_mod) == 0
     test = shingles.filter(is_test).select(
-        F.col(key).alias("test_id"), "shingle"
+        F.col("doc_id").alias("test_id"), "shingle"
     )
     train = shingles.filter(~is_test)
     return (
         train.join(test, "shingle")
-        .groupBy(key)
+        .groupBy("doc_id")
         .agg(
             F.count_distinct("test_id").alias("n_test_docs"),
             F.count_distinct("shingle").alias("n_shared_shingles"),
@@ -122,17 +116,15 @@ def pack_sequences(
     docs: DataFrame,
     ctx: int = 2048,
     shard_size: int = 200,
-    key: str = "doc_id",
-    tokens_col: str = "toks",
 ) -> DataFrame:
     """Concat-then-chunk sequence packing (the pretraining batch-prep step):
-    documents are laid head-to-tail in ``key`` order and cut into ``ctx``-token
+    documents are laid head-to-tail in ``doc_id`` order and cut into ``ctx``-token
     context windows; each document is assigned the window its FIRST token
     falls in.
 
     Packing needs a running token offset — a global running sum is the
     classic single-partition window anti-pattern, so the stream is packed
-    within bounded shards of ``shard_size`` docs (key div shard_size): the
+    within bounded shards of ``shard_size`` docs (doc_id div shard_size): the
     window partition is capped by construction, shards pack independently
     and in parallel, and at 100 TB each worker packs its own shards with no
     cross-shard coordination (exactly how packing shards out in practice).
@@ -140,11 +132,11 @@ def pack_sequences(
     Returns (shard, seq_bin, n_docs, n_tokens) per context window.
     """
     d = docs.select(
-        key,
-        F.expr(f"{key} div {shard_size}").alias("shard"),
-        F.size(tokens_col).cast("long").alias("n_tok"),
+        "doc_id",
+        F.expr(f"doc_id div {shard_size}").alias("shard"),
+        F.size("toks").cast("long").alias("n_tok"),
     )
-    w = Window.partitionBy("shard").orderBy(key)
+    w = Window.partitionBy("shard").orderBy("doc_id")
     return (
         d.withColumn("start", F.sum("n_tok").over(w) - F.col("n_tok"))
         .withColumn("seq_bin", F.expr(f"start div {ctx}"))

@@ -35,8 +35,8 @@ def _sum_cells_checked(v: Column) -> Column:
     )
 
 
-def matmul_coo(cells: DataFrame, m_name: str = "M", n_name: str = "N") -> DataFrame:
-    """Multiply two sparse matrices stored as (name, i, j, v) COO cells.
+def matmul_coo(cells: DataFrame) -> DataFrame:
+    """Multiply the sparse matrices M and N stored as (name, i, j, v) COO cells.
 
     Returns (i, j, val) of the product M·N with exact decimal accumulation
     (cell values cast to decimal so the sum is merge-order independent).
@@ -57,13 +57,13 @@ def matmul_coo(cells: DataFrame, m_name: str = "M", n_name: str = "N") -> DataFr
     # sf0.1 magnitudes. (18,4)x(18,4) -> (37,8) stays exact end to end (the
     # DuckDB oracle mirrors the same downcast for the same reason).
     m = (
-        cells.filter(F.col("name") == m_name)
+        cells.filter(F.col("name") == "M")
         .groupBy("i", "j")
         .agg(_sum_cells_checked(F.col("v")).alias("mv"))
         .select(F.col("i").alias("mi"), F.col("j").alias("mj"), "mv")
     )
     n = (
-        cells.filter(F.col("name") == n_name)
+        cells.filter(F.col("name") == "N")
         .groupBy("i", "j")
         .agg(_sum_cells_checked(F.col("v")).alias("nv"))
         .select(F.col("i").alias("ni"), F.col("j").alias("nj"), "nv")

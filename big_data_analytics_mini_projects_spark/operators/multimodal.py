@@ -2,11 +2,11 @@
 
 Images/audio/video are opaque ``binary`` columns with typed metadata; decode
 and feature-extraction run as Arrow-batched pandas UDFs over ``mapInPandas``.
-The actual codec libraries (PIL/soundfile/av) are NOT in this container, so
-the decode kernels are stubbed behind import guards with clearly marked
-NotImplementedError — but the Spark-side plumbing (schemas, binary payloads,
-batch iteration, one-to-many expansion) is real and differentially tested via
-a deterministic fake decoder whose outputs are reproducible in SQL.
+No codec library (PIL/soundfile/av) is a dependency: the Spark-side
+plumbing (schemas, binary payloads, batch iteration, one-to-many expansion)
+is differentially tested via a deterministic fake decoder whose outputs are
+reproducible in SQL, and the WAV/BMP/PNG round trips below use stdlib
+codecs only.
 
 Scale notes: mapInPandas streams Arrow batches — memory is bounded by batch
 size (spark.sql.execution.arrow.maxRecordsPerBatch), not partition size;
@@ -25,37 +25,10 @@ from pyspark.sql import DataFrame, functions as F
 META_SCHEMA = "doc_id long, byte_len long, sig string, fake_width long, fake_height long"
 FRAMES_SCHEMA = "doc_id long, frame_idx long, frame_sig string"
 
-try:  # real decoders need libs absent from this container
-    import PIL.Image  # type: ignore  # noqa: F401
-
-    _HAVE_PIL = True
-except ImportError:
-    _HAVE_PIL = False
-
-
-def decode_image(payload: bytes):
-    """Real image decode — STUB: PIL is not available in this environment."""
-    if not _HAVE_PIL:
-        raise NotImplementedError(
-            "image decoding requires PIL, which is not installed in this "
-            "container; the pipeline plumbing is exercised via the "
-            "deterministic fake decoder (extract_binary_meta)."
-        )
-    raise NotImplementedError("real decode path reserved for environments with PIL")
-
-
-def decode_audio(payload: bytes):
-    """Real audio decode — STUB (soundfile/librosa not installed)."""
-    raise NotImplementedError(
-        "audio decoding requires soundfile, not installed here; "
-        "plumbing exercised via extract_binary_meta."
-    )
-
-
-def with_binary_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the opaque binary column (here: utf-8 bytes of text standing in
-    for an image payload)."""
-    return docs.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
+def with_binary_payload(docs: DataFrame) -> DataFrame:
+    """Attach the opaque binary column (here: utf-8 bytes of ``text``
+    standing in for an image payload)."""
+    return docs.withColumn("payload", F.encode(F.col("text"), "utf-8"))
 
 
 def extract_binary_meta(df: DataFrame) -> DataFrame:

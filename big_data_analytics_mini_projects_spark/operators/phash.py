@@ -9,9 +9,10 @@ operators/multimodal_resize convention), and emit the difference hash:
 bit(x, y) = gray(x+1, y) > gray(x, y).
 
 Geometry: a ``grid_w x grid_h`` gray grid gives ``(grid_w-1) * grid_h``
-bits. The default 7x10 grid yields 60 bits — deliberately 60, not the
-classic 9x8=64: 60-bit values stay exact in a signed BIGINT in BOTH
-engines (the operators/similarity.BIT_POWERS rationale) and split into
+bits. The dHash 7x10 grid (PH_GRID_W x PH_GRID_H) yields 60 bits —
+deliberately 60, not the classic 9x8=64: 60-bit values stay exact in a
+signed BIGINT in BOTH engines (the operators/similarity.BIT_POWERS
+rationale) and split into
 the same 4x15-bit blocks the SimHash index uses, so the Hamming blocking
 downstream is shared machinery (pairs within Hamming <= 3 must share a
 block by pigeonhole; the verify gate is bit_count(xor)).
@@ -51,24 +52,24 @@ AH_GRID_H = 10
 AH_BITS = AH_GRID_W * AH_GRID_H
 
 
-def dhash_bmp(df: DataFrame, grid_w: int = PH_GRID_W, grid_h: int = PH_GRID_H) -> DataFrame:
+def dhash_bmp(df: DataFrame) -> DataFrame:
     """(doc_id, payload) -> (doc_id, dhash): difference hash of a 24-bit
-    uncompressed BMP. Gray grid sampled at (x*w // grid_w, y*h // grid_h)
-    in image coordinates (floor NN map); bit index y*(grid_w-1) + x set
-    when gray(x+1, y) > gray(x, y)."""
+    uncompressed BMP. Gray grid sampled at (x*w // PH_GRID_W,
+    y*h // PH_GRID_H) in image coordinates (floor NN map); bit index
+    y*(PH_GRID_W-1) + x set when gray(x+1, y) > gray(x, y)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             hashes = []
             for p in pdf["payload"]:
                 raw = bytes(p)
-                g = _grid_grays(raw, *_parse_bmp(raw), grid_w, grid_h)
+                g = _grid_grays(raw, *_parse_bmp(raw), PH_GRID_W, PH_GRID_H)
                 hsh = 0
-                for yr in range(grid_h):
-                    r0 = yr * grid_w
-                    for xc in range(grid_w - 1):
+                for yr in range(PH_GRID_H):
+                    r0 = yr * PH_GRID_W
+                    for xc in range(PH_GRID_W - 1):
                         if g[r0 + xc + 1] > g[r0 + xc]:
-                            hsh |= 1 << (yr * (grid_w - 1) + xc)
+                            hsh |= 1 << (yr * (PH_GRID_W - 1) + xc)
                 hashes.append(hsh)
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"].astype("int64"), "dhash": pd.array(hashes, dtype="int64")}

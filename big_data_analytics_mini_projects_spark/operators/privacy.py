@@ -31,7 +31,7 @@ PII_PATTERNS = (
 )
 
 
-def splice_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def splice_pii(docs: DataFrame) -> DataFrame:
     """Deterministically embed PII-shaped tokens keyed on doc_id (fixture
     stage; mirrored verbatim by :func:`sql_splice_pii`)."""
     did = F.col("doc_id")
@@ -60,7 +60,7 @@ def splice_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.lpad(s(did % 9973), 4, "0"),
     )
     spliced = F.concat(
-        F.col(text_col),
+        F.col("text"),
         F.when(did % 3 == 0, email).otherwise(F.lit("")),
         F.when(did % 4 == 0, phone).otherwise(F.lit("")),
         F.when(did % 5 == 0, ip).otherwise(F.lit("")),
@@ -69,10 +69,10 @@ def splice_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.withColumn("pii_text", spliced)
 
 
-def sql_splice_pii(text_col: str = "text") -> str:
+def sql_splice_pii() -> str:
     """DuckDB twin of :func:`splice_pii` (same concat/lpad/div structure)."""
     return (
-        f"{text_col} || "
+        "text || "
         "CASE WHEN doc_id % 3 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) "
         "|| '@example.com' ELSE '' END || "
         "CASE WHEN doc_id % 4 = 0 THEN ' call ' "
@@ -89,14 +89,14 @@ def sql_splice_pii(text_col: str = "text") -> str:
     )
 
 
-def pii_counts_and_redact(df: DataFrame, col: str = "pii_text") -> DataFrame:
+def pii_counts_and_redact(df: DataFrame) -> DataFrame:
     """Count each PII class, then redact all of them (fixed order).
 
     One projection, fully codegen'd: 4 regexp_counts + 4 chained
     regexp_replaces per row. At 100 TB this is a map-only stage — no
     shuffle, no Python.
     """
-    c: Column = F.col(col)
+    c: Column = F.col("pii_text")
     counts = [
         F.regexp_count(c, F.lit(pat)).cast("long").alias(f"n_{name}")
         for name, pat, _ in PII_PATTERNS

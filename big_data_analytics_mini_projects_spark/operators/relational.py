@@ -12,21 +12,22 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def join_broadcast(big: DataFrame, small: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Broadcast (map-side) hash join.
+def join_broadcast(big: DataFrame, small: DataFrame, on) -> DataFrame:
+    """Broadcast (map-side) hash inner join.
 
     Reference: driver ``collect`` + ``sc.broadcast`` + closure dict lookup
     (a3_p1.py:31-37, a3_p2.py:69-73). Here the hint keeps the big side
     shuffle-free; at 100 TB this is the difference between a full exchange of
     the fact table and none.
     """
-    return big.join(F.broadcast(small), on, how)
+    return big.join(F.broadcast(small), on, "inner")
 
 
-def join_auto(big: DataFrame, small: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Equi-join with NO strategy hint: Catalyst costs it at plan time and AQE
-    re-picks at runtime (promoting to broadcast when the built side is under
-    ``spark.sql.adaptive.autoBroadcastJoinThreshold``, demoting when not).
+def join_auto(big: DataFrame, small: DataFrame, on) -> DataFrame:
+    """Inner equi-join with NO strategy hint: Catalyst costs it at plan time
+    and AQE re-picks at runtime (promoting to broadcast when the built side is
+    under ``spark.sql.adaptive.autoBroadcastJoinThreshold``, demoting when
+    not).
 
     Use this — not ``join_broadcast`` — whenever the smaller side SCALES WITH
     THE DATA (customer, supplier, a HAVING-qualifying key set, per-item
@@ -37,7 +38,7 @@ def join_auto(big: DataFrame, small: DataFrame, on, how: str = "inner") -> DataF
     (AQE broadcasts the small side anyway); at scale this one degrades
     gracefully to shuffled hash / sort-merge instead of failing.
     """
-    return big.join(small, on, how)
+    return big.join(small, on, "inner")
 
 
 def join_anti(r: DataFrame, s: DataFrame, on) -> DataFrame:
@@ -120,10 +121,10 @@ def join_salted(
     key: str,
     salt_source: Column,
     n_salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-mitigated equi-join: identical semantics to ``big.join(small,
-    key)``, but hot keys are spread over ``n_salt`` shuffle partitions.
+    """Skew-mitigated inner equi-join: identical semantics to
+    ``big.join(small, key)``, but hot keys are spread over ``n_salt``
+    shuffle partitions.
 
     The big side gets a deterministic salt derived from ``salt_source`` (any
     per-row column NOT correlated with the key — an id, a timestamp); the
@@ -134,15 +135,14 @@ def join_salted(
     When to reach for this over AQE's skew-join splitting: AQE splits skewed
     partitions of a sort-merge join but cannot split a skewed *aggregation*
     or a broadcast-ineligible key with billions of identical values; salting
-    handles both and is deterministic at plan time. Semantics-preserving for
-    inner/left joins on the big side (every big row keeps exactly the
-    matching small rows for its (key, salt)).
+    handles both and is deterministic at plan time. Semantics-preserving:
+    every big row keeps exactly the matching small rows for its (key, salt).
     """
     salted_big = big.withColumn("_salt", F.pmod(F.hash(salt_source), F.lit(n_salt)))
     salted_small = small.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
     )
-    return salted_big.join(salted_small, [key, "_salt"], how).drop("_salt")
+    return salted_big.join(salted_small, [key, "_salt"], "inner").drop("_salt")
 
 
 def topk(df: DataFrame, order_cols: Sequence[Column], k: int) -> DataFrame:
@@ -184,25 +184,6 @@ def last_per_key(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def having_count(
-    df: DataFrame, group_col: str, count_col: str, min_count: int, distinct: bool = True
-) -> DataFrame:
-    """Keep rows whose group has >= min_count members (a3_p2.py:24-31).
-
-    The reference materializes full groups (``groupByKey`` + len filter); a
-    windowed count keeps the data flat — no nested lists, no OOM groups.
-    """
-    w = Window.partitionBy(group_col)
-    if distinct:
-        # countDistinct is unsupported over windows; size(collect_set) is the
-        # idiomatic equivalent (group cardinalities here are filter thresholds,
-        # i.e. small).
-        c = F.size(F.collect_set(count_col).over(w))
-    else:
-        c = F.count(count_col).over(w)
-    return df.withColumn("__c", c).filter(F.col("__c") >= min_count).drop("__c")
 
 
 def merge_snapshot(base: DataFrame, delta: DataFrame) -> DataFrame:

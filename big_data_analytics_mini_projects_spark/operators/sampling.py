@@ -1,9 +1,10 @@
 """Multi-level (entity-complete) samplers (SURVEY.md §2.6; sampler_v02.py).
 
-Both samplers sample *entities* (user_ids), then keep every row of each
-sampled entity — the property the assignment calls multi-level sampling
-(Assignment 1 Description.htm:38). Determinism strategy per SURVEY.md §7.4:
-the reference's ``random.shuffle`` / ``mmh3`` choices are replaced with the
+Both samplers (the one-pass hash-bucket sampler here, the two-pass sampler
+in plans/samplingq.sample_twopass_stats) sample *entities* (user_ids), then
+keep every row of each sampled entity — the property the assignment calls
+multi-level sampling (Assignment 1 Description.htm:38). Determinism strategy
+per SURVEY.md §7.4: the reference's ``random.shuffle`` / ``mmh3`` choices are replaced with the
 cross-engine md5 hash (functions/hashing.py) so Spark, DuckDB and Python
 agree on the exact sample.
 """
@@ -12,32 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.hashing import h64, hex_bucket
-
-
-def sample_entities_twopass(
-    df: DataFrame, entity_col: str, pct: float, seed: str = "tp"
-) -> DataFrame:
-    """Two-pass sampler (sampler_v02.py:32-56): pass 1 collects distinct
-    entities, shuffles, keeps the top pct; pass 2 filters rows to the sample.
-
-    'Shuffle then take top pct' becomes 'order by a seeded hash and take the
-    top ⌈pct·n⌉' — the hash order *is* the shuffle, but reproducible. Returns
-    the sampled rows (all rows of sampled entities).
-
-    Scale note: the sample holds ceil(pct*|entities|) keys — it SCALES WITH
-    THE DATA, so the semi join is unhinted: AQE broadcasts it while it fits
-    (keeping the fact table shuffle-free) and degrades to a shuffled semi
-    join at the scale where a pinned broadcast would OOM.
-    """
-    ents = df.select(entity_col).distinct()
-    n = ents.count()
-    k = int(-(-n * pct // 1))  # ceil
-    sample = (
-        ents.orderBy(F.md5(F.concat(F.lit(f"{seed}:"), F.col(entity_col).cast("string"))))
-        .limit(k)
-    )
-    return df.join(sample, entity_col, "left_semi")
+from ..functions.hashing import hex_bucket
 
 
 def sample_entities_hashbucket(

@@ -42,16 +42,8 @@ def _h64_seeded(col: Column, seed_col: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
-def sql_h64_seeded(expr: str, seed_expr: str) -> str:
-    return (
-        f"('0x' || substr(md5(CAST({seed_expr} AS VARCHAR) || ':' || "
-        f"CAST({expr} AS VARCHAR)), 1, 15))::BIGINT"
-    )
-
-
 def minhash_signatures(
     tokens: DataFrame,
-    key: str = "doc_id",
     token_col: str = "word",
     num_hashes: int = 32,
     row_fraction: tuple[int, int] | None = None,
@@ -76,7 +68,7 @@ def minhash_signatures(
     collapses each partition to one row per key, and the only exchange is
     |keys| wide rows. The (key, seed, mh) row contract is restored by a
     post-agg explode of |keys| × num_hashes rows."""
-    t = tokens.select(key, token_col)
+    t = tokens.select("doc_id", token_col)
     if row_fraction is not None:
         m, r = row_fraction
         t = t.filter(_h64_seeded(F.col(token_col), F.lit("rowsel")) % r < m)
@@ -85,7 +77,7 @@ def minhash_signatures(
     # trips per seed (~0.7 s of driver time per call at 32 seeds, measured),
     # paid by every consumer on every bench repeat. Same functions, same
     # operand order -> identical values and identical physical aggregation.
-    mins = t.groupBy(key).agg(
+    mins = t.groupBy("doc_id").agg(
         *[
             F.expr(
                 f"min(cast(conv(substring(md5(concat(cast({s} as string), "
@@ -99,13 +91,11 @@ def minhash_signatures(
         f"named_struct('seed', {s}, 'mh', _mh{s})" for s in range(num_hashes)
     )
     return mins.select(
-        key, F.expr(f"explode(array({structs}))").alias("_x")
-    ).select(key, F.col("_x.seed").alias("seed"), F.col("_x.mh").alias("mh"))
+        "doc_id", F.expr(f"explode(array({structs}))").alias("_x")
+    ).select("doc_id", F.col("_x.seed").alias("seed"), F.col("_x.mh").alias("mh"))
 
 
-def minhash_jaccard(
-    sigs: DataFrame, num_hashes: int, key: str = "doc_id"
-) -> DataFrame:
+def minhash_jaccard(sigs: DataFrame, num_hashes: int) -> DataFrame:
     """Pairwise Jaccard estimates: fraction of agreeing signature rows
     (E[agreement] = J, exactly 0 when J = 0 — Part_2.pdf p3-4).
     Emits (key_a, key_b, n_sig, est) for key_a < key_b pairs that share at
@@ -115,8 +105,8 @@ def minhash_jaccard(
     signature pipeline once instead of once per branch (the aliases differ,
     so Catalyst's ReuseExchange cannot dedupe them by itself)."""
     sigs = persist_tracked(sigs)
-    a = sigs.select(F.col(key).alias("ka"), "seed", F.col("mh").alias("mha"))
-    b = sigs.select(F.col(key).alias("kb"), "seed", F.col("mh").alias("mhb"))
+    a = sigs.select(F.col("doc_id").alias("ka"), "seed", F.col("mh").alias("mha"))
+    b = sigs.select(F.col("doc_id").alias("kb"), "seed", F.col("mh").alias("mhb"))
     return (
         a.join(b, "seed")
         .filter(F.col("ka") < F.col("kb"))
@@ -131,25 +121,23 @@ def minhash_jaccard(
     )
 
 
-def lsh_bands(
-    sigs: DataFrame, rows_per_band: int, key: str = "doc_id"
-) -> DataFrame:
+def lsh_bands(sigs: DataFrame, rows_per_band: int) -> DataFrame:
     """(key, band, band_sig): md5 over the band's signature rows in seed order
     (Part_2.pdf p5: sets agreeing on a whole band become candidates)."""
     banded = sigs.withColumn("band", F.expr(f"seed div {rows_per_band}"))
     ordered = F.array_sort(F.collect_list(F.struct("seed", "mh")))
     concat = F.array_join(F.transform(ordered, lambda s: s["mh"].cast("string")), "-")
-    return banded.groupBy(key, "band").agg(F.md5(concat).alias("band_sig"))
+    return banded.groupBy("doc_id", "band").agg(F.md5(concat).alias("band_sig"))
 
 
-def lsh_candidates(bands: DataFrame, key: str = "doc_id") -> DataFrame:
+def lsh_candidates(bands: DataFrame) -> DataFrame:
     """Distinct candidate pairs sharing >=1 band (ka < kb).
 
     Persists ``bands`` (keys × b rows, tiny next to the corpus) so the
     signature+banding pipeline runs once, not once per self-join side."""
     bands = persist_tracked(bands)
-    a = bands.select(F.col(key).alias("ka"), "band", "band_sig")
-    b = bands.select(F.col(key).alias("kb"), "band", "band_sig")
+    a = bands.select(F.col("doc_id").alias("ka"), "band", "band_sig")
+    b = bands.select(F.col("doc_id").alias("kb"), "band", "band_sig")
     return (
         a.join(b, ["band", "band_sig"])
         .filter(F.col("ka") < F.col("kb"))
@@ -163,19 +151,17 @@ def lsh_capture_probability(s: float, r: int, b: int) -> float:
     return 1.0 - (1.0 - s**r) ** b
 
 
-def dedup_exact(docs: DataFrame, text_col: str = "text", key: str = "doc_id") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Exact-duplicate groups by content hash: (text_hash, n_docs, keeper) —
     keeper = min key, the row a dedup pipeline would retain."""
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("text_hash"))
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(key).alias("keeper"))
+        docs.groupBy(F.md5(F.col("text")).alias("text_hash"))
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keeper"))
         .filter(F.col("n_docs") > 1)
     )
 
 
-def simhash_values(
-    tokens: DataFrame, spark=None, key: str = "doc_id", token_col: str = "word"
-) -> DataFrame:
+def simhash_values(tokens: DataFrame, spark=None, token_col: str = "word") -> DataFrame:
     """60-bit SimHash per key over distinct tokens (Charikar): bit p of the
     fingerprint is 1 iff Σ_tokens (2·bit_p(h(token)) - 1) > 0.
 
@@ -199,9 +185,9 @@ def simhash_values(
     inflation). Pass the RAW token/shingle stream; pre-distincted input is
     re-deduped harmlessly."""
     t = (
-        tokens.select(key, token_col)
-        .repartition(F.col(key))
-        .dropDuplicates([key, token_col])
+        tokens.select("doc_id", token_col)
+        .repartition(F.col("doc_id"))
+        .dropDuplicates(["doc_id", token_col])
         .withColumn("h", _h64_seeded(F.col(token_col), F.lit("sh")))
     )
     # integer div, not / : h spans 60 bits, past double's 2^53 exactness.
@@ -211,7 +197,7 @@ def simhash_values(
     # conditional sums plus the 5 sixty-term bit-recombination trees —
     # pure driver time, paid on every bench repeat. Same operands, same
     # left-associative order; all values are exact integers.
-    counts = t.groupBy(key).agg(
+    counts = t.groupBy("doc_id").agg(
         *[
             F.expr(f"sum(((h div {p2}) % 2) * 2 - 1) AS c{p}")
             for p, p2 in BIT_POWERS
@@ -232,10 +218,10 @@ def simhash_values(
         + f" AS b{blk}"
         for blk in range(4)
     ]
-    return counts.selectExpr(key, f"{simhash} AS simhash", *blocks)
+    return counts.selectExpr("doc_id", f"{simhash} AS simhash", *blocks)
 
 
-def simhash_near_pairs(sim: DataFrame, max_hamming: int = 8, key: str = "doc_id") -> DataFrame:
+def simhash_near_pairs(sim: DataFrame, max_hamming: int = 8) -> DataFrame:
     """Candidate pairs sharing any 15-bit block, verified by Hamming distance
     bit_count(xor) <= max_hamming. Returns (ka, kb, hamming).
 
@@ -246,7 +232,7 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 8, key: str = "doc_id"
     blocks = None
     for blk in range(4):
         part = sim.select(
-            F.col(key).alias("k"), F.lit(blk).alias("blk"), F.col(f"b{blk}").alias("bv")
+            F.col("doc_id").alias("k"), F.lit(blk).alias("blk"), F.col(f"b{blk}").alias("bv")
         )
         blocks = part if blocks is None else blocks.unionAll(part)
     a = blocks.select(F.col("k").alias("ka"), "blk", "bv")
@@ -254,8 +240,8 @@ def simhash_near_pairs(sim: DataFrame, max_hamming: int = 8, key: str = "doc_id"
     cand = (
         a.join(b, ["blk", "bv"]).filter(F.col("ka") < F.col("kb")).select("ka", "kb").distinct()
     )
-    ha = sim.select(F.col(key).alias("ka"), F.col("simhash").alias("ha"))
-    hb = sim.select(F.col(key).alias("kb"), F.col("simhash").alias("hb"))
+    ha = sim.select(F.col("doc_id").alias("ka"), F.col("simhash").alias("ha"))
+    hb = sim.select(F.col("doc_id").alias("kb"), F.col("simhash").alias("hb"))
     return (
         cand.join(ha, "ka")
         .join(hb, "kb")
@@ -416,13 +402,7 @@ def connected_components_twophase(pairs: DataFrame) -> DataFrame:
     )
 
 
-def ngram_shingles(
-    docs: DataFrame,
-    n: int = 3,
-    key: str = "doc_id",
-    tokens_col: str = "toks",
-    distinct: bool = True,
-) -> DataFrame:
+def ngram_shingles(docs: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
     """Word n-gram shingles per key from a token-*array* column, distinct by
     default (set semantics for Jaccard/df counting).
 
@@ -437,14 +417,14 @@ def ngram_shingles(
     dedups key-locally itself) — where the distinct exchange would scatter
     every key across every partition and ruin the downstream per-key partial
     aggregation (measured 60x shuffle inflation at 50k docs)."""
-    sh = docs.select(key, F.explode(ngrams(tokens_col, n)).alias("g")).select(
-        key, ngram_text("g", n).alias("shingle")
+    sh = docs.select("doc_id", F.explode(ngrams("toks", n)).alias("g")).select(
+        "doc_id", ngram_text("g", n).alias("shingle")
     )
     return sh.distinct() if distinct else sh
 
 
 def ngram_jaccard_pairs(
-    shingles: DataFrame, min_jaccard: float = 0.2, df_cap: int = 500, key: str = "doc_id"
+    shingles: DataFrame, min_jaccard: float = 0.2, df_cap: int = 500
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs sharing >=1 shingle.
 
@@ -463,17 +443,17 @@ def ngram_jaccard_pairs(
     keep = shingles.join(
         freq.filter(F.col("df") <= df_cap).select("shingle"), "shingle"
     )
-    sizes = shingles.groupBy(key).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = keep.select(F.col(key).alias("ka"), "shingle")
-    b = keep.select(F.col(key).alias("kb"), "shingle")
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    a = keep.select(F.col("doc_id").alias("ka"), "shingle")
+    b = keep.select(F.col("doc_id").alias("kb"), "shingle")
     common = (
         a.join(b, "shingle")
         .filter(F.col("ka") < F.col("kb"))
         .groupBy("ka", "kb")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.select(F.col(key).alias("ka"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(key).alias("kb"), F.col("n_sh").alias("nb"))
+    sa = sizes.select(F.col("doc_id").alias("ka"), F.col("n_sh").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("kb"), F.col("n_sh").alias("nb"))
     jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
     return (
         common.join(sa, "ka")
@@ -488,7 +468,6 @@ def containment_pairs(
     shingles: DataFrame,
     min_containment: float = 0.9,
     df_cap: int = 500,
-    key: str = "doc_id",
 ) -> DataFrame:
     """Doc-in-doc containment pairs: C(A,B) = |A∩B| / min(|A|,|B|).
 
@@ -505,17 +484,17 @@ def containment_pairs(
     keep = shingles.join(
         freq.filter(F.col("df") <= df_cap).select("shingle"), "shingle"
     )
-    sizes = shingles.groupBy(key).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = keep.select(F.col(key).alias("ka"), "shingle")
-    b = keep.select(F.col(key).alias("kb"), "shingle")
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    a = keep.select(F.col("doc_id").alias("ka"), "shingle")
+    b = keep.select(F.col("doc_id").alias("kb"), "shingle")
     common = (
         a.join(b, "shingle")
         .filter(F.col("ka") < F.col("kb"))
         .groupBy("ka", "kb")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.select(F.col(key).alias("ka"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(key).alias("kb"), F.col("n_sh").alias("nb"))
+    sa = sizes.select(F.col("doc_id").alias("ka"), F.col("n_sh").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("kb"), F.col("n_sh").alias("nb"))
     cont = F.col("n_common").cast("double") / F.least("na", "nb")
     inner = F.when(F.col("na") <= F.col("nb"), F.col("ka")).otherwise(F.col("kb"))
     outer = F.when(F.col("na") <= F.col("nb"), F.col("kb")).otherwise(F.col("ka"))
@@ -534,9 +513,7 @@ def containment_pairs(
     )
 
 
-def jaccard_prefix_pairs(
-    shingles: DataFrame, tau_tenths: int = 3, key: str = "doc_id"
-) -> DataFrame:
+def jaccard_prefix_pairs(shingles: DataFrame, tau_tenths: int = 3) -> DataFrame:
     """Prefix-filtered exact set-similarity join (the AllPairs/PPJoin family:
     Bayardo et al. 2007, Xiao et al. 2008) — the scale path the df-cap
     heuristic in :func:`ngram_jaccard_pairs` approximates.
@@ -568,13 +545,13 @@ def jaccard_prefix_pairs(
     # One groupBy gives both the verify arrays and the sizes; doc partition
     # is bounded by document length, never corpus size.
     doc_sets = persist_tracked(
-        shingles.groupBy(key)
+        shingles.groupBy("doc_id")
         .agg(F.collect_set("shingle").alias("shs"))
         .withColumn("n_sh", F.size("shs"))
     )
-    sh = doc_sets.select(key, "n_sh", F.explode("shs").alias("shingle"))
+    sh = doc_sets.select("doc_id", "n_sh", F.explode("shs").alias("shingle"))
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    order_w = Window.partitionBy(key).orderBy("df", "shingle")
+    order_w = Window.partitionBy("doc_id").orderBy("df", "shingle")
     ranked = sh.join(freq, "shingle").withColumn(
         "pos", F.row_number().over(order_w)
     )
@@ -582,13 +559,13 @@ def jaccard_prefix_pairs(
         F.col("n_sh") - F.expr(f"({tau_tenths} * n_sh + 9) div 10") + F.lit(1)
     )
     pref = ranked.filter(F.col("pos") <= prefix_len).select(
-        key, "n_sh", "shingle"
+        "doc_id", "n_sh", "shingle"
     )
     cand = (
-        pref.select(F.col(key).alias("ka"), F.col("n_sh").alias("na"), "shingle")
+        pref.select(F.col("doc_id").alias("ka"), F.col("n_sh").alias("na"), "shingle")
         .join(
             pref.select(
-                F.col(key).alias("kb"), F.col("n_sh").alias("nb"), "shingle"
+                F.col("doc_id").alias("kb"), F.col("n_sh").alias("nb"), "shingle"
             ),
             "shingle",
         )
@@ -603,10 +580,10 @@ def jaccard_prefix_pairs(
         .distinct()
     )
     sa = doc_sets.select(
-        F.col(key).alias("ka"), F.col("shs").alias("sha"), F.col("n_sh").alias("na")
+        F.col("doc_id").alias("ka"), F.col("shs").alias("sha"), F.col("n_sh").alias("na")
     )
     sb = doc_sets.select(
-        F.col(key).alias("kb"), F.col("shs").alias("shb"), F.col("n_sh").alias("nb")
+        F.col("doc_id").alias("kb"), F.col("shs").alias("shb"), F.col("n_sh").alias("nb")
     )
     verified = (
         cand.join(sa, "ka")

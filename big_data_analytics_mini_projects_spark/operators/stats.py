@@ -14,8 +14,9 @@ Two implementations:
    regardless of corpus size, parallelism bounded by data not by K groups.
    The reference's grouped-map formulation materializes every group (~the
    whole corpus per word) on one task — the classic scale killer.
-   p-values apply ``t_sf`` via a vectorized pandas UDF over the K aggregated
-   rows (one row per group — trivially small by then).
+   p-values apply the incomplete-beta continued fraction as JVM expressions
+   (functions/tdist.with_two_sided_t_pvalue_cf) over the K aggregated rows
+   (one row per group — trivially small by then).
 2. **Grouped numpy fit** (``ols_simple_grouped`` / ``ols_multi_grouped``) —
    the reference-shaped ``applyInPandas`` mirror, kept for parity testing
    (tests/test_stats.py proves closed == grouped == plain numpy).
@@ -44,10 +45,9 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..functions.stats_math import t_sf
-from ..functions.tdist import with_two_sided_t_pvalue, with_two_sided_t_pvalue_cf
+from ..functions.tdist import with_two_sided_t_pvalue_cf
 
 SIMPLE_SCHEMA = (
     "word string, n long, beta double, t_stat double, p_value double, p_bonf double"
@@ -69,40 +69,14 @@ def _pearson(n: Column, sa: Column, sb: Column, sab: Column, saa: Column, sbb: C
     return (n * sab - sa * sb) / F.sqrt((n * saa - sa * sa) * (n * sbb - sb * sb))
 
 
-def _two_sided_p(t: Column, df: Column) -> Column:
-    """2*sf(|t|, df) as a vectorized pandas UDF — runs over the K aggregated
-    rows only (one per group). Built lazily: pandas_udf needs an active
-    SparkSession, which module import time doesn't guarantee."""
-
-    def p(ts: pd.Series, dfs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                math.nan
-                if tv is None or dv is None or dv <= 0 or math.isnan(tv)
-                else 2.0 * t_sf(abs(tv), dv)
-                for tv, dv in zip(ts, dfs)
-            ]
-        )
-
-    return pandas_udf(p, "double")(t, df)
-
-
 def ols_simple_closed(
     obs: DataFrame, group_col: str = "word", x_col: str = "x", y_col: str = "y",
-    bonferroni_k: int | None = None, p_method: str = "udf",
+    bonferroni_k: int | None = None,
 ) -> DataFrame:
     """Per-group standardized simple OLS + t-test from sufficient statistics:
     β = Pearson r, t = r·sqrt((n-2)/(1-r²)) (a3_p1.py:71-96 semantics, one
-    partial-agg shuffle, no grouped collect).
-
-    ``p_method``: "udf" (default) = vectorized pandas-UDF continued fraction,
-    O(1) in df; "betacf" = the same incomplete-beta continued fraction as
-    pure JVM expressions at a fixed iteration count — O(1) in df AND
-    oracle-checkable via the identically-structured DuckDB CTE
-    (functions/tdist.sql_t_pvalue_cf_ctes) — the declared differential query
-    uses this; "series" = the closed-form integer-df expansion (exact
-    elementary functions, but O(df) per row in both engines — kept for the
-    parity tests that pin betacf against it).
+    partial-agg shuffle, no grouped collect). ``p_value`` is oracle-checkable
+    through its DuckDB twin, functions/tdist.sql_t_pvalue_cf_ctes.
     """
     x, y = F.col(x_col), F.col(y_col)
     s = obs.groupBy(group_col).agg(
@@ -118,14 +92,7 @@ def ols_simple_closed(
     t = r * F.sqrt((n - 2) / (1 - r * r))
     k = float(bonferroni_k or 1)
     base = s.select(group_col, "n", r.alias("beta"), t.alias("t_stat"))
-    if p_method == "series":
-        out = with_two_sided_t_pvalue(base, "t_stat", F.col("n") - 2, "p_value")
-    elif p_method == "betacf":
-        out = with_two_sided_t_pvalue_cf(base, "t_stat", F.col("n") - 2, "p_value")
-    else:
-        out = base.withColumn(
-            "p_value", _two_sided_p(F.col("t_stat"), F.col("n").cast("double") - 2)
-        )
+    out = with_two_sided_t_pvalue_cf(base, "t_stat", F.col("n") - 2)
     return out.withColumn("p_bonf", F.least(F.lit(1.0), F.col("p_value") * k))
 
 
@@ -160,14 +127,10 @@ def ols_multi_closed(
     b2 = (rcy - rxy * rxc) / (1 - rxc * rxc)
     t = b1 * F.sqrt((n - 3) / (1 - (b1 * rxy + b2 * rcy)))
     k = float(bonferroni_k or 1)
-    out = s.select(
-        group_col,
-        "n",
-        b1.alias("beta"),
-        b2.alias("beta_ctrl"),
-        t.alias("t_stat"),
-        _two_sided_p(t, n - 3).alias("p_value"),
+    base = s.select(
+        group_col, "n", b1.alias("beta"), b2.alias("beta_ctrl"), t.alias("t_stat")
     )
+    out = with_two_sided_t_pvalue_cf(base, "t_stat", F.col("n") - 3)
     return out.withColumn("p_bonf", F.least(F.lit(1.0), F.col("p_value") * k))
 
 

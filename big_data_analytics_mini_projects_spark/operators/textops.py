@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.hashing import h64_sql  # noqa: F401  (oracle builders live in plans)
 from ..functions.text import round4_stable, tokens
 
 #: Stopword list for quality scoring — literal, mirrored in the SQL oracle.
@@ -19,9 +18,16 @@ STOPWORDS = ("the", "a", "and", "of", "to", "is", "in", "it")
 #: BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol.
 BPE_PATTERN = r"([a-z]+|[0-9]+|[^a-z0-9\s])"
 
+#: Trigrams per language profile (lang_trigram_profiles).
+PROFILE_TOP_N = 20
 
-def char_trigrams(docs: DataFrame, key: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(key, tg) — one row per character trigram of the lowercased text.
+#: Winnowing gram length and window (doc_fingerprints).
+FP_K = 8
+FP_WINDOW = 4
+
+
+def char_trigrams(docs: DataFrame) -> DataFrame:
+    """(doc_id, tg) — one row per character trigram of the lowercased text.
 
     The lowered text is split to a char ARRAY once per row via the
     transform(array(x), cs -> ...)[0] let-binding idiom, and trigram i is
@@ -32,17 +38,15 @@ def char_trigrams(docs: DataFrame, key: str = "doc_id", text_col: str = "text") 
     still an O(i) UTF8 char scan per call — measured 2.5x slower end-to-end
     at 50k docs (sf1 rehearsal), worse with longer documents."""
     expr = (
-        f"transform(array(split(lower({text_col}), '')), cs -> "
+        "transform(array(split(lower(text), '')), cs -> "
         "CASE WHEN size(cs) >= 3 THEN "
         "transform(sequence(0, size(cs) - 3), i -> concat(cs[i], cs[i+1], cs[i+2])) "
         "ELSE cast(array() as array<string>) END)[0]"
     )
-    return docs.select(key, F.explode(F.expr(expr)).alias("tg"))
+    return docs.select("doc_id", F.explode(F.expr(expr)).alias("tg"))
 
 
-def lang_trigram_profiles(
-    doc_tg_with_lang: DataFrame, top_n: int = 20
-) -> DataFrame:
+def lang_trigram_profiles(doc_tg_with_lang: DataFrame) -> DataFrame:
     """(lang, tg) — the top-N trigrams per language by corpus frequency
     (count desc, trigram asc tiebreak): the n-gram language profile of
     Cavnar-Trenkle-style language ID, trained on the corpus itself.
@@ -53,48 +57,48 @@ def lang_trigram_profiles(
     w = Window.partitionBy("lang").orderBy(F.desc("c"), F.asc("tg"))
     return (
         counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_n)
+        .filter(F.col("rn") <= PROFILE_TOP_N)
         .select("lang", "tg")
     )
 
 
-def doc_trigram_counts(docs: DataFrame, key: str = "doc_id") -> DataFrame:
-    """(key, tg, c): per-doc trigram counts — the shared base of profile
+def doc_trigram_counts(docs: DataFrame) -> DataFrame:
+    """(doc_id, tg, c): per-doc trigram counts — the shared base of profile
     training and classification. One explode + one aggregate; callers persist
     it when both consumers run in one job (the corpus-sized explode is the
     expensive part, the aggregated counts are ~10x smaller)."""
-    return char_trigrams(docs, key).groupBy(key, "tg").agg(
+    return char_trigrams(docs).groupBy("doc_id", "tg").agg(
         F.count(F.lit(1)).alias("c")
     )
 
 
-def lang_id(doc_tg: DataFrame, profiles: DataFrame, key: str = "doc_id") -> DataFrame:
+def lang_id(doc_tg: DataFrame, profiles: DataFrame) -> DataFrame:
     """Predict each doc's language: argmax over languages of the number of
     doc trigram occurrences hitting the language's profile (score desc,
     lang asc tiebreak). ``doc_tg`` is :func:`doc_trigram_counts` output.
-    Returns (key, pred_lang, score). Docs matching no profile trigram are
+    Returns (doc_id, pred_lang, score). Docs matching no profile trigram are
     dropped (identically on both engines)."""
     scores = (
         doc_tg.join(F.broadcast(profiles), "tg")
-        .groupBy(key, "lang")
+        .groupBy("doc_id", "lang")
         .agg(F.sum("c").alias("score"))
     )
-    w = Window.partitionBy(key).orderBy(F.desc("score"), F.asc("lang"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("lang"))
     return (
         scores.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(key, F.col("lang").alias("pred_lang"), "score")
+        .select("doc_id", F.col("lang").alias("pred_lang"), "score")
     )
 
 
-def text_quality(docs: DataFrame, key: str = "doc_id", text_col: str = "text") -> DataFrame:
+def text_quality(docs: DataFrame) -> DataFrame:
     """Per-doc quality metrics from integer counts (engine-stable divisions):
     token count, distinct-token (type) count, mean token length, stopword
     ratio, type-token ratio, and a weighted quality score in [0, 1]."""
-    toks = tokens(text_col)
+    toks = tokens("text")
     stop_arr = F.array(*(F.lit(s) for s in STOPWORDS))
     d = docs.select(
-        key,
+        "doc_id",
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_types"),
         F.length(F.array_join(toks, "")).alias("char_sum"),
@@ -112,7 +116,7 @@ def text_quality(docs: DataFrame, key: str = "doc_id", text_col: str = "text") -
     # corpus scale and Spark's shortest-repr rounding diverges from any
     # binary-value rounding there (first seen at sf0.1).
     return d.select(
-        key,
+        "doc_id",
         "n_tokens",
         "n_types",
         round4_stable(avg_len).alias("avg_token_len"),
@@ -122,28 +126,25 @@ def text_quality(docs: DataFrame, key: str = "doc_id", text_col: str = "text") -
     )
 
 
-def token_counts(docs: DataFrame, key: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace + BPE-ish token counts per doc — array sizes, no explode,
     no shuffle: the cheapest possible token accounting at 100 TB."""
-    ws = F.size(tokens(text_col))
-    bpe = F.size(F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(BPE_PATTERN), 1))
-    return docs.select(key, ws.alias("ws_tokens"), bpe.alias("bpe_tokens"))
+    ws = F.size(tokens("text"))
+    bpe = F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(BPE_PATTERN), 1))
+    return docs.select("doc_id", ws.alias("ws_tokens"), bpe.alias("bpe_tokens"))
 
 
-def doc_fingerprints(
-    docs: DataFrame, k: int = 8, window: int = 4, key: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def doc_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al. 2003): hash all
-    k-char grams, keep the minimum hash of every sliding window of
-    ``window`` consecutive grams, dedupe. Guarantees any shared substring of
-    length >= k + window - 1 yields a shared fingerprint — the matching
+    k-char grams (k = FP_K), keep the minimum hash of every sliding window
+    of FP_WINDOW consecutive grams, dedupe. Guarantees any shared substring
+    of length >= FP_K + FP_WINDOW - 1 yields a shared fingerprint — the matching
     property plagiarism/near-dup detectors rely on.
 
-    Returns distinct (key, fp) rows. The whole computation is per-row array
+    Returns distinct (doc_id, fp) rows. The whole computation is per-row array
     transforms — gram expansion, hashing, sliding-window min, and dedupe all
     happen inside one codegen stage with ZERO shuffle (the within-doc
-    ``array_distinct`` subsumes a row-level distinct because ``key`` is
+    ``array_distinct`` subsumes a row-level distinct because ``doc_id`` is
     constant per row). The alternative — posexplode grams + a partitioned
     window min — shuffles one row per character of the corpus, which at
     100 TB is a corpus-sized exchange for no semantic gain.
@@ -157,10 +158,10 @@ def doc_fingerprints(
     subscripts, not `substring(t, i, k)` — the latter is an O(i) UTF8 char
     scan per position, per-doc-quadratic (the char_trigrams lesson). slice()
     clamps at the tail, matching a CURRENT ROW .. N FOLLOWING frame."""
-    cat_k = " , ".join(f"cs[i+{j}]" for j in range(k))
+    cat_k = " , ".join(f"cs[i+{j}]" for j in range(FP_K))
     grams_cs = (
-        f"CASE WHEN size(cs) >= {k} THEN "
-        f"transform(sequence(0, size(cs) - {k}), i -> concat({cat_k})) "
+        f"CASE WHEN size(cs) >= {FP_K} THEN "
+        f"transform(sequence(0, size(cs) - {FP_K}), i -> concat({cat_k})) "
         f"ELSE cast(array() as array<string>) END"
     )
     hs_cs = (
@@ -170,10 +171,10 @@ def doc_fingerprints(
     winnow_hs = (
         "CASE WHEN size(hs) = 0 THEN cast(array() as array<bigint>) "
         f"ELSE array_distinct(transform(sequence(1, size(hs)), "
-        f"i -> array_min(slice(hs, i, {window})))) END"
+        f"i -> array_min(slice(hs, i, {FP_WINDOW})))) END"
     )
     fp_expr = (
-        f"transform(array(split(lower({text_col}), '')), cs -> "
+        "transform(array(split(lower(text), '')), cs -> "
         f"transform(array({hs_cs}), hs -> {winnow_hs})[0])[0]"
     )
-    return docs.select(key, F.explode(F.expr(fp_expr)).alias("fp"))
+    return docs.select("doc_id", F.explode(F.expr(fp_expr)).alias("fp"))

@@ -29,17 +29,12 @@ EMB_DIM = 64
 N_PLANES = 16
 
 
-def hyperplane_signs(n_planes: int = N_PLANES, dim: int = EMB_DIM) -> list[list[float]]:
+def hyperplane_signs(n_planes: int = N_PLANES) -> list[list[float]]:
     """Deterministic ±1 hyperplane matrix from the shared md5 hash."""
     return [
-        [2.0 * (h64_py(f"{i}-{d}", "hp") % 2) - 1.0 for d in range(dim)]
+        [2.0 * (h64_py(f"{i}-{d}", "hp") % 2) - 1.0 for d in range(EMB_DIM)]
         for i in range(n_planes)
     ]
-
-
-def _as_double_vec(df: DataFrame, emb_col: str = "embedding", out: str = "v") -> DataFrame:
-    """float[] -> double[] (exact) so all arithmetic is double end-to-end."""
-    return df.withColumn(out, F.expr(f"transform({emb_col}, x -> cast(x as double))"))
 
 
 def _dot(a: str, b: str) -> str:
@@ -52,14 +47,13 @@ def _dot(a: str, b: str) -> str:
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
 
-def with_norm(df: DataFrame, vec_col: str = "v", out: str = "norm") -> DataFrame:
-    return df.withColumn(out, F.expr(f"sqrt({_dot(vec_col, vec_col)})"))
-
-
-def prepare_vectors(emb: DataFrame, key: str = "vec_id") -> DataFrame:
-    """(key, v, norm, ...) — the normalized-access projection every vector
-    operator starts from."""
-    return with_norm(_as_double_vec(emb))
+def prepare_vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, v, norm, ...) — the normalized-access projection every vector
+    operator starts from. float[] -> double[] is exact, so all arithmetic is
+    double end-to-end."""
+    return emb.withColumn(
+        "v", F.expr("transform(embedding, x -> cast(x as double))")
+    ).withColumn("norm", F.expr(f"sqrt({_dot('v', 'v')})"))
 
 
 def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
@@ -73,9 +67,7 @@ def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(
-    vectors: DataFrame, queries: DataFrame, k: int, key: str = "vec_id"
-) -> DataFrame:
+def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Brute-force cosine top-k: every query vs every vector (self excluded).
 
     ``vectors``/``queries`` are prepare_vectors outputs. Deterministic
@@ -83,10 +75,10 @@ def cosine_topk(
     ties only between identical vectors. Returns
     (query_id, neighbor_id, rank, cos)."""
     q = queries.select(
-        F.col(key).alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
     )
     c = vectors.select(
-        F.col(key).alias("neighbor_id"), F.col("v").alias("cv"), F.col("norm").alias("cn")
+        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), F.col("norm").alias("cn")
     )
     pairs = (
         q.crossJoin(c)
@@ -100,20 +92,17 @@ def cosine_topk(
     return _rank_topk(pairs, k)
 
 
-def cosine_topk_blocked(
-    vectors: DataFrame, queries: DataFrame, k: int, block_col: str = "label",
-    key: str = "vec_id",
-) -> DataFrame:
+def cosine_topk_blocked(vectors: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """IVF-style search: candidates share the query's coarse cell
-    (``block_col``) — probe-1 IVF with pre-assigned cells. Same output shape
+    (``label``) — probe-1 IVF with pre-assigned cells. Same output shape
     as cosine_topk; at 100 TB this replaces the cross join with an equi-join
     on the cell id."""
     q = queries.select(
-        F.col(key).alias("query_id"), F.col(block_col).alias("blk"),
+        F.col("vec_id").alias("query_id"), F.col("label").alias("blk"),
         F.col("v").alias("qv"), F.col("norm").alias("qn"),
     )
     c = vectors.select(
-        F.col(key).alias("neighbor_id"), F.col(block_col).alias("blk"),
+        F.col("vec_id").alias("neighbor_id"), F.col("label").alias("blk"),
         F.col("v").alias("cv"), F.col("norm").alias("cn"),
     )
     pairs = (
@@ -128,17 +117,15 @@ def cosine_topk_blocked(
     return _rank_topk(pairs, k)
 
 
-def ivf_cell_centroids(
-    vectors: DataFrame, cell_col: str = "label", vec_col: str = "v"
-) -> DataFrame:
-    """Decimal-exact per-cell centroid means: (cell, cv double[dim]).
+def ivf_cell_centroids(vectors: DataFrame, cell_col: str) -> DataFrame:
+    """Decimal-exact per-cell centroid means: (cell_col, cv double[dim]).
 
     posexplode -> (cell, pos) keyed aggregate (keys bounded by cells x dim,
     map-side combine does the heavy lifting) -> re-assembled position-sorted
     array. Component sums run in decimal so the means — and everything
     derived from them — are bit-identical across engines and partition
     orders (the same exactness discipline as diversity_by_group)."""
-    comp = vectors.select(cell_col, F.posexplode(vec_col).alias("pos", "x"))
+    comp = vectors.select(cell_col, F.posexplode("v").alias("pos", "x"))
     cm = comp.groupBy(cell_col, "pos").agg(
         (dsum("x", 8) / F.count(F.lit(1))).alias("m")
     )
@@ -154,8 +141,6 @@ def cosine_topk_ivf(
     queries: DataFrame,
     k: int,
     nprobe: int = 3,
-    cell_col: str = "label",
-    key: str = "vec_id",
 ) -> DataFrame:
     """Multi-cell IVF search (nprobe > 1): each query ranks the coarse-cell
     centroids by squared L2 distance and probes its ``nprobe`` nearest cells;
@@ -170,9 +155,9 @@ def cosine_topk_ivf(
     oracle-checkable. Scale shape: centroid frame is cells x dim (broadcast),
     the probe frame is |Q| x nprobe (broadcast), and the only corpus-sized
     operation is the equi-join on the cell id."""
-    cents = ivf_cell_centroids(vectors, cell_col)
+    cents = ivf_cell_centroids(vectors, "label")
     q = queries.select(
-        F.col(key).alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
     )
     d2 = (
         F.expr(_dot("qv", "qv"))
@@ -180,7 +165,7 @@ def cosine_topk_ivf(
         + F.expr(_dot("cv", "cv"))
     )
     qc = q.join(F.broadcast(cents)).select(
-        "query_id", "qv", "qn", F.col(cell_col).alias("cell"), d2.alias("d2")
+        "query_id", "qv", "qn", F.col("label").alias("cell"), d2.alias("d2")
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cell"))
     probes = (
@@ -189,8 +174,8 @@ def cosine_topk_ivf(
         .select("query_id", "qv", "qn", "cell")
     )
     c = vectors.select(
-        F.col(key).alias("neighbor_id"),
-        F.col(cell_col).alias("cell"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("cell"),
         F.col("v").alias("cv"),
         F.col("norm").alias("cn"),
     )
@@ -207,7 +192,7 @@ def cosine_topk_ivf(
 
 
 def embedding_near_pairs(
-    vectors: DataFrame, min_cos: float, key: str = "vec_id", max_rows: int | None = 50_000
+    vectors: DataFrame, min_cos: float, max_rows: int | None = 50_000
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (ka < kb, cos >= min_cos).
 
@@ -233,8 +218,8 @@ def embedding_near_pairs(
                 "(hyperplane_buckets / IVF cells) or raise max_rows "
                 "explicitly if a brute-force slice this large is intended"
             )
-    a = vectors.select(F.col(key).alias("ka"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    b = vectors.select(F.col(key).alias("kb"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
+    a = vectors.select(F.col("vec_id").alias("ka"), F.col("v").alias("va"), F.col("norm").alias("na"))
+    b = vectors.select(F.col("vec_id").alias("kb"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
     return (
         a.crossJoin(b)
         .filter(F.col("ka") < F.col("kb"))
@@ -263,159 +248,98 @@ def _srp_bucket_sql(plane_indices: list[int]) -> str:
     return " + ".join(terms)
 
 
-def hyperplane_buckets(
-    vectors: DataFrame, n_planes: int = N_PLANES, key: str = "vec_id"
-) -> DataFrame:
+def hyperplane_buckets(vectors: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
     """16-bit SRP (signed random projection) bucket per vector:
     bit i = [v · h_i > 0]. Near-identical vectors collide with high
     probability; the bucket is the blocking key for cosine dedup at scale."""
     return vectors.select(
-        F.col(key),
+        F.col("vec_id"),
         F.expr(_srp_bucket_sql(list(range(n_planes)))).alias("bucket"),
     )
 
 
 N_BANDS = 4
-BAND_BITS = 4
 
-
-def banded_bucket_exprs(
-    n_bands: int = N_BANDS, band_bits: int = BAND_BITS
-) -> list:
-    """Per-band SRP bucket expressions: band b packs sign bits of planes
-    [b·band_bits, (b+1)·band_bits) — i.e. band b's bucket equals bits
-    [4b, 4b+4) of the 16-bit :func:`hyperplane_buckets` key, same planes."""
-    return [
-        F.expr(
-            _srp_bucket_sql(list(range(b * band_bits, (b + 1) * band_bits)))
-        )
-        for b in range(n_bands)
-    ]
-
-
-def bucketed_near_pairs(
-    vectors: DataFrame, min_cos: float, n_bands: int = N_BANDS,
-    band_bits: int = BAND_BITS, key: str = "vec_id",
-) -> DataFrame:
-    """Banded-SRP cosine near-duplicate pairs — the 100 TB composition of
-    :func:`hyperplane_buckets` (blocking) and :func:`embedding_near_pairs`
-    (verify): candidates are pairs sharing ANY band's bucket (LSH OR-
-    construction, the minhash-banding idiom applied to SRP), verified by an
-    exact cosine and deduplicated across bands.
-
-    Plan shape: explode n_bands keys per vector -> ONE equi-join on
-    (band, bucket) -> cosine filter BEFORE the pair-distinct shuffle. No
-    cross join anywhere; the per-bucket pair count is the only quadratic
-    term, as with MinHash+LSH banding. Capture probability at similarity
-    s = cos: 1-(1-p^band_bits)^n_bands with p = 1-acos(s)/pi — for 4x4:
-    ~0.99 at cos 0.99, ~0.98 at 0.95, falling to ~0.46 at 0.35, so the
-    geometry targets true near-duplicates; widen n_bands (more tables) for
-    recall at looser thresholds.
-
-    TUNING RULE (measured, BASELINE.md round-4 rehearsal): ``band_bits``
-    must scale as ~log2(n / target_occupancy). A band has only
-    2^band_bits buckets, so at FIXED width the per-bucket occupancy grows
-    linearly with the corpus and the verify stage quadratically — 4-bit
-    bands took 6.5 s at 2k vectors but 409 s at 20k (86x shuffle on 10x
-    data), while 8 bits restored it to 10.8 s. Wider bands also raise the
-    join-key cardinality (n_bands * 2^band_bits distinct shuffle keys):
-    at 4 bits only 64 keys exist, so two reducers received all pairs.
-    Add ~3.3 bits per 10x corpus growth; recall at high similarity barely
-    moves (0.991 at cos 0.99 for 8x4) — re-derive from the capture formula
-    when retuning, and raise n_bands if loose-threshold recall matters.
-    """
-    exprs = banded_bucket_exprs(n_bands, band_bits)
-    bb = F.array(
-        *[F.struct(F.lit(b).alias("band"), e.alias("bucket")) for b, e in enumerate(exprs)]
-    )
-    vb = vectors.select(F.col(key), "v", "norm", F.explode(bb).alias("bb")).select(
-        key, "v", "norm", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    a = vb.select(
-        "band", "bucket", F.col(key).alias("ka"), F.col("v").alias("va"), F.col("norm").alias("na")
-    )
-    b = vb.select(
-        "band", "bucket", F.col(key).alias("kb"), F.col("v").alias("vb"), F.col("norm").alias("nb")
-    )
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("ka") < F.col("kb"))
-        .select(
-            "ka", "kb",
-            (F.expr(_dot("va", "vb")) / (F.col("na") * F.col("nb"))).alias("cos"),
-        )
-        .filter(F.col("cos") >= min_cos)
-        .distinct()
-    )
-
-
-#: Occupancy-rule defaults for the self-tuning banded dedup below: target
-#: ~32 vectors per bucket; the width ladder covers corpora up to
-#: 32 * 2^14 ≈ 524k vectors (extend AUTO_MAX_BITS for larger corpora — a
-#: 10^9-vector corpus needs ~log2(1e9/32) = 25 bits).
+#: Occupancy rule for the self-tuning banded dedup below: target ~32 vectors
+#: per bucket; the width ladder covers corpora up to 32 * 2^14 ≈ 524k
+#: vectors (extend AUTO_MAX_BITS for larger corpora — a 10^9-vector corpus
+#: needs ~log2(1e9/32) = 25 bits).
 AUTO_OCCUPANCY = 32
 AUTO_MAX_BITS = 14
 
 
-def auto_band_bits(n_col, occupancy: int = AUTO_OCCUPANCY, max_bits: int = AUTO_MAX_BITS):
+def auto_band_bits(n_col):
     """Integer-exact occupancy-rule band width as a Column expression:
 
-        w(n) = 4 + #{k in [4, max_bits) : n > occupancy * 2^k}
-             = clamp(ceil(log2(n / occupancy)), 4, max_bits)
+        w(n) = 4 + #{k in [4, AUTO_MAX_BITS) : n > AUTO_OCCUPANCY * 2^k}
+             = clamp(ceil(log2(n / AUTO_OCCUPANCY)), 4, AUTO_MAX_BITS)
 
     A comparison ladder, not floating log2, so both engines (this and the
     DuckDB oracle's mirror, plans/round6q.py) compute the identical width
     at every corpus size — no float-edge risk at exact powers of two."""
     w = F.lit(4)
-    for k in range(4, max_bits):
-        w = w + (n_col > F.lit(occupancy << k)).cast("int")
+    for k in range(4, AUTO_MAX_BITS):
+        w = w + (n_col > F.lit(AUTO_OCCUPANCY << k)).cast("int")
     return w
 
 
-def bucketed_near_pairs_auto(
-    vectors: DataFrame,
-    min_cos: float,
-    n_bands: int = N_BANDS,
-    max_bits: int = AUTO_MAX_BITS,
-    occupancy: int = AUTO_OCCUPANCY,
-    key: str = "vec_id",
-) -> DataFrame:
-    """:func:`bucketed_near_pairs` with the band width derived from the
-    corpus size by the operator's own occupancy rule — the round-5 verdict
-    fix for the fixed-width-LSH densification class (4-bit bands: 6.5 s at
-    2k vectors but 409 s at 20k and a >25-min kill at 200k; the per-bucket
-    occupancy grows linearly with the corpus at fixed width, so the verify
-    stage grows quadratically).
+def bucketed_near_pairs_auto(vectors: DataFrame, min_cos: float) -> DataFrame:
+    """Banded-SRP cosine near-duplicate pairs — the 100 TB composition of
+    :func:`hyperplane_buckets` (blocking) and :func:`embedding_near_pairs`
+    (verify): candidates are pairs sharing ANY band's bucket (LSH OR-
+    construction, the minhash-banding idiom applied to SRP), verified by an
+    exact cosine and deduplicated across bands. No cross join of the corpus
+    anywhere; the per-bucket pair count is the only quadratic term, as with
+    MinHash+LSH banding.
 
-    Width: each band computes its FULL ``max_bits``-bit SRP bucket (plane
-    stride ``max_bits``: band b, bit i uses hyperplane b*max_bits + i), then
-    masks to the low ``w = auto_band_bits(count)`` bits. The count is a
+    The band width is derived from the corpus size by the occupancy rule
+    ``w ≈ log2(n / AUTO_OCCUPANCY)`` (:func:`auto_band_bits`). A band has
+    only 2^w buckets, so at FIXED width the per-bucket occupancy grows
+    linearly with the corpus and the verify stage quadratically (measured,
+    BASELINE.md round-4 rehearsal: 4-bit bands took 6.5 s at 2k vectors but
+    409 s at 20k — 86x shuffle on 10x data — and a >25-min kill at 200k,
+    while 8 bits restored 20k to 10.8 s). Narrow bands also starve the
+    join-key cardinality (N_BANDS * 2^w distinct shuffle keys): at 4 bits
+    only 64 keys exist, and two reducers received all pairs.
+
+    Width: each band computes its FULL ``AUTO_MAX_BITS``-bit SRP bucket
+    (plane stride AUTO_MAX_BITS: band b, bit i uses hyperplane
+    b*AUTO_MAX_BITS + i), then masks to the low ``w`` bits. The count is a
     1-row aggregate broadcast onto the corpus (the allowlisted scalar-stats
     cross-join shape), so the whole plan stays declarative: scan -> 1-row
-    agg -> broadcast -> explode n_bands keys -> ONE equi-join on
-    (band, bucket) -> exact-cosine verify -> cross-band distinct.
+    agg -> broadcast -> explode N_BANDS keys -> ONE equi-join on
+    (band, bucket) -> exact-cosine verify BEFORE the cross-band distinct.
 
-    Measured widths on the test corpora (occupancy 32): 500 vecs -> 4 bits,
-    2k -> 6, 20k -> 10, 200k -> 13 — per-bucket verify work stays ~constant
-    (~occupancy^2/2 pairs) and shuffle-key cardinality (n_bands * 2^w)
-    grows with the corpus instead of collapsing onto 64 keys. Recall trades
-    against width exactly as the capture formula 1-(1-p^w)^n_bands says:
-    at cos 0.99 (p = 0.955) capture is 0.99 at w=4 and 0.95 at w=14 —
-    near-duplicate geometry keeps high recall at every corpus size, while
-    loose-threshold recall (cos ~ 0.35) intentionally falls with scale;
-    raise ``n_bands`` if loose thresholds matter."""
+    Measured widths on the test corpora: 500 vecs -> 4 bits, 2k -> 6,
+    20k -> 10, 200k -> 13 — per-bucket verify work stays ~constant
+    (~occupancy^2/2 pairs) and shuffle-key cardinality grows with the
+    corpus. Recall trades against width exactly as the capture formula
+    1-(1-p^w)^N_BANDS says, p = 1-acos(cos)/pi: at cos 0.99 (p = 0.955)
+    capture is 0.99 at w=4 and 0.95 at w=14 — near-duplicate geometry keeps
+    high recall at every corpus size, while loose-threshold recall
+    (cos ~ 0.35) intentionally falls with scale; more bands (hash tables)
+    buy it back."""
     stats = vectors.agg(F.count(F.lit(1)).alias("n")).select(
-        auto_band_bits(F.col("n"), occupancy, max_bits).alias("w")
+        auto_band_bits(F.col("n")).alias("w")
     )
-    exprs = banded_bucket_exprs(n_bands, max_bits)
     bb = F.array(
-        *[F.struct(F.lit(b).alias("band"), e.alias("full")) for b, e in enumerate(exprs)]
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.expr(
+                    _srp_bucket_sql(
+                        list(range(b * AUTO_MAX_BITS, (b + 1) * AUTO_MAX_BITS))
+                    )
+                ).alias("full"),
+            )
+            for b in range(N_BANDS)
+        ]
     )
     vb = (
         vectors.crossJoin(F.broadcast(stats))
-        .select(F.col(key), "v", "norm", "w", F.explode(bb).alias("bb"))
+        .select(F.col("vec_id"), "v", "norm", "w", F.explode(bb).alias("bb"))
         .select(
-            key,
+            "vec_id",
             "v",
             "norm",
             F.col("bb.band").alias("band"),
@@ -423,10 +347,12 @@ def bucketed_near_pairs_auto(
         )
     )
     a = vb.select(
-        "band", "bucket", F.col(key).alias("ka"), F.col("v").alias("va"), F.col("norm").alias("na")
+        "band", "bucket", F.col("vec_id").alias("ka"), F.col("v").alias("va"),
+        F.col("norm").alias("na"),
     )
     b = vb.select(
-        "band", "bucket", F.col(key).alias("kb"), F.col("v").alias("vb"), F.col("norm").alias("nb")
+        "band", "bucket", F.col("vec_id").alias("kb"), F.col("v").alias("vb"),
+        F.col("norm").alias("nb"),
     )
     return (
         a.join(b, ["band", "bucket"])
@@ -444,8 +370,6 @@ def cosine_topk_multiprobe(
     vectors: DataFrame,
     queries: DataFrame,
     k: int,
-    n_planes: int = N_PLANES,
-    key: str = "vec_id",
 ) -> DataFrame:
     """Multi-probe SRP LSH search (Lv et al. 2007): each query probes its own
     16-bit hyperplane bucket PLUS the 16 one-bit-flip neighbor buckets, so a
@@ -454,24 +378,24 @@ def cosine_topk_multiprobe(
 
     The probe set is a per-row array literal (bucket ^ 2^i), exploded and
     equi-joined against the vectors' buckets: probe fan-out is the constant
-    n_planes+1, candidates per probe are one bucket's occupancy, and no
+    N_PLANES+1, candidates per probe are one bucket's occupancy, and no
     probe bucket repeats (b ^ 2^i are pairwise distinct) so candidates are
     hit at most once — no dedup shuffle. Same output shape as cosine_topk:
     (query_id, neighbor_id, rank, cos), rank by (cos desc, neighbor asc).
     """
-    vb = hyperplane_buckets(vectors, n_planes, key=key).join(vectors, key)
-    qb = hyperplane_buckets(queries, n_planes, key=key).join(queries, key)
+    vb = hyperplane_buckets(vectors).join(vectors, "vec_id")
+    qb = hyperplane_buckets(queries).join(queries, "vec_id")
     probes = F.array(
-        F.col("bucket"), *[F.expr(f"bucket ^ {1 << i}") for i in range(n_planes)]
+        F.col("bucket"), *[F.expr(f"bucket ^ {1 << i}") for i in range(N_PLANES)]
     )
     q = qb.select(
-        F.col(key).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("norm").alias("qn"),
         F.explode(probes).alias("blk"),
     )
     c = vb.select(
-        F.col(key).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.col("bucket").alias("blk"),
         F.col("v").alias("cv"),
         F.col("norm").alias("cn"),

@@ -18,7 +18,7 @@ The order is a contract for two reasons:
   ordered catalog.
 """
 
-from .registry import QUERIES, QuerySpec, register  # noqa: F401
+from .registry import QUERIES, QuerySpec  # noqa: F401
 
 # Each import populates the registry via @register side effects.
 from . import round14q  # noqa: F401

@@ -4,7 +4,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.text import round_stable, sql_round_stable
 from ..operators.aggregates import dsum, sql_dsum
@@ -23,7 +23,6 @@ from ..sources.tables import load_table, spread
 from .registry import register
 
 from .shared import (  # noqa: F401  (re-export; helpers live in shared.py so importing them has no registration side effects)
-    RATING_EXPR,
     SQL_RATINGS_DEDUP,
     SQL_RATINGS_DEDUP_LAST_SEEN,
     ratings_deduped,

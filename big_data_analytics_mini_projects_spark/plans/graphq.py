@@ -32,7 +32,7 @@ from ..caching import checkpoint_shared, persist_tracked
 from .shared import DAMPING, N_PR_ITERS, pagerank_edges, sql_pagerank_head
 
 
-def _pagerank_oracle(iters: int = N_PR_ITERS, materialized: bool = False) -> str:
+def _pagerank_oracle(materialized: bool = False) -> str:
     """``materialized=True`` is the scale form: identical SQL except the
     multiply-referenced CTEs carry DuckDB's AS MATERIALIZED hint. Without
     it DuckDB inlines e0 into e (twice), e into outw+ed, and ed into every
@@ -46,11 +46,11 @@ def _pagerank_oracle(iters: int = N_PR_ITERS, materialized: bool = False) -> str
         f", r{t} AS (SELECT ed.dst AS node, "
         f"0.15 / (SELECT n FROM nn) + {DAMPING} * SUM(r.r * ed.p) AS r "
         f"FROM ed JOIN r{t - 1} r ON ed.src = r.node GROUP BY ed.dst)"
-        for t in range(1, iters + 1)
+        for t in range(1, N_PR_ITERS + 1)
     )
     tail = (
         f" SELECT node, " + sql_round_stable("r * (SELECT n FROM nn)") + " AS rank_rel "
-        f"FROM r{iters}"
+        f"FROM r{N_PR_ITERS}"
     )
     return head + steps + tail
 

@@ -7,7 +7,7 @@ gate covers the streaming engine, not just a batch stand-in.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.multimodal import (
     decode_bmp_stats,

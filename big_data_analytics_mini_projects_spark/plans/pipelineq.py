@@ -28,7 +28,6 @@ from ..operators.vector import _dot, prepare_vectors
 from ..functions.text import (
     round_stable,
     sql_round_stable,
-    sql_tokens_ws,
     tokenize_ws,
     tokens,
 )

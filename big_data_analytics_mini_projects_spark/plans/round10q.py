@@ -3,9 +3,9 @@ forward-batch path round7q/round9q established: registered at the catalog
 TAIL so the live round-7 rotation stays byte-identical; covered from day one
 by the local differential gate and the 10x/100x ledger, first driver verdict
 next rotation). Counted against ROUND 8's <= 15 new-query budget together
-with round9q's three (ROUND_QUEUE round-8 queue items a/c).
+with round9q's three.
 
-The batch closes out the ROUND_QUEUE round-8 item (c) candidates and rounds
+The batch closes out the round-8 queued candidates and rounds
 the training-data-pipeline surface:
 
 - ``retention_value_bands``   — the queue's "per-cohort retention joined to
@@ -84,7 +84,7 @@ u AS (SELECT user_id,
         "GROUP BY cohort_week, band, week_offset"
     ),
     doc="Weekly retention cohorts segmented by a VALUE band — the "
-    "ROUND_QUEUE round-8 'retention joined to quality signals' shape: each "
+    "'retention joined to quality signals' shape: each "
     "user's band is the DIGIT COUNT of their first-week spend in integer "
     "cents (an exact order-of-magnitude band: length(cast(cents as "
     "string)), identical in both engines for non-negative integers), so "
@@ -458,8 +458,8 @@ def _register_late_drop():
     @register(
         "streaming_late_data_drop",
         oracle=oracle,
-        doc="Watermark LATE-DATA DROP ACCOUNTING — the ROUND_QUEUE round-8 "
-        "item: hourly per-type counts over a deterministic 3-batch replay "
+        doc="Watermark LATE-DATA DROP ACCOUNTING: hourly per-type counts "
+        "over a deterministic 3-batch replay "
         "(events_replay_stream: bulk load, then two straggler trickles via "
         "mtime-ordered files + maxFilesPerTrigger=1), watermark delay 2 h, "
         "append mode. What a single-file availableNow run can never show: "
@@ -576,8 +576,8 @@ def _sql_lloyd_ctes() -> str:
 @register(
     "lloyd_convergence_curve",
     oracle=f"WITH {_sql_lloyd_ctes()} {_sql_lloyd_rows()}",
-    doc="Multi-iteration k-means (Lloyd) convergence curve — the "
-    "ROUND_QUEUE round-8 item: 3 assignment passes from label-mean seeds, "
+    doc="Multi-iteration k-means (Lloyd) convergence curve: 3 assignment "
+    "passes from label-mean seeds, "
     "reporting per iteration how many points changed cell and the total "
     "inertia (sum of min squared distances, each point's d2 rounded to 6 "
     "decimals then summed in exact decimal so partition order cannot "

@@ -3,10 +3,9 @@
 the catalog TAIL so the live round-7 rotation stays byte-identical; covered
 from day one by the local differential gate and the 10x/100x ledger, first
 driver verdict next rotation). These five COMPLETE round 8's <= 15 new-query
-budget (round9q 3 + round10q 7 + round11q 5 = 15; ROUND_QUEUE round-8 queue
-items a/c).
+budget (round9q 3 + round10q 7 + round11q 5 = 15).
 
-The batch closes the remaining ROUND_QUEUE item (c) candidates and adds two
+The batch closes the remaining round-8 queued candidates and adds two
 quality-accounting curves for the dedup/curation surface:
 
 - ``watermark_sensitivity_hourly`` — the queue's "replay twin of
@@ -39,9 +38,10 @@ from ..functions.text import round_stable, sql_round_stable, tokens
 from ..operators.aggregates import dsum, sql_dsum
 from ..operators.similarity import lsh_bands, lsh_candidates, minhash_signatures
 from ..operators.vector import _dot, cosine_topk, hyperplane_buckets
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table
 from .registry import register
 from .shared import (
+    _SQL_COS_QE,
     _W_AVGLEN,
     _W_BIAS,
     _W_NTOK,
@@ -105,8 +105,8 @@ def _register_watermark_sensitivity():
     @register(
         "watermark_sensitivity_hourly",
         oracle=oracle,
-        doc="Watermark SENSITIVITY side-by-side — the ROUND_QUEUE round-8 "
-        "item: the hourly per-type replay accounting of "
+        doc="Watermark SENSITIVITY side-by-side: the hourly per-type replay "
+        "accounting of "
         "streaming_late_data_drop run at TWO watermark delays (2 h and "
         "30 min) over the SAME 3-batch replay files, summarized per "
         "(delay, event_type). The curve a pipeline owner reads before "
@@ -210,7 +210,7 @@ def bucket_quality_bands(stats: DataFrame, n_bands: int = RQ_BANDS) -> DataFrame
         "GROUP BY cohort_week, band, week_offset"
     ),
     doc="Per-cohort retention joined to DOCUMENT-quality signals across "
-    "tables — the ROUND_QUEUE round-8 events x documents bridge: the "
+    "tables — the events x documents bridge: the "
     "documents corpus is aggregated to a fixed 4096-bucket seeded-hash "
     "frame of token mass, buckets are cut into 4 rank bands (explicit "
     "integer rank arithmetic over the bounded frame — no ntile semantics "
@@ -265,12 +265,6 @@ SRP_K = 10
 #: measured here is width-independent.
 SRP_CURVE_PLANES = 6
 PROBE_SWEEP = (1, 3, 5, 7)
-
-_SQL_COS_QE = (
-    "list_dot_product(q.v, e.v) / (sqrt(list_dot_product(q.v, q.v)) * "
-    "sqrt(list_dot_product(e.v, e.v)))"
-)
-
 
 def _sql_curve_bucket_expr() -> str:
     """DuckDB twin of hyperplane_buckets(..., SRP_CURVE_PLANES)."""
@@ -334,8 +328,8 @@ def _sql_probe_list_indexed() -> str:
         "FROM sw LEFT JOIN nc ON sw.n_probes = nc.n_probes "
         "LEFT JOIN h ON sw.n_probes = h.n_probes CROSS JOIN tc"
     ),
-    doc="Recall-vs-cost curve of SRP multiprobe search — the ROUND_QUEUE "
-    "round-8 item: recall@10 AND candidate count at 1/3/5/7 probes "
+    doc="Recall-vs-cost curve of SRP multiprobe search: recall@10 AND "
+    "candidate count at 1/3/5/7 probes "
     "(own bucket, then one-bit flips of the first 2/4/6 planes of a "
     "6-bit code — coarse enough that occupancy is nonzero at every test "
     "SF; production picks bits by the round6q occupancy rule), against "

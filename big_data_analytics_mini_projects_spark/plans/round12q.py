@@ -3,7 +3,7 @@
 live round-7 rotation stays byte-identical; covered from day one by the
 local differential gate and the 10x/100x ledger, first driver verdict when
 round 9's window rotates). These seven count against ROUND 9's <= 15
-new-query budget (8 left after them; ROUND_QUEUE round-9 note).
+new-query budget (8 left after them).
 
 The batch extends the tuning-curve / quality-accounting surface the round-8
 batches established — every query is a measurement a 100 TB pipeline runs
@@ -154,7 +154,6 @@ def pack_efficiency_core(s: DataFrame) -> DataFrame:
 # streaming_mix_shares shares them without importing this module).
 from .shared import (  # noqa: E402
     ALPHA_SWEEP,  # noqa: F401  (re-export: tests + docs cite this module)
-    MIX_BUDGET_DEN,  # noqa: F401
     mix_shares_frame,
     sql_temperature_oracle,
 )
@@ -454,9 +453,9 @@ _SQL_COS_AB = (
 
 
 def _sql_band_bucket(width: int, band: int) -> str:
-    """DuckDB twin of operators/vector.banded_bucket_exprs: band ``band``
-    of a ``width``-bit code packs sign bits of planes
-    [band*width, (band+1)*width)."""
+    """DuckDB band bucket: band ``band`` of a ``width``-bit code packs sign
+    bits of planes [band*width, (band+1)*width), the plane layout of
+    operators/vector.bucketed_near_pairs_auto."""
     from ..operators.vector import hyperplane_signs
 
     signs = hyperplane_signs(BW_BANDS * width)
@@ -516,7 +515,7 @@ def _sql_banded_width_oracle() -> str:
     "blocking stage: capture rate (vs the exact all-pairs cosine >= 0.35 "
     "truth) and candidate count at 2/4/6/8 bits per band, 4 bands — the "
     "MEASURED counterpart of the capture formula 1-(1-p^bits)^bands in "
-    "operators/vector.bucketed_near_pairs and the empirical justification "
+    "operators/vector.bucketed_near_pairs_auto and the empirical justification "
     "for the round-6 occupancy-rule ADAPTIVE width "
     "(dedup_embedding_bucketed): wider bands collapse the candidate bill "
     "but shed recall, and this query shows exactly how fast on the real "

@@ -1,5 +1,5 @@
 """Round-9-budget forward batch #1 (authored in round 8; registered at the
-catalog TAIL so the round-8 driver window is untouched — ROUND_QUEUE.md).
+catalog TAIL so the round-8 driver window is untouched).
 
 Three queries extending the tokenizer-training / mixing / quality families:
 
@@ -108,7 +108,7 @@ N_MERGES = 4
 _WORD_RE = "^[a-z0-9]+$"
 
 
-def _sql_bpe_chain(iters: int = N_MERGES) -> str:
+def _sql_bpe_chain() -> str:
     """Unrolled DuckDB CTE chain 'WITH w, s0, (n,pc,b,m,i,c,d,s,r){1..N}'
     WITHOUT a final SELECT: per iteration, the pair-count aggregate, the
     (cnt DESC, a ASC, b ASC) argmax as scalar subqueries, the gaps-and-
@@ -133,7 +133,7 @@ def _sql_bpe_chain(iters: int = N_MERGES) -> str:
         "FROM (SELECT word, freq, unnest(range(length(word))) AS pos FROM w))"
     )
     steps = []
-    for t in range(1, iters + 1):
+    for t in range(1, N_MERGES + 1):
         p = t - 1
         steps.append(
             f", n{t} AS (SELECT word, freq, pos, sym, "
@@ -167,11 +167,11 @@ def _sql_bpe_chain(iters: int = N_MERGES) -> str:
     return head + "".join(steps)
 
 
-def _sql_bpe_oracle(iters: int = N_MERGES) -> str:
+def _sql_bpe_oracle() -> str:
     tail = " " + " UNION ALL ".join(
-        f"SELECT * FROM r{t}" for t in range(1, iters + 1)
+        f"SELECT * FROM r{t}" for t in range(1, N_MERGES + 1)
     )
-    return _sql_bpe_chain(iters) + tail
+    return _sql_bpe_chain() + tail
 
 
 @register(
@@ -206,7 +206,7 @@ def bpe_merge_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bpe_merge_chain(
-    spark: SparkSession, sf_dir: str, n_merges: int = N_MERGES
+    spark: SparkSession, sf_dir: str
 ) -> tuple[dict[str, list[str]], list[tuple]]:
     """The shared BPE merge-training loop: returns (each word type's
     spelling after the final merge, one ``(iteration, pair, pair_count,
@@ -233,7 +233,7 @@ def bpe_merge_chain(
         return sum(freq[w] * len(syms) for w, syms in spell.items()) if spell else None
 
     stats: list[tuple] = []
-    for t in range(1, n_merges + 1):
+    for t in range(1, N_MERGES + 1):
         counts: Counter = Counter()
         for w, syms in spell.items():
             for pair in zip(syms, syms[1:]):

@@ -1,5 +1,5 @@
 """Round-10-budget forward batch (authored in round 9; registered at the
-catalog TAIL so the round-9 driver window is untouched — ROUND_QUEUE.md).
+catalog TAIL so the round-9 driver window is untouched).
 
 Six queries extending the data-selection / tokenizer / dedup / multimodal
 / mixing families a large-scale training-data pipeline needs:
@@ -473,14 +473,14 @@ def _row_sig_col():
     return F.array(*[_seeded_min(s) for s in range(SC_HASHES)])
 
 
-def _row_bands_expr(sig_col: str = "sig") -> str:
+def _row_bands_expr() -> str:
     from .round14q import SC_HASHES, SC_ROWS
 
     n_bands = SC_HASHES // SC_ROWS
     bands = ", ".join(
         f"struct(CAST({b} AS BIGINT) AS band, md5(concat_ws('-', "
         + ", ".join(
-            f"CAST(element_at({sig_col}, {b * SC_ROWS + r + 1}) AS STRING)"
+            f"CAST(element_at(sig, {b * SC_ROWS + r + 1}) AS STRING)"
             for r in range(SC_ROWS)
         )
         + ")) AS band_sig)"

@@ -87,27 +87,26 @@ _SQL_DHASH = (
     f"ELSE 0::BIGINT END)))) AS BIGINT)"
 )
 
-def _sql_blocked_near_ctes(src: str, hcol: str, p: str = "") -> str:
+def _sql_blocked_near_ctes(src: str, hcol: str) -> str:
     """Parametric CTE chain — exact hash classes -> 4x15-bit block scatter
     -> shared-block candidates -> Hamming<=8 verify -> per-hash min near
     keeper — over CTE ``src``'s (doc_id, ``hcol``) rows. The single SQL
     source for every 60-bit-fingerprint dedup oracle (dHash here, aHash
-    and the audio fingerprint in round19q); ``p`` prefixes the CTE names
-    so two fingerprint families can coexist in one statement."""
-    return f"""{p}cls AS (SELECT {hcol}, MIN(doc_id) AS ck FROM {src} GROUP BY {hcol}),
-{p}blk AS (SELECT {hcol}, ck, b, ({hcol} >> CAST(b * {PH_BLOCK_BITS} AS INTEGER))
+    and the audio fingerprint in round19q)."""
+    return f"""cls AS (SELECT {hcol}, MIN(doc_id) AS ck FROM {src} GROUP BY {hcol}),
+blk AS (SELECT {hcol}, ck, b, ({hcol} >> CAST(b * {PH_BLOCK_BITS} AS INTEGER))
         & {_PH_BLOCK_MASK} AS v
-        FROM (SELECT {hcol}, ck, unnest(range({PH_N_BLOCKS})) AS b FROM {p}cls)),
-{p}cand AS (SELECT DISTINCT a.{hcol} AS ha, a.ck AS ka, c.{hcol} AS hb, c.ck AS kb
-         FROM {p}blk a JOIN {p}blk c ON a.b = c.b AND a.v = c.v
+        FROM (SELECT {hcol}, ck, unnest(range({PH_N_BLOCKS})) AS b FROM cls)),
+cand AS (SELECT DISTINCT a.{hcol} AS ha, a.ck AS ka, c.{hcol} AS hb, c.ck AS kb
+         FROM blk a JOIN blk c ON a.b = c.b AND a.v = c.v
          WHERE a.{hcol} < c.{hcol}),
-{p}ver AS (SELECT * FROM {p}cand WHERE bit_count(xor(ha, hb)) <= {PH_MAX_HAMMING}),
-{p}near AS (SELECT {hcol}, MIN(ok) AS nk FROM (
-  SELECT ha AS {hcol}, kb AS ok FROM {p}ver UNION ALL SELECT hb, ka FROM {p}ver)
+ver AS (SELECT * FROM cand WHERE bit_count(xor(ha, hb)) <= {PH_MAX_HAMMING}),
+near AS (SELECT {hcol}, MIN(ok) AS nk FROM (
+  SELECT ha AS {hcol}, kb AS ok FROM ver UNION ALL SELECT hb, ka FROM ver)
   GROUP BY {hcol})"""
 
 
-def _sql_hash_disp_cte(src: str, hcol: str, p: str = "", out: str = "disp") -> str:
+def _sql_hash_disp_cte(src: str, hcol: str, out: str) -> str:
     """Per-doc disposition CTE (exact_dup / near_dup / canonical + keeper)
     over a fingerprint CTE and its ``_sql_blocked_near_ctes`` chain."""
     return (
@@ -117,8 +116,8 @@ def _sql_hash_disp_cte(src: str, hcol: str, p: str = "", out: str = "disp") -> s
         "       ELSE 'canonical' END AS status,\n"
         "  CASE WHEN p.doc_id <> c.ck THEN c.ck\n"
         "       ELSE LEAST(c.ck, COALESCE(n.nk, c.ck)) END AS keeper_id\n"
-        f"FROM {src} p JOIN {p}cls c USING ({hcol}) "
-        f"LEFT JOIN {p}near n USING ({hcol}))"
+        f"FROM {src} p JOIN cls c USING ({hcol}) "
+        f"LEFT JOIN near n USING ({hcol}))"
     )
 
 

@@ -1,5 +1,5 @@
 """Round-10 fresh batch, part 3 (13/15 of the round-10 budget; catalog-TAIL
-forward batch for the round-11 window — ROUND_QUEUE.md).
+forward batch for the round-11 window).
 
 ``pack_with_salvage`` — the production bridge between the span-level dedup
 family and the sequence-packing family: after ExactSubstr-style span dedup
@@ -26,7 +26,8 @@ The duplicate-span machinery is BYTE-IDENTICAL to dedup_exact_substring:
 the oracle REBUILDS round7q's ``_SQL_ES`` CTE from the same primitives
 (h64_sql / ES_K) with byte-equality pinned by test — deliberately not
 imported, because a module-level round7q/round12q import would force 31
-green queries to register first (the forced-rider rule, ROUND_QUEUE.md) —
+green queries to register first (importing a plan module registers its
+queries, so it would reorder the catalog) —
 and the engine rebuilds the same chain from the shared helpers (ngrams /
 h64 / ES_K). The raw-vs-salvage token gap is reconciled against
 dedup_exact_substring's per-doc dup_tokens (bracketed by the sub-minimum
@@ -55,7 +56,8 @@ PACK_SHARD = 200     # round12q.PACK_SHARD — pinned equal by test, NOT
 #: The dedup_exact_substring span/dup/island CTE chain, rebuilt here from
 #: the SAME primitives (h64_sql, ES_K) rather than imported from round7q —
 #: a module-level round7q import would force its 9 queries to register
-#: first (the forced-rider rule, ROUND_QUEUE.md). Byte-equality with
+#: first (importing a plan module registers its queries, so it would
+#: reorder the catalog). Byte-equality with
 #: round7q._SQL_ES is pinned in tests/test_round18q.py (test-time imports
 #: carry no registration-order coupling).
 _SQL_ES = f"""

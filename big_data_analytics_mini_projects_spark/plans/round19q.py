@@ -1,6 +1,6 @@
 """Round-11 fresh batch (6 of the 15 budget; positions 14-19 of the
 round-11 window — catalog.py tier 3): the round-10 verdict's four named
-asks plus two ROUND_QUEUE round-11 queue themes, each the production
+asks plus two round-11 queued themes, each the production
 completion of a round-10 family.
 
 - ``semdedup_cells_auto`` (verdict item 2) — SemDeDup with the cell count

@@ -35,22 +35,23 @@ from .shared import SQL_TOKEN_BUDGET, SQL_VECS, TOKEN_BUDGET, embedding_vectors
 NEAR_MIN_COS = 0.35  # same verify floor as the round-2..5 declaration
 
 
-def _sql_w_ladder(occ: int = AUTO_OCCUPANCY, max_bits: int = AUTO_MAX_BITS) -> str:
+def _sql_w_ladder() -> str:
     """DuckDB mirror of operators/vector.auto_band_bits: the integer
-    comparison ladder w = 4 + #{k in [4, max_bits) : n > occ * 2^k}."""
+    comparison ladder w = 4 + #{k in [4, AUTO_MAX_BITS) : n > AUTO_OCCUPANCY * 2^k}."""
     terms = " + ".join(
-        f"(CASE WHEN n > {occ << k} THEN 1 ELSE 0 END)" for k in range(4, max_bits)
+        f"(CASE WHEN n > {AUTO_OCCUPANCY << k} THEN 1 ELSE 0 END)"
+        for k in range(4, AUTO_MAX_BITS)
     )
     return f"st AS (SELECT 4 + {terms} AS w FROM (SELECT COUNT(*) AS n FROM e))"
 
 
-def _sql_band_bucket_full(b: int, max_bits: int = AUTO_MAX_BITS) -> str:
-    """Band b's FULL max_bits-bit SRP bucket (plane stride max_bits, matching
-    banded_bucket_exprs(N_BANDS, AUTO_MAX_BITS) on the Spark side)."""
-    signs = hyperplane_signs(N_BANDS * max_bits)
+def _sql_band_bucket_full(b: int) -> str:
+    """Band b's FULL AUTO_MAX_BITS-bit SRP bucket (plane stride
+    AUTO_MAX_BITS, matching operators/vector.bucketed_near_pairs_auto)."""
+    signs = hyperplane_signs(N_BANDS * AUTO_MAX_BITS)
     terms = []
-    for i in range(max_bits):
-        lits = ", ".join(f"{x:.1f}" for x in signs[b * max_bits + i])
+    for i in range(AUTO_MAX_BITS):
+        lits = ", ".join(f"{x:.1f}" for x in signs[b * AUTO_MAX_BITS + i])
         terms.append(
             f"(CASE WHEN list_dot_product(v, [{lits}]::DOUBLE[]) > 0 "
             f"THEN {1 << i} ELSE 0 END)"
@@ -97,7 +98,7 @@ def _sql_banded_auto() -> str:
     "high at every width (>= 0.95 at cos 0.99 through w=14, capture "
     "1-(1-p^w)^4); the loose 0.35 floor is a verify threshold, not a "
     "recall target. Width rule + measurements: operators/vector.py "
-    "bucketed_near_pairs{,_auto}.",
+    "bucketed_near_pairs_auto.",
     tags=("dedup", "ann", "lsh_band", "embedding"),
 )
 def dedup_embedding_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,5 +1,5 @@
 """Round-6-authored queries for the round-7 driver window: the forward queue
-of ROUND_QUEUE.md built early so the next rotation starts from tested code.
+built early so the next rotation starts from tested code.
 
 REGISTERED AT THE CATALOG TAIL (after every already-green module): the
 round-6 driver window is the carefully planned stale-green rotation
@@ -13,7 +13,7 @@ sf0.01/sf0.1 sweep, and the 10x/100x ledger) from day one.
 Contents (rounds out the ≤15 new-query budget of round 6 at 15):
 
 - ``ann_ivf_nprobe``     — multi-cell IVF ANN (nprobe=3) over decimal-exact
-                           per-cell centroids (ROUND_QUEUE round-7 item b).
+                           per-cell centroids.
 - ``dedup_containment``  — doc-in-doc containment dedup (suffix/quotation
                            case Jaccard misses).
 - ``domain_lang_drift``  — per-domain language-mix drift monitor (exact
@@ -24,8 +24,8 @@ Contents (rounds out the ≤15 new-query budget of round 6 at 15):
                            token_budget_sample (budget counter state).
 
 ROUND-7 NEW-QUERY BUDGET, BUILT EARLY (counted against round 7's <= 15, NOT
-round 6's — round 6's 15 were the ten round6q queries plus the five above;
-see ROUND_QUEUE.md): the four ROUND_QUEUE round-7 item (c) candidates,
+round 6's — round 6's 15 were the ten round6q queries plus the five
+above): the four round-7 queued candidates,
 registered at the same catalog-tail position so the round-6 window stays
 byte-identical, taking the same never-verified-until-first-rotation path:
 
@@ -53,14 +53,12 @@ from ..operators.vector import cosine_topk_ivf
 from ..sources.tables import load_table, spread
 from .registry import register
 from .shared import (
-    _SQL_COS_QE,  # noqa: F401  (re-export: round11q cites this module)
     _SQL_IVF,
     ES_K,
     IVF_K,
     IVF_NPROBE,
     IVF_QUERIES,
     SQL_TOKEN_BUDGET,
-    SQL_VECS,
     TOKEN_BUDGET,
     embedding_vectors,
 )
@@ -178,7 +176,7 @@ SQL_DOMAIN_DRIFT = (
 @register(
     "domain_lang_drift",
     oracle=SQL_DOMAIN_DRIFT,
-    doc="Per-domain language-mix drift monitor (ROUND_QUEUE round-7 item b): "
+    doc="Per-domain language-mix drift monitor: "
     "the corpus split into two snapshot halves by a seeded doc hash, "
     "per-domain language share vectors compared by total-variation "
     "distance. TVD is computed in INTEGER arithmetic — "
@@ -228,8 +226,8 @@ CHUNK_TOKS = 10   # "line" analogue for the newline-free synthetic corpus
 BOILER_DF = 2     # chunk text appearing in >= 2 distinct docs = boilerplate
 
 
-def chunk_col(toks_col: str = "toks", n: int = CHUNK_TOKS) -> F.Column:
-    """Fixed-n-token chunk array from a token-array column — one per-row
+def chunk_col(toks_col: str = "toks") -> F.Column:
+    """Fixed CHUNK_TOKS-token chunk array from a token-array column — one per-row
     transform, zero shuffle. The empty-token guard matters: Spark's
     sequence(0, -1) DESCENDS (yields [0, -1]) instead of producing an empty
     range like DuckDB's range(0, 0), so an unguarded empty doc would emit
@@ -238,8 +236,10 @@ def chunk_col(toks_col: str = "toks", n: int = CHUNK_TOKS) -> F.Column:
         F.size(toks_col) == 0, F.array().cast("array<string>")
     ).otherwise(
         F.expr(
-            f"transform(sequence(0, cast(ceil(size({toks_col}) / {n}.0) as int) - 1), "
-            f"i -> array_join(slice({toks_col}, i * {n} + 1, {n}), ' '))"
+            f"transform(sequence(0, "
+            f"cast(ceil(size({toks_col}) / {CHUNK_TOKS}.0) as int) - 1), "
+            f"i -> array_join("
+            f"slice({toks_col}, i * {CHUNK_TOKS} + 1, {CHUNK_TOKS}), ' '))"
         )
     )
 
@@ -451,8 +451,8 @@ CRAWL_AGES = 8   # seeded snapshot ages 0..7; acceptance probability 2^-age
         + " AS fresh_token_mass "
         "FROM k GROUP BY source, age"
     ),
-    doc="Per-source crawl-freshness decay sampling (ROUND_QUEUE round-7 item "
-    "c): each doc gets a seeded snapshot age 0..7 and survives with "
+    doc="Per-source crawl-freshness decay sampling: each doc gets a seeded "
+    "snapshot age 0..7 and survives with "
     "probability exactly 2^-age via INTEGER acceptance — "
     "h % (1 << age) == 0 — so no float RNG or threshold comparison exists "
     "to diverge between engines, and every kept set is reproducible from "

@@ -1,4 +1,4 @@
-"""Round-7-authored queries (ROUND_QUEUE round-7 item c): real event-time
+"""Round-7-authored queries: real event-time
 semantics over ``events.ts`` plus the next tranche of training-data-pipeline
 stages. SURVEY §1.2 records that the reference data model DECLARES a
 timestamp (``reviewTime`` in the review JSON, `a3_p1.py:17-27`) but never
@@ -23,7 +23,7 @@ query gets a driver verdict in its first round.
 - ``domain_gini_tokens``          — corpus concentration diagnostic: exact
   integer-arithmetic Gini coefficient over per-domain token mass.
 - ``dedup_substring_multigrain``  — the exact-substring dedup span-width
-  sweep (K = 8 / 12 / 16) ROUND_QUEUE queued: how duplicated mass responds
+  sweep (K = 8 / 12 / 16): how duplicated mass responds
   to match-length granularity.
 - ``streaming_sessions_closed``   — stateful streaming sessionization with
   WATERMARKED EVICTION (event-time timeout closes idle sessions), the
@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64, h64_sql
 from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
-from ..operators.aggregates import dsum, sql_dsum
+from ..operators.aggregates import dsum
 from ..sources.tables import load_table, spread
 from .registry import register
 from .shared import DAY_US, WEEK_US  # noqa: F401  (re-export: WEEK_US cited here)
@@ -177,10 +177,10 @@ def retention_cohorts_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# SLIDE_US/WIN_US/the oracle text live in plans/shared.py (round-8 window
-# decoupling: the streaming twin round9q.streaming_sliding_counts shares the
-# oracle string without importing this module).
-from .shared import SLIDE_US, SQL_SLIDING_RATE, WIN_US  # noqa: E402, F401
+# The window constants and the oracle text live in plans/shared.py: the
+# streaming twin round9q.streaming_sliding_counts shares the oracle string
+# without importing this module.
+from .shared import SQL_SLIDING_RATE  # noqa: E402
 
 
 @register(
@@ -439,8 +439,8 @@ def _es_cov(docs: DataFrame, k: int, tokenized: bool = False) -> DataFrame:
 @register(
     "dedup_substring_multigrain",
     oracle=" UNION ALL ".join(_sql_es_width(k) for k in MULTIGRAIN_KS),
-    doc="Exact-substring dedup span-width sweep (ROUND_QUEUE round-7 item c "
-    "'multi-granularity suffix containment'): the round7q ExactSubstr "
+    doc="Exact-substring dedup span-width sweep ('multi-granularity "
+    "suffix containment'): the round7q ExactSubstr "
     "machinery run at K = 8 / 12 / 16 tokens, rolled up to corpus totals "
     "(docs with duplicated spans, islands, duplicated-token mass) — the "
     "sensitivity curve that picks the production match length. Three "

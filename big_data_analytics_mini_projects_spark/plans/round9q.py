@@ -83,14 +83,14 @@ def dedup_substring_withindoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return withindoc_repeat_stats(docs)
 
 
-def withindoc_repeat_stats(docs: DataFrame, k: int = WD_K) -> DataFrame:
+def withindoc_repeat_stats(docs: DataFrame) -> DataFrame:
     """Core of dedup_substring_withindoc over any (doc_id, text) frame."""
     d = docs.select("doc_id", tokens("text").alias("toks")).select(
         "doc_id", F.size("toks").cast("long").alias("n_tokens"), "toks"
     )
     sp = d.select(
-        "doc_id", "n_tokens", F.posexplode(ngrams("toks", k)).alias("pos", "span")
-    ).select("doc_id", "n_tokens", "pos", h64(ngram_text("span", k), "es").alias("h"))
+        "doc_id", "n_tokens", F.posexplode(ngrams("toks", WD_K)).alias("pos", "span")
+    ).select("doc_id", "n_tokens", "pos", h64(ngram_text("span", WD_K), "es").alias("h"))
     dup = (
         sp.groupBy("doc_id", "h")
         .agg(F.count(F.lit(1)).alias("no"))
@@ -100,7 +100,7 @@ def withindoc_repeat_stats(docs: DataFrame, k: int = WD_K) -> DataFrame:
     m = sp.join(dup, ["doc_id", "h"]).select("doc_id", "n_tokens", "pos")
     w = Window.partitionBy("doc_id").orderBy("pos")
     prev_end = (
-        F.max(F.col("pos") + F.lit(k - 1))
+        F.max(F.col("pos") + F.lit(WD_K - 1))
         .over(w.rowsBetween(Window.unboundedPreceding, -1))
         .alias("prev_end")
     )
@@ -117,7 +117,7 @@ def withindoc_repeat_stats(docs: DataFrame, k: int = WD_K) -> DataFrame:
         .alias("island"),
     )
     cov = isl.groupBy("doc_id", "n_tokens", "island").agg(
-        (F.max("pos") - F.min("pos") + F.lit(k)).alias("covered")
+        (F.max("pos") - F.min("pos") + F.lit(WD_K)).alias("covered")
     )
     return cov.groupBy("doc_id", "n_tokens").agg(
         F.sum("covered").alias("rep_tokens"),

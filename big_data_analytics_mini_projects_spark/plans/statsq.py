@@ -63,7 +63,7 @@ MISSING_MOD, MISSING_REM = 17, 3
 
 
 def word_observations(
-    spark: SparkSession, sf_dir: str, k: int = TOP_K, missing_text: str = "drop"
+    spark: SparkSession, sf_dir: str, missing_text: str = "drop"
 ) -> DataFrame:
     """Dense (word, doc) observation frame — the engine's version of
     a3_p1.py:40-66 (getFrequency + groupByKey), without the driver round-trip:
@@ -95,7 +95,7 @@ def word_observations(
     tot = words.groupBy("doc_id").agg(F.count(F.lit(1)).alias("total"))
     top = (
         words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("word")).limit(k).select("word")
+        .orderBy(F.desc("cnt"), F.asc("word")).limit(TOP_K).select("word")
     )
     cnts = (
         words.join(F.broadcast(top), "word")
@@ -326,7 +326,7 @@ assert _SQL_SIMPLE_FIT_MAT != _SQL_SIMPLE_FIT
 )
 def ols_words_pvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = word_observations(spark, sf_dir)
-    fit = ols_simple_closed(obs, "word", "x", "y", bonferroni_k=TOP_K, p_method="betacf")
+    fit = ols_simple_closed(obs, "word", "x", "y", bonferroni_k=TOP_K)
     return (
         fit.filter(
             ~F.isnan("beta") & F.col("beta").isNotNull() & (F.abs(F.col("beta")) < 1)
@@ -344,14 +344,15 @@ def ols_words_pvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wide_dsum(col, scale: int = 4):
-    """Exact decimal sum with 38-digit headroom — for sums of squared doubles
-    (l_extendedprice² sums overflow decimal(18,s) above ~sf0.05)."""
-    return F.sum(col.cast(f"decimal(38,{scale})")).cast("double")
+def _wide_dsum(col):
+    """Exact decimal sum at scale 4 with 38-digit headroom — for sums of
+    squared doubles (l_extendedprice² sums overflow decimal(18,s) above
+    ~sf0.05)."""
+    return F.sum(col.cast("decimal(38,4)")).cast("double")
 
 
-def _sql_wide_dsum(expr: str, scale: int = 4) -> str:
-    return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,{scale}))) AS VARCHAR) AS DOUBLE)"
+def _sql_wide_dsum(expr: str) -> str:
+    return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,4))) AS VARCHAR) AS DOUBLE)"
 
 
 @register(

@@ -12,7 +12,6 @@ from ..functions.text import (
     A3_TOKEN_PATTERN_SQL,
     sql_round_stable,
     sql_tokens_char,
-    sql_tokens_regex,
     sql_tokens_ws,
     tokenize_char,
     tokenize_regex,

@@ -65,9 +65,8 @@ def _sql_bucket_expr() -> str:
 
 # NOTE: dedup_embedding_bucketed moved to plans/round6q.py in round 6 —
 # retuned from frozen 4x4-bit bands to the occupancy-rule adaptive width
-# (the round-5 verdict's one 100x non-runner) and re-windowed for a fresh
-# driver verdict. The fixed-width operator (operators/vector.py
-# bucketed_near_pairs) and its recall/subset tests remain.
+# (operators/vector.bucketed_near_pairs_auto; the round-5 verdict's one
+# 100x non-runner).
 
 
 def _sql_probe_list() -> str:

@@ -1,2 +1,2 @@
-from .tables import TABLE_NAMES, load_table, load_tables  # noqa: F401
+from .tables import TABLE_NAMES, load_table  # noqa: F401
 from .readers import scan_csv, scan_mem, scan_coo, scan_text_json  # noqa: F401

@@ -59,10 +59,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def _parse_size_bytes(s: str) -> int:
     """Parse a Spark byte-size conf string: plain integers ("134217728"),
     byte-suffixed ("134217728b") and k/m/g/t/p forms with optional trailing

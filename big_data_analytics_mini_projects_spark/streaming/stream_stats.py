@@ -157,9 +157,7 @@ def run_available_now(sdf: DataFrame, output_mode: str = "complete") -> DataFram
     return sdf.sparkSession.table(name)
 
 
-def stream_purchase_context_pairs(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def stream_purchase_context_pairs(events: DataFrame) -> DataFrame:
     """Stream-stream interval self-join: (purchase, view) pairs where the view
     happened in the 30 minutes before the purchase by the same user — the
     streaming twin of plans/relationalx.range_join_purchase_context.
@@ -177,7 +175,7 @@ def stream_purchase_context_pairs(
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("p_ts"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", "2 hours")
     )
     v = (
         events.filter(F.col("event_type") == "view")
@@ -186,7 +184,7 @@ def stream_purchase_context_pairs(
             F.col("user_id").alias("v_user"),
             F.col("ts").alias("v_ts"),
         )
-        .withWatermark("v_ts", watermark)
+        .withWatermark("v_ts", "2 hours")
     )
     return p.join(
         v,
@@ -196,7 +194,7 @@ def stream_purchase_context_pairs(
     ).select("purchase_id", "view_id")
 
 
-def stream_dedup_doubled(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def stream_dedup_doubled(events: DataFrame) -> DataFrame:
     """Watermarked streaming dedup: the stream unioned with itself (every
     record duplicated) then dropDuplicatesWithinWatermark(event_id) — the
     streaming flavor of exact dedup. Dedup state expires as the watermark
@@ -206,7 +204,7 @@ def stream_dedup_doubled(events: DataFrame, watermark: str = "2 hours") -> DataF
         events.select("event_id", "user_id", "event_type", "value", "ts")
     )
     return (
-        doubled.withWatermark("ts", watermark)
+        doubled.withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )

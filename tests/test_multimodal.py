@@ -1,25 +1,14 @@
-"""Multimodal plumbing tests: deterministic fake decode + stub guards."""
+"""Multimodal plumbing tests: deterministic fake decode."""
 
 from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from big_data_analytics_mini_projects_spark.operators.multimodal import (
-    decode_audio,
-    decode_image,
     extract_binary_meta,
     sample_frames,
     with_binary_payload,
 )
-
-
-def test_decode_stubs_raise():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"RIFF")
 
 
 def test_extract_binary_meta_deterministic(spark):

@@ -8,10 +8,8 @@ Invariants:
 - NO grouped-map pandas (FlatMapGroupsInPandas) — per-group materialization
   scales with the corpus (the round-1 OLS flaw; closed forms replaced it).
 - NO unhinted CartesianProduct anywhere.
-- ArrowEvalPython (vectorized pandas UDF) only where declared: the t_sf
-  p-value evaluation over K aggregated rows. Catalyst prunes it from
-  ols_simple/multi because the column is dropped — only the pvalues query
-  keeps it.
+- ArrowEvalPython (vectorized pandas UDF) only where declared: nowhere
+  today; every p-value is a JVM expression (functions/tdist.py).
 - MapInPandas only in the multimodal decode plumbing (Arrow-batched by
   design).
 - BroadcastNestedLoopJoin only for (a) 1-row/bounded-K broadcast cross
@@ -31,7 +29,7 @@ import pathlib
 import big_data_analytics_mini_projects_spark
 from big_data_analytics_mini_projects_spark.plans.catalog import QUERIES
 
-ARROW_EVAL_OK = {"ols_words_pvalues"}
+ARROW_EVAL_OK: set[str] = set()
 MAP_IN_PANDAS_OK = {
     "multimodal_meta",
     "multimodal_frames",
@@ -299,6 +297,131 @@ def test_tokenizer_and_ngrams_only_in_functions_text():
         "inline whitespace tokenizer or word n-gram, use functions/text.tokens "
         f"and ngrams: {offenders}"
     )
+
+
+_GROUPED_FIT = (
+    "reference-shaped grouped fit that tests/test_stats.py compares the "
+    "closed forms against; tests call it with its defaults"
+)
+_SESSION = "perfbench and tools/ start every session through get_spark by name"
+
+#: (module, function, parameter) -> why a defaulted parameter that no
+#: engine call site passes stays an option instead of a constant
+OPTION_NO_CALLER_OK = {
+    **{("session.py", "get_spark", p): _SESSION
+       for p in ("app_name", "master", "shuffle_partitions")},
+    ("sources/tables.py", "spread", "partitions"): "tests set the target "
+    "partition count; perfbench wraps spread by name",
+    ("operators/vector.py", "embedding_near_pairs", "max_rows"): "safety "
+    "guard against an unbounded all-pairs cross join; tests set the bound",
+    ("operators/recommend.py", "cf_filter_ratings", "min_users_per_item"):
+    "tests set the minimum on small fixtures",
+    ("operators/recommend.py", "cf_filter_ratings", "min_items_per_user"):
+    "tests set the minimum on small fixtures",
+    ("operators/recommend.py", "cf_item_similarities", "min_common"): "tests "
+    "set the co-rating minimum on small fixtures",
+    ("plans/round7q.py", "bm25f_scores", "top_n"): "tests widen the per-doc "
+    "top-n to read every score",
+    **{("operators/stats.py", "ols_simple_grouped", p): _GROUPED_FIT
+       for p in ("group_col", "x_col", "y_col", "bonferroni_k")},
+    **{("operators/stats.py", "ols_multi_grouped", p): _GROUPED_FIT
+       for p in ("group_col", "x_col", "ctrl_col", "y_col", "bonferroni_k")},
+}
+
+
+def _engine_trees() -> dict[str, ast.Module]:
+    pkg = pathlib.Path(big_data_analytics_mini_projects_spark.__file__).parent
+    return {
+        path.relative_to(pkg).as_posix(): ast.parse(path.read_text(), str(path))
+        for path in sorted(pkg.rglob("*.py"))
+    }
+
+
+def test_every_option_has_a_caller():
+    """A defaulted parameter of a module-level engine function is an option,
+    and an option that no engine call site passes, by position or by
+    keyword, is a constant: write it as one. Call sites match by function
+    name (so a same-named method call counts, which errs toward passing);
+    ``*args`` / ``**kwargs`` at a call pass everything. Tests, tools/ and
+    perfbench/ are not engine call sites."""
+    trees = _engine_trees()
+    max_pos: dict[str, float] = {}
+    keywords: dict[str, set] = {}
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            name = _call_name(node)
+            npos = len(node.args)
+            if any(isinstance(a, ast.Starred) for a in node.args):
+                npos = float("inf")
+            max_pos[name] = max(max_pos.get(name, 0), npos)
+            kws = keywords.setdefault(name, set())
+            for k in node.keywords:
+                kws.add(k.arg or "**")
+    offenders = []
+    for rel, tree in trees.items():
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            pos = fn.args.posonlyargs + fn.args.args
+            first = len(pos) - len(fn.args.defaults)
+            opts = [(a.arg, i) for i, a in enumerate(pos) if i >= first] + [
+                (a.arg, None)
+                for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+                if d is not None
+            ]
+            kws = keywords.get(fn.name, set())
+            for arg, i in opts:
+                passed = (
+                    arg in kws
+                    or "**" in kws
+                    or (i is not None and i < max_pos.get(fn.name, 0))
+                )
+                if not passed and (rel, fn.name, arg) not in OPTION_NO_CALLER_OK:
+                    offenders.append(f"{rel}:{fn.lineno} {fn.name}({arg}=...)")
+    assert not offenders, f"options no engine call site sets: {offenders}"
+
+
+def test_module_imports_are_read():
+    """Every module-level import outside ``__init__.py`` is read by its
+    module, or re-exported: some file of the repo imports that name from
+    this module. ``from . import <module>`` (plans/catalog.py's
+    registration imports) runs for its side effect and counts as read."""
+    pkg = pathlib.Path(big_data_analytics_mini_projects_spark.__file__).parent
+    repo = pkg.parent
+    files = [
+        *pkg.rglob("*.py"), *(repo / "tests").rglob("*.py"),
+        *(repo / "tools").rglob("*.py"), *(repo / "perfbench").rglob("*.py"),
+        repo / "bench.py", repo / "__spark_entry__.py",
+    ]
+    reexported = set()
+    for path in files:
+        parts = path.relative_to(repo).with_suffix("").parts
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                base = parts[: len(parts) - node.level] if node.level else ()
+                mod = ".".join((*base, node.module))
+                reexported |= {(mod, a.name) for a in node.names}
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        mod = ".".join(path.relative_to(repo).with_suffix("").parts)
+        read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.ImportFrom) and (
+                node.module in (None, "__future__")
+            ):
+                continue
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            for a in node.names:
+                name = (a.asname or a.name).split(".")[0]
+                if name not in read and (mod, name) not in reexported:
+                    offenders.append(f"{path.relative_to(pkg)}:{node.lineno} {name}")
+    assert not offenders, f"module-level imports nothing reads: {offenders}"
 
 
 #: benched query -> lambdafunction nodes in its physical plan at sf0.001

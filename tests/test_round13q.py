@@ -83,7 +83,7 @@ def test_bpe_greedy_run_semantics(spark, tmp_path):
     'aa aa' (two merges, even island offsets), 'aaa' to 'aa a' (one),
     and the engine must agree with the unrolled SQL oracle on the same
     data — the exact case regexp_replace-based merging gets wrong
-    (consumed separators block adjacent matches; ROUND_QUEUE risk note).
+    (consumed separators block adjacent matches).
     A second fixture pins the argmax tie order (cnt desc, sym, nxt)."""
     # iteration 1 by hand. Word freqs: aaaa x3 (doc1 + doc2 twice), aaa x1,
     # aa x2, xy x3, baaab x1. Raw 'a a' adjacency = 3 pairs x3 (aaaa)

@@ -185,60 +185,6 @@ def test_connected_components_path_boundary(spark, monkeypatch):
         assert {r["node"]: r["label"] for r in out.collect()} == want
 
 
-def test_bucketed_near_pairs_recall_and_subset(spark, sf_dir):
-    """dedup_embedding_bucketed's engine: candidates are a strict subset of
-    the all-pairs truth (no false positives — the cosine verify is exact),
-    and the 4x4 banded-SRP recall at the declared 0.35 floor matches the
-    closed-form capture probability 1-(1-p^4)^4 (~0.46 here; the synthetic
-    corpus has no true near-duplicates, so this is the loose-threshold
-    regime of the curve)."""
-    from big_data_analytics_mini_projects_spark.operators.vector import (
-        bucketed_near_pairs,
-        embedding_near_pairs,
-    )
-    from big_data_analytics_mini_projects_spark.plans.vectorq import (
-        NEAR_MIN_COS,
-        _vectors,
-    )
-
-    vecs = _vectors(spark, sf_dir)
-    truth = {(r["ka"], r["kb"]) for r in embedding_near_pairs(vecs, NEAR_MIN_COS).collect()}
-    got = {(r["ka"], r["kb"]) for r in bucketed_near_pairs(vecs, NEAR_MIN_COS).collect()}
-    assert got <= truth
-    assert len(truth) > 0
-    assert len(got) / len(truth) >= 0.35  # measured 0.459 at sf0.001
-
-
-def test_bucketed_near_pairs_high_recall_on_true_near_dups(spark):
-    """In the regime the band geometry targets (true near-duplicates,
-    cos >= 0.99: a vector plus tiny noise), banded SRP captures nearly
-    every duplicate pair — the 100 TB dedup contract."""
-    import numpy as np
-
-    from big_data_analytics_mini_projects_spark.operators.vector import (
-        bucketed_near_pairs,
-        embedding_near_pairs,
-        prepare_vectors,
-    )
-
-    rng = np.random.RandomState(7)
-    base = rng.randn(40, 64)
-    rows = []
-    vid = 0
-    for b in base:
-        for _ in range(3):  # 3 near-identical copies of each base vector
-            noisy = b + 0.02 * rng.randn(64)
-            rows.append((vid, [float(x) for x in noisy]))
-            vid += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    vecs = prepare_vectors(emb)
-    truth = {(r["ka"], r["kb"]) for r in embedding_near_pairs(vecs, 0.99).collect()}
-    got = {(r["ka"], r["kb"]) for r in bucketed_near_pairs(vecs, 0.99).collect()}
-    assert got <= truth
-    assert len(truth) >= 100  # the 3-copy clusters produce >= 120 dup pairs
-    assert len(got) / len(truth) >= 0.95
-
-
 def test_auto_band_bits_width_rule(spark):
     """The occupancy-rule ladder (round-6 retune) is integer-exact at every
     corpus size, including exact powers of two: w = clamp(ceil(log2(n/32)),
@@ -257,10 +203,9 @@ def test_auto_band_bits_width_rule(spark):
 
 
 def test_bucketed_near_pairs_auto_subset_and_recall(spark, sf_dir):
-    """The adaptive-width variant keeps the two fixed-width guarantees: no
-    false positives (exact-cosine verify) and near-total recall on true
-    near-duplicates (cos >= 0.99) — at whatever width the corpus size
-    selects."""
+    """dedup_embedding_bucketed's engine has no false positives (exact-
+    cosine verify) and near-total recall on true near-duplicates
+    (cos >= 0.99) — at whatever width the corpus size selects."""
     import numpy as np
 
     from big_data_analytics_mini_projects_spark.operators.vector import (

@@ -99,14 +99,15 @@ def test_ols_closed_matches_grouped_multi(spark):
             assert abs(a[g][col] - b[g][col]) < 1e-8, (g, col, a[g][col], b[g][col])
 
 
-def test_t_pvalue_series_matches_betainc(spark):
-    """The closed-form integer-df series (functions/tdist.py — the
-    oracle-checkable path of ols_words_pvalues) agrees with the continued-
-    fraction t_sf across parities, tiny and large df, and both t signs."""
+def test_t_pvalue_cf_matches_t_sf(spark):
+    """The fixed-iteration incomplete-beta continued fraction
+    (functions/tdist.py, the p-value path of every closed-form OLS fit)
+    agrees with the scalar t_sf across parities, tiny and large df, and both
+    t signs."""
     from pyspark.sql import functions as F
 
     from big_data_analytics_mini_projects_spark.functions.tdist import (
-        with_two_sided_t_pvalue,
+        with_two_sided_t_pvalue_cf,
     )
 
     rows = [
@@ -115,8 +116,8 @@ def test_t_pvalue_series_matches_betainc(spark):
         for df in (1, 2, 3, 4, 5, 10, 49, 100, 498, 997)
     ]
     frame = spark.createDataFrame(rows, "t double, df long")
-    out = with_two_sided_t_pvalue(frame, "t", F.col("df"), "p").collect()
+    out = with_two_sided_t_pvalue_cf(frame, "t", F.col("df")).collect()
     assert len(out) == len(rows)
     for r in out:
         expected = 2.0 * t_sf(abs(r["t"]), float(r["df"]))
-        assert abs(r["p"] - expected) < 1e-11, (r["t"], r["df"], r["p"], expected)
+        assert abs(r["p_value"] - expected) < 1e-11, (r["t"], r["df"], r["p_value"], expected)
