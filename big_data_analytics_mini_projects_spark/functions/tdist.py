@@ -139,8 +139,13 @@ def with_two_sided_t_pvalue_cf(frame: DataFrame, t_col: str, df_col: Column) -> 
         .withColumn("_tc_h", F.expr(fold))
     )
     bt_over_ca = F.exp(F.col("_tc_lnbt")) * F.col("_tc_h") / F.col("_tc_ca")
+    # NaN and infinite t come first: NaN orders above 1, so the x >= 1 guard
+    # would return 1.0 for it, and |t| = inf leaves u = NaN. 2·t_sf gives
+    # NaN and 0.0 there; a NULL t falls through to NULL.
     p = (
-        F.when((F.col("_tc_u") <= 0) | (F.col("_tc_x") >= 1), F.lit(1.0))
+        F.when(F.isnan("_tc_t"), F.lit(float("nan")))
+        .when(F.col("_tc_t") == float("inf"), F.lit(0.0))
+        .when((F.col("_tc_u") <= 0) | (F.col("_tc_x") >= 1), F.lit(1.0))
         .when(F.col("_tc_sw"), bt_over_ca)
         .otherwise(F.lit(1.0) - bt_over_ca)
     )
@@ -190,7 +195,9 @@ cfh AS (SELECT tc_k, h FROM cfser WHERE j = {_CF_STEPS}),
 {src}_p AS (
   SELECT b.* EXCLUDE (tc_t, tc_dfd, tc_x, tc_u, tc_a, tc_sw, tc_ca, tc_cb,
                       tc_cx, tc_lnbt),
-         CASE WHEN b.tc_u <= 0 OR b.tc_x >= 1 THEN 1.0
+         CASE WHEN isnan(b.tc_t) THEN CAST('NaN' AS DOUBLE)
+              WHEN isinf(b.tc_t) THEN 0.0
+              WHEN b.tc_u <= 0 OR b.tc_x >= 1 THEN 1.0
               WHEN b.tc_sw THEN exp(b.tc_lnbt) * f.h / b.tc_ca
               ELSE 1.0 - exp(b.tc_lnbt) * f.h / b.tc_ca END AS p_value
   FROM cfb4 b JOIN cfh f ON b.{key} = f.tc_k)

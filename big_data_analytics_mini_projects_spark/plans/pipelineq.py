@@ -266,8 +266,10 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"ORDER BY score DESC, word) AS rn FROM s) WHERE rn <= {BM25_TOPK}"
     ),
     doc="BM25 (Okapi) top-5 terms per doc — the retrieval-grade upgrade of "
-    "TF-IDF (k1=1.2, b=0.75, length-normalized): tf/dl/df are three "
-    "aggregates of the token rows, corpus stats join as a broadcast scalar, "
+    "TF-IDF (k1=1.2, b=0.75, length-normalized): one pass counts tokens "
+    "per (doc, word) and only that tf table is cached; document length and "
+    "document frequency are its marginals (sum of tf per doc, rows per "
+    "word), corpus stats join as a broadcast scalar, "
     "document frequencies join back unhinted (vocabulary-scale — AQE "
     "decides); all score arithmetic is the same double expression in both "
     "engines.",
@@ -277,12 +279,13 @@ def bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = persist_tracked(
-        tokenize_ws(spread(docs.select("doc_id", "text"))).select("doc_id", "word")
-    )
-    tf = toks.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    dfreq = toks.groupBy("word").agg(F.countDistinct("doc_id").alias("dfreq"))
+    toks = tokenize_ws(spread(docs.select("doc_id", "text"))).select("doc_id", "word")
+    # Persist the (doc, word) count, not the token rows: dl and dfreq are its
+    # marginals. Each (doc_id, word) row is unique, so count(doc_id) per word
+    # is exactly countDistinct(doc_id), NULL doc_id skipped by both.
+    tf = persist_tracked(toks.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf")))
+    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+    dfreq = tf.groupBy("word").agg(F.count("doc_id").alias("dfreq"))
     stats = docs.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
         dl.agg(F.sum("dl").alias("sum_dl"))
     ).select(

@@ -1,12 +1,5 @@
 """Late-round registrations: corpus QA (PMI collocations, chi-square drift),
-the PNG codec round trip, and streaming session windows.
-
-Registered AFTER plans/core.py on purpose: these two landed late in round 2,
-and the driver verifies ~50 catalog entries per round — the round-1 red fix
-in core (project_json_events) takes the window slot; everything here is
-locally verified at sf0.01 (tests/test_catalog_oracle.py) and queues for
-the next round's driver window.
-"""
+the PNG codec round trip, and streaming session windows."""
 
 from __future__ import annotations
 
@@ -126,10 +119,13 @@ PMI_TOPK = 30
     doc="Pointwise mutual information over adjacent word pairs — the corpus "
     "collocation detector (phrase mining / tokenizer-merge candidates): "
     "PMI = ln(c12*N / (c1*c2)) from the bigram table joined twice against "
-    "the unigram-head counts (both aggregates reuse the zero-shuffle pair "
-    "generation), pair-count floor against unstable rare-pair PMI, top-30 "
-    "by (pmi, w1, w2) — ties and near-ties break on exact strings after a "
-    "4-decimal-stable score (beyond-reference training-data op).",
+    "the unigram-head counts. One pass generates the pairs and counts them "
+    "per (w1, w2); only that count table is cached, and the unigram heads "
+    "and N are its marginals (sums of c12), so the cache is vocabulary-"
+    "sized, not corpus-sized. Pair-count floor against unstable rare-pair "
+    "PMI, top-30 by (pmi, w1, w2) — ties and near-ties break on exact "
+    "strings after a 4-decimal-stable score (beyond-reference training-data "
+    "op).",
     tags=("bigram", "text_analysis", "topk"),
 )
 def pmi_word_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -138,12 +134,12 @@ def pmi_word_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = toks.select(F.explode(ngrams("t", 2)).alias("pr")).select(
         F.col("pr")["0"].alias("w1"), F.col("pr")["1"].alias("w2")
     )
-    pairs = persist_tracked(pairs)
-    bi = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")).filter(
-        F.col("c12") >= PMI_MIN_PAIR
-    )
-    uni = pairs.groupBy("w1").agg(F.count(F.lit(1)).alias("c"))
-    n = pairs.agg(F.count(F.lit(1)).alias("n"))
+    # Persist the joint count, not the pair stream: the unigram heads and N
+    # are its marginals (sums of c12 are the same bigints as row counts).
+    allbi = persist_tracked(pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")))
+    bi = allbi.filter(F.col("c12") >= PMI_MIN_PAIR)
+    uni = allbi.groupBy("w1").agg(F.sum("c12").alias("c"))
+    n = allbi.agg(F.sum("c12").alias("n"))
     # Unigram counts are vocabulary-scale -> unhinted joins (AQE decides);
     # N is a 1-row broadcast scalar.
     scored = (

@@ -118,7 +118,7 @@ BNLJ_OK = {
 #: Registration order bounds cache families (plans/catalog.py) and every
 #: oracle is a result contract, so a regroup of the plan modules must leave
 #: this unchanged; a deliberate catalog change records the new digest.
-CATALOG_DIGEST = "08bb4ff50412abba8bb6a17752fd58f4531c1f1dc280441f9f01beafed6c483e"
+CATALOG_DIGEST = "fca6242be71a81e2104e1bd4da2cc88b9b4db131da8e7df9699d882a9533ec3d"
 
 
 def test_catalog_pinned():
@@ -871,3 +871,28 @@ def test_round17q_round18q_shapes_pinned(spark, sf_dir):
     assert not any(k.startswith("span") or k.startswith("pos") for k in ex)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_joint_count_persist_shapes_pinned(spark, sf_dir):
+    """pmi_word_pairs and bm25_top_terms make one pass over documents and
+    cache only its joint count, whose marginals give every other count.
+    (a) Every Generate in the plan is the same node, the one inside the
+    cached relation (printed once per scan of it), and documents is the
+    only table read. (b) Every InMemoryRelation outputs exactly the count
+    table, so no persisted frame holds raw pair or token rows."""
+    import re
+
+    for name, cols in (
+        ("pmi_word_pairs", ["w1", "w2", "c12"]),
+        ("bm25_top_terms", ["doc_id", "word", "tf"]),
+    ):
+        spark.catalog.clearCache()
+        df = QUERIES[name].build(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        generates = set(re.findall(r"Generate [^\n]*", plan))
+        assert len(generates) == 1, (name, generates)
+        assert set(re.findall(r"(\w+)\.parquet", plan)) == {"documents"}, name
+        relations = re.findall(r"InMemoryRelation \[([^\]]*)\]", plan)
+        assert relations, name
+        for r in relations:
+            assert [c.split("#")[0] for c in r.split(", ")] == cols, (name, relations)

@@ -121,3 +121,49 @@ def test_t_pvalue_cf_matches_t_sf(spark):
     for r in out:
         expected = 2.0 * t_sf(abs(r["t"]), float(r["df"]))
         assert abs(r["p_value"] - expected) < 1e-11, (r["t"], r["df"], r["p_value"], expected)
+
+
+def _same_p(got, expected) -> bool:
+    if expected is None or got is None:
+        return got is None and expected is None
+    if math.isnan(expected):
+        return math.isnan(got)
+    return abs(got - expected) < 1e-11
+
+
+def test_t_pvalue_cf_degenerate_t(spark, duck):
+    """NaN, infinite and NULL t give what 2·t_sf gives (NaN, 0.0, NULL) in
+    both engines: a zero-variance group's NaN t must not read as p = 1, and
+    a perfect fit's infinite t must not read as NaN."""
+    from pyspark.sql import functions as F
+
+    from big_data_analytics_mini_projects_spark.functions.tdist import (
+        sql_t_pvalue_cf_ctes,
+        with_two_sided_t_pvalue_cf,
+    )
+
+    ts = [math.nan, math.inf, -math.inf, None, 0.0, 2.0, -2.0]
+    expected = {
+        k: None if t is None else 2.0 * t_sf(abs(t), 5.0) for k, t in enumerate(ts)
+    }
+    assert math.isnan(expected[0]) and expected[1] == expected[2] == 0.0
+
+    frame = spark.createDataFrame(
+        [(k, t, 5) for k, t in enumerate(ts)], "k long, t double, df long"
+    )
+    out = with_two_sided_t_pvalue_cf(frame, "t", F.col("df")).collect()
+    spark_p = {r["k"]: r["p_value"] for r in out}
+
+    vals = ", ".join(
+        f"({k}, {'NULL' if t is None else repr(str(t))}::DOUBLE, 5)" for k, t in enumerate(ts)
+    )
+    duck_p = dict(
+        duck.execute(
+            f"WITH RECURSIVE tsrc AS (SELECT * FROM (VALUES {vals}) v(k, t, df)), "
+            + sql_t_pvalue_cf_ctes("tsrc", "t", "df", "k")
+            + " SELECT k, p_value FROM tsrc_p"
+        ).fetchall()
+    )
+    for k, t in enumerate(ts):
+        assert _same_p(spark_p[k], expected[k]), ("spark", t, spark_p[k], expected[k])
+        assert _same_p(duck_p[k], expected[k]), ("duckdb", t, duck_p[k], expected[k])

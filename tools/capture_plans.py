@@ -8,6 +8,11 @@ names are given, captures only those. Building a DataFrame runs any driver
 loops inside the builder (iterative queries), so this is also a smoke test
 that every builder still constructs.
 
+The files are byte-stable across sessions, so a diff of two commits'
+captures shows only real plan changes: expression ids, ``plan_id=`` and
+``RDD[<id>]`` numbers are stripped, and count-distinct rewrites are put in a
+canonical order (:func:`canonical_plan`).
+
 A summary line per query goes to stdout: exchange count, join strategies,
 python-eval nodes — the quick audit the optimization guide §7.2 asks for.
 """
@@ -24,6 +29,105 @@ if _REPO_DIR not in sys.path:
 
 from big_data_analytics_mini_projects_spark.plans.catalog import QUERIES
 from big_data_analytics_mini_projects_spark.session import get_spark
+
+
+_RUN_IDS = (
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+)
+_EXPAND_HEADER = re.compile(r"^\(\d+\) Expand\b")
+
+
+def _split(body: str) -> list[str]:
+    """Split a list body on its top-level commas."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(body):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append(body[start:i].strip())
+            start = i + 1
+    return parts + [body[start:].strip()]
+
+
+def _close(line: str, i: int) -> int:
+    """Index of the bracket closing the one at ``line[i]``."""
+    depth = 0
+    for j in range(i, len(line)):
+        depth += line[j] in "(["
+        depth -= line[j] in ")]"
+        if depth == 0:
+            return j
+    return len(line) - 1
+
+
+def _strip_ids(text: str) -> str:
+    for pattern, repl in _RUN_IDS:
+        text = pattern.sub(repl, text)
+    return text
+
+
+def _sort_lists(line: str) -> str:
+    """Sort the elements of every top-level ``[...]`` list and every
+    ``hashpartitioning(...)`` key list (partition count kept last)."""
+    out, i = [], 0
+    while i < len(line):
+        hp = line.startswith("hashpartitioning(", i)
+        if line[i] == "[" or hp:
+            o = i + len("hashpartitioning") if hp else i
+            j = _close(line, o)
+            items = _split(line[o + 1:j])
+            keys, tail = (items[:-1], items[-1:]) if hp else (items, [])
+            out.append(line[i:o + 1] + ", ".join(sorted(keys, key=_strip_ids) + tail) + line[j])
+            i = j + 1
+        else:
+            out.append(line[i])
+            i += 1
+    return "".join(out)
+
+
+def canonical_plan(plan: str) -> str:
+    """``plan`` with its count-distinct rewrites in a canonical order and its
+    run-dependent ids stripped.
+
+    Spark's count-distinct rewrite expands the input once per distinct
+    group, numbers the groups with a ``gid`` column, and orders the groups
+    and their columns by a hash of expression ids. The same query therefore
+    prints a different permutation depending on how many expressions the
+    session built before it. Here each such Expand's output columns are
+    sorted by name, its projections are sorted and renumbered, and every
+    later line that carries that ``gid`` gets its lists sorted and its
+    ``gid = k`` literals renumbered to match."""
+    lines = plan.split("\n")
+    for i, line in enumerate(lines):
+        if not (i >= 2 and _EXPAND_HEADER.match(lines[i - 2]) and line.startswith("Arguments: [[")):
+            continue
+        projs, outs = _split(line[len("Arguments: "):])
+        cols = _split(outs[1:-1])
+        gid = next((c for c in cols if c.startswith("gid#")), None)
+        if gid is None:  # a cube, rollup or unpivot: its order is the query's
+            continue
+        order = sorted(range(len(cols)), key=lambda k: _strip_ids(cols[k]))
+        g = order.index(cols.index(gid))
+        rows = [[p[k] for k in order] for p in (_split(q[1:-1]) for q in _split(projs[1:-1]))]
+        rows.sort(key=lambda r: _strip_ids(", ".join(r[:g] + r[g + 1:])))
+        renumber = {r[g]: str(n) for n, r in enumerate(rows)}
+        for n, r in enumerate(rows):
+            r[g] = str(n)
+        lines[i] = "Arguments: [{}], [{}]".format(
+            ", ".join("[" + ", ".join(r) + "]" for r in rows),
+            ", ".join(cols[k] for k in order),
+        )
+        gid_eq = re.compile(re.escape(gid) + r"(?!\d)( = )(\d+)")
+        for k in range(i + 1, len(lines)):
+            if re.search(re.escape(gid) + r"(?!\d)", lines[k]):
+                lines[k] = _sort_lists(
+                    gid_eq.sub(lambda m: gid + m.group(1) + renumber[m.group(2)], lines[k])
+                )
+    return _strip_ids("\n".join(lines))
 
 
 def main() -> None:
@@ -48,7 +152,7 @@ def main() -> None:
             continue
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(plan)
+            f.write(canonical_plan(plan))
         n_ex = len(re.findall(r"\bExchange\b", plan))
         joins = sorted(
             set(re.findall(r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin|"
