@@ -15,6 +15,16 @@ order groups each family into one module, and the driver/bench run in
 catalog order) — so intra-family cache sharing is preserved while no more
 than one family's blocks are ever live. Unpersisting is never a correctness
 hazard: a released frame that is still referenced just recomputes.
+
+:func:`checkpoint_shared` memoizes one shared leaf per name per family visit
+and is dropped at the same boundary. A distributed frame becomes a
+``localCheckpoint`` leaf; a frame that is already driver-side data (its
+optimized plan is one ``LocalRelation``, as every ``sources.readers.
+local_relation`` result is, the empty form included) is memoized as it is.
+The driver-loop outputs are memoized that way: the connected-components
+labels of at most 2^20 pairs (``operators.similarity.connected_components``'
+driver bound; above it the labels are distributed and checkpointed) and the
+BPE vocabulary.
 """
 
 from __future__ import annotations
@@ -25,10 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 _TRACKED: list[DataFrame] = []
 
-#: Family-scoped memo of lazily localCheckpoint-ed frames (plan-truncation
-#: leaves, guide §3.3). Keyed by a caller-chosen name + sf_dir; cleared with
-#: the persists at every family boundary, so its lifetime is identical to the
-#: tracked persist cache it is built from.
+#: Family-scoped memo of shared leaves: lazily localCheckpoint-ed frames
+#: (plan-truncation leaves, guide §3.3) and driver-side LocalRelations. Keyed
+#: by a caller-chosen name + sf_dir; cleared with the persists at every family
+#: boundary, so its lifetime is identical to the tracked persist cache it is
+#: built from.
 _CHECKPOINTED: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
 
 
@@ -42,8 +53,9 @@ def persist_tracked(df: DataFrame) -> DataFrame:
 def checkpoint_shared(
     name: str, sf_dir: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
-    """One lazy ``localCheckpoint`` of ``build()`` per (name, sf_dir) per
-    family visit.
+    """One shared leaf of ``build()`` per (name, sf_dir) per family visit:
+    a lazy ``localCheckpoint`` of a distributed frame, or the frame itself
+    when it is already driver-side data.
 
     A localCheckpoint turns a deep analyzed tree into a leaf scan — the fix
     for curve/loop queries whose every Dataset op re-analyzes hundreds of
@@ -62,6 +74,15 @@ def checkpoint_shared(
     from hundreds of parsed expressions that is most of the per-build cost.
     Keys are unique by naming convention (module prefix + frame name).
 
+    A frame whose optimized plan is one ``LocalRelation`` (a driver-loop
+    result from ``sources.readers.local_relation``; its empty form is a
+    ``LIMIT 0`` that the optimizer folds into an empty LocalRelation, though
+    ``isLocal()`` is False for it) is memoized as it is: checkpointing it
+    would only copy driver rows into executor blocks and put an RDD scan
+    where a LocalRelation was. The memo then holds those rows on the driver
+    until the family boundary: connected-components labels of at most 2^20
+    pairs (the driver bound) and the BPE vocabulary.
+
     A hit counts only while the session that built the leaf is the active
     one: after a restart the old checkpoint blocks are gone, and with no
     active session there is nothing to check the leaf against, so both
@@ -72,7 +93,11 @@ def checkpoint_shared(
     if entry is not None and active is not None and entry[0] is active:
         return entry[1]
     df = build()
-    got = df.localCheckpoint(eager=False)
+    got = df
+    # the optimized plan is computed once either way: localCheckpoint plans
+    # the same QueryExecution
+    if df._jdf.queryExecution().optimizedPlan().nodeName() != "LocalRelation":  # noqa: SLF001
+        got = df.localCheckpoint(eager=False)
     _CHECKPOINTED[key] = (df.sparkSession, got)
     return got
 

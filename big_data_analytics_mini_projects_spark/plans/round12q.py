@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..caching import checkpoint_shared, persist_tracked
 from ..functions.text import round_stable, sql_round_stable, tokens
 from ..operators.aggregates import dsum, sql_dsum
-from ..operators.similarity import connected_components, minhash_signatures
+from ..operators.similarity import minhash_signatures
 from ..sources.tables import load_table, spread
 from .registry import register
 from .round11q import LSH_EVAL_LIMIT, _SQL_SHX_SLICE, slice_pair_inter
@@ -51,6 +51,7 @@ from .similarityq import (
     _SQL_SCORED,
     _SQL_SH_SIGS,
     _SQL_SH_SIGS_WIDE,
+    _cc_labels,
     _scored_pairs,
     _shingles,
 )
@@ -231,13 +232,13 @@ _SQL_HIST_TAIL = (
     "the singleton count recovered by subtraction (corpus total minus "
     "labeled nodes — no join against the full corpus). Result rows are "
     "bounded by the largest cluster size; everything downstream of the CC "
-    "labels is dimension-scale. Sum(size x n_clusters) == corpus doc "
-    "count is pinned as a unit test.",
+    "labels is dimension-scale. The labels are memoized per family visit, "
+    "so a repeat runs only the corpus count and the two small aggregates. "
+    "Sum(size x n_clusters) == corpus doc count is pinned as a unit test.",
     tags=("dedup", "graph", "quality"),
 )
 def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _scored_pairs(spark, sf_dir)
-    lab = connected_components(pairs)
+    lab = _cc_labels(spark, sf_dir)
     cs = lab.groupBy("label").agg(F.count(F.lit(1)).alias("size"))
     h = cs.groupBy("size").agg(F.count(F.lit(1)).alias("n_clusters"))
     tot = load_table(spark, sf_dir, "documents").agg(

@@ -202,11 +202,15 @@ def bpe_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (|word types| rows): bpe_merge_chain trains them on the driver after
     # one vocabulary job and they come back as a LocalRelation, which the
     # corpus-side word stream joins by broadcast. checkpoint_shared memoizes
-    # that frame per family visit, so repeats skip the vocabulary job:
-    # measured at sf0.1 (local[4], 3 fresh JVMs x 6 warm repeats each way),
-    # warm builds take 0.77-0.86 s with the leaf and 1.19-1.33 s without.
-    # The word stream and the fertility aggregate (the query's actual scale
-    # work) still run per repeat.
+    # that LocalRelation as it is per family visit (no checkpoint, so no RDD
+    # scan under the join), and repeats skip both the merges and the
+    # vocabulary job, which bpe_merge_chain memoizes in turn. Measured at
+    # sf0.1 (local[4], 3 fresh JVMs x 6 warm repeats each way), warm builds
+    # took 0.77-0.86 s with the memo and 1.19-1.33 s without; a
+    # LocalRelation leaf in place of the checkpointed one measured the same
+    # (warm build median 0.16 s either way). The word stream and the
+    # fertility aggregate (the query's actual scale work) still run per
+    # repeat.
     def _wl() -> DataFrame:
         spell, _ = bpe_merge_chain(spark, sf_dir)
         return local_relation(

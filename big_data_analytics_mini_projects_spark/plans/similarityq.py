@@ -32,7 +32,7 @@ from ..functions.text import (
 )
 from ..sources.tables import load_table, spread
 from .registry import register
-from ..caching import persist_tracked
+from ..caching import checkpoint_shared, persist_tracked
 
 NUM_HASHES = 32
 ROWS_PER_BAND = 4  # -> 8 bands; s* = (1/8)^(1/4) ~ 0.6 dedup threshold
@@ -286,6 +286,20 @@ def _scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(node, label) connected components of the scored pairs, computed once
+    per family visit: dedup_clusters, dedup_apply_canonical and round12q's
+    cluster_size_histogram read the same memoized frame, so a repeat skips
+    both the minhash/LSH plan construction and the pairs collect. At this
+    scale the labels are a driver-side LocalRelation, which the memo keeps
+    as it is (caching.checkpoint_shared)."""
+    return checkpoint_shared(
+        "sim.cc_labels",
+        sf_dir,
+        lambda: connected_components(_scored_pairs(spark, sf_dir)),
+    )
+
+
 @register(
     "dedup_minhash_lsh",
     oracle=(
@@ -336,12 +350,14 @@ assert _SQL_CLUSTER_TAIL_MAT != _SQL_CLUSTER_TAIL
     doc="Duplicate-cluster resolution: connected components over the scored "
     "near-dup pairs (union-find on the driver up to 2^20 pairs, "
     "large-star/small-star above); cluster = min doc_id = the keeper a "
-    "dedup pipeline retains. Oracle: transitive closure via recursive CTE.",
+    "dedup pipeline retains. The labels are memoized per family visit "
+    "(shared with dedup_apply_canonical), so a repeat skips the minhash/LSH "
+    "plan and the pairs collect. Oracle: transitive closure via recursive "
+    "CTE.",
     tags=("dedup", "graph"),
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _scored_pairs(spark, sf_dir)
-    cc = connected_components(pairs)
+    cc = _cc_labels(spark, sf_dir)
     return cc.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster"))
 
 
@@ -548,12 +564,13 @@ _SQL_APPLY_TAIL = (
     "driver-free DAG; the anti join is the only touch on the full corpus "
     "beyond the signature scan. Its connected_components is union-find on "
     "the driver up to 2^20 pairs and large-star/small-star above, exact at "
-    "any component diameter.",
+    "any component diameter; the labels are the family visit's memoized "
+    "frame, so after dedup_clusters only the anti join and the per-source "
+    "counts run.",
     tags=("dedup", "graph", "pipeline"),
 )
 def dedup_apply_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _scored_pairs(spark, sf_dir)
-    cc = connected_components(pairs)
+    cc = _cc_labels(spark, sf_dir)
     dropped = cc.filter(F.col("node") != F.col("label")).select(
         F.col("node").alias("doc_id")
     )

@@ -4,13 +4,16 @@
   but passes a well-split source through untouched (the 100 TB contract —
   no accidental full-corpus shuffle, guide §2.4/§2.5).
 - ``caching.checkpoint_shared`` memoizes one truncated leaf per (name,
-  sf_dir) per family visit and drops it with the tracked persists.
+  sf_dir) per family visit and drops it with the tracked persists; a
+  driver-side LocalRelation is memoized as it is, and the driver-loop
+  outputs (connected-components labels, BPE vocabulary) ride that memo.
 """
 
 from __future__ import annotations
 
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -20,6 +23,9 @@ from big_data_analytics_mini_projects_spark.caching import (
     checkpoint_shared,
     release_persisted,
 )
+from big_data_analytics_mini_projects_spark.plans import similarityq
+from big_data_analytics_mini_projects_spark.plans.catalog import QUERIES
+from big_data_analytics_mini_projects_spark.sources.readers import local_relation
 from big_data_analytics_mini_projects_spark.sources.tables import (
     _parse_size_bytes,
     load_table,
@@ -117,4 +123,75 @@ def test_checkpoint_shared_rebuilds_on_session_mismatch(spark, monkeypatch, acti
     assert out.count() == 5
     assert _CHECKPOINTED[key][0] is not sentinel
     assert _CHECKPOINTED[key][1] is out
+    release_persisted()
+
+
+@pytest.mark.parametrize("rows", [[(1, "a"), (2, "b")], []], ids=["rows", "empty"])
+def test_checkpoint_shared_passes_local_relations_through(spark, rows):
+    """A driver-side result is memoized as it is, not checkpointed into an
+    RDD scan. The empty form of ``local_relation`` (a null row under LIMIT
+    0, for which ``isLocal()`` is False) counts too."""
+    release_persisted()
+    calls = []
+
+    def build():
+        calls.append(1)
+        return local_relation(
+            spark, pd.DataFrame(rows, columns=["k", "v"]), "k long, v string"
+        )
+
+    a = checkpoint_shared("t.local", SF_DIR, build)
+    b = checkpoint_shared("t.local", SF_DIR, build)
+    assert a is b and len(calls) == 1
+    plan = a._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+    assert plan.nodeName() == "LocalRelation", plan.toString()
+    assert sorted(tuple(r) for r in a.collect()) == rows
+
+    release_persisted()
+    assert ("t.local", SF_DIR) not in _CHECKPOINTED
+    assert checkpoint_shared("t.local", SF_DIR, build) is not a and len(calls) == 2
+    release_persisted()
+
+
+def _group_jobs(sc, group: str, fn) -> int:
+    """Spark jobs started while ``fn`` runs under job group ``group``."""
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_driver_loop_outputs_memoized_per_family_visit(spark, sf_dir, monkeypatch):
+    """Within one family visit the connected-components labels are computed
+    once, whichever query asks first, and a repeated bpe_merge_curve build
+    reads its vocabulary back without a Spark job. Entering another family
+    drops both memos, so the next build computes again."""
+    calls = []
+    cc = similarityq.connected_components
+
+    def counted(pairs):
+        calls.append(1)
+        return cc(pairs)
+
+    monkeypatch.setattr(similarityq, "connected_components", counted)
+    release_persisted()
+    for name in ("dedup_clusters", "dedup_apply_canonical", "dedup_clusters"):
+        QUERIES[name].build(spark, sf_dir)
+    assert len(calls) == 1, "one family visit must share one CC labels frame"
+    QUERIES["cluster_size_histogram"].build(spark, sf_dir)  # next family
+    assert len(calls) == 2
+
+    sc = spark.sparkContext
+    bpe = QUERIES["bpe_merge_curve"]
+    first = _group_jobs(sc, "t.bpe_first", lambda: bpe.build(spark, sf_dir))
+    assert first >= 1, "a family's first build collects the vocabulary"
+    repeat = _group_jobs(sc, "t.bpe_repeat", lambda: bpe.build(spark, sf_dir))
+    assert repeat == 0, "a repeat must read the memoized vocabulary"
+    QUERIES["wordcount_topk"].build(spark, sf_dir)  # another family
+    again = _group_jobs(sc, "t.bpe_again", lambda: bpe.build(spark, sf_dir))
+    assert again >= 1, "a new family visit must collect again"
     release_persisted()

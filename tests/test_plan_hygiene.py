@@ -491,16 +491,19 @@ def test_catalog_plan_hygiene(spark, sf_dir):
 
 
 def test_driver_loop_results_are_local_relations(spark, sf_dir):
-    """The connected-components labels (dedup_clusters, on the driver path
-    at this scale) and the BPE curve come back through Arrow as a
-    LocalRelation leaf, never an RDD scan: ``createDataFrame(list)``, or
-    Arrow's silent fallback to it, plans a LogicalRDD whose first use
-    starts the Python workers."""
-    for name in ("dedup_clusters", "bpe_merge_curve"):
-        df = QUERIES[name].build(spark, sf_dir)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
-        assert "LocalRelation" in plan, (name, plan)
-        assert "LogicalRDD" not in plan, (name, plan)
+    """The connected-components labels (dedup_clusters and
+    cluster_size_histogram, on the driver path at this scale) and the BPE
+    curve come back through Arrow as a LocalRelation leaf, never an RDD
+    scan: ``createDataFrame(list)``, or Arrow's silent fallback to it, plans
+    a LogicalRDD whose first use starts the Python workers. The second
+    build reads the family's memoized labels and vocabulary, which must
+    stay LocalRelations too (checkpointing them would add an RDD scan)."""
+    for name in ("dedup_clusters", "bpe_merge_curve", "cluster_size_histogram"):
+        for build in ("first", "repeat"):
+            df = QUERIES[name].build(spark, sf_dir)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+            assert "LocalRelation" in plan, (name, build, plan)
+            assert "LogicalRDD" not in plan, (name, build, plan)
 
 
 def test_minhash_simhash_no_scatter_exchange(spark, sf_dir):

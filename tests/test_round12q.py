@@ -5,6 +5,9 @@ sensitivity curve."""
 
 from __future__ import annotations
 
+import duckdb
+
+from big_data_analytics_mini_projects_spark.caching import _CHECKPOINTED
 from big_data_analytics_mini_projects_spark.plans.catalog import QUERIES
 from big_data_analytics_mini_projects_spark.plans.round11q import (
     slice_pair_inter,
@@ -16,6 +19,9 @@ from big_data_analytics_mini_projects_spark.plans.round12q import (
     NUM_HASHES,
     pack_efficiency_core,
 )
+
+from .compare import assert_df_equal
+from .test_count_marginals import _corpus
 
 
 def test_pack_efficiency_golden(spark):
@@ -75,6 +81,45 @@ def test_cluster_histogram_mass(spark, sf_dir):
     sizes = [r["size"] for r in rows]
     assert len(sizes) == len(set(sizes))
     assert all(r["n_clusters"] >= 0 for r in rows)
+
+
+#: A corpus without near-duplicates: no two docs share a word trigram, and
+#: two docs are too short to have one.
+NO_DUPS = [
+    (1, "alpha beta gamma delta epsilon"),
+    (2, "one two three four five six"),
+    (3, "red green blue"),
+    (4, "short"),
+    (5, ""),
+]
+
+
+def test_empty_near_dup_graph_matches_oracle(spark, tmp_path):
+    """With no scored pairs the connected-components labels are empty:
+    every doc is a singleton cluster and dedup_clusters returns no rows.
+    Both queries match their DuckDB oracles on the first build and on the
+    memo-hit second build, and the memo keeps the empty labels a
+    LocalRelation (a checkpoint would put an RDD scan in their place)."""
+    sf_dir = _corpus(tmp_path, NO_DUPS)
+    key = ("sim.cc_labels", sf_dir)
+    with duckdb.connect() as con:
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
+        )
+        for name in ("cluster_size_histogram", "dedup_clusters"):
+            spec = QUERIES[name]
+            labels = None
+            for _ in range(2):
+                df = spec.build(spark, sf_dir)
+                assert labels is None or _CHECKPOINTED[key][1] is labels, name
+                labels = _CHECKPOINTED[key][1]
+                plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+                assert "LogicalRDD" not in plan, (name, plan)
+                assert_df_equal(df, con, spec.oracle)
+                if name == "cluster_size_histogram":
+                    assert [tuple(r) for r in df.collect()] == [(1, len(NO_DUPS))]
+                else:
+                    assert df.columns == ["doc_id", "cluster"] and df.count() == 0
 
 
 def test_minhash_error_bands(spark, sf_dir):
