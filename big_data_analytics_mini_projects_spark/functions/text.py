@@ -1,9 +1,13 @@
 """Tokenizers and text scalar functions (SURVEY.md §2.2).
 
 Each tokenizer exists twice: a Spark DataFrame transform and a DuckDB SQL
-twin used by the differential-test oracles (a fragment builder here, or for
-the A3 regex, the oracle's own CTE over ``A3_TOKEN_PATTERN_SQL``). Both
-sides implement the *same* string semantics so results hash-match.
+twin used by the differential-test oracles. Both sides implement the *same*
+string semantics so results hash-match. The whitespace tokenizer and the
+word n-grams have their DuckDB twins here and nowhere else
+(:func:`sql_tokens`, :func:`sql_trigram_shingles`,
+:data:`SQL_BIGRAM_PAIRS`): the plan modules call them, and
+tests/test_plan_hygiene.py fails on a copy written out elsewhere. The A3
+regex's twin is the oracle's own CTE over ``A3_TOKEN_PATTERN_SQL``.
 
 Reference points:
 - whitespace tokenize + lowercase: MRSystemSimulator2020.py:186-191
@@ -56,7 +60,26 @@ def tokenize_ws(df: DataFrame) -> DataFrame:
     return df.withColumn("word", F.explode(tokens("text")))
 
 
+def _sql_split_ws(expr: str) -> str:
+    return f"list_filter(string_split({expr}, ' '), x -> x <> '')"
+
+
+def sql_tokens(col: str) -> str:
+    """DuckDB twin of :func:`tokens` over the SQL expression ``col``: the
+    whitespace tokens of ``lower(col)`` as a list, empty tokens dropped,
+    NULL for NULL text."""
+    return _sql_split_ws(f"lower({col})")
+
+
+def sql_token_count(col: str) -> str:
+    """DuckDB twin of ``F.size(tokens(col))`` as the token-budget oracles
+    write it: case does not change a count, so ``col`` is not lowered."""
+    return f"len({_sql_split_ws(col)})"
+
+
 def sql_tokens_ws(table: str = "documents") -> str:
+    """One (doc_id, word) row per :func:`tokens` element of ``table.text``
+    (:func:`tokenize_ws`'s twin)."""
     return (
         "SELECT doc_id, word FROM (SELECT doc_id, "
         f"unnest(string_split(lower(text), ' ')) AS word FROM {table}) "
@@ -99,10 +122,38 @@ def ngrams(toks: Column | str, n: int) -> Column:
     posexplode it directly (0-based positions); :func:`ngram_text` joins an
     element into the space-separated n-gram string. No lambda, so the
     operator holding it stays in whole-stage codegen. The single Spark-side
-    definition of word n-grams; the DuckDB mirrors live in the plan modules."""
+    definition of word n-grams; the DuckDB twins of its two shared uses are
+    :func:`sql_trigram_shingles` and :data:`SQL_BIGRAM_PAIRS`."""
     t = F.col(toks) if isinstance(toks, str) else toks
     m = F.greatest(F.size(t) - (n - 1), F.lit(0))
     return F.arrays_zip(*(F.slice(t, k, m) for k in range(1, n + 1)))
+
+
+def sql_trigram_shingles(name: str, docs: str) -> str:
+    """DuckDB twin of ``operators/similarity.ngram_shingles(n=3)`` over
+    :func:`tokens`: CTE ``tarr`` (doc_id, toks) over ``docs`` (a table,
+    optionally with its WHERE clause), then CTE ``name`` (doc_id, shingle),
+    each doc's distinct space-joined word trigrams. A doc of fewer than 3
+    tokens has none."""
+    return (
+        f"tarr AS (SELECT doc_id, {sql_tokens('text')} AS toks\n"
+        f"         FROM {docs}),\n"
+        f"{name} AS (SELECT DISTINCT doc_id, shingle FROM (\n"
+        "  SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN\n"
+        "    list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))\n"
+        "    ELSE []::VARCHAR[] END) AS shingle FROM tarr))"
+    )
+
+
+#: DuckDB twin of the word bigrams ``ngrams(tokens(text), 2)`` of every
+#: document: CTE ``toks`` (doc_id, t) and CTE ``pairs``, one
+#: ``pr STRUCT(w1, w2)`` row per adjacent token pair, duplicates kept.
+SQL_BIGRAM_PAIRS = (
+    f"toks AS (SELECT doc_id, {sql_tokens('text')} AS t FROM documents), "
+    "pairs AS (SELECT unnest(CASE WHEN len(t) >= 2 THEN "
+    "list_transform(range(1, len(t)), i -> struct_pack(w1 := t[i], w2 := t[i+1])) "
+    "ELSE []::STRUCT(w1 VARCHAR, w2 VARCHAR)[] END) AS pr FROM toks)"
+)
 
 
 def ngram_text(gram: Column | str, n: int) -> Column:

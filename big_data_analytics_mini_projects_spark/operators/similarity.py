@@ -95,6 +95,39 @@ def minhash_signatures(
     ).select("doc_id", F.col("_x.seed").alias("seed"), F.col("_x.mh").alias("mh"))
 
 
+def sql_minhash_sigs(num_hashes: int, src: str, col: str) -> str:
+    """DuckDB twin of :func:`minhash_signatures` in the seeds-cross-join
+    scatter form: CTEs ``seeds`` and ``sigs`` (doc_id, seed, mh) over the
+    (doc_id, ``col``) rows of CTE ``src``."""
+    h = f"('0x' || substr(md5(CAST(seed AS VARCHAR) || ':' || {col}), 1, 15))::BIGINT"
+    return (
+        f"seeds AS (SELECT unnest(range({num_hashes})) AS seed),\n"
+        f"sigs AS (SELECT doc_id, seed, MIN({h}) AS mh\n"
+        f"         FROM {src} CROSS JOIN seeds GROUP BY doc_id, seed)"
+    )
+
+
+def sql_minhash_sigs_wide(num_hashes: int, materialized: bool) -> str:
+    """The same ``sigs`` rows over CTE ``shx`` (doc_id, shingle) in one wide
+    aggregate pass, as :func:`minhash_signatures` computes them: CTE
+    ``sigw`` holds one row per doc with the ``num_hashes`` minima as
+    columns, ``sigs`` unpivots it. No seeds scatter, so it runs at scales
+    where the scatter form spills. ``materialized`` marks both CTEs AS
+    MATERIALIZED."""
+    m = " MATERIALIZED" if materialized else ""
+    mins = ", ".join(
+        f"MIN(('0x' || substr(md5('{s}:' || shingle), 1, 15))::BIGINT) AS mh{s}"
+        for s in range(num_hashes)
+    )
+    cols = ", ".join(f"mh{s}" for s in range(num_hashes))
+    return (
+        f"sigw AS{m} (SELECT doc_id, {mins} FROM shx GROUP BY doc_id),\n"
+        f"sigs AS{m} (SELECT doc_id, unnest(range({num_hashes})) AS seed,\n"
+        f"         unnest([{cols}]) AS mh\n"
+        "         FROM sigw)"
+    )
+
+
 def minhash_jaccard(sigs: DataFrame, num_hashes: int) -> DataFrame:
     """Pairwise Jaccard estimates: fraction of agreeing signature rows
     (E[agreement] = J, exactly 0 when J = 0 — Part_2.pdf p3-4).
@@ -128,6 +161,17 @@ def lsh_bands(sigs: DataFrame, rows_per_band: int) -> DataFrame:
     ordered = F.array_sort(F.collect_list(F.struct("seed", "mh")))
     concat = F.array_join(F.transform(ordered, lambda s: s["mh"].cast("string")), "-")
     return banded.groupBy("doc_id", "band").agg(F.md5(concat).alias("band_sig"))
+
+
+def sql_lsh_bands(rows_per_band: int, materialized: bool) -> str:
+    """DuckDB twin of :func:`lsh_bands` over CTE ``sigs``: CTE ``bands``
+    (doc_id, band, band_sig). ``materialized`` marks it AS MATERIALIZED."""
+    m = " MATERIALIZED" if materialized else ""
+    return (
+        f"bands AS{m} (SELECT doc_id, seed // {rows_per_band} AS band,\n"
+        "          md5(string_agg(CAST(mh AS VARCHAR), '-' ORDER BY seed)) AS band_sig\n"
+        "          FROM sigs GROUP BY doc_id, band)"
+    )
 
 
 def lsh_candidates(bands: DataFrame) -> DataFrame:
@@ -423,18 +467,13 @@ def ngram_shingles(docs: DataFrame, n: int = 3, distinct: bool = True) -> DataFr
     return sh.distinct() if distinct else sh
 
 
-def ngram_jaccard_pairs(
-    shingles: DataFrame, min_jaccard: float = 0.2, df_cap: int = 500
-) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs sharing >=1 shingle.
-
-    ``df_cap`` drops shingles appearing in more than df_cap docs before the
-    inverted-index join — the hot-shingle skew guard; at 100 TB this cap is
-    what keeps bucket joins from going quadratic on boilerplate text.
-    Returns (ka, kb, n_common, jaccard).
-
-    ``shingles`` is read by the df counter, both join sides, and the size
-    table — persisted so shingling runs once."""
+def _capped_pair_counts(shingles: DataFrame, df_cap: int) -> DataFrame:
+    """(ka, kb, n_common, na, nb): doc pairs ka < kb sharing at least one
+    shingle held by at most ``df_cap`` docs, with the number of such
+    shingles they share and each doc's full distinct-shingle count. The
+    candidate core of :func:`ngram_jaccard_pairs` and
+    :func:`containment_pairs`; ``shingles`` is persisted, since the df
+    counter, both join sides and the size table all read it."""
     shingles = persist_tracked(shingles)
     freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # The rare-shingle list is vocabulary-scale (grows with the corpus) — no
@@ -454,10 +493,21 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col("doc_id").alias("ka"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("kb"), F.col("n_sh").alias("nb"))
+    return common.join(sa, "ka").join(sb, "kb")
+
+
+def ngram_jaccard_pairs(
+    shingles: DataFrame, min_jaccard: float = 0.2, df_cap: int = 500
+) -> DataFrame:
+    """Exact n-gram Jaccard over candidate pairs sharing >=1 shingle.
+
+    ``df_cap`` drops shingles appearing in more than df_cap docs before the
+    inverted-index join — the hot-shingle skew guard; at 100 TB this cap is
+    what keeps bucket joins from going quadratic on boilerplate text.
+    Returns (ka, kb, n_common, jaccard)."""
     jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
     return (
-        common.join(sa, "ka")
-        .join(sb, "kb")
+        _capped_pair_counts(shingles, df_cap)
         .withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= min_jaccard)
         .select("ka", "kb", "n_common", "jaccard")
@@ -479,28 +529,11 @@ def containment_pairs(
     sizes use the uncapped distinct-shingle sets. Returns
     (inner_doc, outer_doc, n_common, n_inner, containment) with the smaller
     set as ``inner_doc`` (ka on size ties — ids already ordered ka < kb)."""
-    shingles = persist_tracked(shingles)
-    freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    keep = shingles.join(
-        freq.filter(F.col("df") <= df_cap).select("shingle"), "shingle"
-    )
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = keep.select(F.col("doc_id").alias("ka"), "shingle")
-    b = keep.select(F.col("doc_id").alias("kb"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("ka") < F.col("kb"))
-        .groupBy("ka", "kb")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("ka"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("kb"), F.col("n_sh").alias("nb"))
     cont = F.col("n_common").cast("double") / F.least("na", "nb")
     inner = F.when(F.col("na") <= F.col("nb"), F.col("ka")).otherwise(F.col("kb"))
     outer = F.when(F.col("na") <= F.col("nb"), F.col("kb")).otherwise(F.col("ka"))
     return (
-        common.join(sa, "ka")
-        .join(sb, "kb")
+        _capped_pair_counts(shingles, df_cap)
         .withColumn("containment", cont)
         .filter(F.col("containment") >= min_containment)
         .select(

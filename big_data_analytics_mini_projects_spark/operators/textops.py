@@ -178,3 +178,18 @@ def doc_fingerprints(docs: DataFrame) -> DataFrame:
         f"transform(array({hs_cs}), hs -> {winnow_hs})[0])[0]"
     )
     return docs.select("doc_id", F.explode(F.expr(fp_expr)).alias("fp"))
+
+
+#: DuckDB twin of :func:`doc_fingerprints` before its dedupe: CTE ``wmin``
+#: (doc_id, fp), the minimum gram hash of every FP_WINDOW-gram window of
+#: each document's lowered text, duplicates kept.
+SQL_WINNOW_MINS = (
+    "lowered AS (SELECT doc_id, lower(text) AS t FROM documents), "
+    f"pos AS (SELECT doc_id, t, unnest(range(1, length(t) - {FP_K - 2})) AS i "
+    f"FROM lowered WHERE length(t) >= {FP_K}), "
+    "grams AS (SELECT doc_id, i, "
+    f"('0x' || substr(md5('fp:' || substr(t, i, {FP_K})), 1, 15))::BIGINT AS h "
+    "FROM pos), "
+    "wmin AS (SELECT doc_id, MIN(h) OVER (PARTITION BY doc_id ORDER BY i "
+    f"ROWS BETWEEN CURRENT ROW AND {FP_WINDOW - 1} FOLLOWING) AS fp FROM grams)"
+)

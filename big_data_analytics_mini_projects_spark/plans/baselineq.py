@@ -1,7 +1,4 @@
-"""Round-1 vector baselines, demoted out of the driver's 50-entry window
-(plans/catalog.py tier 3): unchanged since round 1 with full-hash green
-driver rows; their former window slots carry the round-3 precision fixes
-(qualityq, linalgq) instead. Helpers/constants come from plans/vectorq,
+"""Round-1 vector baselines. Helpers/constants come from plans/vectorq,
 which catalog order registers long before this module, so the import has no
 ordering side effect."""
 

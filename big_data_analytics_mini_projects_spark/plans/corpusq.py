@@ -2,9 +2,10 @@
 bigram language-model counts, SCD2 interval construction, weighted reservoir
 sampling, int8 embedding quantization, Bloom-filter join pruning, per-label
 z-score normalization, and key-skew profiling — shapes a training-data
-pipeline runs at 100 TB that the earlier modules don't cover. (The two
-late-round QA twins, PMI collocations and chi-square drift, live in
-plans/qaq.py for driver-window ordering reasons.)
+pipeline runs at 100 TB that the earlier modules don't cover. (PMI
+collocations and chi-square drift live in plans/qaq.py, whose place in
+plans/catalog.py's import order sets their catalog position and cache
+family.)
 
 Scale notes per query:
 - `bigram_lm_successors`: adjacent pairs are the lambda-free zip of two
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64, h64_sql
 from ..sources.tables import load_table, spread
-from ..functions.text import ngrams, round_stable, sql_round_stable, tokens
+from ..functions.text import SQL_BIGRAM_PAIRS, ngrams, round_stable, sql_round_stable, tokens
 from .registry import register
 
 BIGRAM_TOP_HEADS = 20
@@ -43,11 +44,7 @@ Q_LEVELS = 255  # int8 code book: 0..255
 @register(
     "bigram_lm_successors",
     oracle=(
-        "WITH toks AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), "
-        "x -> x <> '') AS t FROM documents), "
-        "pairs AS (SELECT unnest(CASE WHEN len(t) >= 2 THEN "
-        "list_transform(range(1, len(t)), i -> struct_pack(w1 := t[i], w2 := t[i+1])) "
-        "ELSE []::STRUCT(w1 VARCHAR, w2 VARCHAR)[] END) AS pr FROM toks), "
+        f"WITH {SQL_BIGRAM_PAIRS}, "
         "bi AS (SELECT pr.w1 AS w1, pr.w2 AS w2, COUNT(*) AS cnt "
         "FROM pairs GROUP BY 1, 2), "
         "tot AS (SELECT w1, SUM(cnt) AS total FROM bi GROUP BY w1), "

@@ -20,14 +20,13 @@ from ..operators.curation import (
 )
 from ..operators.graphs import triangle_count
 from ..functions.hashing import h64
-from ..functions.text import round_stable, sql_round_stable, tokens
+from ..functions.text import round_stable, sql_round_stable, sql_tokens, tokens
 from ..operators.similarity import jaccard_prefix_pairs, ngram_shingles
 from ..sources.tables import load_table, spread
 from .registry import register
 
 _SQL_TOKS = (
-    "tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), "
-    "x -> x <> '') AS toks FROM documents)"
+    f"tarr AS (SELECT doc_id, {sql_tokens('text')} AS toks FROM documents)"
 )
 
 

@@ -1,7 +1,6 @@
 """Decision-support join shapes rounding out the TPC-H family (beyond-
 reference, round 3): Q4 (EXISTS -> semi join) and Q13 (outer-join customer
-distribution). Registered in catalog tier 2 — the last two round-3 window
-slots (see plans/catalog.py ordering contract).
+distribution).
 """
 
 from __future__ import annotations

@@ -28,6 +28,8 @@ from ..operators.vector import _dot, prepare_vectors
 from ..functions.text import (
     round_stable,
     sql_round_stable,
+    sql_tokens_ws,
+    sql_trigram_shingles,
     tokenize_ws,
     tokens,
 )
@@ -46,26 +48,21 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TOPK = 5
 
-_SQL_SHARD_SHINGLES = """
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents),
-sh AS (SELECT DISTINCT doc_id, shingle FROM (
-  SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN
-    list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-    ELSE []::VARCHAR[] END) AS shingle FROM tarr)),
+_SQL_SHARD_SHINGLES = f"""
+{sql_trigram_shingles('sh', 'documents')},
 freq AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY shingle),
 keep AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN freq USING (shingle)
-         WHERE df <= {df_cap}),
+         WHERE df <= {INC_DF_CAP}),
 sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
 common AS (SELECT s.doc_id AS new_doc, c.doc_id AS corpus_doc, COUNT(*) AS n_common
            FROM keep s JOIN keep c USING (shingle)
-           WHERE s.doc_id % {m} = 0 AND c.doc_id % {m} <> 0
+           WHERE s.doc_id % {SHARD_MOD} = 0 AND c.doc_id % {SHARD_MOD} <> 0
            GROUP BY s.doc_id, c.doc_id),
 jac AS (SELECT new_doc, corpus_doc, n_common,
         CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) AS j
         FROM common JOIN sizes sa ON new_doc = sa.doc_id
         JOIN sizes sb ON corpus_doc = sb.doc_id)
-""".format(df_cap=INC_DF_CAP, m=SHARD_MOD)
+"""
 
 
 @register(
@@ -246,9 +243,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "bm25_top_terms",
     oracle=(
-        "WITH toks AS (SELECT doc_id, word FROM (SELECT doc_id, "
-        "unnest(string_split(lower(text), ' ')) AS word FROM documents) "
-        "WHERE word <> ''), "
+        f"WITH toks AS ({sql_tokens_ws()}), "
         "tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM toks GROUP BY doc_id, word), "
         "dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id), "
         "dfreq AS (SELECT word, COUNT(DISTINCT doc_id) AS dfreq FROM toks GROUP BY word), "

@@ -1,9 +1,6 @@
 """Privacy / model-inference curation queries (beyond-reference §2.13):
 PII redaction and broadcast-weight quality-classifier scoring — the two
 curation stages a training-data pipeline runs between dedup and packing.
-
-Registered LATE in the catalog (round-4 tail): first driver verdict due in
-the ROUND-5 window together with tpchfull/similarityq.
 """
 
 from __future__ import annotations
@@ -42,8 +39,8 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Classifier weights — stand-ins for a trained quality model's parameters;
 #: broadcast to executors exactly like real model weights would be.
-#: Values live in plans/shared.py (round-8 window decoupling; round11q's
-#: quality_threshold_sweep shares them without importing this module).
+#: Values live in plans/shared.py: round11q's quality_threshold_sweep
+#: shares them without importing this module.
 from .shared import _W_AVGLEN, _W_BIAS, _W_NTOK, _W_STOP  # noqa: E402
 
 

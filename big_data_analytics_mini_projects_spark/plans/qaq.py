@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.text import ngrams, round_stable, sql_round_stable, tokens
+from ..functions.text import SQL_BIGRAM_PAIRS, ngrams, round_stable, sql_round_stable, tokens
 from ..operators.multimodal import decode_png_stats, synth_png_payloads
 from ..sources.tables import load_table, spread
 from ..streaming.stream_stats import events_stream, run_available_now
@@ -97,11 +97,7 @@ PMI_TOPK = 30
 @register(
     "pmi_word_pairs",
     oracle=(
-        "WITH toks AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), "
-        "x -> x <> '') AS t FROM documents), "
-        "pairs AS (SELECT unnest(CASE WHEN len(t) >= 2 THEN "
-        "list_transform(range(1, len(t)), i -> struct_pack(w1 := t[i], w2 := t[i+1])) "
-        "ELSE []::STRUCT(w1 VARCHAR, w2 VARCHAR)[] END) AS pr FROM toks), "
+        f"WITH {SQL_BIGRAM_PAIRS}, "
         "bi AS (SELECT pr.w1 AS w1, pr.w2 AS w2, COUNT(*) AS c12 "
         "FROM pairs GROUP BY 1, 2), "
         "uni AS (SELECT pr.w1 AS w, COUNT(*) AS c FROM pairs GROUP BY 1), "

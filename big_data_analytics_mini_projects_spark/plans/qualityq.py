@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from ..functions.text import round_stable
+from ..functions.text import round_stable, sql_tokens
 from ..operators.aggregates import dsum
 from ..operators.textops import STOPWORDS, text_quality, token_counts
 from ..sources.tables import load_table
@@ -28,7 +28,7 @@ def _fr4(x: str) -> str:
     "text_quality",
     oracle=(
         "WITH t AS (SELECT doc_id, "
-        "list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks FROM documents), "
+        f"{sql_tokens('text')} AS toks FROM documents), "
         "m AS (SELECT doc_id, len(toks) AS n_tokens, "
         "len(list_distinct(toks)) AS n_types, "
         "list_sum(list_transform(toks, x -> length(x))) AS char_sum, "
@@ -70,7 +70,7 @@ WITH kept AS (
 m AS (
   SELECT doc_id, len(toks) AS n_tokens, len(list_distinct(toks)) AS n_types,
          len(list_filter(toks, x -> list_contains({_SQL_STOP_ARR}, x))) AS n_stop
-  FROM (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+  FROM (SELECT doc_id, {sql_tokens('text')} AS toks
         FROM kept) WHERE len(toks) > 0),
 q AS (
   -- floor(x*1e4+.5)/1e4, matching functions/text.round4_stable: the only
@@ -86,7 +86,7 @@ s AS (
   WHERE ('0x' || substr(md5('corpus:' || CAST(doc_id AS VARCHAR)), 1, 1))::BIGINT < 8),
 t AS (
   SELECT source, quality_score,
-         len(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS ws,
+         len({sql_tokens('text')}) AS ws,
          len(regexp_extract_all(lower(text), '([a-z]+|[0-9]+|[^a-z0-9\\s])', 1)) AS bpe
   FROM s)
 SELECT source, COUNT(*) AS n_docs,

@@ -1,12 +1,5 @@
-"""Round-7-extension-authored queries for the ROUND-8 driver window (the
-forward-batch path round7q/round9q established: registered at the catalog
-TAIL so the live round-7 rotation stays byte-identical; covered from day one
-by the local differential gate and the 10x/100x ledger, first driver verdict
-next rotation). Counted against ROUND 8's <= 15 new-query budget together
-with round9q's three.
-
-The batch closes out the round-8 queued candidates and rounds
-the training-data-pipeline surface:
+"""Retention, convergence, recall, vocabulary and late-data queries that
+round out the training-data-pipeline surface:
 
 - ``retention_value_bands``   — the queue's "per-cohort retention joined to
   quality signals": weekly cohorts segmented by the user's first-week spend
@@ -39,6 +32,7 @@ from ..functions.hashing import h64, h64_sql
 from ..functions.text import (
     round_stable,
     sql_round_stable,
+    sql_tokens,
     sql_tokens_ws,
     tokenize_ws,
     tokens,
@@ -204,7 +198,7 @@ CAP_SWEEP = (8, 64, 512)
 
 _SQL_CAP_BASE = f"""
 t AS (SELECT source, doc_id,
-      len(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS n_tok,
+      len({sql_tokens('text')}) AS n_tok,
       {h64_sql('doc_id', 'cap')} AS h FROM documents),
 r AS (SELECT *, row_number() OVER (PARTITION BY source
       ORDER BY h ASC, doc_id ASC) AS rk FROM t),

@@ -1,11 +1,4 @@
-"""Round-7-continuation-authored queries for the ROUND-8 driver window
-(the forward-batch path round7q/round9q/round10q established: registered at
-the catalog TAIL so the live round-7 rotation stays byte-identical; covered
-from day one by the local differential gate and the 10x/100x ledger, first
-driver verdict next rotation). These five COMPLETE round 8's <= 15 new-query
-budget (round9q 3 + round10q 7 + round11q 5 = 15).
-
-The batch closes the remaining round-8 queued candidates and adds two
+"""Watermark, cross-table retention and recall queries, and two
 quality-accounting curves for the dedup/curation surface:
 
 - ``watermark_sensitivity_hourly`` — the queue's "replay twin of
@@ -34,9 +27,20 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..caching import checkpoint_shared, persist_tracked
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import round_stable, sql_round_stable, tokens
+from ..functions.text import (
+    round_stable,
+    sql_round_stable,
+    sql_token_count,
+    sql_trigram_shingles,
+    tokens,
+)
 from ..operators.aggregates import dsum, sql_dsum
-from ..operators.similarity import lsh_bands, lsh_candidates, minhash_signatures
+from ..operators.similarity import (
+    lsh_bands,
+    lsh_candidates,
+    minhash_signatures,
+    sql_minhash_sigs,
+)
 from ..operators.vector import _dot, cosine_topk, hyperplane_buckets
 from ..sources.tables import load_table
 from .registry import register
@@ -54,7 +58,6 @@ from .similarityq import (
     NUM_HASHES,
     ROWS_PER_BAND,
     _SQL_BANDS,
-    _SQL_H64_SH,
     _SQL_SCORED,
     _shingles,
 )
@@ -167,7 +170,7 @@ RQ_BANDS = 4
 
 _SQL_RQB = f"""
 d AS (SELECT {h64_sql('doc_id', 'rqb')} % {RQ_BUCKETS} AS bucket,
-      len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tok
+      {sql_token_count('text')} AS n_tok
       FROM documents),
 bs AS (SELECT bucket, CAST(SUM(n_tok) AS BIGINT) AS sum_tok FROM d GROUP BY bucket),
 bd AS (SELECT bucket, ((rn - 1) * {RQ_BANDS}) // cnt AS band FROM
@@ -444,15 +447,8 @@ JACC_T_NUM, JACC_T_DEN = 3, 5
 LSH_EVAL_LIMIT = 500
 
 _SQL_SHX_SLICE = f"""
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents WHERE doc_id < {LSH_EVAL_LIMIT}),
-shx AS (SELECT DISTINCT doc_id, shingle FROM (
-  SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN
-    list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-    ELSE []::VARCHAR[] END) AS shingle FROM tarr)),
-seeds AS (SELECT unnest(range({NUM_HASHES})) AS seed),
-sigs AS (SELECT doc_id, seed, MIN({_SQL_H64_SH}) AS mh
-         FROM shx CROSS JOIN seeds GROUP BY doc_id, seed)
+{sql_trigram_shingles('shx', f'documents WHERE doc_id < {LSH_EVAL_LIMIT}')},
+{sql_minhash_sigs(NUM_HASHES, 'shx', 'shingle')}
 """
 
 _SQL_LSH_TRUTH = f"""

@@ -1,13 +1,5 @@
-"""Round-7-continuation-authored queries for the ROUND-9 driver window
-(the established forward-batch path: registered at the catalog TAIL so the
-live round-7 rotation stays byte-identical; covered from day one by the
-local differential gate and the 10x/100x ledger, first driver verdict when
-round 9's window rotates). These seven count against ROUND 9's <= 15
-new-query budget (8 left after them).
-
-The batch extends the tuning-curve / quality-accounting surface the round-8
-batches established — every query is a measurement a 100 TB pipeline runs
-BEFORE committing to a parameter:
+"""Tuning curves and quality accounting: every query is a measurement a
+100 TB pipeline runs BEFORE committing to a parameter:
 
 - ``pack_efficiency_sweep``       — pad-waste vs context length (512/1024/
   2048/4096) for concat-then-chunk packing: per-shard totals only, the
@@ -38,22 +30,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..caching import checkpoint_shared, persist_tracked
-from ..functions.text import round_stable, sql_round_stable, tokens
+from ..functions.text import round_stable, sql_round_stable, sql_tokens, tokens
 from ..operators.aggregates import dsum, sql_dsum
 from ..operators.similarity import minhash_signatures
 from ..sources.tables import load_table, spread
 from .registry import register
 from .round11q import LSH_EVAL_LIMIT, _SQL_SHX_SLICE, slice_pair_inter
-from .shared import embedding_vectors
+from .shared import PACK_SHARD, embedding_vectors
 from .similarityq import (
     NUM_HASHES,
     _SQL_BANDS,
+    _SQL_REACH_LABELS,
     _SQL_SCORED,
     _SQL_SH_SIGS,
     _SQL_SH_SIGS_WIDE,
     _cc_labels,
     _scored_pairs,
     _shingles,
+    _sql_reach,
 )
 
 # --------------------------------------------------------------------------
@@ -61,7 +55,6 @@ from .similarityq import (
 # --------------------------------------------------------------------------
 
 CTX_SWEEP = (512, 1024, 2048, 4096)
-PACK_SHARD = 200  # docs per packing shard — pack_sequences_2048's constant
 
 
 def _sql_pack_oracle() -> str:
@@ -79,7 +72,7 @@ def _sql_pack_oracle() -> str:
     )
     return (
         "WITH d AS (SELECT doc_id, "
-        "len(list_filter(string_split(lower(text), ' '), x -> x <> '')) "
+        f"len({sql_tokens('text')}) "
         "AS n_tok FROM documents), "
         f"s AS (SELECT doc_id // {PACK_SHARD} AS shard, "
         "CAST(SUM(n_tok) AS BIGINT) AS t FROM d GROUP BY shard) "
@@ -189,21 +182,6 @@ def temperature_mix_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cluster_size_histogram
 # --------------------------------------------------------------------------
 
-#: CC label CTEs over the scored pairs (mirrors similarityq's cluster tail;
-#: MAT variant for the scale form — same ols_words_pvalues lesson).
-_SQL_CC_LAB = (
-    "edges AS (SELECT ka AS a, kb AS b FROM scored "
-    "UNION SELECT kb, ka FROM scored), "
-    "nodes AS (SELECT DISTINCT a AS n FROM edges), "
-    "reach(n, m) AS (SELECT n, n FROM nodes UNION "
-    "SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a), "
-    "lab AS (SELECT n AS doc_id, MIN(m) AS cluster FROM reach GROUP BY n)"
-)
-_SQL_CC_LAB_MAT = _SQL_CC_LAB.replace(
-    "edges AS (SELECT", "edges AS MATERIALIZED (SELECT", 1
-)
-assert _SQL_CC_LAB_MAT != _SQL_CC_LAB
-
 _SQL_HIST_TAIL = (
     "cs AS (SELECT cluster, COUNT(*) AS size FROM lab GROUP BY cluster), "
     "h AS (SELECT size, COUNT(*) AS n_clusters FROM cs GROUP BY size) "
@@ -218,11 +196,11 @@ _SQL_HIST_TAIL = (
     "cluster_size_histogram",
     oracle=(
         f"WITH RECURSIVE {_SQL_SH_SIGS}, {_SQL_BANDS}, {_SQL_SCORED}, "
-        f"{_SQL_CC_LAB}, {_SQL_HIST_TAIL}"
+        f"{_sql_reach(False)}, lab AS ({_SQL_REACH_LABELS}), {_SQL_HIST_TAIL}"
     ),
     scale_oracle=(
         f"WITH RECURSIVE {_SQL_SH_SIGS_WIDE}, {_SQL_BANDS}, {_SQL_SCORED}, "
-        f"{_SQL_CC_LAB_MAT}, {_SQL_HIST_TAIL}"
+        f"{_sql_reach(True)}, lab AS ({_SQL_REACH_LABELS}), {_SQL_HIST_TAIL}"
     ),
     doc="Near-dup cluster size distribution — the dedup IMPACT report "
     "(how much of the corpus sits in 2-doc pairs vs big boilerplate "

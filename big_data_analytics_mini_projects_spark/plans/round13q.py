@@ -1,7 +1,5 @@
-"""Round-9-budget forward batch #1 (authored in round 8; registered at the
-catalog TAIL so the round-8 driver window is untouched).
-
-Three queries extending the tokenizer-training / mixing / quality families:
+"""Three queries extending the tokenizer-training / mixing / quality
+families:
 
 - ``streaming_mix_shares``  — stateful streaming twin of round12q's
   temperature_mix_rates: per-source cumulative token totals through
@@ -36,7 +34,14 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..caching import checkpoint_shared, persist_tracked
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
+from ..functions.text import (
+    ngram_text,
+    ngrams,
+    round_stable,
+    sql_round_stable,
+    sql_tokens,
+    tokens,
+)
 from ..sources.readers import local_relation
 from ..sources.tables import load_table, spread
 from .registry import register
@@ -287,8 +292,7 @@ DUP_2GRAM_MAX = 0.20
 @register(
     "repetition_quality_rules",
     oracle=(
-        "WITH t AS (SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), "
-        "x -> x <> '')) AS word FROM documents), "
+        f"WITH t AS (SELECT doc_id, unnest({sql_tokens('text')}) AS word FROM documents), "
         "wc AS (SELECT doc_id, word, COUNT(*) AS c FROM t GROUP BY doc_id, word), "
         "agg AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_words, "
         "CAST(COUNT(*) AS BIGINT) AS n_distinct, "
@@ -296,8 +300,7 @@ DUP_2GRAM_MAX = 0.20
         "top AS (SELECT doc_id, c * length(word) AS top_chars FROM ("
         "SELECT doc_id, word, c, row_number() OVER (PARTITION BY doc_id "
         "ORDER BY c DESC, word ASC) AS rk FROM wc) WHERE rk = 1), "
-        "tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), "
-        "x -> x <> '') AS toks FROM documents), "
+        f"tarr AS (SELECT doc_id, {sql_tokens('text')} AS toks FROM documents), "
         "g2 AS (SELECT doc_id, unnest(list_transform(range(1, len(toks)), "
         "i -> array_to_string(toks[i:i+1], ' '))) AS gram FROM tarr "
         "WHERE len(toks) >= 2), "
@@ -410,7 +413,7 @@ def repetition_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "span_novelty_scan",
     oracle=(
         "WITH tarr AS (SELECT doc_id, "
-        "list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks "
+        f"{sql_tokens('text')} AS toks "
         "FROM documents), "
         f"sp AS (SELECT doc_id, unnest(range(0, len(toks) - {ES_K - 1})) AS pos, "
         "toks FROM tarr), "
@@ -484,7 +487,7 @@ PCTS = (25, 50, 75, 95)
     "doc_length_percentiles_by_source",
     oracle=(
         "WITH t AS (SELECT source, doc_id, "
-        "len(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS n_tok "
+        f"len({sql_tokens('text')}) AS n_tok "
         "FROM documents), "
         "r AS (SELECT source, n_tok, "
         "row_number() OVER (PARTITION BY source ORDER BY n_tok, doc_id) AS rn, "
@@ -547,7 +550,7 @@ def doc_length_percentiles_by_source(spark: SparkSession, sf_dir: str) -> DataFr
     "dedup_canonical_quality",
     oracle=(
         "WITH t AS (SELECT doc_id, text, "
-        "list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks "
+        f"{sql_tokens('text')} AS toks "
         "FROM documents), "
         f"g AS (SELECT doc_id, text, md5(array_to_string(toks[1:{ES_K}], ' ')) "
         f"AS grp FROM t WHERE len(toks) >= {ES_K}), "

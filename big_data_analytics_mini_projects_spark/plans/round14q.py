@@ -33,8 +33,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import checkpoint_shared, persist_tracked
-from ..functions.text import tokens
-from ..operators.similarity import lsh_bands, minhash_signatures, ngram_shingles
+from ..functions.text import sql_trigram_shingles, tokens
+from ..operators.similarity import (
+    lsh_bands,
+    minhash_signatures,
+    ngram_shingles,
+    sql_lsh_bands,
+    sql_minhash_sigs_wide,
+)
 from ..sources.tables import load_table, spread
 from .registry import register
 
@@ -81,6 +87,33 @@ def _doc_sigs_bands(
     return docs.select("doc_id"), sigs, bands
 
 
+def _state_candidates(delta_b: DataFrame, state_b: DataFrame) -> DataFrame:
+    """(doc_d, doc_s): each delta doc and each state doc it shares an LSH
+    band bucket with, from two ``bands`` frames."""
+    return (
+        delta_b.select(F.col("doc_id").alias("doc_d"), "band", "band_sig")
+        .join(
+            state_b.select(F.col("doc_id").alias("doc_s"), "band", "band_sig"),
+            ["band", "band_sig"],
+        )
+        .select("doc_d", "doc_s")
+        .distinct()
+    )
+
+
+def _within_candidates(bands: DataFrame) -> DataFrame:
+    """(doc_b, doc_a), doc_a < doc_b: the pairs of docs of one ``bands``
+    frame that share a band bucket."""
+    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
+    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
+    return (
+        a.join(b, ["band", "band_sig"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_b", "doc_a")
+        .distinct()
+    )
+
+
 def _verified_min_keeper(
     cand: DataFrame, sigs: DataFrame, d_col: str, k_col: str
 ) -> DataFrame:
@@ -106,22 +139,9 @@ def _verified_min_keeper(
 #: pass, no seeds cross-join scatter) + banding — byte-compatible with the
 #: engine's h64/lsh_bands scheme and with round6q's _SQL_XS_SIGS_WIDE regime.
 _SQL_SC_HEAD = f"""
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents),
-shx AS (SELECT DISTINCT doc_id, shingle FROM (
-  SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN
-    list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-    ELSE []::VARCHAR[] END) AS shingle FROM tarr)),
-sigw AS MATERIALIZED (SELECT doc_id, {", ".join(
-    f"MIN(('0x' || substr(md5('{s}:' || shingle), 1, 15))::BIGINT) AS mh{s}"
-    for s in range(SC_HASHES)
-)} FROM shx GROUP BY doc_id),
-sigs AS MATERIALIZED (SELECT doc_id, unnest(range({SC_HASHES})) AS seed,
-         unnest([{", ".join(f"mh{s}" for s in range(SC_HASHES))}]) AS mh
-         FROM sigw),
-bands AS MATERIALIZED (SELECT doc_id, seed // {SC_ROWS} AS band,
-          md5(string_agg(CAST(mh AS VARCHAR), '-' ORDER BY seed)) AS band_sig
-          FROM sigs GROUP BY doc_id, band)"""
+{sql_trigram_shingles('shx', 'documents')},
+{sql_minhash_sigs_wide(SC_HASHES, True)},
+{sql_lsh_bands(SC_ROWS, True)}"""
 
 
 def _sql_scored(cand_cte: str, d: str, k: str) -> str:
@@ -175,29 +195,14 @@ LEFT JOIN m_d ON d.doc_id = m_d.doc_b"""
 )
 def dedup_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids, sigs, bands = _doc_sigs_bands(spark, sf_dir)
-    state_b = bands.filter(F.col("doc_id") % 2 == 0).select(
-        F.col("doc_id").alias("doc_s"), "band", "band_sig"
-    )
     delta_b = bands.filter(F.col("doc_id") % 2 == 1)
-    cand_s = (
-        delta_b.select(F.col("doc_id").alias("doc_d"), "band", "band_sig")
-        .join(state_b, ["band", "band_sig"])
-        .select("doc_d", "doc_s")
-        .distinct()
-    )
+    cand_s = _state_candidates(delta_b, bands.filter(F.col("doc_id") % 2 == 0))
     m_s = (
         _verified_min_keeper(cand_s, sigs, "doc_d", "doc_s")
         .withColumnRenamed("doc_d", "doc_id")
         .withColumnRenamed("keeper", "k_s")
     )
-    a = delta_b.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
-    b = delta_b.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
-    cand_d = (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_b", "doc_a")
-        .distinct()
-    )
+    cand_d = _within_candidates(delta_b)
     m_d = (
         _verified_min_keeper(cand_d, sigs, "doc_b", "doc_a")
         .withColumnRenamed("doc_b", "doc_id")
@@ -303,15 +308,7 @@ def dedup_compaction_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         co_ids = ids.filter(F.col("doc_id") % SC_STEPS == t)
         co_b = bands.filter(F.col("doc_id") % SC_STEPS == t)
         if state is not None:
-            state_b = bands.join(state, "doc_id").select(
-                F.col("doc_id").alias("doc_s"), "band", "band_sig"
-            )
-            cand_s = (
-                co_b.select(F.col("doc_id").alias("doc_d"), "band", "band_sig")
-                .join(state_b, ["band", "band_sig"])
-                .select("doc_d", "doc_s")
-                .distinct()
-            )
+            cand_s = _state_candidates(co_b, bands.join(state, "doc_id"))
             m_s = (
                 _verified_min_keeper(cand_s, sigs, "doc_d", "doc_s")
                 .withColumnRenamed("doc_d", "doc_id")
@@ -320,14 +317,7 @@ def dedup_compaction_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             with_state = co_ids.join(m_s, "doc_id", "left")
         else:
             with_state = co_ids.withColumn("k_s", F.lit(None).cast("long"))
-        a = co_b.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
-        b = co_b.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
-        cand_d = (
-            a.join(b, ["band", "band_sig"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_b", "doc_a")
-            .distinct()
-        )
+        cand_d = _within_candidates(co_b)
         m_d = (
             _verified_min_keeper(cand_d, sigs, "doc_b", "doc_a")
             .withColumnRenamed("doc_b", "doc_id")

@@ -1,7 +1,4 @@
-"""Round-10-budget forward batch (authored in round 9; registered at the
-catalog TAIL so the round-9 driver window is untouched).
-
-Six queries extending the data-selection / tokenizer / dedup / multimodal
+"""Six queries extending the data-selection / tokenizer / dedup / multimodal
 / mixing families a large-scale training-data pipeline needs:
 
 - ``dsir_importance_weights`` — DSIR-style data selection (Xie et al. 2023,
@@ -52,7 +49,14 @@ from pyspark.sql import functions as F
 
 from ..caching import checkpoint_shared, persist_tracked
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
+from ..functions.text import (
+    ngram_text,
+    ngrams,
+    round_stable,
+    sql_round_stable,
+    sql_tokens,
+    tokens,
+)
 from ..operators.aggregates import dsum, sql_dsum
 from ..sources.readers import local_relation
 from ..sources.tables import load_table, spread
@@ -79,7 +83,7 @@ _LOGR = (
     "dsir_importance_weights",
     oracle=(
         "WITH tarr AS (SELECT doc_id, source, "
-        "list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks "
+        f"{sql_tokens('text')} AS toks "
         "FROM documents), "
         "g AS (SELECT doc_id, source, "
         + h64_sql("gram", "dsir")
@@ -247,7 +251,7 @@ def bpe_fertility_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming_dedup_docs",
     oracle=(
         "WITH t AS (SELECT doc_id, "
-        "list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks "
+        f"{sql_tokens('text')} AS toks "
         "FROM documents), "
         f"g AS (SELECT doc_id, md5(array_to_string(toks[1:{ES_K}], ' ')) AS h "
         f"FROM t WHERE len(toks) >= {ES_K}) "
@@ -376,7 +380,7 @@ EPOCH_MAX = 2.5      # per-source epoch cap (data-constrained scaling rule)
     "epoch_schedule_budget",
     oracle=(
         "WITH d AS (SELECT source, "
-        "len(list_filter(string_split(lower(text), ' '), x -> x <> '')) "
+        f"len({sql_tokens('text')}) "
         "AS n_tok FROM documents), "
         "tot AS (SELECT source, CAST(SUM(n_tok) AS BIGINT) AS m FROM d "
         "GROUP BY source), "

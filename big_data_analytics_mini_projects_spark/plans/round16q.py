@@ -1,7 +1,4 @@
-"""Round-10 fresh batch (3 of the <=9 remaining after round15q consumed 6
-of the round-10 budget; registered at the catalog TAIL as a forward batch —
-the round-10 window is fully consumed clearing the verification debt, the
-round-15q precedent): the round-9 verdict's three named asks.
+"""Perceptual-hash image dedup, SemDeDup cells and dedup-state tombstones.
 
 - ``dedup_image_phash`` (verdict item 2) — perceptual-hash image near-dup,
   the multimodal leg of the dedup story: the REAL BMP byte path
@@ -51,7 +48,9 @@ from .round14q import (
     _SQL_SC_HEAD,
     _doc_sigs_bands,
     _sql_scored,
+    _state_candidates,
     _verified_min_keeper,
+    _within_candidates,
 )
 from .shared import NEAR_MIN_COS
 
@@ -474,15 +473,8 @@ def _orphan_dispositions(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands 3x and sigs 2x, and the leaf keeps every consumer's analyzed tree
     flat while the memo preserves plan identity across repeats/siblings."""
     _ids, sigs, bands = _doc_sigs_bands(spark, sf_dir)
-    state_b = bands.filter(F.col("doc_id") % 2 == 0).select(
-        F.col("doc_id").alias("doc_s"), "band", "band_sig"
-    )
-    delta_b = bands.filter(F.col("doc_id") % 2 == 1)
-    cand_s = (
-        delta_b.select(F.col("doc_id").alias("doc_d"), "band", "band_sig")
-        .join(state_b, ["band", "band_sig"])
-        .select("doc_d", "doc_s")
-        .distinct()
+    cand_s = _state_candidates(
+        bands.filter(F.col("doc_id") % 2 == 1), bands.filter(F.col("doc_id") % 2 == 0)
     )
     vp = persist_tracked(_verified_pairs(cand_s, sigs, "doc_d", "doc_s"))
     old = vp.groupBy("doc_d").agg(F.min("doc_s").alias("k_old"))
@@ -495,15 +487,7 @@ def _orphan_dispositions(spark: SparkSession, sf_dir: str) -> DataFrame:
         old.filter(F.col("k_old") % TOMB_MOD == 0).join(surv, "doc_d", "left")
     )
     po = orph.filter(F.col("k_surv").isNull()).select(F.col("doc_d").alias("doc_id"))
-    pb = bands.join(po, "doc_id")
-    a = pb.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
-    b = pb.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
-    cand_o = (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_b", "doc_a")
-        .distinct()
-    )
+    cand_o = _within_candidates(bands.join(po, "doc_id"))
     m_o = (
         _verified_min_keeper(cand_o, sigs, "doc_b", "doc_a")
         .withColumnRenamed("doc_b", "doc_d")

@@ -1,7 +1,5 @@
-"""Round-10 fresh batch, part 2 (12/15 of the round-10 budget with round15q
-×6 + round16q ×3; registered at the catalog TAIL as a forward batch for the
-round-11 window): three queries deepening this round's
-arcs, each the natural next production question after its round16q sibling.
+"""Three queries, each the natural next production question after its
+round16q sibling.
 
 - ``dedup_image_ahash`` — SECOND perceptual fingerprint + agreement audit:
   the 60-bit average hash (6x10 cell grid, bit = cell gray strictly above

@@ -1,7 +1,4 @@
-"""Round-10 fresh batch, part 3 (13/15 of the round-10 budget; catalog-TAIL
-forward batch for the round-11 window).
-
-``pack_with_salvage`` — the production bridge between the span-level dedup
+"""``pack_with_salvage`` — the production bridge between the span-level dedup
 family and the sequence-packing family: after ExactSubstr-style span dedup
 marks duplicated token intervals, a real pipeline does not drop whole
 documents — it SALVAGES the clean remainders (the ExactSubstr paper's
@@ -22,14 +19,12 @@ context 2048 (pack_efficiency_sweep's closed form: pad = ceil(T/C)*C - T
 per shard). The three rows' token totals answer "how many tokens does
 salvage recover over drop-doc, and what does packing them cost".
 
-The duplicate-span machinery is BYTE-IDENTICAL to dedup_exact_substring:
-the oracle REBUILDS round7q's ``_SQL_ES`` CTE from the same primitives
-(h64_sql / ES_K) with byte-equality pinned by test — deliberately not
-imported, because a module-level round7q/round12q import would force 31
-green queries to register first (importing a plan module registers its
-queries, so it would reorder the catalog) —
-and the engine rebuilds the same chain from the shared helpers (ngrams /
-h64 / ES_K). The raw-vs-salvage token gap is reconciled against
+The duplicate-span machinery is dedup_exact_substring's: the oracle opens
+with the same ``_SQL_ES`` CTE chain and packs in the same PACK_SHARD shards,
+both imported from plans/shared.py (importing round7q or round12q would
+register their queries first and so reorder the catalog), and the engine
+builds the same span hashes from the shared helpers (ngrams / h64 / ES_K).
+The raw-vs-salvage token gap is reconciled against
 dedup_exact_substring's per-doc dup_tokens (bracketed by the sub-minimum
 fragment bound) in tests/test_round18q.py.
 """
@@ -40,45 +35,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
-from ..functions.hashing import h64, h64_sql
+from ..functions.hashing import h64
 from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
 from ..sources.tables import load_table, spread
 from .registry import register
-from .shared import ES_K
+from .shared import _SQL_ES, ES_K, PACK_SHARD
 
 SALVAGE_MIN = ES_K   # fragments shorter than the span unit are discarded
 SALVAGE_CTX = 2048   # the pack_sequences_2048 context length
-PACK_SHARD = 200     # round12q.PACK_SHARD — pinned equal by test, NOT
-                     # imported: a module-level round12q import would drag
-                     # similarityq+round11q+round12q (22 queries) into any
-                     # future driver window containing this module
-
-#: The dedup_exact_substring span/dup/island CTE chain, rebuilt here from
-#: the SAME primitives (h64_sql, ES_K) rather than imported from round7q —
-#: a module-level round7q import would force its 9 queries to register
-#: first (importing a plan module registers its queries, so it would
-#: reorder the catalog). Byte-equality with
-#: round7q._SQL_ES is pinned in tests/test_round18q.py (test-time imports
-#: carry no registration-order coupling).
-_SQL_ES = f"""
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents),
-sp AS (SELECT doc_id, len(toks) AS n_tokens,
-       unnest(range(0, len(toks) - {ES_K - 1})) AS pos, toks FROM tarr),
-sh AS (SELECT doc_id, n_tokens, pos,
-       {h64_sql(f"array_to_string(toks[pos + 1:pos + {ES_K}], ' ')", 'es')} AS h
-       FROM sp),
-dup AS (SELECT h FROM (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM sh GROUP BY h)
-        WHERE nd >= 2),
-m AS (SELECT doc_id, n_tokens, pos FROM sh JOIN dup USING (h)),
-isl AS (SELECT doc_id, n_tokens, pos,
-        SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
-          OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        FROM (SELECT *, MAX(pos + {ES_K - 1}) OVER (PARTITION BY doc_id ORDER BY pos
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end FROM m)),
-cov AS (SELECT doc_id, n_tokens, island, MAX(pos) - MIN(pos) + {ES_K} AS covered
-        FROM isl GROUP BY doc_id, n_tokens, island)
-"""
 
 
 def _sql_policy(policy: str, t: str) -> str:
@@ -160,8 +124,8 @@ def pack_with_salvage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-scale arrays (measured: AGGREGATE_OUT_OF_MEMORY -> green)
     dn = persist_tracked(d.select("doc_id", "n_tok"))
     # duplicate-span islands — the dedup_exact_substring chain over the
-    # shared helpers (round7q.py:387; not imported as code so that module
-    # stays untouched, but span/hash/merge construction is identical)
+    # shared helpers (round7q.exact_substring_stats), without its n_tokens
+    # column
     sp = d.select(
         "doc_id", F.posexplode(ngrams("toks", ES_K)).alias("pos", "span")
     ).select("doc_id", "pos", h64(ngram_text("span", ES_K), "es").alias("h"))

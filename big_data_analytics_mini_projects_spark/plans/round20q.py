@@ -1,7 +1,5 @@
-"""Round-11 fresh batch part 2 (9/15 of the round-11 budget with round19q
-×6; registered at the catalog TAIL as a forward batch for the round-12
-window — the round16q precedent): three queries deepening the round-11
-arcs, each the next production step its round19q sibling's docstring names.
+"""Three queries, each the next production step its round19q sibling's
+docstring names.
 
 - ``semdedup_two_level`` — HIERARCHICAL centroid assignment, the
   O(n*K) -> O(n*(K1 + K/K1)) step the auto-K docstring calls out as the
@@ -49,7 +47,14 @@ from ..operators.vector import _dot, prepare_vectors
 from ..sources.tables import load_table, spread
 from .pipelineq import K_CENTROIDS
 from .registry import register
-from .round14q import SC_MIN_AGREE, _SQL_SC_HEAD, _doc_sigs_bands, _sql_scored
+from .round14q import (
+    SC_MIN_AGREE,
+    _SQL_SC_HEAD,
+    _doc_sigs_bands,
+    _sql_scored,
+    _state_candidates,
+    _within_candidates,
+)
 from .round16q import TOMB_MOD, _assign_cells, _verified_pairs
 from .round19q import _SQL_AFP_CTES
 
@@ -322,15 +327,9 @@ def dedup_tombstone_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both its construction and the duplicate persist registration
     # (round-11 ADVICE).
     def _vps() -> DataFrame:
-        state_b = bands.filter(F.col("doc_id") % 2 == 0).select(
-            F.col("doc_id").alias("doc_s"), "band", "band_sig"
-        )
-        delta_b = bands.filter(F.col("doc_id") % 2 == 1)
-        cand_s = (
-            delta_b.select(F.col("doc_id").alias("doc_d"), "band", "band_sig")
-            .join(state_b, ["band", "band_sig"])
-            .select("doc_d", "doc_s")
-            .distinct()
+        cand_s = _state_candidates(
+            bands.filter(F.col("doc_id") % 2 == 1),
+            bands.filter(F.col("doc_id") % 2 == 0),
         )
         vp = persist_tracked(_verified_pairs(cand_s, sigs, "doc_d", "doc_s"))
         tstep = (F.col("doc_s") % TOMB_MOD == 0).cast("int") * (
@@ -359,15 +358,7 @@ def dedup_tombstone_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         po = ox.filter(F.col("k_surv").isNull()).select(
             F.col("doc_d").alias("doc_id")
         )
-        pb = bands.join(po, "doc_id")
-        a = pb.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
-        b = pb.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
-        cand_o = (
-            a.join(b, ["band", "band_sig"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_b", "doc_a")
-            .distinct()
-        )
+        cand_o = _within_candidates(bands.join(po, "doc_id"))
         m = (
             _verified_pairs(cand_o, sigs, "doc_b", "doc_a")
             .select("doc_b")

@@ -18,9 +18,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
+from ..functions.text import (
+    ngram_text,
+    ngrams,
+    round_stable,
+    sql_round_stable,
+    sql_token_count,
+    sql_tokens,
+    sql_trigram_shingles,
+    tokens,
+)
 from ..operators.aggregates import dsum, sql_dsum
 from ..operators.curation import normalize_url, sql_normalize_url
+from ..operators.similarity import sql_lsh_bands, sql_minhash_sigs_wide
+from ..operators.textops import SQL_WINNOW_MINS
 from ..operators.vector import (
     AUTO_MAX_BITS,
     AUTO_OCCUPANCY,
@@ -251,7 +262,7 @@ EVAL_MOD = 25  # ~4% of docs land in the eval split
         "WITH s AS (SELECT lang, "
         f"CASE WHEN {h64_sql('doc_id', 'ev')} % {EVAL_MOD} = 0 "
         "THEN 'eval' ELSE 'train' END AS split, "
-        "len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tok, "
+        f"{sql_token_count('text')} AS n_tok, "
         "n_chars FROM documents) "
         "SELECT lang, split, COUNT(*) AS n_docs, "
         "CAST(SUM(n_tok) AS BIGINT) AS sum_tok, "
@@ -357,8 +368,7 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "bpe_merge_step",
     oracle=(
-        "WITH words AS (SELECT unnest(list_filter(string_split(lower(text), ' '), "
-        "x -> x <> '')) AS word FROM documents), "
+        f"WITH words AS (SELECT unnest({sql_tokens('text')}) AS word FROM documents), "
         "pairs AS (SELECT unnest(list_transform(range(1, length(word)), "
         "i -> substr(word, i, 2))) AS pair FROM words WHERE length(word) >= 2), "
         "cnt AS (SELECT pair, COUNT(*) AS cnt FROM pairs GROUP BY pair) "
@@ -396,8 +406,7 @@ def bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_perplexity_bigram",
     oracle=(
-        "WITH tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), "
-        "x -> x <> '') AS toks FROM documents), "
+        f"WITH tarr AS (SELECT doc_id, {sql_tokens('text')} AS toks FROM documents), "
         "toks AS (SELECT doc_id, unnest(toks) AS word FROM tarr), "
         "grams AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 2 THEN "
         "list_transform(range(1, len(toks)), i -> array_to_string(toks[i:i+1], ' ')) "
@@ -468,19 +477,9 @@ def doc_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 WINNOW_DF_CAP = 20   # fingerprint document-frequency cap (hot-fp skew guard)
 WINNOW_MIN_SHARED = 8
 
-#: Winnowing fingerprint CTE — textually mirrors textanalysisq's
-#: doc_fingerprints oracle (8-gram hashes, window 4); duplicated here because
-#: importing a @register module would reorder the catalog contract.
-_SQL_WINNOW_FPS = (
-    "lowered AS (SELECT doc_id, lower(text) AS t FROM documents), "
-    "pos AS (SELECT doc_id, t, unnest(range(1, length(t) - 6)) AS i FROM lowered "
-    "WHERE length(t) >= 8), "
-    "grams AS (SELECT doc_id, i, "
-    "('0x' || substr(md5('fp:' || substr(t, i, 8)), 1, 15))::BIGINT AS h FROM pos), "
-    "wmin AS (SELECT doc_id, MIN(h) OVER (PARTITION BY doc_id ORDER BY i "
-    "ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp FROM grams), "
-    "fps AS (SELECT DISTINCT doc_id, fp FROM wmin)"
-)
+#: Distinct winnowing fingerprints per doc, as textanalysisq's
+#: doc_fingerprints oracle computes them.
+_SQL_WINNOW_FPS = f"{SQL_WINNOW_MINS}, fps AS (SELECT DISTINCT doc_id, fp FROM wmin)"
 
 
 @register(
@@ -536,12 +535,7 @@ XS_ROWS = 4        # rows per band -> 4 bands; s* = (1/4)^(1/4) ~ 0.71
 XS_MIN_AGREE = 4   # signature-agreement verify floor (est >= 0.25)
 
 _SQL_XS_SIGS = f"""
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents),
-shx AS (SELECT DISTINCT doc_id, shingle FROM (
-  SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN
-    list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-    ELSE []::VARCHAR[] END) AS shingle FROM tarr)),
+{sql_trigram_shingles('shx', 'documents')},
 seeds AS (SELECT unnest(range({XS_HASHES})) AS seed),
 sigs AS (SELECT doc_id, seed,
          MIN(('0x' || substr(md5(CAST(seed AS VARCHAR) || ':' || shingle), 1, 15))::BIGINT) AS mh
@@ -552,25 +546,12 @@ sigs AS (SELECT doc_id, seed,
 #: instead of the seeds cross-join scatter — the similarityq idiom; pinned
 #: equal to the scatter form at driver SFs by tests/test_scale_tools.py).
 _SQL_XS_SIGS_WIDE = f"""
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents),
-shx AS (SELECT DISTINCT doc_id, shingle FROM (
-  SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN
-    list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-    ELSE []::VARCHAR[] END) AS shingle FROM tarr)),
-sigw AS (SELECT doc_id, {", ".join(
-    f"MIN(('0x' || substr(md5('{s}:' || shingle), 1, 15))::BIGINT) AS mh{s}"
-    for s in range(XS_HASHES)
-)} FROM shx GROUP BY doc_id),
-sigs AS (SELECT doc_id, unnest(range({XS_HASHES})) AS seed,
-         unnest([{", ".join(f"mh{s}" for s in range(XS_HASHES))}]) AS mh
-         FROM sigw)
+{sql_trigram_shingles('shx', 'documents')},
+{sql_minhash_sigs_wide(XS_HASHES, False)}
 """
 
 _SQL_XS_TAIL = f"""
-bands AS (SELECT doc_id, seed // {XS_ROWS} AS band,
-          md5(string_agg(CAST(mh AS VARCHAR), '-' ORDER BY seed)) AS band_sig
-          FROM sigs GROUP BY doc_id, band),
+{sql_lsh_bands(XS_ROWS, False)},
 cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          FROM bands a JOIN bands b USING (band, band_sig)
          WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1),

@@ -1,16 +1,14 @@
-"""Round-6-authored queries for the round-7 driver window: the forward queue
-built early so the next rotation starts from tested code.
+"""ANN, containment and substring dedup, curation sampling, BM25F and two
+streaming twins over the documents and embeddings tables.
 
-REGISTERED AT THE CATALOG TAIL (after every already-green module): the
-round-6 driver window is the carefully planned stale-green rotation
-(catalog.py tiers 1-7) and displacing any of it would defeat that round's
-verdict items 2-3 — so these five queries take the historically normal
-"never-verified until first rotation" path (exactly how the 13 TPC-H
-completion shapes waited for round 5). They ARE covered by the local
-differential gate (tests/test_catalog_oracle.py at sf0.001, the builder
-sf0.01/sf0.1 sweep, and the 10x/100x ledger) from day one.
+The constants and oracle text shared with other plan modules (ES_K, the
+exact-substring span chain ``_SQL_ES``, the IVF CTEs, the token budget)
+live in plans/shared.py, which registers no queries: importing a plan
+module registers its queries, and the import order in plans/catalog.py
+sets the catalog order and the cache-family boundaries, both pinned by
+tests/test_plan_hygiene.py::test_catalog_pinned.
 
-Contents (rounds out the ≤15 new-query budget of round 6 at 15):
+Contents:
 
 - ``ann_ivf_nprobe``     — multi-cell IVF ANN (nprobe=3) over decimal-exact
                            per-cell centroids.
@@ -22,13 +20,6 @@ Contents (rounds out the ≤15 new-query budget of round 6 at 15):
                            at sub-document (10-token chunk) granularity.
 - ``streaming_token_budget`` — stateful streaming twin of
                            token_budget_sample (budget counter state).
-
-ROUND-7 NEW-QUERY BUDGET, BUILT EARLY (counted against round 7's <= 15, NOT
-round 6's — round 6's 15 were the ten round6q queries plus the five
-above): the four round-7 queued candidates,
-registered at the same catalog-tail position so the round-6 window stays
-byte-identical, taking the same never-verified-until-first-rotation path:
-
 - ``dedup_exact_substring``  — overlapping K-token span dedup with maximal-
                            interval merging (the shuffle-friendly equivalent
                            of suffix-array ExactSubstr dedup).
@@ -46,13 +37,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
+from ..functions.text import (
+    ngram_text,
+    ngrams,
+    round_stable,
+    sql_round_stable,
+    sql_tokens,
+    sql_trigram_shingles,
+    tokens,
+)
 from ..operators.aggregates import dsum, sql_dsum
 from ..operators.similarity import containment_pairs, ngram_shingles
 from ..operators.vector import cosine_topk_ivf
 from ..sources.tables import load_table, spread
 from .registry import register
 from .shared import (
+    _SQL_ES,
     _SQL_IVF,
     ES_K,
     IVF_K,
@@ -61,6 +61,7 @@ from .shared import (
     SQL_TOKEN_BUDGET,
     TOKEN_BUDGET,
     embedding_vectors,
+    span_islands,
 )
 
 
@@ -97,15 +98,11 @@ def ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONT_TAU = 0.9   # containment floor: |A∩B| / |A| for the smaller set A
 CONT_DF_CAP = 500
 
-#: Same shingle/df-cap construction as similarityq's _SQL_SHINGLES (copied,
-#: not imported: a plans-module import would reorder the catalog contract).
+#: The df-capped co-occurrence CTEs of similarityq's _SQL_SHINGLES with the
+#: cap as a parameter (a plans-module import would move the catalog order
+#: and the cache-family boundaries).
 _SQL_CONT = f"""
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents),
-sh AS (SELECT DISTINCT doc_id, shingle FROM (
-  SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN
-    list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-    ELSE []::VARCHAR[] END) AS shingle FROM tarr)),
+{sql_trigram_shingles('sh', 'documents')},
 freq AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY shingle),
 keep AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN freq USING (shingle)
          WHERE df <= {CONT_DF_CAP}),
@@ -248,7 +245,7 @@ def chunk_col(toks_col: str = "toks") -> F.Column:
     "chunk_dedup_boilerplate",
     oracle=(
         "WITH tarr AS (SELECT doc_id, "
-        "list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks "
+        f"{sql_tokens('text')} AS toks "
         "FROM documents), "
         "ch AS (SELECT doc_id, unnest(list_transform("
         f"range(0, CAST(ceil(len(toks) / {CHUNK_TOKS}.0) AS BIGINT)), "
@@ -324,29 +321,6 @@ def streaming_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- round-7 budget, built early (module docstring: second section) --------
-
-_SQL_ES = f"""
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents),
-sp AS (SELECT doc_id, len(toks) AS n_tokens,
-       unnest(range(0, len(toks) - {ES_K - 1})) AS pos, toks FROM tarr),
-sh AS (SELECT doc_id, n_tokens, pos,
-       {h64_sql(f"array_to_string(toks[pos + 1:pos + {ES_K}], ' ')", 'es')} AS h
-       FROM sp),
-dup AS (SELECT h FROM (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM sh GROUP BY h)
-        WHERE nd >= 2),
-m AS (SELECT doc_id, n_tokens, pos FROM sh JOIN dup USING (h)),
-isl AS (SELECT doc_id, n_tokens, pos,
-        SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
-          OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        FROM (SELECT *, MAX(pos + {ES_K - 1}) OVER (PARTITION BY doc_id ORDER BY pos
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end FROM m)),
-cov AS (SELECT doc_id, n_tokens, island, MAX(pos) - MIN(pos) + {ES_K} AS covered
-        FROM isl GROUP BY doc_id, n_tokens, island)
-"""
-
-
 @register(
     "dedup_exact_substring",
     oracle=(
@@ -400,24 +374,7 @@ def exact_substring_stats(docs: DataFrame) -> DataFrame:
     )
     # dup is duplicate-vocabulary-scale — unhinted, AQE decides (tfidf pattern)
     m = sp.join(dup, "h").select("doc_id", "n_tokens", "pos")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    prev_end = (
-        F.max(F.col("pos") + F.lit(ES_K - 1))
-        .over(w.rowsBetween(Window.unboundedPreceding, -1))
-        .alias("prev_end")
-    )
-    isl = m.select("doc_id", "n_tokens", "pos", prev_end).select(
-        "doc_id",
-        "n_tokens",
-        "pos",
-        F.sum(
-            F.when(
-                F.col("prev_end").isNull() | (F.col("pos") > F.col("prev_end")), 1
-            ).otherwise(0)
-        )
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("island"),
-    )
+    isl = span_islands(m, ES_K)
     cov = isl.groupBy("doc_id", "n_tokens", "island").agg(
         (F.max("pos") - F.min("pos") + F.lit(ES_K)).alias("covered")
     )
@@ -439,7 +396,7 @@ CRAWL_AGES = 8   # seeded snapshot ages 0..7; acceptance probability 2^-age
         "WITH t AS (SELECT source, "
         f"{h64_sql('doc_id', 'age')} % {CRAWL_AGES} AS age, "
         f"{h64_sql('doc_id', 'fr')} AS hk, "
-        "len(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS n_tok "
+        f"len({sql_tokens('text')}) AS n_tok "
         "FROM documents), "
         "k AS (SELECT source, age, n_tok, "
         "CASE WHEN hk % (1 << age) = 0 THEN 1 ELSE 0 END AS kept FROM t) "
@@ -518,7 +475,7 @@ _SQL_BM25F_WTF = (
     "bm25f_title_body",
     oracle=(
         "WITH tarr AS (SELECT doc_id, "
-        "list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks "
+        f"{sql_tokens('text')} AS toks "
         "FROM documents), "
         f"fl AS (SELECT doc_id, least(len(toks), {BM25F_TITLE_LEN}) AS len_t, "
         f"len(toks) - least(len(toks), {BM25F_TITLE_LEN}) AS len_b, toks FROM tarr), "

@@ -6,9 +6,6 @@ parses it — this module is where the engine exercises those time semantics
 for real: freshness decay keyed off an event-time join, weekly retention
 cohorts, sliding event-time windows, and per-user event-order transitions.
 
-Registered near the FRONT of the round-7 driver window (catalog.py) so every
-query gets a driver verdict in its first round.
-
 - ``doc_freshness_by_event_time`` — crawl-freshness decay where each doc's
   age comes from a REAL event timestamp (bucketed last-seen join), not from
   a doc_id-derived pseudo-age (contrast: round7q.crawl_freshness_sample).
@@ -35,13 +32,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
+from ..functions.text import (
+    ngram_text,
+    ngrams,
+    round_stable,
+    sql_round_stable,
+    sql_tokens,
+    tokens,
+)
 from ..operators.aggregates import dsum
 from ..sources.tables import load_table, spread
 from .registry import register
-from .shared import DAY_US, WEEK_US  # noqa: F401  (re-export: WEEK_US cited here)
-
-# DAY_US/WEEK_US moved to plans/shared.py (round-8 window decoupling).
+from .shared import DAY_US, WEEK_US, span_islands
 
 #: Fixed bucket count for the event->doc last-seen link: the bucket frame is
 #: always exactly this many rows (broadcast-sized at ANY corpus scale) and
@@ -62,7 +64,7 @@ AGE_CAP = 30
         "MAX(epoch_us(ts)) AS last_seen FROM events GROUP BY bucket), "
         "gm AS (SELECT MAX(epoch_us(ts)) AS g FROM events), "
         "d AS (SELECT d.source, d.doc_id, "
-        "len(list_filter(string_split(lower(d.text), ' '), x -> x <> '')) AS n_tok, "
+        f"len({sql_tokens('d.text')}) AS n_tok, "
         f"LEAST(COALESCE(((SELECT g FROM gm) - ls.last_seen) // {DAY_US}, "
         f"{AGE_CAP}), {AGE_CAP}) AS age "
         "FROM documents d LEFT JOIN ls "
@@ -248,8 +250,7 @@ VOCAB_K = 1000
 @register(
     "oov_rate_by_source",
     oracle=(
-        "WITH tok AS (SELECT source, unnest(list_filter("
-        "string_split(lower(text), ' '), x -> x <> '')) AS tok FROM documents), "
+        f"WITH tok AS (SELECT source, unnest({sql_tokens('text')}) AS tok FROM documents), "
         "cnt AS (SELECT tok, COUNT(*) AS n FROM tok GROUP BY tok), "
         "voc AS (SELECT tok FROM (SELECT tok, row_number() OVER "
         "(ORDER BY n DESC, tok ASC) AS r FROM cnt) "
@@ -302,8 +303,7 @@ def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "domain_gini_tokens",
     oracle=(
-        "WITH x AS (SELECT source, CAST(SUM(len(list_filter("
-        "string_split(lower(text), ' '), x -> x <> ''))) AS BIGINT) AS toks "
+        f"WITH x AS (SELECT source, CAST(SUM(len({sql_tokens('text')})) AS BIGINT) AS toks "
         "FROM documents GROUP BY source), "
         "r AS (SELECT toks, row_number() OVER (ORDER BY toks ASC, source ASC) "
         "AS i FROM x) "
@@ -359,8 +359,7 @@ def _sql_es_width(k: int) -> str:
         f"SELECT {k} AS width, COUNT(*) AS n_docs, "
         "CAST(SUM(n_islands) AS BIGINT) AS n_islands, "
         "CAST(SUM(dup_tokens) AS BIGINT) AS dup_tokens FROM ("
-        "WITH tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), "
-        "x -> x <> '') AS toks FROM documents), "
+        f"WITH tarr AS (SELECT doc_id, {sql_tokens('text')} AS toks FROM documents), "
         f"sp AS (SELECT doc_id, unnest(range(0, len(toks) - {k - 1})) AS pos, "
         "toks FROM tarr), "
         "sh AS (SELECT doc_id, pos, "
@@ -404,23 +403,7 @@ def _es_cov(docs: DataFrame, k: int, tokenized: bool = False) -> DataFrame:
         .select("h")
     )
     m = sp.join(dup, "h").select("doc_id", "pos")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    prev_end = (
-        F.max(F.col("pos") + F.lit(k - 1))
-        .over(w.rowsBetween(Window.unboundedPreceding, -1))
-        .alias("prev_end")
-    )
-    isl = m.select("doc_id", "pos", prev_end).select(
-        "doc_id",
-        "pos",
-        F.sum(
-            F.when(
-                F.col("prev_end").isNull() | (F.col("pos") > F.col("prev_end")), 1
-            ).otherwise(0)
-        )
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("island"),
-    )
+    isl = span_islands(m, k)
     cov = isl.groupBy("doc_id", "island").agg(
         (F.max("pos") - F.min("pos") + F.lit(k)).alias("covered")
     )

@@ -1,9 +1,5 @@
-"""Round-7-authored queries for the ROUND-8 driver window (the forward-batch
-path round7q established: registered at the catalog TAIL so the round-7
-rotation stays byte-identical; covered from day one by the local
-differential gate and the 10x/100x ledger, first driver verdict next
-rotation). These three close out round 7's <= 15 new-query budget
-(4 round7q item-c early-builds + 8 round8q + 3 here).
+"""Within-document span dedup, a streaming sliding-window twin and IVF
+search over Lloyd-refined centroids.
 
 - ``dedup_substring_withindoc`` — WITHIN-document repeated-span profile:
   the complement of dedup_exact_substring's distinct-doc rule (which
@@ -27,17 +23,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
+from ..functions.text import (
+    ngram_text,
+    ngrams,
+    round_stable,
+    sql_round_stable,
+    sql_tokens,
+    tokens,
+)
 from ..operators.vector import _dot, ivf_cell_centroids
 from ..sources.tables import load_table, spread
 from .registry import register
-from .shared import ES_K, SQL_VECS, embedding_vectors
+from .shared import ES_K, SQL_VECS, embedding_vectors, span_islands
 
 WD_K = ES_K  # same 12-token span width as the cross-doc query
 
 
 _SQL_WD = f"""
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
+tarr AS (SELECT doc_id, {sql_tokens('text')} AS toks
          FROM documents),
 sp AS (SELECT doc_id, len(toks) AS n_tokens,
        unnest(range(0, len(toks) - {WD_K - 1})) AS pos, toks FROM tarr),
@@ -98,24 +101,7 @@ def withindoc_repeat_stats(docs: DataFrame) -> DataFrame:
         .select("doc_id", "h")
     )
     m = sp.join(dup, ["doc_id", "h"]).select("doc_id", "n_tokens", "pos")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    prev_end = (
-        F.max(F.col("pos") + F.lit(WD_K - 1))
-        .over(w.rowsBetween(Window.unboundedPreceding, -1))
-        .alias("prev_end")
-    )
-    isl = m.select("doc_id", "n_tokens", "pos", prev_end).select(
-        "doc_id",
-        "n_tokens",
-        "pos",
-        F.sum(
-            F.when(
-                F.col("prev_end").isNull() | (F.col("pos") > F.col("prev_end")), 1
-            ).otherwise(0)
-        )
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("island"),
-    )
+    isl = span_islands(m, WD_K)
     cov = isl.groupBy("doc_id", "n_tokens", "island").agg(
         (F.max("pos") - F.min("pos") + F.lit(WD_K)).alias("covered")
     )
@@ -130,8 +116,9 @@ def withindoc_repeat_stats(docs: DataFrame) -> DataFrame:
 
 def _register_streaming_sliding():
     # oracle text shared verbatim with the batch twin
-    # (round8q.sliding_window_event_rate) via plans/shared.py — an import of
-    # round8q here would drag its 8 registrations into the driver window.
+    # (round8q.sliding_window_event_rate) via plans/shared.py: importing
+    # round8q would register its queries here and so move the catalog order
+    # and the cache-family boundaries (test_catalog_pinned).
     from .shared import SQL_SLIDING_RATE
 
     @register(

@@ -1,10 +1,12 @@
 """Cross-module query-plan helpers with NO @register side effects.
 
-plans/catalog.py relies on import order to control driver-window registration
-order; any helper shared between two plan modules must live here (registration-
-free) so importing it cannot drag a whole module's queries forward in the
-catalog (the round-3 bug: recommendq importing plans.core pulled core's 11
-queries into window positions 10-20).
+Importing a plan module registers its queries, and the import order in
+plans/catalog.py sets the catalog order and the cache-family boundaries
+(the registry releases a family's persists when consecutive builds cross a
+module). So a helper that two plan modules share lives here,
+registration-free: importing it moves no query and no family boundary.
+``tests/test_plan_hygiene.py::test_catalog_pinned`` pins the ordered
+catalog.
 """
 
 from __future__ import annotations
@@ -13,12 +15,12 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64_sql
 from ..operators.aggregates import dsum, sql_dsum
 from ..caching import persist_tracked
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import round_stable, sql_round_stable, sql_token_count, sql_tokens
 from ..operators.relational import last_per_key
 from ..sources.tables import load_table
 
@@ -30,7 +32,7 @@ TOKEN_BUDGET = 800
 
 SQL_TOKEN_BUDGET = (
     "WITH t AS (SELECT source, doc_id, "
-    "len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tok, "
+    f"{sql_token_count('text')} AS n_tok, "
     f"{h64_sql('doc_id', 'tb')} AS h FROM documents), "
     "c AS (SELECT source, doc_id, n_tok, "
     "CAST(SUM(n_tok) OVER (PARTITION BY source ORDER BY h ASC, doc_id ASC "
@@ -156,22 +158,69 @@ def reset_scratch(path: str) -> None:
     os.makedirs(os.path.dirname(path), exist_ok=True)
 
 
-# -- relocated window-decoupling block (round-8 rotation) --------------------
-# These constants/helpers were defined in round7q/round8q/privacyq and
-# imported at module top level by the round9q..round12q tail batches. A
-# top-level import of a @register-bearing module drags that module's whole
-# query block into the driver window ahead of the importer (the round-3 bug
-# class), which would have burned 19 of round 8's 50 slots on fresh r7
-# greens. Defining them here (registration-free) frees catalog.py to order
-# the window purely by verification need. The original modules re-import
-# them, so values and oracle text are unchanged single-source.
+# -- constants and oracle text of the round7q..round18q families -------------
+# Defined here rather than in the module that first used them, so that the
+# modules sharing them import no plan module (see the module docstring).
 
-#: Time constants (originally plans/round8q.py).
+#: Time constants.
 DAY_US = 86_400_000_000
 WEEK_US = 7 * DAY_US
 
-#: Exact-substring span width in tokens (originally plans/round7q.py).
+#: Exact-substring span width in tokens.
 ES_K = 12
+
+#: Docs per packing shard (pack_efficiency_sweep, pack_with_salvage).
+PACK_SHARD = 200
+
+#: dedup_exact_substring's span chain, also the head of pack_with_salvage's
+#: oracle: every ES_K-token span hashed (``sh``), the spans seen in >= 2
+#: distinct docs (``dup``), their positions (``m``) merged into maximal
+#: islands by the gaps-and-islands running max (``isl``, the twin of
+#: :func:`span_islands`), and each island's covered token count (``cov``).
+_SQL_ES = f"""
+tarr AS (SELECT doc_id, {sql_tokens('text')} AS toks
+         FROM documents),
+sp AS (SELECT doc_id, len(toks) AS n_tokens,
+       unnest(range(0, len(toks) - {ES_K - 1})) AS pos, toks FROM tarr),
+sh AS (SELECT doc_id, n_tokens, pos,
+       {h64_sql(f"array_to_string(toks[pos + 1:pos + {ES_K}], ' ')", 'es')} AS h
+       FROM sp),
+dup AS (SELECT h FROM (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM sh GROUP BY h)
+        WHERE nd >= 2),
+m AS (SELECT doc_id, n_tokens, pos FROM sh JOIN dup USING (h)),
+isl AS (SELECT doc_id, n_tokens, pos,
+        SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
+          OVER (PARTITION BY doc_id ORDER BY pos) AS island
+        FROM (SELECT *, MAX(pos + {ES_K - 1}) OVER (PARTITION BY doc_id ORDER BY pos
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end FROM m)),
+cov AS (SELECT doc_id, n_tokens, island, MAX(pos) - MIN(pos) + {ES_K} AS covered
+        FROM isl GROUP BY doc_id, n_tokens, island)
+"""
+
+
+def span_islands(m: DataFrame, k: int) -> DataFrame:
+    """``m``'s columns plus ``island``: the marked ``k``-token spans of each
+    doc (one row per (doc_id, pos) span start) merged into maximal runs of
+    overlapping spans, numbered 1, 2, ... per doc in ``pos`` order. A span
+    opens a new island when it starts past the furthest end of every span
+    before it (the gaps-and-islands running max)."""
+    cols = m.columns
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    prev_end = (
+        F.max(F.col("pos") + F.lit(k - 1))
+        .over(w.rowsBetween(Window.unboundedPreceding, -1))
+        .alias("prev_end")
+    )
+    return m.select(*cols, prev_end).select(
+        *cols,
+        F.sum(
+            F.when(
+                F.col("prev_end").isNull() | (F.col("pos") > F.col("prev_end")), 1
+            ).otherwise(0)
+        )
+        .over(w.rowsBetween(Window.unboundedPreceding, 0))
+        .alias("island"),
+    )
 
 
 #: IVF ANN family parameters + oracle CTEs (originally plans/round7q.py).
@@ -327,7 +376,7 @@ def sql_temperature_oracle() -> str:
     )
     return (
         "WITH d AS (SELECT source, "
-        "len(list_filter(string_split(lower(text), ' '), x -> x <> '')) "
+        f"len({sql_tokens('text')}) "
         "AS n_tok FROM documents), "
         "tot AS (SELECT source, CAST(SUM(n_tok) AS BIGINT) AS m FROM d "
         "GROUP BY source), "

@@ -22,11 +22,15 @@ from ..operators.similarity import (
     ngram_shingles,
     simhash_near_pairs,
     simhash_values,
+    sql_lsh_bands,
+    sql_minhash_sigs,
+    sql_minhash_sigs_wide,
 )
 from ..functions.text import (
     round_stable,
     sql_round_stable,
     sql_tokens_ws,
+    sql_trigram_shingles,
     tokenize_ws,
     tokens,
 )
@@ -42,9 +46,7 @@ _SQL_H64 = "('0x' || substr(md5(CAST(seed AS VARCHAR) || ':' || word), 1, 15))::
 
 _SQL_SIGS = f"""
 toks AS (SELECT DISTINCT doc_id, word FROM ({sql_tokens_ws()})),
-seeds AS (SELECT unnest(range({NUM_HASHES})) AS seed),
-sigs AS (SELECT doc_id, seed, MIN({_SQL_H64}) AS mh
-         FROM toks CROSS JOIN seeds GROUP BY doc_id, seed)
+{sql_minhash_sigs(NUM_HASHES, 'toks', 'word')}
 """
 
 #: Scale form of _SQL_SIGS: the pair queries only ever look at doc_id <
@@ -61,9 +63,7 @@ _SQL_DOCS_LIM = f"(SELECT * FROM documents WHERE doc_id < {PAIR_DOC_LIMIT})"
 
 _SQL_SIGS_LIM = f"""
 toks AS (SELECT DISTINCT doc_id, word FROM ({sql_tokens_ws(_SQL_DOCS_LIM)})),
-seeds AS (SELECT unnest(range({NUM_HASHES})) AS seed),
-sigs AS (SELECT doc_id, seed, MIN({_SQL_H64}) AS mh
-         FROM toks CROSS JOIN seeds GROUP BY doc_id, seed)
+{sql_minhash_sigs(NUM_HASHES, 'toks', 'word')}
 """
 
 #: Shingle-based signature CTE: minhash over word trigrams. Unigram token
@@ -71,20 +71,9 @@ sigs AS (SELECT doc_id, seed, MIN({_SQL_H64}) AS mh
 #: nearly every doc pair Jaccard~1 -> LSH emits all O(n²) pairs); trigram
 #: shingles are the standard discriminative set representation for near-dup
 #: detection, and what a 100 TB text dedup job actually hashes.
-_SQL_H64_SH = (
-    "('0x' || substr(md5(CAST(seed AS VARCHAR) || ':' || shingle), 1, 15))::BIGINT"
-)
-
 _SQL_SH_SIGS = f"""
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents),
-shx AS (SELECT DISTINCT doc_id, shingle FROM (
-  SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN
-    list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-    ELSE []::VARCHAR[] END) AS shingle FROM tarr)),
-seeds AS (SELECT unnest(range({NUM_HASHES})) AS seed),
-sigs AS (SELECT doc_id, seed, MIN({_SQL_H64_SH}) AS mh
-         FROM shx CROSS JOIN seeds GROUP BY doc_id, seed)
+{sql_trigram_shingles('shx', 'documents')},
+{sql_minhash_sigs(NUM_HASHES, 'shx', 'shingle')}
 """
 
 #: Scale form of _SQL_SH_SIGS: byte-identical `sigs` rows, but the seeds
@@ -96,19 +85,8 @@ sigs AS (SELECT doc_id, seed, MIN({_SQL_H64_SH}) AS mh
 #: two forms equal at driver SFs, so the scatter form stays the (structurally
 #: independent) driver-gate oracle while this form carries the 100x check.
 _SQL_SH_SIGS_WIDE = f"""
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents),
-shx AS (SELECT DISTINCT doc_id, shingle FROM (
-  SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN
-    list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-    ELSE []::VARCHAR[] END) AS shingle FROM tarr)),
-sigw AS (SELECT doc_id, {", ".join(
-    f"MIN(('0x' || substr(md5('{s}:' || shingle), 1, 15))::BIGINT) AS mh{s}"
-    for s in range(NUM_HASHES)
-)} FROM shx GROUP BY doc_id),
-sigs AS (SELECT doc_id, unnest(range({NUM_HASHES})) AS seed,
-         unnest([{", ".join(f"mh{s}" for s in range(NUM_HASHES))}]) AS mh
-         FROM sigw)
+{sql_trigram_shingles('shx', 'documents')},
+{sql_minhash_sigs_wide(NUM_HASHES, False)}
 """
 
 
@@ -204,9 +182,7 @@ def minhash_fast_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_BANDS = f"""
-bands AS (SELECT doc_id, seed // {ROWS_PER_BAND} AS band,
-          md5(string_agg(CAST(mh AS VARCHAR), '-' ORDER BY seed)) AS band_sig
-          FROM sigs GROUP BY doc_id, band)
+{sql_lsh_bands(ROWS_PER_BAND, False)}
 """
 
 
@@ -319,28 +295,34 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _scored_pairs(spark, sf_dir)
 
 
-#: Cluster-resolution tail shared by both CC variants' oracles and, below
-#: the sigs CTE, by their scale forms.
-_SQL_CLUSTER_TAIL = (
-    f"{_SQL_BANDS}, {_SQL_SCORED}, "
-    "edges AS (SELECT ka AS a, kb AS b FROM scored "
-    "UNION SELECT kb, ka FROM scored), "
-    "nodes AS (SELECT DISTINCT a AS n FROM edges), "
-    "reach(n, m) AS (SELECT n, n FROM nodes UNION "
-    "SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a) "
-    "SELECT n AS doc_id, MIN(m) AS cluster FROM reach GROUP BY n"
-)
+def _sql_reach(materialized: bool) -> str:
+    """The oracles' twin of connected_components over the ``scored`` pairs:
+    CTEs ``edges`` (both directions), ``nodes`` and the recursive
+    ``reach(n, m)``, every node ``m`` reachable from ``n``; a component's
+    label is its MIN(m) (:data:`_SQL_REACH_LABELS`). ``materialized`` marks
+    ``edges`` AS MATERIALIZED, for the scale forms: the closure then reads a
+    materialized edge table instead of re-evaluating the whole sigs -> bands
+    -> scored chain on every step (the ols_words_pvalues lesson; measured
+    ~5x on the 100x run)."""
+    m = " MATERIALIZED" if materialized else ""
+    return (
+        f"edges AS{m} (SELECT ka AS a, kb AS b FROM scored "
+        "UNION SELECT kb, ka FROM scored), "
+        "nodes AS (SELECT DISTINCT a AS n FROM edges), "
+        "reach(n, m) AS (SELECT n, n FROM nodes UNION "
+        "SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a)"
+    )
 
 
-#: Scale-form cluster tail: edges MATERIALIZED so the recursive closure
-#: reads a materialized edge table instead of re-evaluating the whole
-#: sigs -> bands -> scored chain on every closure step (the ols_words_
-#: pvalues lesson; measured ~5x on the 100x run). Asserted non-no-op per
-#: the make_sf1 ADVICE pattern.
-_SQL_CLUSTER_TAIL_MAT = _SQL_CLUSTER_TAIL.replace(
-    "edges AS (SELECT", "edges AS MATERIALIZED (SELECT", 1
+#: (doc_id, cluster = min doc_id of its component) from :func:`_sql_reach`.
+_SQL_REACH_LABELS = "SELECT n AS doc_id, MIN(m) AS cluster FROM reach GROUP BY n"
+
+#: Cluster-resolution tail of both CC variants' oracles (below the sigs
+#: CTE) and of their scale forms.
+_SQL_CLUSTER_TAIL, _SQL_CLUSTER_TAIL_MAT = (
+    f"{_SQL_BANDS}, {_SQL_SCORED}, {_sql_reach(mat)} {_SQL_REACH_LABELS}"
+    for mat in (False, True)
 )
-assert _SQL_CLUSTER_TAIL_MAT != _SQL_CLUSTER_TAIL
 
 
 @register(
@@ -395,12 +377,7 @@ def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_SIMHASH = f"""
 bits(pos, p2) AS (VALUES {', '.join(f'({p}, {v})' for p, v in BIT_POWERS)}),
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents),
-shx AS (SELECT DISTINCT doc_id, shingle FROM (
-  SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN
-    list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-    ELSE []::VARCHAR[] END) AS shingle FROM tarr)),
+{sql_trigram_shingles('shx', 'documents')},
 th AS (SELECT doc_id, ('0x' || substr(md5('sh:' || shingle), 1, 15))::BIGINT AS h FROM shx),
 contrib AS (SELECT doc_id, pos, p2, SUM(((h // p2) % 2) * 2 - 1) AS c
             FROM th CROSS JOIN bits GROUP BY doc_id, pos, p2),
@@ -425,12 +402,7 @@ cand AS (SELECT DISTINCT a.doc_id AS ka, b.doc_id AS kb
 #: all 60 bit contributions as aggregate columns, unpivoted back to the
 #: (doc_id, pos, p2, c) rows the rest of the pipeline consumes unchanged.
 _SQL_SIMHASH_WIDE = f"""
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents),
-shx AS (SELECT DISTINCT doc_id, shingle FROM (
-  SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN
-    list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-    ELSE []::VARCHAR[] END) AS shingle FROM tarr)),
+{sql_trigram_shingles('shx', 'documents')},
 th AS (SELECT doc_id, ('0x' || substr(md5('sh:' || shingle), 1, 15))::BIGINT AS h FROM shx),
 contribw AS (SELECT doc_id, {', '.join(
     f'SUM(((h // {v}) % 2) * 2 - 1) AS c{p}' for p, v in BIT_POWERS
@@ -483,13 +455,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_pairs(sim, max_hamming=8)
 
 
-_SQL_SHINGLES = """
-tarr AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-         FROM documents),
-sh AS (SELECT DISTINCT doc_id, shingle FROM (
-  SELECT doc_id, unnest(CASE WHEN len(toks) >= 3 THEN
-    list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-    ELSE []::VARCHAR[] END) AS shingle FROM tarr)),
+_SQL_SHINGLES = f"""
+{sql_trigram_shingles('sh', 'documents')},
 freq AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY shingle),
 keep AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN freq USING (shingle) WHERE df <= 500),
 sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
@@ -534,12 +501,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Everything downstream of the `sigs` CTE in the apply-step oracle — shared
 #: verbatim by the driver-gate (scatter sigs) and scale (wide sigs) forms.
 _SQL_APPLY_TAIL = (
-    f"{_SQL_BANDS}, {_SQL_SCORED}, "
-    "edges AS (SELECT ka AS a, kb AS b FROM scored "
-    "UNION SELECT kb, ka FROM scored), "
-    "nodes AS (SELECT DISTINCT a AS n FROM edges), "
-    "reach(n, m) AS (SELECT n, n FROM nodes UNION "
-    "SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a), "
+    f"{_SQL_BANDS}, {_SQL_SCORED}, {_sql_reach(False)}, "
     "dropped AS (SELECT n AS doc_id FROM reach GROUP BY n "
     "HAVING MIN(m) <> n) "
     "SELECT source, COUNT(*) AS n_docs, "

@@ -1,7 +1,8 @@
 """Stream≡batch equivalence as a declared driver query (round-4 verdict
-item 6). Lives in its own registration-free-of-anything-else module so the
-single query can sit in the driver window without dragging a whole family's
-slots along (plans/catalog.py ordering contract).
+item 6). It keeps a module of its own: moved into another module it would
+change its catalog position and its cache family, since the import order
+in plans/catalog.py sets both (pinned by
+tests/test_plan_hygiene.py::test_catalog_pinned).
 """
 
 from __future__ import annotations

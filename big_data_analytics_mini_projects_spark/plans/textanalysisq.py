@@ -7,13 +7,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.textops import (
+    SQL_WINNOW_MINS,
     doc_fingerprints,
     doc_trigram_counts,
     lang_id,
     lang_trigram_profiles,
     token_counts,
 )
-from ..functions.text import round_stable, sql_round_stable
+from ..functions.text import round_stable, sql_round_stable, sql_tokens, sql_tokens_ws
 from ..sources.tables import load_table, spread
 from .registry import register
 from ..caching import persist_tracked
@@ -64,7 +65,7 @@ def lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "token_counts_by_source",
     oracle=(
         "WITH t AS (SELECT source, "
-        "len(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS ws, "
+        f"len({sql_tokens('text')}) AS ws, "
         "len(regexp_extract_all(lower(text), '([a-z]+|[0-9]+|[^a-z0-9\\s])', 1)) AS bpe "
         "FROM documents) "
         "SELECT source, COUNT(*) AS n_docs, "
@@ -93,14 +94,7 @@ def token_counts_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_fingerprints",
     oracle=(
-        "WITH lowered AS (SELECT doc_id, lower(text) AS t FROM documents), "
-        "pos AS (SELECT doc_id, t, unnest(range(1, length(t) - 6)) AS i FROM lowered "
-        "WHERE length(t) >= 8), "
-        "grams AS (SELECT doc_id, i, "
-        "('0x' || substr(md5('fp:' || substr(t, i, 8)), 1, 15))::BIGINT AS h FROM pos), "
-        "wmin AS (SELECT doc_id, MIN(h) OVER (PARTITION BY doc_id ORDER BY i "
-        "ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp FROM grams) "
-        "SELECT DISTINCT doc_id, fp FROM wmin"
+        f"WITH {SQL_WINNOW_MINS} SELECT DISTINCT doc_id, fp FROM wmin"
     ),
     doc="Winnowing fingerprints (8-gram hashes, window 4): shared substrings "
     "of length >= 11 guarantee shared fingerprints — rolling-hash document "
@@ -114,9 +108,7 @@ def doc_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "tfidf_top_terms",
     oracle=(
-        "WITH toks AS (SELECT doc_id, word FROM (SELECT doc_id, "
-        "unnest(string_split(lower(text), ' ')) AS word FROM documents) "
-        "WHERE word <> ''), "
+        f"WITH toks AS ({sql_tokens_ws()}), "
         "tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM toks GROUP BY doc_id, word), "
         "dfreq AS (SELECT word, COUNT(DISTINCT doc_id) AS dfreq FROM toks GROUP BY word), "
         "n AS (SELECT COUNT(*) AS n_docs FROM documents), "

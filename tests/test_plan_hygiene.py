@@ -249,18 +249,26 @@ def _call_name(node) -> str | None:
 
 
 def test_tokenizer_and_ngrams_only_in_functions_text():
-    """The whitespace tokenizer and word n-grams have one Spark-side
-    definition each, functions/text.tokens and functions/text.ngrams, both
-    lambda-free. An inline ``filter(split(...), x -> ...)`` tokenizer or a
+    """The whitespace tokenizer and word n-grams have one definition per
+    engine, in functions/text.py. Spark side: tokens and ngrams, both
+    lambda-free; an inline ``filter(split(...), x -> ...)`` tokenizer or a
     ``transform(sequence(...), i -> ...)`` n-gram anywhere else fails, as
     SQL text or as ``F.filter(F.split(...))`` / ``F.transform(F.sequence(...))``.
-    DuckDB oracle text (``list_filter(string_split(...))``,
-    ``list_transform(range(...))``) does not match, and docstrings do not
-    count. The allowlisted transform(sequence(...)) sites follow other rules."""
+    DuckDB side: sql_tokens / sql_token_count and sql_trigram_shingles; a
+    ``list_filter(string_split(...), x -> x <> '')`` tokenizer or an
+    ``array_to_string(toks[i:i+2] ...)`` word-trigram shingle written out
+    anywhere else fails. A ``list_filter(string_split(...))`` that keeps
+    words by another rule (the BPE word regex) is not the tokenizer.
+    Docstrings do not count. The allowlisted transform(sequence(...)) sites
+    follow other rules."""
     import re
 
     tokenizer = re.compile(r"(?<![\w.])filter\(\s*split\(")
     seq_transform = re.compile(r"(?<![\w.])transform\(\s*sequence\(")
+    duck_tokenizer = re.compile(
+        r"list_filter\(\s*string_split\((?:[^()]|\([^()]*\))*\),\s*x\s*->\s*x\s*<>\s*''\s*\)"
+    )
+    duck_trigram = re.compile(r"array_to_string\(\s*toks\[\s*i\s*:\s*i\s*\+\s*2\s*\]")
     pkg = pathlib.Path(big_data_analytics_mini_projects_spark.__file__).parent
     offenders = []
     for path in sorted(pkg.rglob("*.py")):
@@ -281,8 +289,10 @@ def test_tokenizer_and_ngrams_only_in_functions_text():
             if isinstance(node, ast.Constant) and isinstance(node.value, str):
                 if id(node) in docstrings:
                     continue
-                tok = tokenizer.search(node.value)
+                tok = tokenizer.search(node.value) or duck_tokenizer.search(node.value)
                 seq = seq_transform.search(node.value)
+                if duck_trigram.search(node.value):
+                    offenders.append(f"{rel}:{node.lineno} trigram shingle")
             elif isinstance(node, ast.Call) and node.args and isinstance(node.args[0], ast.Call):
                 pair = (_call_name(node), _call_name(node.args[0]))
                 tok = pair == ("filter", "split")
@@ -295,7 +305,7 @@ def test_tokenizer_and_ngrams_only_in_functions_text():
                 offenders.append(f"{rel}:{node.lineno} n-gram")
     assert not offenders, (
         "inline whitespace tokenizer or word n-gram, use functions/text.tokens "
-        f"and ngrams: {offenders}"
+        f"and ngrams, or sql_tokens and sql_trigram_shingles: {offenders}"
     )
 
 

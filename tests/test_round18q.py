@@ -25,17 +25,6 @@ def test_round18q_differential(spark, duck, sf_dir):
     assert_df_equal(spec.build(spark, sf_dir), duck, spec.oracle)
 
 
-def test_es_cte_byte_identical_to_round7q():
-    """round18q rebuilds the dedup_exact_substring CTE chain instead of
-    importing round7q (a module-level import would force round7q's 9
-    queries to register first — the forced-rider rule); this pin is what
-    makes the rebuild safe: the two texts may never drift."""
-    from big_data_analytics_mini_projects_spark.plans import round7q, round12q, round18q
-
-    assert round18q._SQL_ES == round7q._SQL_ES
-    assert round18q.PACK_SHARD == round12q.PACK_SHARD
-
-
 def test_salvage_reconciles_exact_substring(spark, sf_dir):
     """Policy totals bracket each other, and the raw-vs-salvage gap equals
     the duplicated token mass plus sub-minimum fragments: with F the

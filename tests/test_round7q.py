@@ -195,12 +195,17 @@ def test_span_col_short_doc_guard(spark, duck):
     span builder they replaced, written out here as the reference: same
     n-grams and same 0-based posexplode positions for n = 2, 3 and ES_K
     over a NULL array and empty, n-1, n and n+2 token docs. n runs in a
-    loop, not a parametrize, so the test keeps its one id. Then tokens()
-    against DuckDB's sql_tokens_ws on NULL, empty and space-run text."""
+    loop, not a parametrize, so the test keeps its one id. Then each
+    DuckDB twin against its Spark side on NULL, empty and all-space text,
+    2- and 3-token docs, a repeated trigram, upper case and space runs:
+    sql_tokens_ws and sql_tokens against tokens(), and sql_trigram_shingles
+    against ngram_shingles(n=3)."""
     from big_data_analytics_mini_projects_spark.functions.text import (
         ngram_text,
         ngrams,
+        sql_tokens,
         sql_tokens_ws,
+        sql_trigram_shingles,
         tokens,
     )
     from big_data_analytics_mini_projects_spark.plans.shared import ES_K
@@ -243,21 +248,49 @@ def test_span_col_short_doc_guard(spark, duck):
         arrays = dict(df.select("doc_id", ngrams("toks", n).alias("z")).collect())
         assert arrays[0] is None and arrays[1] == [] and arrays[2] == [], n
 
-    texts = [(0, None), (1, ""), (2, "  x"), (3, "A b  c ")]
+    texts = [
+        (0, None),
+        (1, ""),
+        (2, "  x"),
+        (3, "A b  c "),
+        (4, "   "),
+        (5, "p q"),
+        (6, "p q r"),
+        (7, "x y z x y z"),  # the trigram "x y z" twice
+        (8, "  The CAT  sat ON the cat  sat "),
+    ]
     tdf = spark.createDataFrame(texts, "doc_id long, text string")
-    got = dict(tdf.select("doc_id", tokens("text")).collect())
-    assert got[0] is None  # NULL text: a NULL array, so explode emits no row
-    got[0] = []
+    arrays = dict(tdf.select("doc_id", tokens("text")).collect())
     duck.execute(
         "CREATE OR REPLACE TEMP TABLE tok_cases AS SELECT * FROM (VALUES "
-        "(0, NULL), (1, ''), (2, '  x'), (3, 'A b  c ')) v(doc_id, text)"
+        + ", ".join(f"({d}, {'NULL' if t is None else repr(t)})" for d, t in texts)
+        + ") v(doc_id, text)"
     )
+    assert arrays == dict(
+        duck.execute(f"SELECT doc_id, {sql_tokens('text')} FROM tok_cases").fetchall()
+    )
+    assert arrays[0] is None  # NULL text: a NULL array, so explode emits no row
+    assert arrays[4] == [] and arrays[8] == "the cat sat on the cat sat".split()
+    got = {d: sorted(a or []) for d, a in arrays.items()}  # a bag per doc
     want = {d: [] for d, _ in texts}
     for d, w in duck.execute(
         f"SELECT * FROM ({sql_tokens_ws('tok_cases')}) ORDER BY ALL"
     ).fetchall():
         want[d].append(w)
-    assert got == want == {0: [], 1: [], 2: ["x"], 3: ["a", "b", "c"]}
+    assert got == want
+    assert got[2] == ["x"] and got[3] == ["a", "b", "c"]
+
+    sh = ngram_shingles(tdf.select("doc_id", tokens("text").alias("toks")), n=3)
+    got = sorted(tuple(r) for r in sh.collect())
+    want = duck.execute(
+        f"WITH {sql_trigram_shingles('sh', 'tok_cases')} "
+        "SELECT doc_id, shingle FROM sh ORDER BY ALL"
+    ).fetchall()
+    assert got == want
+    assert [g for g in got if g[0] in (6, 7)] == [
+        (6, "p q r"), (7, "x y z"), (7, "y z x"), (7, "z x y"),
+    ]
+    assert {d for d, _ in got} == {3, 6, 7, 8}
 
 
 def test_exact_substring_islands_and_distinct_doc_rule(spark):
