@@ -95,6 +95,21 @@ def sql_dsum(expr: str, scale: int = 2) -> str:
     return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS VARCHAR) AS DOUBLE)"
 
 
+def wide_dsum(col: Column, scale: int) -> Column:
+    """Exact sum of a double column at ``scale`` decimal places with
+    38-digit headroom, as double: one ``decimal(38,scale)`` addend per row.
+    For the sums :func:`dsum`'s ``decimal(18,s)`` range cannot hold:
+    squares and cross products of doubles (the ``l_extendedprice`` squares
+    pass it above ~sf0.05) and the scale-12 regression moments."""
+    return F.sum(col.cast(f"decimal(38,{scale})")).cast("double")
+
+
+def sql_wide_dsum(expr: str, scale: int) -> str:
+    """DuckDB twin of :func:`wide_dsum`, through :func:`sql_dsum`'s VARCHAR
+    bridge."""
+    return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,{scale}))) AS VARCHAR) AS DOUBLE)"
+
+
 def count_by_key(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Word-count shape: ``cnt`` = sum of 1s per key
     (MRSystemSimulator2020.py:183-194)."""

@@ -112,11 +112,7 @@ def ngram_contamination(shingles: DataFrame, test_mod: int = 20) -> DataFrame:
     )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    ctx: int = 2048,
-    shard_size: int = 200,
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, ctx: int, shard_size: int) -> DataFrame:
     """Concat-then-chunk sequence packing (the pretraining batch-prep step):
     documents are laid head-to-tail in ``doc_id`` order and cut into ``ctx``-token
     context windows; each document is assigned the window its FIRST token

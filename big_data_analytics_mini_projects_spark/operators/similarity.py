@@ -174,20 +174,56 @@ def sql_lsh_bands(rows_per_band: int, materialized: bool) -> str:
     )
 
 
-def lsh_candidates(bands: DataFrame) -> DataFrame:
-    """Distinct candidate pairs sharing >=1 band (ka < kb).
+def lsh_candidates(
+    a: DataFrame,
+    a_col: str,
+    b: DataFrame | None,
+    b_col: str,
+    out: tuple[str, str] | None = None,
+) -> DataFrame:
+    """Distinct candidate pairs from the band-bucket equi-join: a doc of the
+    ``a`` bands frame (as ``a_col``) and a doc of ``b`` (as ``b_col``) that
+    agree on a whole band (Part_2.pdf p5). ``b`` None pairs the docs of
+    ``a`` among themselves, each unordered pair once, a_col < b_col. The
+    pair columns come out, and are deduplicated, in ``out`` order (default
+    (a_col, b_col)): the order keys the distinct's exchange, which the
+    round14q state families' shape pins fix as (doc_b, doc_a).
 
-    Persists ``bands`` (keys × b rows, tiny next to the corpus) so the
-    signature+banding pipeline runs once, not once per self-join side."""
-    bands = persist_tracked(bands)
-    a = bands.select(F.col("doc_id").alias("ka"), "band", "band_sig")
-    b = bands.select(F.col("doc_id").alias("kb"), "band", "band_sig")
-    return (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("ka") < F.col("kb"))
-        .select("ka", "kb")
-        .distinct()
+    The caller decides what to persist: a frame read on both join sides
+    computes twice unless it is persisted or a checkpoint leaf."""
+    pairs = a.select(F.col("doc_id").alias(a_col), "band", "band_sig").join(
+        (a if b is None else b).select(F.col("doc_id").alias(b_col), "band", "band_sig"),
+        ["band", "band_sig"],
     )
+    if b is None:
+        pairs = pairs.filter(F.col(a_col) < F.col(b_col))
+    return pairs.select(*(out or (a_col, b_col))).distinct()
+
+
+def signature_agreement(
+    cand: DataFrame,
+    sigs: DataFrame,
+    a_col: str,
+    b_col: str,
+    num_hashes: int | None = None,
+) -> DataFrame:
+    """The LSH verify stage: (a_col, b_col, ``cand``'s other columns) plus
+    ``n_agree``, the number of seeds on which the ``sigs`` (doc_id, seed,
+    mh) rows of the pair's ``a_col`` and ``b_col`` docs agree. Only
+    candidate pairs are joined to their signatures, so the work is bounded
+    by the candidate set, never all pairs. Given ``num_hashes``, the column
+    is the agreement fraction ``est`` = n_agree / num_hashes instead,
+    computed inside the aggregate."""
+    sa = sigs.select(F.col("doc_id").alias(a_col), "seed", F.col("mh").alias("mha"))
+    sb = sigs.select(F.col("doc_id").alias(b_col), "seed", F.col("mh").alias("mhb"))
+    n_agree = F.sum((F.col("mha") == F.col("mhb")).cast("long"))
+    agree = (
+        n_agree.alias("n_agree")
+        if num_hashes is None
+        else (n_agree / F.lit(float(num_hashes))).alias("est")
+    )
+    keys = [a_col, b_col] + [c for c in cand.columns if c not in (a_col, b_col)]
+    return cand.join(sa, a_col).join(sb, [b_col, "seed"]).groupBy(*keys).agg(agree)
 
 
 def lsh_capture_probability(s: float, r: int, b: int) -> float:

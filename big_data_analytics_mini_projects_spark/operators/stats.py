@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.stats_math import t_sf
 from ..functions.tdist import with_two_sided_t_pvalue_cf
+from .aggregates import wide_dsum
 
 SIMPLE_SCHEMA = (
     "word string, n long, beta double, t_stat double, p_value double, p_bonf double"
@@ -57,12 +58,11 @@ MULTI_SCHEMA = (
     "p_value double, p_bonf double"
 )
 
-
-def _dsum(col: Column) -> Column:
-    """Exact decimal(38,12) sum -> double: deterministic under any partition
-    merge order (the corr_price_quantity pattern, plans/statsq.py:169-176);
-    scale 12 keeps 1e26 integer headroom for Σy² at petabyte row counts."""
-    return F.sum(col.cast("decimal(38,12)")).cast("double")
+#: Decimal scale of the OLS moment sums (wide_dsum; statsq's oracles use it
+#: too): 12 places keep 1e26 integer headroom for Σy² at petabyte row
+#: counts, and every sum is exact, so deterministic under any partition
+#: merge order.
+MOMENT_SCALE = 12
 
 
 def _pearson(n: Column, sa: Column, sb: Column, sab: Column, saa: Column, sbb: Column) -> Column:
@@ -81,11 +81,11 @@ def ols_simple_closed(
     x, y = F.col(x_col), F.col(y_col)
     s = obs.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n"),
-        _dsum(x).alias("sx"),
-        _dsum(y).alias("sy"),
-        _dsum(x * y).alias("sxy"),
-        _dsum(x * x).alias("sxx"),
-        _dsum(y * y).alias("syy"),
+        wide_dsum(x, MOMENT_SCALE).alias("sx"),
+        wide_dsum(y, MOMENT_SCALE).alias("sy"),
+        wide_dsum(x * y, MOMENT_SCALE).alias("sxy"),
+        wide_dsum(x * x, MOMENT_SCALE).alias("sxx"),
+        wide_dsum(y * y, MOMENT_SCALE).alias("syy"),
     )
     n = F.col("n").cast("double")
     r = _pearson(n, F.col("sx"), F.col("sy"), F.col("sxy"), F.col("sxx"), F.col("syy"))
@@ -106,15 +106,15 @@ def ols_multi_closed(
     x, c, y = F.col(x_col), F.col(ctrl_col), F.col(y_col)
     s = obs.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n"),
-        _dsum(x).alias("sx"),
-        _dsum(c).alias("sc"),
-        _dsum(y).alias("sy"),
-        _dsum(x * y).alias("sxy"),
-        _dsum(x * c).alias("sxc"),
-        _dsum(c * y).alias("scy"),
-        _dsum(x * x).alias("sxx"),
-        _dsum(c * c).alias("scc"),
-        _dsum(y * y).alias("syy"),
+        wide_dsum(x, MOMENT_SCALE).alias("sx"),
+        wide_dsum(c, MOMENT_SCALE).alias("sc"),
+        wide_dsum(y, MOMENT_SCALE).alias("sy"),
+        wide_dsum(x * y, MOMENT_SCALE).alias("sxy"),
+        wide_dsum(x * c, MOMENT_SCALE).alias("sxc"),
+        wide_dsum(c * y, MOMENT_SCALE).alias("scy"),
+        wide_dsum(x * x, MOMENT_SCALE).alias("sxx"),
+        wide_dsum(c * c, MOMENT_SCALE).alias("scc"),
+        wide_dsum(y * y, MOMENT_SCALE).alias("syy"),
     )
     n = F.col("n").cast("double")
     sx, sc, sy = F.col("sx"), F.col("sc"), F.col("sy")

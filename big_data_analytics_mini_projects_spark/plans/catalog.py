@@ -10,7 +10,7 @@ The order is a contract for two reasons:
   order below: similarityq < round11q < round12q, vectorq < baselineq,
   round13q < round15q (and round14q < round15q through a decoration-time
   oracle builder), pipelineq/round14q < round16q < round17q < round19q <
-  round20q.
+  round20q, round14q < round6q.
 - Adjacent modules bound cache families: the registry releases tracked
   persists and checkpoint leaves whenever consecutive builds cross a module
   boundary (``plans/registry.py``), so reordering imports changes which

@@ -24,6 +24,7 @@ from ..functions.text import round_stable, sql_round_stable, sql_tokens, tokens
 from ..operators.similarity import jaccard_prefix_pairs, ngram_shingles
 from ..sources.tables import load_table, spread
 from .registry import register
+from .shared import PACK_SHARD
 
 _SQL_TOKS = (
     f"tarr AS (SELECT doc_id, {sql_tokens('text')} AS toks FROM documents)"
@@ -212,7 +213,7 @@ def triangle_count_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pack_sequences_2048",
     oracle=(
         f"WITH {_SQL_TOKS}, "
-        "d AS (SELECT doc_id, doc_id // 200 AS shard, "
+        f"d AS (SELECT doc_id, doc_id // {PACK_SHARD} AS shard, "
         "CAST(len(toks) AS BIGINT) AS n_tok FROM tarr), "
         "s AS (SELECT shard, n_tok, SUM(n_tok) OVER (PARTITION BY shard "
         "ORDER BY doc_id) - n_tok AS strt FROM d) "
@@ -221,14 +222,14 @@ def triangle_count_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "FROM s GROUP BY shard, strt // 2048"
     ),
     doc="Concat-then-chunk sequence packing into 2048-token context windows "
-    "(the pretraining batch-prep step), packed within bounded 200-doc shards "
+    f"(the pretraining batch-prep step), packed within bounded {PACK_SHARD}-doc shards "
     "so the running-offset window partition is capped by construction — "
     "shards pack independently and in parallel; no global running sum, no "
     "single-partition window.",
     tags=("curation", "pipeline", "window"),
 )
 def pack_sequences_2048(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pack_sequences(_docs_toks(spark, sf_dir), ctx=2048, shard_size=200)
+    return pack_sequences(_docs_toks(spark, sf_dir), ctx=2048, shard_size=PACK_SHARD)
 
 
 #: Corpus-mixing target: keep ~half the corpus tokens, split equally across

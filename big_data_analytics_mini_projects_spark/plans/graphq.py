@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.text import round_stable, sql_round_stable
 from .registry import register
-from ..caching import checkpoint_shared, persist_tracked
+from ..caching import checkpoint_shared
 
 from .shared import DAMPING, N_PR_ITERS, pagerank_edges, sql_pagerank_head
 
@@ -83,7 +83,7 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = checkpoint_shared(
         "graphq.pr_nodes",
         sf_dir,
-        lambda: persist_tracked(edges.select(F.col("src").alias("node")).distinct()),
+        lambda: edges.select(F.col("src").alias("node")).distinct(),
     )
     # |V| as a driver scalar — the bounded scalar-collect class (same as the
     # two-pass sampler's entity count); deriving it from the PERSISTED edge

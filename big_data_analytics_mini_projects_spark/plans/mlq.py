@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -34,8 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..sources.tables import load_table, spread
 from .registry import register
+from .shared import SQL_LINEITEM_MOMENTS, lineitem_moments
 
 #: Reference hyperparameters: gamma from Part_2.pdf p2; eta/iters chosen so the
 #: momentum recurrence error (~sqrt(gamma)^t) is < 1e-10 at 600 iterations —
@@ -65,21 +65,12 @@ def momentum_gd_standardized(n: float, sx: float, sy: float, sxy: float,
     return b, a
 
 
-_SQL_WIDE = "CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,4))) AS VARCHAR) AS DOUBLE)"
-
-
 @register(
     "momentum_gd_linreg",
     oracle=(
-        "WITH s AS (SELECT l_returnflag, COUNT(*) AS n, "
-        f"{_SQL_WIDE.format(expr='l_quantity')} AS sx, "
-        f"{_SQL_WIDE.format(expr='l_extendedprice')} AS sy, "
-        f"{_SQL_WIDE.format(expr='l_quantity * l_extendedprice')} AS sxy, "
-        f"{_SQL_WIDE.format(expr='l_quantity * l_quantity')} AS sxx, "
-        f"{_SQL_WIDE.format(expr='l_extendedprice * l_extendedprice')} AS syy "
-        "FROM lineitem GROUP BY l_returnflag) "
+        SQL_LINEITEM_MOMENTS
         # closed-form optimum the GD must converge to: beta* = r, intercept* = 0
-        "SELECT l_returnflag, CAST(n AS BIGINT) AS n, "
+        + "SELECT l_returnflag, CAST(n AS BIGINT) AS n, "
         "floor((n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) "
         "* (n * syy - sy * sy)) * 10000 + 0.5) / 10000 AS beta_std, "
         "0.0 AS intercept_std FROM s"
@@ -92,27 +83,8 @@ _SQL_WIDE = "CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,4))) AS VARCHAR) AS DOUBLE)
     tags=("momentum_gd", "agg_combiner", "corr"),
 )
 def momentum_gd_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread: the sufficient-statistic pass (five decimal(38,4) sums) is the
-    # whole data cost of this query and ran single-threaded on the local
-    # one-split scan (guide §2.5; measured ~1.9 -> ~0.5 s at sf0.1).
-    li = spread(load_table(spark, sf_dir, "lineitem"))
-    x, y = F.col("l_quantity"), F.col("l_extendedprice")
-
-    def wide(col):
-        return F.sum(col.cast("decimal(38,4)")).cast("double")
-
-    stats = (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            wide(x).alias("sx"),
-            wide(y).alias("sy"),
-            wide(x * y).alias("sxy"),
-            wide(x * x).alias("sxx"),
-            wide(y * y).alias("syy"),
-        )
-        .collect()  # bounded: |l_returnflag| = 3 scalar rows
-    )
+    # bounded: |l_returnflag| = 3 scalar rows
+    stats = lineitem_moments(spark, sf_dir).collect()
     rows = []
     for s in stats:
         b, a = momentum_gd_standardized(

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.aggregates import sql_wide_dsum, wide_dsum
 from ..operators.relational import join_auto
 from ..operators.similarity import ngram_shingles
 from ..operators.vector import _dot, prepare_vectors
@@ -152,7 +153,7 @@ assign AS (SELECT vec_id, cid, d2 FROM (
     oracle=(
         f"WITH {_SQL_KM} "
         "SELECT cid AS cluster, COUNT(*) AS n_assigned, "
-        + sql_round_stable("CAST(CAST(SUM(CAST(d2 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)")
+        + sql_round_stable(sql_wide_dsum("d2", 6))
         + " AS inertia "
         "FROM assign GROUP BY cid"
     ),
@@ -184,9 +185,7 @@ def kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cluster")
         .agg(
             F.count(F.lit(1)).alias("n_assigned"),
-            round_stable(
-                F.sum(F.col("d2").cast("decimal(38,6)")).cast("double")
-            ).alias("inertia"),
+            round_stable(wide_dsum(F.col("d2"), 6)).alias("inertia"),
         )
     )
 

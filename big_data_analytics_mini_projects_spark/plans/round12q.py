@@ -32,10 +32,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..caching import checkpoint_shared, persist_tracked
 from ..functions.text import round_stable, sql_round_stable, sql_tokens, tokens
 from ..operators.aggregates import dsum, sql_dsum
-from ..operators.similarity import minhash_signatures
+from ..operators.similarity import signature_agreement
 from ..sources.tables import load_table, spread
 from .registry import register
-from .round11q import LSH_EVAL_LIMIT, _SQL_SHX_SLICE, slice_pair_inter
+from .round11q import _SQL_SHX_SLICE, slice_pair_inter, slice_sigs
 from .shared import PACK_SHARD, embedding_vectors
 from .similarityq import (
     NUM_HASHES,
@@ -46,7 +46,6 @@ from .similarityq import (
     _SQL_SH_SIGS_WIDE,
     _cc_labels,
     _scored_pairs,
-    _shingles,
     _sql_reach,
 )
 
@@ -274,36 +273,14 @@ def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("minhash_sig", "dedup", "quality"),
 )
 def minhash_error_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh, sz, it = slice_pair_inter(spark, sf_dir)
-    sza = sz.select(F.col("doc_id").alias("ka"), F.col("s").alias("sa"))
-    szb = sz.select(F.col("doc_id").alias("kb"), F.col("s").alias("sb"))
-    pu = (
-        it.join(F.broadcast(sza), "ka")
-        .join(F.broadcast(szb), "kb")
-        .select(
-            "ka", "kb", "inter",
-            (F.col("sa") + F.col("sb") - F.col("inter")).alias("un"),
-        )
-    )
-    sh_raw = _shingles(spark, sf_dir, distinct=False).filter(
-        F.col("doc_id") < LSH_EVAL_LIMIT
-    )
-    sigs = minhash_signatures(sh_raw, token_col="shingle", num_hashes=NUM_HASHES)
-    sa = sigs.select(F.col("doc_id").alias("ka"), "seed", F.col("mh").alias("mha"))
-    sb = sigs.select(F.col("doc_id").alias("kb"), "seed", F.col("mh").alias("mhb"))
-    ag = (
-        pu.join(sa, "ka")
-        .join(sb, ["kb", "seed"])
-        .groupBy("ka", "kb", "inter", "un")
-        .agg(
-            F.sum((F.col("mha") == F.col("mhb")).cast("bigint")).alias("agree")
-        )
+    ag = signature_agreement(
+        slice_pair_inter(spark, sf_dir), slice_sigs(spark, sf_dir), "ka", "kb"
     )
     er = ag.select(
         F.expr("(10 * inter) div un").alias("jac_band"),
         (
             F.abs(
-                F.col("agree") * F.col("un") - NUM_HASHES * F.col("inter")
+                F.col("n_agree") * F.col("un") - NUM_HASHES * F.col("inter")
             ).cast("double")
             / (NUM_HASHES * F.col("un"))
         ).alias("err"),
@@ -710,7 +687,7 @@ def pagerank_convergence_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = checkpoint_shared(
         "r12.pr_ranks0",
         sf_dir,
-        lambda: persist_tracked(nodes.select("node", F.lit(1.0 / n).alias("r"))),
+        lambda: nodes.select("node", F.lit(1.0 / n).alias("r")),
     )
     out = None
     for t in range(1, N_PR_ITERS + 1):

@@ -15,9 +15,9 @@ Shared machinery: trigram shingles -> 16 seeded-min MinHash signatures
 (operators/similarity.py:50, the exchange-free wide-aggregate form; the
 Part_2.pdf p4 formulation) -> 4-band x 4-row LSH banding (Part_2.pdf p5)
 -> candidates from band-bucket equi-joins only, verified by signature
-agreement >= 4/16 — the exact regime of dedup_cross_snapshot
-(plans/round6q.py), so the two families reconcile row-for-row (pinned by
-tests/test_round14q.py).
+agreement >= 4/16. dedup_cross_snapshot (plans/round6q.py) runs on the
+same signature and band leaves (_doc_sigs_bands), so the two families
+reconcile row-for-row (pinned by tests/test_round14q.py).
 
 Greedy keeper rule (both queries, both engines): a delta doc matching the
 state dedups to its MIN-id state canonical; an unmatched delta doc with a
@@ -36,8 +36,10 @@ from ..caching import checkpoint_shared, persist_tracked
 from ..functions.text import sql_trigram_shingles, tokens
 from ..operators.similarity import (
     lsh_bands,
+    lsh_candidates,
     minhash_signatures,
     ngram_shingles,
+    signature_agreement,
     sql_lsh_bands,
     sql_minhash_sigs_wide,
 )
@@ -55,15 +57,16 @@ def _doc_sigs_bands(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(doc ids, minhash sigs, LSH bands) over the documents corpus.
 
-    sigs/bands are checkpoint_shared LEAVES (one per family visit,
-    materialized from the family-shared persisted cache): every caller in
-    the round14q/16q/20q state families references bands up to 3x and sigs
-    2x per step, and each Dataset op re-analyzes the whole accumulated tree
-    — plain persists shared the COMPUTE but every build still paid the
-    full-tree Catalyst analysis (~1.1 s/build for dedup_state_compaction,
-    measured round 12). The thunk form skips signature/band construction
-    entirely on memo hits; the memo guarantees every sibling and repeat
-    plans against the SAME leaf, so downstream persists keep matching."""
+    sigs/bands are checkpoint_shared LEAVES (one per family visit): every
+    caller in the round14q/16q/20q state families, round6q's
+    dedup_cross_snapshot and round19q's crossmodal_pair_curation references
+    bands up to 3x and sigs 2x per step, and each Dataset op re-analyzes
+    the whole accumulated tree — plain persists shared the COMPUTE but
+    every build still paid the full-tree Catalyst analysis (~1.1 s/build
+    for dedup_state_compaction, measured round 12). The thunk form skips
+    signature/band construction entirely on memo hits; the memo guarantees
+    every sibling and repeat plans against the SAME leaf, so downstream
+    persists keep matching."""
     docs = spread(
         load_table(spark, sf_dir, "documents").select(
             "doc_id",
@@ -73,61 +76,34 @@ def _doc_sigs_bands(
     sigs = checkpoint_shared(
         "r14.sigs",
         sf_dir,
-        lambda: persist_tracked(
-            minhash_signatures(
-                ngram_shingles(docs, n=3, distinct=False),
-                token_col="shingle",
-                num_hashes=SC_HASHES,
-            )
+        lambda: minhash_signatures(
+            ngram_shingles(docs, n=3, distinct=False),
+            token_col="shingle",
+            num_hashes=SC_HASHES,
         ),
     )
-    bands = checkpoint_shared(
-        "r14.bands", sf_dir, lambda: persist_tracked(lsh_bands(sigs, SC_ROWS))
-    )
+    bands = checkpoint_shared("r14.bands", sf_dir, lambda: lsh_bands(sigs, SC_ROWS))
     return docs.select("doc_id"), sigs, bands
 
 
-def _state_candidates(delta_b: DataFrame, state_b: DataFrame) -> DataFrame:
-    """(doc_d, doc_s): each delta doc and each state doc it shares an LSH
-    band bucket with, from two ``bands`` frames."""
+def _verified_pairs(cand: DataFrame, sigs: DataFrame, d_col: str, k_col: str) -> DataFrame:
+    """(d_col, k_col) candidate pairs whose signature agreement clears
+    SC_MIN_AGREE. The verify join is bounded by the candidate set (band
+    collisions), never all-pairs."""
     return (
-        delta_b.select(F.col("doc_id").alias("doc_d"), "band", "band_sig")
-        .join(
-            state_b.select(F.col("doc_id").alias("doc_s"), "band", "band_sig"),
-            ["band", "band_sig"],
-        )
-        .select("doc_d", "doc_s")
-        .distinct()
-    )
-
-
-def _within_candidates(bands: DataFrame) -> DataFrame:
-    """(doc_b, doc_a), doc_a < doc_b: the pairs of docs of one ``bands``
-    frame that share a band bucket."""
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
-    return (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_b", "doc_a")
-        .distinct()
+        signature_agreement(cand, sigs, d_col, k_col)
+        .filter(F.col("n_agree") >= SC_MIN_AGREE)
+        .select(d_col, k_col)
     )
 
 
 def _verified_min_keeper(
     cand: DataFrame, sigs: DataFrame, d_col: str, k_col: str
 ) -> DataFrame:
-    """(d_col, keeper): per left doc, the MIN right doc among candidate
-    pairs whose signature agreement clears SC_MIN_AGREE. The verify join is
-    bounded by the candidate set (band collisions), never all-pairs."""
-    sa = sigs.select(F.col("doc_id").alias(d_col), "seed", F.col("mh").alias("mha"))
-    sb = sigs.select(F.col("doc_id").alias(k_col), "seed", F.col("mh").alias("mhb"))
+    """(d_col, keeper): per left doc, the MIN right doc among its
+    :func:`_verified_pairs`."""
     return (
-        cand.join(sa, d_col)
-        .join(sb, [k_col, "seed"])
-        .groupBy(d_col, k_col)
-        .agg(F.sum((F.col("mha") == F.col("mhb")).cast("long")).alias("n_agree"))
-        .filter(F.col("n_agree") >= SC_MIN_AGREE)
+        _verified_pairs(cand, sigs, d_col, k_col)
         .groupBy(d_col)
         .agg(F.min(k_col).alias("keeper"))
     )
@@ -196,13 +172,15 @@ LEFT JOIN m_d ON d.doc_id = m_d.doc_b"""
 def dedup_state_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids, sigs, bands = _doc_sigs_bands(spark, sf_dir)
     delta_b = bands.filter(F.col("doc_id") % 2 == 1)
-    cand_s = _state_candidates(delta_b, bands.filter(F.col("doc_id") % 2 == 0))
+    cand_s = lsh_candidates(
+        delta_b, "doc_d", bands.filter(F.col("doc_id") % 2 == 0), "doc_s"
+    )
     m_s = (
         _verified_min_keeper(cand_s, sigs, "doc_d", "doc_s")
         .withColumnRenamed("doc_d", "doc_id")
         .withColumnRenamed("keeper", "k_s")
     )
-    cand_d = _within_candidates(delta_b)
+    cand_d = lsh_candidates(delta_b, "doc_a", None, "doc_b", ("doc_b", "doc_a"))
     m_d = (
         _verified_min_keeper(cand_d, sigs, "doc_b", "doc_a")
         .withColumnRenamed("doc_b", "doc_id")
@@ -308,7 +286,7 @@ def dedup_compaction_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         co_ids = ids.filter(F.col("doc_id") % SC_STEPS == t)
         co_b = bands.filter(F.col("doc_id") % SC_STEPS == t)
         if state is not None:
-            cand_s = _state_candidates(co_b, bands.join(state, "doc_id"))
+            cand_s = lsh_candidates(co_b, "doc_d", bands.join(state, "doc_id"), "doc_s")
             m_s = (
                 _verified_min_keeper(cand_s, sigs, "doc_d", "doc_s")
                 .withColumnRenamed("doc_d", "doc_id")
@@ -317,29 +295,26 @@ def dedup_compaction_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             with_state = co_ids.join(m_s, "doc_id", "left")
         else:
             with_state = co_ids.withColumn("k_s", F.lit(None).cast("long"))
-        cand_d = _within_candidates(co_b)
+        cand_d = lsh_candidates(co_b, "doc_a", None, "doc_b", ("doc_b", "doc_a"))
         m_d = (
             _verified_min_keeper(cand_d, sigs, "doc_b", "doc_a")
             .withColumnRenamed("doc_b", "doc_id")
             .select("doc_id", F.col("keeper").alias("k_d"))
         )
-        # checkpoint_shared (not just persist): statuses feeds the canon
+        # checkpoint_shared (not a persist): statuses feeds the canon
         # filter, the growing state union AND the per-step count row — a
         # leaf keeps each later step's analyzed tree flat instead of
         # re-embedding every earlier step's full derivation. Thunk form so
-        # memo hits skip BOTH the construction and the duplicate persist
-        # registration (round-11 ADVICE).
+        # memo hits skip the construction (round-11 ADVICE).
         statuses = checkpoint_shared(
             f"r14.cc_statuses{t}",
             sf_dir,
-            lambda ws=with_state, md=m_d: persist_tracked(
-                ws.join(md, "doc_id", "left").select(
-                    "doc_id",
-                    F.when(F.col("k_s").isNotNull(), F.lit("dup_of_state"))
-                    .when(F.col("k_d").isNotNull(), F.lit("dup_in_delta"))
-                    .otherwise(F.lit("new_canonical"))
-                    .alias("status"),
-                )
+            lambda ws=with_state, md=m_d: ws.join(md, "doc_id", "left").select(
+                "doc_id",
+                F.when(F.col("k_s").isNotNull(), F.lit("dup_of_state"))
+                .when(F.col("k_d").isNotNull(), F.lit("dup_in_delta"))
+                .otherwise(F.lit("new_canonical"))
+                .alias("status"),
             ),
         )
         canon = statuses.filter(F.col("status") == "new_canonical").select("doc_id")

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..caching import persist_tracked
 from ..operators.multimodal import synth_bmp_payloads
 from ..operators.phash import PH_BLOCK_BITS, PH_GRID_H, PH_GRID_W, PH_N_BLOCKS, dhash_bmp
+from ..operators.similarity import lsh_candidates
 from ..operators.vector import _dot, prepare_vectors
 from ..sources.tables import load_table, spread
 from .pipelineq import _SQL_KM, K_CENTROIDS
@@ -48,9 +49,8 @@ from .round14q import (
     _SQL_SC_HEAD,
     _doc_sigs_bands,
     _sql_scored,
-    _state_candidates,
     _verified_min_keeper,
-    _within_candidates,
+    _verified_pairs,
 )
 from .shared import NEAR_MIN_COS
 
@@ -411,23 +411,6 @@ SELECT o.doc_d AS doc_id,
 FROM orph o LEFT JOIN m_o m ON o.doc_d = m.doc_b"""
 
 
-def _verified_pairs(cand: DataFrame, sigs: DataFrame, d_col: str, k_col: str) -> DataFrame:
-    """(d_col, k_col) candidate pairs whose signature agreement clears
-    SC_MIN_AGREE — round14q._verified_min_keeper minus its final min-reduce
-    (the tombstone fold needs the full verified pair set to re-home around
-    the removed canonicals, not just the min)."""
-    sa = sigs.select(F.col("doc_id").alias(d_col), "seed", F.col("mh").alias("mha"))
-    sb = sigs.select(F.col("doc_id").alias(k_col), "seed", F.col("mh").alias("mhb"))
-    return (
-        cand.join(sa, d_col)
-        .join(sb, [k_col, "seed"])
-        .groupBy(d_col, k_col)
-        .agg(F.sum((F.col("mha") == F.col("mhb")).cast("long")).alias("n_agree"))
-        .filter(F.col("n_agree") >= SC_MIN_AGREE)
-        .select(d_col, k_col)
-    )
-
-
 @register(
     "dedup_state_tombstones",
     oracle=_SQL_TOMBSTONES,
@@ -473,8 +456,11 @@ def _orphan_dispositions(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands 3x and sigs 2x, and the leaf keeps every consumer's analyzed tree
     flat while the memo preserves plan identity across repeats/siblings."""
     _ids, sigs, bands = _doc_sigs_bands(spark, sf_dir)
-    cand_s = _state_candidates(
-        bands.filter(F.col("doc_id") % 2 == 1), bands.filter(F.col("doc_id") % 2 == 0)
+    cand_s = lsh_candidates(
+        bands.filter(F.col("doc_id") % 2 == 1),
+        "doc_d",
+        bands.filter(F.col("doc_id") % 2 == 0),
+        "doc_s",
     )
     vp = persist_tracked(_verified_pairs(cand_s, sigs, "doc_d", "doc_s"))
     old = vp.groupBy("doc_d").agg(F.min("doc_s").alias("k_old"))
@@ -487,7 +473,9 @@ def _orphan_dispositions(spark: SparkSession, sf_dir: str) -> DataFrame:
         old.filter(F.col("k_old") % TOMB_MOD == 0).join(surv, "doc_d", "left")
     )
     po = orph.filter(F.col("k_surv").isNull()).select(F.col("doc_d").alias("doc_id"))
-    cand_o = _within_candidates(bands.join(po, "doc_id"))
+    cand_o = lsh_candidates(
+        bands.join(po, "doc_id"), "doc_a", None, "doc_b", ("doc_b", "doc_a")
+    )
     m_o = (
         _verified_min_keeper(cand_o, sigs, "doc_b", "doc_a")
         .withColumnRenamed("doc_b", "doc_d")

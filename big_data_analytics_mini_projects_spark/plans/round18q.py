@@ -39,7 +39,7 @@ from ..functions.hashing import h64
 from ..functions.text import ngram_text, ngrams, round_stable, sql_round_stable, tokens
 from ..sources.tables import load_table, spread
 from .registry import register
-from .shared import _SQL_ES, ES_K, PACK_SHARD
+from .shared import _SQL_ES, ES_K, PACK_SHARD, span_islands
 
 SALVAGE_MIN = ES_K   # fragments shorter than the span unit are discarded
 SALVAGE_CTX = 2048   # the pack_sequences_2048 context length
@@ -135,22 +135,7 @@ def pack_with_salvage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("nd") >= 2)
         .select("h")
     )
-    m = sp.join(dup, "h").select("doc_id", "pos")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    prev_end = (
-        F.max(F.col("pos") + F.lit(ES_K - 1))
-        .over(w.rowsBetween(Window.unboundedPreceding, -1))
-        .alias("prev_end")
-    )
-    isl = m.select("doc_id", "pos", prev_end).select(
-        "doc_id",
-        "pos",
-        F.sum(
-            F.when(
-                F.col("prev_end").isNull() | (F.col("pos") > F.col("prev_end")), 1
-            ).otherwise(0)
-        ).over(w).alias("island"),
-    )
+    isl = span_islands(sp.join(dup, "h").select("doc_id", "pos"), ES_K)
     ib = isl.groupBy("doc_id", "island").agg(
         F.min("pos").alias("s"), (F.max("pos") + F.lit(ES_K - 1)).alias("e")
     )

@@ -57,6 +57,7 @@ from ..caching import persist_tracked
 from ..operators.audiofp import AF_BITS, AF_WINDOWS, afp_wav
 from ..operators.multimodal import synth_bmp_payloads, synth_wav_payloads
 from ..operators.phash import phashes_bmp
+from ..operators.similarity import lsh_candidates
 from ..operators.vector import _dot, prepare_vectors
 from ..sources.tables import load_table, spread
 from .pipelineq import _SQL_KM, K_CENTROIDS
@@ -425,14 +426,7 @@ LEFT JOIN mkt m ON d.doc_id = m.doc_b"""
 )
 def crossmodal_pair_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ids, sigs, bands = _doc_sigs_bands(spark, sf_dir)
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
-    candt = (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_b", "doc_a")
-        .distinct()
-    )
+    candt = lsh_candidates(bands, "doc_a", None, "doc_b", ("doc_b", "doc_a"))
     mkt = (
         _verified_min_keeper(candt, sigs, "doc_b", "doc_a")
         .withColumnRenamed("doc_b", "doc_id")

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from ..caching import checkpoint_shared, persist_tracked
 from ..operators.audiofp import AF_A_BITS, AF_A_WINDOWS, afps_wav
 from ..operators.multimodal import synth_wav_payloads
+from ..operators.similarity import lsh_candidates
 from ..operators.vector import _dot, prepare_vectors
 from ..sources.tables import load_table, spread
 from .pipelineq import K_CENTROIDS
@@ -52,10 +53,9 @@ from .round14q import (
     _SQL_SC_HEAD,
     _doc_sigs_bands,
     _sql_scored,
-    _state_candidates,
-    _within_candidates,
+    _verified_pairs,
 )
-from .round16q import TOMB_MOD, _assign_cells, _verified_pairs
+from .round16q import TOMB_MOD, _assign_cells
 from .round19q import _SQL_AFP_CTES
 
 # --------------------------------------------------------------------------
@@ -327,9 +327,11 @@ def dedup_tombstone_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both its construction and the duplicate persist registration
     # (round-11 ADVICE).
     def _vps() -> DataFrame:
-        cand_s = _state_candidates(
+        cand_s = lsh_candidates(
             bands.filter(F.col("doc_id") % 2 == 1),
+            "doc_d",
             bands.filter(F.col("doc_id") % 2 == 0),
+            "doc_s",
         )
         vp = persist_tracked(_verified_pairs(cand_s, sigs, "doc_d", "doc_s"))
         tstep = (F.col("doc_s") % TOMB_MOD == 0).cast("int") * (
@@ -358,7 +360,9 @@ def dedup_tombstone_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         po = ox.filter(F.col("k_surv").isNull()).select(
             F.col("doc_d").alias("doc_id")
         )
-        cand_o = _within_candidates(bands.join(po, "doc_id"))
+        cand_o = lsh_candidates(
+            bands.join(po, "doc_id"), "doc_a", None, "doc_b", ("doc_b", "doc_a")
+        )
         m = (
             _verified_pairs(cand_o, sigs, "doc_b", "doc_a")
             .select("doc_b")

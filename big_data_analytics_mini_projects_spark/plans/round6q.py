@@ -30,7 +30,12 @@ from ..functions.text import (
 )
 from ..operators.aggregates import dsum, sql_dsum
 from ..operators.curation import normalize_url, sql_normalize_url
-from ..operators.similarity import sql_lsh_bands, sql_minhash_sigs_wide
+from ..operators.similarity import (
+    lsh_candidates,
+    signature_agreement,
+    sql_lsh_bands,
+    sql_minhash_sigs_wide,
+)
 from ..operators.textops import SQL_WINNOW_MINS
 from ..operators.vector import (
     AUTO_MAX_BITS,
@@ -41,6 +46,7 @@ from ..operators.vector import (
 )
 from ..sources.tables import load_table, spread
 from .registry import register
+from .round14q import SC_HASHES, SC_MIN_AGREE, SC_ROWS, _doc_sigs_bands
 from .shared import SQL_TOKEN_BUDGET, SQL_VECS, TOKEN_BUDGET, embedding_vectors
 
 NEAR_MIN_COS = 0.35  # same verify floor as the round-2..5 declaration
@@ -530,13 +536,12 @@ def dedup_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-XS_HASHES = 16     # cross-snapshot minhash width
-XS_ROWS = 4        # rows per band -> 4 bands; s* = (1/4)^(1/4) ~ 0.71
-XS_MIN_AGREE = 4   # signature-agreement verify floor (est >= 0.25)
-
+#: dedup_cross_snapshot runs round14q's dedup-state regime: SC_HASHES (16)
+#: seeded mins, SC_ROWS (4) rows per band -> 4 bands, s* = (1/4)^(1/4) ~
+#: 0.71, and the SC_MIN_AGREE (4 of 16) signature-agreement floor.
 _SQL_XS_SIGS = f"""
 {sql_trigram_shingles('shx', 'documents')},
-seeds AS (SELECT unnest(range({XS_HASHES})) AS seed),
+seeds AS (SELECT unnest(range({SC_HASHES})) AS seed),
 sigs AS (SELECT doc_id, seed,
          MIN(('0x' || substr(md5(CAST(seed AS VARCHAR) || ':' || shingle), 1, 15))::BIGINT) AS mh
          FROM shx CROSS JOIN seeds GROUP BY doc_id, seed)
@@ -547,11 +552,11 @@ sigs AS (SELECT doc_id, seed,
 #: equal to the scatter form at driver SFs by tests/test_scale_tools.py).
 _SQL_XS_SIGS_WIDE = f"""
 {sql_trigram_shingles('shx', 'documents')},
-{sql_minhash_sigs_wide(XS_HASHES, False)}
+{sql_minhash_sigs_wide(SC_HASHES, False)}
 """
 
 _SQL_XS_TAIL = f"""
-{sql_lsh_bands(XS_ROWS, False)},
+{sql_lsh_bands(SC_ROWS, False)},
 cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          FROM bands a JOIN bands b USING (band, band_sig)
          WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1),
@@ -560,8 +565,8 @@ scored AS (SELECT doc_a, doc_b,
            FROM cand JOIN sigs sa ON doc_a = sa.doc_id
            JOIN sigs sb ON doc_b = sb.doc_id AND sa.seed = sb.seed
            GROUP BY doc_a, doc_b)
-SELECT doc_a, doc_b, n_agree, n_agree / {float(XS_HASHES)} AS est
-FROM scored WHERE n_agree >= {XS_MIN_AGREE}
+SELECT doc_a, doc_b, n_agree, n_agree / {float(SC_HASHES)} AS est
+FROM scored WHERE n_agree >= {SC_MIN_AGREE}
 """
 
 
@@ -577,39 +582,21 @@ FROM scored WHERE n_agree >= {XS_MIN_AGREE}
     "(doc_id parity plays the snapshot id — never A x A or B x B), "
     "verified by signature agreement >= 4/16. Both quadratic terms are "
     "bounded: band buckets by the banding, the verify join by the "
-    "candidate set. Snapshot parity pushes into both band-join sides as "
-    "a scan predicate.",
+    "candidate set. Snapshot parity filters both band-join sides before "
+    "the join. It reads the signature and band leaves of "
+    "dedup_state_compaction (round14q._doc_sigs_bands).",
     tags=("dedup", "minhash_sig", "lsh_band", "pipeline"),
 )
 def dedup_cross_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..caching import persist_tracked
-    from ..operators.similarity import lsh_bands, minhash_signatures, ngram_shingles
-
-    docs = spread(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id",
-            tokens("text").alias("toks"),
-        )
+    _ids, sigs, bands = _doc_sigs_bands(spark, sf_dir)
+    cand = lsh_candidates(
+        bands.filter(F.col("doc_id") % 2 == 0),
+        "doc_a",
+        bands.filter(F.col("doc_id") % 2 == 1),
+        "doc_b",
     )
-    shingles = ngram_shingles(docs, n=3, distinct=False)
-    sigs = persist_tracked(
-        minhash_signatures(shingles, token_col="shingle", num_hashes=XS_HASHES)
-    )
-    bands = lsh_bands(sigs, XS_ROWS)
-    a = bands.filter(F.col("doc_id") % 2 == 0).select(
-        F.col("doc_id").alias("doc_a"), "band", "band_sig"
-    )
-    b = bands.filter(F.col("doc_id") % 2 == 1).select(
-        F.col("doc_id").alias("doc_b"), "band", "band_sig"
-    )
-    cand = a.join(b, ["band", "band_sig"]).select("doc_a", "doc_b").distinct()
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), "seed", F.col("mh").alias("mha"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), "seed", F.col("mh").alias("mhb"))
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "seed"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.sum((F.col("mha") == F.col("mhb")).cast("long")).alias("n_agree"))
-        .filter(F.col("n_agree") >= XS_MIN_AGREE)
-        .select("doc_a", "doc_b", "n_agree", (F.col("n_agree") / XS_HASHES).alias("est"))
+        signature_agreement(cand, sigs, "doc_a", "doc_b")
+        .filter(F.col("n_agree") >= SC_MIN_AGREE)
+        .select("doc_a", "doc_b", "n_agree", (F.col("n_agree") / SC_HASHES).alias("est"))
     )

@@ -11,6 +11,8 @@ catalog.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import shutil
 import tempfile
@@ -18,11 +20,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.hashing import h64_sql
-from ..operators.aggregates import dsum, sql_dsum
+from ..operators.aggregates import dsum, sql_dsum, sql_wide_dsum, wide_dsum
 from ..caching import persist_tracked
 from ..functions.text import round_stable, sql_round_stable, sql_token_count, sql_tokens
 from ..operators.relational import last_per_key
-from ..sources.tables import load_table
+from ..sources.tables import load_table, spread
 
 #: Per-domain token budget for the deterministic hash-ordered sampler —
 #: shared by the batch query (plans/round6q.token_budget_sample) and its
@@ -40,6 +42,45 @@ SQL_TOKEN_BUDGET = (
     "FROM t) "
     f"SELECT source, doc_id, n_tok, cum_tok FROM c WHERE cum_tok <= {TOKEN_BUDGET}"
 )
+
+#: (factor columns, moment) of the five moments of x = l_quantity and
+#: y = l_extendedprice that, with n, are the sufficient statistics of
+#: corr_price_quantity (plans/statsq.py) and momentum_gd_linreg
+#: (plans/mlq.py). Summed exactly at scale 4 with 38-digit headroom: the
+#: Σy² sums outgrow decimal(18,s).
+_MOMENTS = (
+    (("l_quantity",), "sx"),
+    (("l_extendedprice",), "sy"),
+    (("l_quantity", "l_extendedprice"), "sxy"),
+    (("l_quantity", "l_quantity"), "sxx"),
+    (("l_extendedprice", "l_extendedprice"), "syy"),
+)
+
+#: The two oracles' CTE ``s`` (n and the moments per l_returnflag); each
+#: appends its SELECT.
+SQL_LINEITEM_MOMENTS = (
+    "WITH s AS (SELECT l_returnflag, COUNT(*) AS n, "
+    + ", ".join(f"{sql_wide_dsum(' * '.join(fs), 4)} AS {c}" for fs, c in _MOMENTS)
+    + " FROM lineitem GROUP BY l_returnflag) "
+)
+
+
+def lineitem_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of :data:`SQL_LINEITEM_MOMENTS`: one row per l_returnflag
+    with n, sx, sy, sxy, sxx and syy."""
+    # spread: the five exact sums over the whole fact table are the data
+    # cost of both queries and ran on one core on the local single-split
+    # scan (guide §2.5 input skew; measured 1.65 -> 0.79 s at sf0.1). No-op
+    # at real split counts.
+    li = spread(load_table(spark, sf_dir, "lineitem"))
+    return li.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n"),
+        *[
+            wide_dsum(functools.reduce(operator.mul, map(F.col, fs)), 4).alias(c)
+            for fs, c in _MOMENTS
+        ],
+    )
+
 
 #: Synthetic ratings derivation (FIXTURES.md §B): lineitem⋈orders gives
 #: (user=o_custkey, item=l_partkey, rating∈1..5, recency=l_shipdate).
@@ -138,7 +179,6 @@ def embedding_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-task stages in dedup_embedding_bucketed at sf0.1). Filters (e.g.
     vec_id < 5 query subsets) still push through the repartition."""
     from ..operators.vector import prepare_vectors
-    from ..sources.tables import spread
 
     return prepare_vectors(spread(load_table(spark, sf_dir, "embeddings")))
 
@@ -169,7 +209,8 @@ WEEK_US = 7 * DAY_US
 #: Exact-substring span width in tokens.
 ES_K = 12
 
-#: Docs per packing shard (pack_efficiency_sweep, pack_with_salvage).
+#: Docs per packing shard (pack_sequences_2048, pack_efficiency_sweep,
+#: pack_with_salvage).
 PACK_SHARD = 200
 
 #: dedup_exact_substring's span chain, also the head of pack_with_salvage's

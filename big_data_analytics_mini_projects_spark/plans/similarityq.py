@@ -22,6 +22,7 @@ from ..operators.similarity import (
     ngram_shingles,
     simhash_near_pairs,
     simhash_values,
+    signature_agreement,
     sql_lsh_bands,
     sql_minhash_sigs,
     sql_minhash_sigs_wide,
@@ -211,7 +212,9 @@ def lsh_candidates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_col="shingle",
         num_hashes=NUM_HASHES,
     )
-    return lsh_candidates(lsh_bands(sigs, ROWS_PER_BAND))
+    return lsh_candidates(
+        persist_tracked(lsh_bands(sigs, ROWS_PER_BAND)), "ka", None, "kb"
+    )
 
 
 #: Scored candidate pairs (the LSH verify stage), shared by the dedup and
@@ -245,20 +248,13 @@ def _scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_col="shingle",
         num_hashes=NUM_HASHES,
     ))
-    cand = lsh_candidates(lsh_bands(sigs, ROWS_PER_BAND))
-    sa = sigs.select(F.col("doc_id").alias("ka"), "seed", F.col("mh").alias("mha"))
-    sb = sigs.select(F.col("doc_id").alias("kb"), "seed", F.col("mh").alias("mhb"))
+    cand = lsh_candidates(
+        persist_tracked(lsh_bands(sigs, ROWS_PER_BAND)), "ka", None, "kb"
+    )
     return persist_tracked(
-        cand.join(sa, "ka")
-        .join(sb, ["kb", "seed"])
-        .groupBy("ka", "kb")
-        .agg(
-            (
-                F.sum((F.col("mha") == F.col("mhb")).cast("bigint"))
-                / F.lit(float(NUM_HASHES))
-            ).alias("est")
+        signature_agreement(cand, sigs, "ka", "kb", NUM_HASHES).filter(
+            F.col("est") >= 0.5
         )
-        .filter(F.col("est") >= 0.5)
     )
 
 

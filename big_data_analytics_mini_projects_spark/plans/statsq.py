@@ -28,9 +28,11 @@ from ..functions.text import (
     sql_round_stable,
     tokenize_regex,
 )
-from ..operators.stats import ols_multi_closed, ols_simple_closed
+from ..operators.aggregates import sql_wide_dsum
+from ..operators.stats import MOMENT_SCALE, ols_multi_closed, ols_simple_closed
 from ..sources.tables import load_table, spread
 from .registry import register
+from .shared import SQL_LINEITEM_MOMENTS, lineitem_moments
 from ..caching import persist_tracked
 
 TOP_K = 30
@@ -257,19 +259,18 @@ def ols_multi_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_dsum12(expr: str) -> str:
-    """Mirror of operators/stats._dsum: exact decimal(38,12) sum -> double."""
-    return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,12))) AS VARCHAR) AS DOUBLE)"
-
-
 #: Sufficient statistics + fit mirroring ols_simple_closed expression for
 #: expression (decimal sums, the _pearson formula, the t formula), so beta
 #: and t_stat are engine-identical doubles before any rounding.
 _SQL_SIMPLE_FIT = (
     "fs AS (SELECT word, COUNT(*) AS n, "
-    f"{_sql_dsum12('x')} AS sx, {_sql_dsum12('y')} AS sy, "
-    f"{_sql_dsum12('x * y')} AS sxy, {_sql_dsum12('x * x')} AS sxx, "
-    f"{_sql_dsum12('y * y')} AS syy FROM dense GROUP BY word), "
+    + ", ".join(
+        f"{sql_wide_dsum(e, MOMENT_SCALE)} AS {c}"
+        for e, c in (
+            ("x", "sx"), ("y", "sy"), ("x * y", "sxy"), ("x * x", "sxx"), ("y * y", "syy")
+        )
+    )
+    + " FROM dense GROUP BY word), "
     "fit AS (SELECT word, n, "
     "(CAST(n AS DOUBLE) * sxy - sx * sy) / sqrt((CAST(n AS DOUBLE) * sxx - sx * sx) "
     "* (CAST(n AS DOUBLE) * syy - sy * sy)) AS r FROM fs), "
@@ -344,28 +345,11 @@ def ols_words_pvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wide_dsum(col):
-    """Exact decimal sum at scale 4 with 38-digit headroom — for sums of
-    squared doubles (l_extendedprice² sums overflow decimal(18,s) above
-    ~sf0.05)."""
-    return F.sum(col.cast("decimal(38,4)")).cast("double")
-
-
-def _sql_wide_dsum(expr: str) -> str:
-    return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,4))) AS VARCHAR) AS DOUBLE)"
-
-
 @register(
     "corr_price_quantity",
     oracle=(
-        "WITH s AS (SELECT l_returnflag, COUNT(*) AS n, "
-        f"{_sql_wide_dsum('l_quantity')} AS sx, "
-        f"{_sql_wide_dsum('l_extendedprice')} AS sy, "
-        f"{_sql_wide_dsum('l_quantity * l_extendedprice')} AS sxy, "
-        f"{_sql_wide_dsum('l_quantity * l_quantity')} AS sxx, "
-        f"{_sql_wide_dsum('l_extendedprice * l_extendedprice')} AS syy "
-        "FROM lineitem GROUP BY l_returnflag) "
-        "SELECT l_returnflag, n, "
+        SQL_LINEITEM_MOMENTS
+        + "SELECT l_returnflag, n, "
         + sql_round_stable(
             "(n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))"
         )
@@ -381,19 +365,7 @@ def _sql_wide_dsum(expr: str) -> str:
     tags=("corr", "agg_mean_std", "agg_combiner"),
 )
 def corr_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread: five decimal(38,4) partial sums over the whole fact table ran
-    # on one core on the local single-split scan (guide §2.5 input skew;
-    # measured 1.65 -> 0.79 s at sf0.1). No-op at real split counts.
-    li = spread(load_table(spark, sf_dir, "lineitem"))
-    x, y = F.col("l_quantity"), F.col("l_extendedprice")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        _wide_dsum(x).alias("sx"),
-        _wide_dsum(y).alias("sy"),
-        _wide_dsum(x * y).alias("sxy"),
-        _wide_dsum(x * x).alias("sxx"),
-        _wide_dsum(y * y).alias("syy"),
-    )
+    s = lineitem_moments(spark, sf_dir)
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
     return s.select(

@@ -165,6 +165,189 @@ def test_persist_only_through_caching():
     assert not offenders, f"raw persist/cache/checkpoint outside caching.py: {offenders}"
 
 
+#: (module, function) -> why its band join or signature compare is not the
+#: operators/similarity.py pipeline
+NEAR_DUP_PIPELINE_OK = {
+    ("plans/round15q.py", "streaming_dedup_state_probe"): "stream-static band "
+    "join over per-row signature arrays; the verify is a zip_with inside the "
+    "join's projection, since a streaming frame cannot be re-joined to its "
+    "signature rows",
+}
+
+
+def test_near_dup_pipeline_only_in_operators():
+    """The Spark near-dup pipeline has one definition per stage, in
+    operators/similarity.py: the band-bucket candidate join
+    (lsh_candidates) and the signature-agreement verify
+    (signature_agreement). A ``.join(..., ["band", "band_sig"])`` or an
+    ``.alias("mha")`` / ``.alias("mhb")`` signature side anywhere else
+    fails, outside the allowlisted streaming probe."""
+    offenders = []
+    for rel, tree in _engine_trees().items():
+        if rel == "operators/similarity.py":
+            continue
+        allowed = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and (rel, fn.name) in NEAR_DUP_PIPELINE_OK
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            consts = [
+                [e.value for e in a.elts if isinstance(e, ast.Constant)]
+                if isinstance(a, (ast.List, ast.Tuple))
+                else getattr(a, "value", None)
+                for a in node.args
+            ]
+            if node.func.attr == "join" and ["band", "band_sig"] in consts:
+                kind = "band join"
+            elif node.func.attr == "alias" and consts[:1] in (["mha"], ["mhb"]):
+                kind = "signature verify"
+            else:
+                continue
+            if id(node) not in allowed:
+                offenders.append(f"{rel}:{node.lineno} {kind}")
+    assert not offenders, (
+        "near-dup pipeline stage outside operators/similarity.py, use "
+        f"lsh_candidates and signature_agreement: {offenders}"
+    )
+
+
+def _thunk_bodies(tree: ast.Module, fn: ast.AST, thunk: ast.AST) -> list[ast.AST]:
+    """The code of a checkpoint_shared thunk: the lambda itself, or the def
+    it names (looked up in the enclosing function, then at module level)."""
+    if isinstance(thunk, ast.Lambda):
+        return [thunk]
+    if not isinstance(thunk, ast.Name):
+        return []
+    for scope in (fn, tree):
+        for d in ast.walk(scope):
+            if isinstance(d, ast.FunctionDef) and d.name == thunk.id:
+                return [d]
+    return []
+
+
+def _returns(body: ast.AST) -> list[ast.AST]:
+    """The values a lambda or def returns."""
+    if isinstance(body, ast.Lambda):
+        return [body.body]
+    return [r.value for r in ast.walk(body) if isinstance(r, ast.Return) and r.value]
+
+
+def _chain_root(expr: ast.AST) -> str | None:
+    """The name a method chain ``x.a(...).b(...)`` starts from."""
+    while isinstance(expr, (ast.Call, ast.Attribute)):
+        expr = expr.func if isinstance(expr, ast.Call) else expr.value
+    return expr.id if isinstance(expr, ast.Name) else None
+
+
+def _returns_persist(body: ast.AST, top_defs: dict, follow: bool = True) -> bool:
+    """Whether ``body`` (a lambda or def) returns a persisted frame: a
+    persist_tracked(...) call; a chain on a name that ``body`` binds to one
+    and reads nowhere else; or, if ``follow``, a call of a module-level
+    engine function that does either (looked up across modules by name,
+    one call deep)."""
+    persisted = {
+        t.id
+        for a in ast.walk(body)
+        if isinstance(a, ast.Assign)
+        and isinstance(a.value, ast.Call)
+        and _call_name(a.value) == "persist_tracked"
+        for t in a.targets
+        if isinstance(t, ast.Name)
+    }
+    reads = [
+        n.id for n in ast.walk(body) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+    ]
+    for ret in _returns(body):
+        if isinstance(ret, ast.Call) and _call_name(ret) == "persist_tracked":
+            return True
+        root = _chain_root(ret)
+        if root in persisted and reads.count(root) == 1:
+            return True
+        if follow and isinstance(ret, ast.Call) and isinstance(ret.func, ast.Name):
+            if any(_returns_persist(d, top_defs, False) for d in top_defs.get(ret.func.id, [])):
+                return True
+    return False
+
+
+def _leaf_name(arg: ast.AST) -> str:
+    """A checkpoint_shared name argument as written: ``"rec.rf"``, or
+    ``"r12.pr_ranks{t}"`` for an f-string."""
+    if isinstance(arg, ast.JoinedStr):
+        return "".join(
+            v.value if isinstance(v, ast.Constant) else "{" + ast.unparse(v.value) + "}"
+            for v in arg.values
+        )
+    return getattr(arg, "value", "")
+
+
+#: checkpoint_shared leaf -> the consumer plans that change without the
+#: persisted frame its thunk returns (plans at sf0.01). The leaf takes its
+#: planner statistics from the frame it checkpoints, and only a cached
+#: relation reports a size near the real one; without it the consumers'
+#: joins on the leaf switch strategy or build side.
+LEAF_PERSIST_OK = {
+    "rec.rf": "cf_item_similarity (3 broadcast joins -> sort-merge), "
+    "cf_item_similarity_salted (8 -> sort-merge), cf_predict_ratings and "
+    "cf_predict_ratings_k50 (1 -> sort-merge)",
+    "rec.pred_sims": "cf_predict_ratings, cf_predict_ratings_k50 (1 broadcast "
+    "join -> sort-merge)",
+    "r11.lsh_tr": "lsh_recall_precision (2 broadcast joins -> sort-merge)",
+    "r11.lsh_sigs": "lsh_recall_precision, minhash_error_accounting (the "
+    "signature scans lose their not-null filters)",
+    "r11.lsh_cand": "lsh_recall_precision (the candidate join builds on the "
+    "other side)",
+    "r12.bw_truth": "banded_width_recall (4 broadcast joins -> sort-merge)",
+    "r12.pr_nodes": "pagerank_convergence_curve (a join builds on the other "
+    "side)",
+    "r12.pr_ranks{t}": "pagerank_convergence_curve (2 broadcast joins -> "
+    "sort-merge)",
+    "r17.ks_av{k}": "semdedup_k_sweep (4 broadcast joins -> sort-merge)",
+    "graphq.pr_edges": "pagerank_trade_graph (3 broadcast joins -> "
+    "sort-merge); the persist is shared.pagerank_edges' return",
+    "r12.pr_edges": "the same shared.pagerank_edges persist as graphq.pr_edges",
+    "r20.tc_vps": "dedup_tombstone_curve (3 broadcast joins -> sort-merge)",
+}
+
+
+def test_no_persist_under_a_leaf():
+    """A checkpoint_shared leaf is its own stored copy (localCheckpoint
+    keeps its blocks), so a thunk, lambda or def, that returns a
+    persist_tracked(...) frame holds a second, columnar copy of the same
+    rows. The persist is found where the thunk returns it, where the thunk
+    returns a chain on a persisted name read nowhere else, and inside a
+    module-level function the thunk returns a call of (one call deep). No
+    plan reads its rows; a leaf listed in LEAF_PERSIST_OK keeps it for its
+    size. Persists inside the thunk's plan, read more than once while the
+    leaf is built, are not its return value and stay."""
+    trees = _engine_trees()
+    top_defs: dict[str, list[ast.FunctionDef]] = {}
+    for tree in trees.values():
+        for d in tree.body:
+            if isinstance(d, ast.FunctionDef):
+                top_defs.setdefault(d.name, []).append(d)
+    offenders = []
+    for rel, tree in trees.items():
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if not (isinstance(node, ast.Call) and _call_name(node) == "checkpoint_shared"):
+                    continue
+                if _leaf_name(node.args[0]) in LEAF_PERSIST_OK:
+                    continue
+                thunks = node.args[2:] + [k.value for k in node.keywords if k.arg == "build"]
+                for body in (b for t in thunks for b in _thunk_bodies(tree, fn, t)):
+                    if _returns_persist(body, top_defs):
+                        offenders.append(f"{rel}:{node.lineno} {_leaf_name(node.args[0])}")
+    assert not offenders, (
+        f"persist_tracked under a checkpoint_shared leaf: {sorted(set(offenders))}"
+    )
+
+
 #: (module, function) -> why its decimal(18,s) sum stays inline, not dsum
 INLINE_DECIMAL_SUM_OK = {
     ("plans/relationalx.py", "rolling_avg_user_value"): "window sum: dsum is "

@@ -45,7 +45,10 @@ def test_lsh_identical_sets_always_candidates(spark):
     sigs = minhash_signatures(
         spark.createDataFrame(dup, "doc_id long, word string"), num_hashes=32
     )
-    cand = {(r["ka"], r["kb"]) for r in lsh_candidates(lsh_bands(sigs, 4)).collect()}
+    cand = {
+        (r["ka"], r["kb"])
+        for r in lsh_candidates(lsh_bands(sigs, 4), "ka", None, "kb").collect()
+    }
     assert (1, 9) in cand
     assert (1, 2) not in cand  # disjoint sets share no band
 
